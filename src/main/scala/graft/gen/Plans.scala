@@ -1,6 +1,5 @@
 package graft.gen
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Dump `.explain("formatted")` for registered queries to files — the
@@ -8,26 +7,16 @@ import scala.util.control.NonFatal
   * Usage:
   *   SPARK_GRAFT_ONLY=a,b SPARK_GRAFT_PLAN_DIR=plans/r20 \
   *     SPARK_GRAFT_PLAN_TAG=before sbt "runMain graft.gen.Plans"
-  * Same session conventions as Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions=cpus) so the captured plan is the benched plan.
+  * Runs in the shared [[graft.Harness]] session (local[$SPARK_GRAFT_CPUS],
+  * shuffle.partitions=cpus), as Bench does, so the captured plan is the
+  * benched plan.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r20")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val registry = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .map(keep => graft.SparkEntry.queries.filter { case (n, _) => keep(n) })

@@ -1,15 +1,14 @@
 package graft.gen
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Measurement harness for the optimization rounds (guide §1: measure
   * first): breaks a registered query's wall time into plan construction,
   * analysis+optimization, physical planning and execution, and reports
   * job/stage/task counts, summed task time and Janino compilation deltas
-  * per phase. Same session conventions as Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions=cpus). Usage:
+  * per phase. Runs in the shared [[graft.Harness]] session
+  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus), as Bench does. Usage:
   *   SPARK_GRAFT_ONLY=a,b sbt "runMain graft.gen.Profile"
   * Prints one line per query:
   *   [profile] name build=.. opt=.. plan=.. exec1=.. exec2=.. jobs=.. stages=..
@@ -52,32 +51,16 @@ object Profile {
     }
   }
 
+  /** (compiles, total compile ms): Spark records each compile in ms. */
   private def codegenStats(): (Long, Double) = {
     val m = org.apache.spark.metrics.source.CodegenMetrics
     val h = m.METRIC_COMPILATION_TIME
-    (h.getCount, h.getSnapshot.getMean * h.getCount / 1e6)
+    (h.getCount, h.getSnapshot.getMean * h.getCount)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep the measurement session identical to Bench's (round 20):
-      // profiling against a thrashing codegen cache would charge every
-      // query a re-compile Bench no longer pays
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // same cached-plan AQE coalescing as Bench (round 21, guide §2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val counts = new Counts
     spark.sparkContext.addSparkListener(counts)
     // same warmup + corpus materialization as Bench so numbers line up

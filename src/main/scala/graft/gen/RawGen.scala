@@ -74,11 +74,10 @@ object RawGen {
     * split fall below a minimum useful size (AQE's minPartitionSize is
     * 1 MB of shuffle bytes; these are PARQUET-ZSTD bytes that expand
     * roughly an order of magnitude once decoded into cached rows, so
-    * the default floor is 64 KB on disk ≈ AQE's 1 MB floor on the
+    * the floor is 64 KB on disk ≈ AQE's 1 MB floor on the
     * expanded bytes). Tiny corpora get few, data-sized splits; anything
     * near the 1 GiB spread gate still fills every slot; production-scale
-    * inputs skip spread() entirely. Env-overridable for deployments
-    * whose expansion factor differs. Measured at sf0.1 / local[32],
+    * inputs skip spread() entirely. Measured at sf0.1 / local[32],
     * full 185-query registry: flat 32 splits = 162.1 s total (the
     * ~0.15–0.3 s/stage task-wave tax on every scan-bound query); floor
     * 1 split/corpus = serializes the CPU-dense text passes
@@ -86,10 +85,8 @@ object RawGen {
     * 64 KB floor = 131.4 s total, zero bar breaches — both query
     * classes fast. */
   private def spreadPartitions(spark: SparkSession, bytes: Long): Int = {
-    val minSplit = sys.env.get("SPARK_GRAFT_SPREAD_PARTITION_BYTES")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(64L << 10)
-    val byBytes = math.max(1L, (bytes + minSplit - 1) / math.max(1L, minSplit))
+    val minSplit = 64L << 10
+    val byBytes = math.max(1L, (bytes + minSplit - 1) / minSplit)
     byBytes.min(math.max(1, spark.sparkContext.defaultParallelism).toLong).toInt
   }
   private def spread(spark: SparkSession, df: DataFrame, path: String): DataFrame = {

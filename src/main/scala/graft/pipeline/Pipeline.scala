@@ -36,10 +36,15 @@ object Pipeline {
     TranslatorBinding("ford-translator", Sources.httpInput,
       VehicleTranslators.ford))
 
-  /** The shared CMF topic (pipeline.yaml:47,54,61): every translator's valid
-    * output as wire-form strings, unioned — the one genuine set operation in
-    * the reference (SURVEY.md §2.3 R3). Returns (cmf topic frame, unioned
-    * quarantine). */
+  /** The shared CMF topic (pipeline.yaml:47,54,61): every translator's
+    * output, unioned — the one genuine set operation in the reference
+    * (SURVEY.md §2.3 R3). `valid` is the topic itself: `value` holds each
+    * message's CMF wire form, beside its `cmf` struct. `quarantine` holds
+    * the poisoned raw `value`s. Both carry `source`, the translator
+    * function that produced the row, tagged BEFORE the union so a caller
+    * holding only the combined frame can still tell a poisoned Geotab
+    * record from a poisoned Ford one (per-source dead-letter replay needs
+    * provenance; one post-union tag can't recover it). */
   def vehicleCmfBatch(spark: SparkSession, baseDir: String,
                       tenant: String = "acme"): Translated =
     vehicleCmf(b => b.source.batch(spark, baseDir), tenant)
@@ -50,22 +55,18 @@ object Pipeline {
     vehicleCmf(b => b.source.stream(spark, baseDir), tenant)
 
   /** The shared translate→union shape; only source resolution differs
-    * between batch and streaming, so it is the only injected piece. */
+    * between batch and streaming, so it is the only injected piece. Each
+    * row's `value` becomes the message it carries on: its CMF wire form
+    * where valid, the raw input where poisoned. */
   private def vehicleCmf(resolve: TranslatorBinding => DataFrame,
-                         tenant: String): Translated = {
-    val parts = vehicleBindings.map(b => (b, b.translate(resolve(b), tenant)))
+                         tenant: String): Translated =
     Translated(
-      valid = parts.map(_._2.valid.select(col("cmf_json").as("value")))
-        .reduce(_ unionByName _),
-      // tag each quarantine slice with its translator BEFORE the union —
-      // a caller holding only the combined frame can still tell a poisoned
-      // Geotab record from a poisoned Ford one (per-source dead-letter
-      // replay needs provenance; one post-union tag can't recover it)
-      quarantine = parts
-        .map { case (b, t) =>
-          t.quarantine.withColumn("source", lit(b.functionName)) }
-        .reduce(_ unionByName _))
-  }
+      vehicleBindings.map { b =>
+        b.translate(resolve(b), tenant).tagged.select(
+          when(Translated.ok, col("cmf_json")).otherwise(col("value")).as("value"),
+          lit(b.functionName).as("source"), Translated.ok, col("cmf"))
+      }.reduce(_ unionByName _),
+      derived = Seq("cmf"))
 
   /** E1/E2 tail (pipeline.yaml:63–68): CMF topic → Filterer → dynamic
     * per-tenant destinations. Works on batch or streaming frames. */
@@ -87,29 +88,38 @@ object Pipeline {
     * translator's quarantine AND the Filterer's unroutable drops, tagged
     * by origin for per-source replay (SURVEY.md §2.3 R4).
     *
-    * Two streaming queries, each with its own checkpoint: the publish
-    * path and the dead-letter path re-read the cheap spool source rather
-    * than sharing a plan — streaming DataFrames cannot fork into two
-    * sinks inside one query, and an always-on pipeline wants the failure
-    * domains separate anyway (a dead-letter sink outage must not stop
-    * tenant delivery). Returns (publish, deadLetter) handles; the caller
-    * owns their lifecycle. */
+    * Each query translates every record once: both are cut from the same
+    * tagged CMF frame ([[vehicleCmfStream]]), and the Filterer routes on
+    * the `cmf` struct the translator built ([[Filterer.tenantIdOf]], same
+    * drop rule and topic naming as [[Filterer.route]]) instead of parsing
+    * its wire form back. Publish takes the valid, routable rows as
+    * (topic, CMF wire); dead-letter is one projection of everything else —
+    * a quarantined row keeps its raw value and its translator's name, an
+    * unroutable one its CMF wire and "filterer".
+    *
+    * Two streaming queries, each with its own checkpoint: streaming
+    * DataFrames cannot fork into two sinks inside one query, and an
+    * always-on pipeline wants the failure domains separate anyway (a
+    * dead-letter sink outage must not stop tenant delivery). So each
+    * query scans the cheap spool source itself. Returns (publish,
+    * deadLetter) handles; the caller owns their lifecycle. */
   def runVehicleTopology(spark: SparkSession, spoolBase: String,
                          busRoot: String, deadLetterDir: String,
                          checkpointRoot: String, tenant: String = "acme")
       : (org.apache.spark.sql.streaming.StreamingQuery,
          org.apache.spark.sql.streaming.StreamingQuery) = {
-    val publish = Filterer.route(
-      vehicleCmfStream(spark, spoolBase, tenant).valid)
-      .routed.select("topic", "value")
+    def cmfTopic = vehicleCmfStream(spark, spoolBase, tenant).tagged
+    val tenantId = Filterer.tenantIdOf(col("cmf"))
+    val published = Translated.ok && Routed.notBlank(tenantId)
+    val publish = cmfTopic.filter(published)
+      .select(Filterer.topic(tenantId).as("topic"), col("value"))
       .writeStream.format("graft-spool")
       .option("topics", "true").option("path", busRoot)
       .option("checkpointLocation", s"$checkpointRoot/publish")
       .outputMode("append").start()
-    val cmf2 = vehicleCmfStream(spark, spoolBase, tenant)
-    val deadLetter = cmf2.quarantine
-      .unionByName(Filterer.route(cmf2.valid).dropped
-        .withColumn("source", lit("filterer")))
+    val deadLetter = cmfTopic.filter(!published)
+      .select(col("value"),
+        when(Translated.ok, lit("filterer")).otherwise(col("source")).as("source"))
       .writeStream.format("parquet").partitionBy("source")
       .option("path", deadLetterDir)
       .option("checkpointLocation", s"$checkpointRoot/dead-letter")

@@ -1,11 +1,25 @@
 package graft.route
 
+import graft.model.Cmf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** A router's output: messages annotated with their destination, plus the
   * dropped stream (reference logs-and-skips; we keep them auditable). */
 final case class Routed(routed: DataFrame, dropped: DataFrame)
+
+object Routed {
+  /** Kotlin isNullOrBlank negated, the routers' drop rule. Kotlin
+    * Char.isWhitespace is Character.isWhitespace(c) ||
+    * Character.isSpaceChar(c), so the non-blank witness must exclude BOTH
+    * classes — javaWhitespace alone misses the SPACE_SEPARATOR chars
+    * isWhitespace rejects (U+00A0 NBSP, U+2007, U+202F), and ASCII \S missed
+    * all Unicode whitespace; either gap routes a blank key to a
+    * whitespace-named topic + partition directory. */
+  def notBlank(key: Column): Column =
+    key.isNotNull && key.rlike("[^\\p{javaWhitespace}\\p{javaSpaceChar}]")
+}
 
 /** Content-based router from the CMF topic to dynamic per-tenant topics
   * (Filterer.kt:22–50).
@@ -20,6 +34,10 @@ final case class Routed(routed: DataFrame, dropped: DataFrame)
   *  - the ORIGINAL string is forwarded byte-for-byte (FiltererTest.kt:113):
   *    we route on the extracted key but never re-serialize `value`.
   *
+  * A producer that still holds the CMF struct routes on [[tenantIdOf]] with
+  * the same drop rule ([[Routed.notBlank]]) and [[topic]] naming, without
+  * parsing its own wire form back.
+  *
   * Scale shape: extraction is a scan-fused projection; the fan-out is
   * `partitionBy(tenantId)` on write — one shuffle-free pass, files clustered
   * per tenant, no driver-side loop over tenants.
@@ -28,22 +46,23 @@ object Filterer {
 
   def tenantId(value: Column): Column = get_json_object(value, "$.meta.tenantId")
 
+  /** The same `meta.tenantId` key read off a CMF struct column rather than
+    * its wire form. `meta` is CommonMeta, whose only member is
+    * `additionalProperties` (SURVEY.md §0.2), so a translator's output
+    * carries no key and drops, as its wire form does; and no text spliced
+    * into `sourceSpecificData` can supply one. */
+  def tenantIdOf(cmf: Column): Column =
+    if (Cmf.metaType.fieldNames.contains("tenantId")) cmf("meta")("tenantId")
+    else lit(null).cast(StringType)
+
+  def topic(tenantId: Column): Column =
+    concat(lit("persistent://"), tenantId, lit("/integration/telemetry"))
+
   def route(messages: DataFrame): Routed = {
-    val t = tenantId(col("value"))
-    val withTenant = messages.withColumn("tenantId", t)
-    // Kotlin isNullOrBlank parity: Kotlin Char.isWhitespace is
-    // Character.isWhitespace(c) || Character.isSpaceChar(c), so the
-    // non-blank witness must exclude BOTH classes — javaWhitespace alone
-    // misses the SPACE_SEPARATOR chars isWhitespace rejects (U+00A0 NBSP,
-    // U+2007, U+202F), and ASCII \S missed all Unicode whitespace; either
-    // gap routes a blank tenant to a whitespace-named topic + partition
-    // directory.
-    val ok = col("tenantId").isNotNull &&
-      col("tenantId").rlike("[^\\p{javaWhitespace}\\p{javaSpaceChar}]")
+    val withTenant = messages.withColumn("tenantId", tenantId(col("value")))
+    val ok = Routed.notBlank(col("tenantId"))
     Routed(
-      routed = withTenant.filter(ok)
-        .withColumn("topic",
-          concat(lit("persistent://"), col("tenantId"), lit("/integration/telemetry"))),
+      routed = withTenant.filter(ok).withColumn("topic", topic(col("tenantId"))),
       dropped = withTenant.filter(!ok).select("value"))
   }
 
@@ -98,12 +117,8 @@ object EventTypeSplitter {
 
   def route(messages: DataFrame, tenant: String = "acme",
             namespace: String = "integration"): Routed = {
-    val et = eventType(col("value"))
-    val withType = messages.withColumn("eventType", et)
-    // same isNullOrBlank parity as Filterer.route (isWhitespace ∪
-    // isSpaceChar): any Unicode-whitespace-only event type drops
-    val ok = col("eventType").isNotNull &&
-      col("eventType").rlike("[^\\p{javaWhitespace}\\p{javaSpaceChar}]")
+    val withType = messages.withColumn("eventType", eventType(col("value")))
+    val ok = Routed.notBlank(col("eventType"))
     Routed(
       routed = withType.filter(ok)
         .withColumn("topic", topicFor(col("eventType"), tenant, namespace)),

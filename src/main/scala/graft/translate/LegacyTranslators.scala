@@ -54,6 +54,16 @@ object LegacyTranslators {
   private def jsonEscape(c: Column): Column =
     regexp_replace(c, "([\\\\\"])", "\\\\$1")
 
+  /** The `CommonEvent` wire envelope over the `eventId`/`source`/`eventType`/
+    * `timestamp` columns, with the ORIGINAL payload object spliced in
+    * verbatim as `data` rather than re-serialized. */
+  private val envelope: Column = concat(
+    lit("{\"eventId\":\""), col("eventId"),
+    lit("\",\"source\":\""), col("source"),
+    lit("\",\"eventType\":\""), col("eventType"),
+    lit("\",\"timestamp\":\""), jsonEscape(col("timestamp")),
+    lit("\",\"data\":"), col("value"), lit("}"))
+
   /** The envelope timestamp for a given raw payload column. try_cast: a
     * non-numeric epoch field must poison the RECORD (ts.isNotNull check in
     * `ok`), never the job — ANSI-mode cast would throw. */
@@ -79,26 +89,16 @@ object LegacyTranslators {
       .map(f => get_json_object(value, "$." + f).isNotNull)
       .reduce(_ && _)
     val ts = tsColumn(value, spec)
-    val ok = required && ts.isNotNull
-    val tagged = raw.withColumn("_ok", ok)
     val eventId =
       if (deterministicIds)
         sha2(concat_ws("|", lit(spec.source), lit(spec.eventType), value), 256)
       else expr("uuid()")
-    val valid = tagged.filter(col("_ok")).drop("_ok")
-      .withColumn("eventId", eventId)
-      .withColumn("source", lit(spec.source))
-      .withColumn("eventType", lit(spec.eventType))
-      .withColumn("timestamp", ts)
-      // `data` carries the ORIGINAL payload object verbatim, so the envelope
-      // is assembled by splicing rather than re-serializing.
-      .withColumn("event_json", concat(
-        lit("{\"eventId\":\""), col("eventId"),
-        lit("\",\"source\":\""), col("source"),
-        lit("\",\"eventType\":\""), col("eventType"),
-        lit("\",\"timestamp\":\""), jsonEscape(col("timestamp")),
-        lit("\",\"data\":"), value, lit("}")))
-    Translated(valid, tagged.filter(!col("_ok")).drop("_ok").select("value"))
+    Translated.tag(raw, required && ts.isNotNull,
+      "eventId" -> eventId,
+      "source" -> lit(spec.source),
+      "eventType" -> lit(spec.eventType),
+      "timestamp" -> ts,
+      "event_json" -> envelope)
   }
 
   /** Union of every source's payload field names: the mux parses each
@@ -140,23 +140,11 @@ object LegacyTranslators {
       val required = spec.requiredFields.map(f => j(f).isNotNull).reduce(_ && _)
       required && tsFromFields(j, spec).isNotNull
     }
-    val tagged = parsed.withColumn("_ok", coalesce(ok, lit(false)))
-    val source = perKind(spec => lit(spec.source))
-    val eventType = perKind(spec => lit(spec.eventType))
-    val ts = perKind(spec => tsFromFields(j, spec))
-    val valid = tagged.filter(col("_ok")).drop("_ok")
-      .withColumn("source", source)
-      .withColumn("eventType", eventType)
-      .withColumn("timestamp", ts)
-      .withColumn("eventId",
-        sha2(concat_ws("|", col("source"), col("eventType"), value), 256))
-      .withColumn("event_json", concat(
-        lit("{\"eventId\":\""), col("eventId"),
-        lit("\",\"source\":\""), col("source"),
-        lit("\",\"eventType\":\""), col("eventType"),
-        lit("\",\"timestamp\":\""), jsonEscape(col("timestamp")),
-        lit("\",\"data\":"), value, lit("}")))
-      .drop(jcols: _*)
-    Translated(valid, tagged.filter(!col("_ok")).select("value"))
+    Translated.tag(parsed, ok,
+      "source" -> perKind(spec => lit(spec.source)),
+      "eventType" -> perKind(spec => lit(spec.eventType)),
+      "timestamp" -> perKind(spec => tsFromFields(j, spec)),
+      "eventId" -> sha2(concat_ws("|", col("source"), col("eventType"), value), 256),
+      "event_json" -> envelope)
   }
 }

@@ -6,14 +6,38 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** A translator's output: the happy path and the poison path.
+/** A translator's output: ONE frame tagged row by row — the input's
+  * columns, `_ok`, and the `derived` columns, which mean something only
+  * where `_ok` holds — from which the happy and poison paths are cut here
+  * and nowhere else.
   *
   * The reference drops poison records with a log line
   * (GeotabTranslator.kt:154–157 returns null on any parse/validation error);
-  * we return them as a first-class quarantine DataFrame instead — same
-  * observable happy path, auditable error path (SURVEY.md §2.3 R4).
+  * we keep them as a first-class quarantine instead — same observable happy
+  * path, auditable error path (SURVEY.md §2.3 R4).
   */
-final case class Translated(valid: DataFrame, quarantine: DataFrame)
+final case class Translated(tagged: DataFrame, derived: Seq[String]) {
+  /** Rows that passed validation: every column but `_ok`. */
+  def valid: DataFrame = tagged.filter(Translated.ok).drop("_ok")
+  /** Rows that failed, as they came in: the input's columns only. */
+  def quarantine: DataFrame = tagged.filter(!Translated.ok).drop("_ok" +: derived: _*)
+}
+
+object Translated {
+  /** The per-row verdict column of every tagged frame. */
+  val ok: Column = col("_ok")
+
+  /** Tags each row of `parsed` with `ok` (NULL counts as poison), adds the
+    * `derived` columns in order (later ones may read earlier ones), and
+    * drops the translator's `_j_*` parse columns. */
+  def tag(parsed: DataFrame, ok: Column, derived: (String, Column)*): Translated = {
+    val tagged = derived.foldLeft(parsed.withColumn("_ok", coalesce(ok, lit(false)))) {
+      case (df, (name, c)) => df.withColumn(name, c)
+    }
+    Translated(tagged.drop(parsed.columns.filter(_.startsWith("_j_")): _*),
+      derived.map(_._1))
+  }
+}
 
 /** The three per-source → CMF translators, re-expressed as pure Catalyst
   * expression pipelines (`from_json` + `select`) instead of per-record
@@ -92,6 +116,18 @@ object VehicleTranslators {
     coalesce(size(array_except(keys, array(allowed.map(lit): _*))) > 0, lit(false))
   }
 
+  /** Exactly one JSON object with nothing after it. `json_object_keys` reads
+    * the first object and ignores what trails it; `json_array_length` stops
+    * at the first `]` it meets. So the text must be an object that counts as
+    * one element in `[t]` (no trailing member or value) and as two in
+    * `[t,0]` (no trailing `]` closing the array early). */
+  private def isOneJsonObject(t: Column): Column = {
+    def elements(suffix: String): Column =
+      call_function("json_array_length", concat(lit("["), t, lit(suffix)))
+    call_function("json_object_keys", t).isNotNull &&
+      elements("]") === 1 && elements(",0]") === 2
+  }
+
   /** Parse each message ONCE with the `json_tuple` generator into `_j_*`
     * string columns. A `from_json` struct alias would be substituted into
     * every downstream field reference by Catalyst's filter-pushdown, cloning
@@ -112,14 +148,10 @@ object VehicleTranslators {
   private def optNumOk(fields: (String => Column), names: Seq[String]): Column =
     names.map(f => j(f).isNull || fields(f).isNotNull).reduce(_ && _)
 
-  private def finish(tagged: DataFrame, cmf: Column,
-                     jcols: Seq[String]): Translated =
-    Translated(
-      valid = tagged.filter(col("_ok")).drop("_ok")
-        .withColumn("cmf", cmf)
-        .withColumn("cmf_json", CmfJson.wire(col("cmf")))
-        .drop(jcols.map(f => s"_j_$f"): _*),
-      quarantine = tagged.filter(!col("_ok")).select("value"))
+  /** The CMF struct and its wire form, the columns every vehicle translator
+    * derives. */
+  private def finish(parsed: DataFrame, ok: Column, cmf: Column): Translated =
+    Translated.tag(parsed, ok, "cmf" -> cmf, "cmf_json" -> CmfJson.wire(col("cmf")))
 
   /** Geotab raw JSON → CMF. Input DataFrame needs a `value` StringType column
     * (one message per row). `tenant` plays the role of `context.tenant`
@@ -135,7 +167,6 @@ object VehicleTranslators {
       (j("customGeotabField2").isNull ||
         expr("try_cast(_j_customGeotabField2 AS INT)").isNotNull) &&
       !hasUnknownKeys(col("value"), fields)
-    val tagged = parsed.withColumn("_ok", coalesce(ok, lit(false)))
 
     val dateTime = IsoTime.isoFromEpochMillis(epochSource)
     val telemetry = Cmf.telemetryStruct(Map(
@@ -154,7 +185,7 @@ object VehicleTranslators {
     val cmf = Cmf.envelope(dateTime, epochSource, j("Vehicle_ID"), j("Device_ID"),
       lit(tenant), lit("Geotab"), j("Vehicle_ID"), telemetry, ssd,
       Map("translator" -> lit("GeotabTranslator_v1.0")))
-    finish(tagged, cmf, fields)
+    finish(parsed, ok, cmf)
   }
 
   /** CalAmp raw JSON → CMF. `msg_ts` is epoch SECONDS; epochSource is
@@ -171,7 +202,6 @@ object VehicleTranslators {
       jd("gps_lat").isNotNull && jd("gps_lon").isNotNull &&
       optNumOk(jd, Seq("speed_mph", "fuel_percent", "voltage")) &&
       !hasUnknownKeys(col("value"), fields)
-    val tagged = parsed.withColumn("_ok", coalesce(ok, lit(false)))
     val dateTime = IsoTime.isoFromEpochMillis(epochSource)
     val telemetry = Cmf.telemetryStruct(Map(
       "location" -> struct(dateTime.as("timestamp"), jd("gps_lon").as("lon"),
@@ -184,7 +214,7 @@ object VehicleTranslators {
     val cmf = Cmf.envelope(dateTime, epochSource, j("vid"), j("unit_id"),
       lit(tenant), lit("CalAmp"), j("vid"), telemetry, ssd,
       Map("translator" -> lit("CalAmpTranslator_v1.0")))
-    finish(tagged, cmf, fields)
+    finish(parsed, ok, cmf)
   }
 
   /** Ford raw JSON → CMF. Two independent timestamps: envelope from
@@ -208,22 +238,23 @@ object VehicleTranslators {
       IsoTime.representableMs(expr("try_cast(_j_c_ts AS BIGINT)")) &&
       optNumOk(jd, Seq("vehicleSpeed", "fuelRemainingGallons")) &&
       (j("rpm").isNull || expr("try_cast(_j_rpm AS INT)").isNotNull) &&
-      // fordExtraData: Map<String,Any> binding requires a JSON OBJECT.
+      // fordExtraData: Map<String,Any> binding requires ONE JSON object,
+      // and its text is spliced into the wire verbatim, so nothing may trail
+      // it: a trailing `, "meta": {...}` would give the wire a second `meta`
+      // member that a wire-reading router sees first.
       // KNOWN LIMITATION (json_tuple type erasure): a STRING value whose
-      // text happens to look like an object ("{\"a\":1}") extracts to the
-      // same unescaped text as a real object and passes this guard, where
-      // Jackson would reject the record — distinguishing them needs a raw
-      // JSON tokenizer, which no built-in exposes. Same erasure accepts
-      // non-string scalars in string-typed fields.
-      (j("fordExtraData").isNull ||
-        call_function("json_object_keys", j("fordExtraData")).isNotNull) &&
+      // text is exactly one object ("{\"a\":1}") extracts to the same
+      // unescaped text as a real object and passes, where Jackson would
+      // reject the record — telling them apart needs a raw JSON tokenizer,
+      // which no built-in exposes. Same erasure accepts non-string scalars
+      // in string-typed fields.
+      (j("fordExtraData").isNull || isOneJsonObject(j("fordExtraData"))) &&
       !hasUnknownKeys(col("value"), fordAllKeys) &&
       // FAIL_ON_UNKNOWN_PROPERTIES applies to the NESTED FordCoordinates
       // binding too — an unknown key inside coords must quarantine exactly
       // like one at the top level (json_tuple surfaces the coords object's
       // raw text, so the same key check applies)
       !hasUnknownKeys(j("coords"), sub)
-    val tagged = parsed.withColumn("_ok", coalesce(ok, lit(false)))
 
     val dateTime = IsoTime.isoFromEpochMillis(jl("captureTime"))
     val locTime = IsoTime.isoFromEpochMillis(expr("try_cast(_j_c_ts AS BIGINT)"))
@@ -239,12 +270,7 @@ object VehicleTranslators {
     val cmf = Cmf.envelope(dateTime, jl("captureTime"), j("vin"), j("esn"),
       lit(tenant), lit("Ford"), j("vin"), telemetry, ssd,
       Map("translator" -> lit("FordTranslator_v1.0")))
-    Translated(
-      valid = tagged.filter(col("_ok")).drop("_ok")
-        .withColumn("cmf", cmf)
-        .withColumn("cmf_json", CmfJson.wire(col("cmf")))
-        .drop(top.map(f => s"_j_$f") ++ sub.map(f => s"_j_c_$f"): _*),
-      quarantine = tagged.filter(!col("_ok")).select("value"))
+    finish(parsed, ok, cmf)
   }
 }
 

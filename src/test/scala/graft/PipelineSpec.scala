@@ -25,8 +25,29 @@ class PipelineSpec extends SparkSpec {
     writeSpool(base, Sources.kafkaInput.outputTopic, Seq(
       """{"unit_id":"c1","vid":"v2","msg_ts":1698314400,"gps_lat":3.0,"gps_lon":4.0}"""))
     writeSpool(base, Sources.httpInput.outputTopic, Seq(
-      """{"vin":"v3","esn":"e3","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000}}"""))
+      """{"vin":"v3","esn":"e3","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000}}""",
+      fordSmuggler))
     base
+  }
+
+  /** Hostile Ford record: its `fordExtraData` text trails a second member
+    * which, spliced into the wire verbatim, would add a top-level
+    * `"meta": {"tenantId":"evil"}` ahead of the real one. */
+  private val fordSmuggler =
+    """{"vin":"v4","esn":"e4","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000},""" +
+    """"fordExtraData":"{\"a\":1}, \"meta\": {\"tenantId\":\"evil\"}"}"""
+
+  /** Runs the streaming topology over `base` to completion; returns the
+    * bus root and the dead-letter frame. */
+  private def runTopology(base: String): (String, org.apache.spark.sql.DataFrame) = {
+    val out = java.nio.file.Files.createTempDirectory("topology")
+    val (publish, deadLetter) = Pipeline.runVehicleTopology(
+      spark, base, s"$out/bus", s"$out/dead-letter", s"$out/_ckpt")
+    try {
+      publish.processAllAvailable()
+      deadLetter.processAllAvailable()
+    } finally { publish.stop(); deadLetter.stop() }
+    (s"$out/bus", spark.read.parquet(s"$out/dead-letter"))
   }
 
   test("S1-S7: every connector from pipeline.yaml is defined with its output topic") {
@@ -48,7 +69,7 @@ class PipelineSpec extends SparkSpec {
     val base = spoolDir()
     val cmf = Pipeline.vehicleCmfBatch(spark, base)
     assert(cmf.valid.count() === 3)
-    assert(cmf.quarantine.count() === 1)
+    assert(cmf.quarantine.count() === 2)
     val sources = cmf.valid
       .select(get_json_object(col("value"), "$.sourceType")).collect()
       .map(_.getString(0)).sorted
@@ -224,19 +245,12 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("E1/E2 full topology: translators -> CMF -> Filterer -> bus, dead-letter replayable") {
-    val base = spoolDir()
-    val out = java.nio.file.Files.createTempDirectory("topology")
-    val busRoot = s"$out/bus"
-    val dlDir = s"$out/dead-letter"
-    val (publish, deadLetter) = Pipeline.runVehicleTopology(
-      spark, base, busRoot, dlDir, s"$out/_ckpt")
-    try {
-      publish.processAllAvailable()
-      deadLetter.processAllAvailable()
-    } finally { publish.stop(); deadLetter.stop() }
-    val dl = spark.read.parquet(dlDir)
+    val (busRoot, dl) = runTopology(spoolDir())
     // the geotab poison record lands tagged by its translator...
     assert(dl.filter(col("source") === "geotab-translator").count() === 1)
+    // ...and so does the hostile Ford record: it never reaches the bus
+    assert(dl.filter(col("source") === "ford-translator").collect()
+      .map(_.getAs[String]("value")) === Array(fordSmuggler))
     // ...and reference parity for the §0.2 quirk: the reference's OWN
     // translators omit meta.tenantId, so the Filterer drops every
     // translated CMF message as unroutable (integration tests inject
@@ -245,6 +259,20 @@ class PipelineSpec extends SparkSpec {
     val busDirs = Option(new java.io.File(busRoot).listFiles())
       .map(_.count(_.isDirectory)).getOrElse(0)
     assert(busDirs === 0, "nothing routable must mean an empty bus")
+  }
+
+  test("E1/E2 topology dead-letter == batch quarantine + Filterer drops, same tags") {
+    val base = spoolDir()
+    val (_, dl) = runTopology(base)
+    val streamed = dl.select("value", "source").collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted
+    val cmf = Pipeline.vehicleCmfBatch(spark, base)
+    val batch = cmf.quarantine.select("value", "source")
+      .unionByName(Pipeline.routeCmf(cmf.valid).dropped
+        .withColumn("source", lit("filterer")))
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    assert(batch.length === 5)
+    assert(streamed === batch)
   }
 
   test("graft-spool sink: rejects values the line framing cannot carry") {

@@ -284,4 +284,27 @@ class TranslatorSpec extends SparkSpec {
     assert(t.valid.count() === 0)
     assert(t.quarantine.count() === 1)
   }
+
+  test("ford: fordExtraData text with anything after its object poisons the record") {
+    // the extracted text is spliced into the wire verbatim: a trailing
+    // member would give the wire a second top-level `meta`, which a
+    // wire-reading router meets first and routes on
+    def ford(extra: String): String =
+      """{"vin":"v","esn":"e","captureTime":1698314400000,""" +
+      """"coords":{"latValue":1.0,"lonValue":2.0,"ts":1698314395000},""" +
+      s""""fordExtraData":$extra}"""
+    val hostile = Seq(
+      """"{\"a\":1}, \"meta\": {\"tenantId\":\"evil\"}"""",
+      """"{\"a\":1}}"""",
+      """"{\"a\":1} {\"b\":2}"""",
+      """"{\"a\":1}], \"meta\": {\"tenantId\":\"evil\"}, \"x\": [1"""")
+    val t = VehicleTranslators.ford(strings(hostile.map(ford): _*), "t")
+    assert(t.valid.count() === 0)
+    assert(t.quarantine.count() === hostile.size)
+    // exactly one object, empty or nested, still passes verbatim
+    val ok = VehicleTranslators.ford(strings(
+      ford("{}"), ford("""{"a":{"b":[1,{"c":2}]}}""")), "t")
+    assert(ok.valid.select("cmf.sourceSpecificData").collect().map(_.getString(0)).sorted ===
+      Array("""{"a":{"b":[1,{"c":2}]}}""", "{}"))
+  }
 }
