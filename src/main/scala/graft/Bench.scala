@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
@@ -7,6 +6,23 @@ import scala.util.control.NonFatal
   * is EXCLUDED from the total — time-to-crash is not a measurement.
   */
 object Bench {
+  /** One query's measurement: `ok` is false when any sample threw; `clean`
+    * when the 1-minute loadavg read at its start AND end were both under
+    * the mid-run fence. */
+  private final case class Row(name: String, sec: Double, ok: Boolean, clean: Boolean)
+
+  // Load FENCE, enforced in code instead of operator discipline: two
+  // rounds running, the committed per-query evidence was a contended-host
+  // run (r11: loadavg 7.6→17.4, 37/122 bars breached by uniform 2-3x
+  // inflation) while the round's actual quiet runs went uncommitted. A
+  // timing run that STARTS hot waits for the host to go quiet (1-minute
+  // loadavg < LoadFence, the project's own fence, up to LoadWaitS); if it
+  // never does, the run still completes — the driver must always get its
+  // JSON — but is self-labeled "canonical":false so a loaded artifact can
+  // never again masquerade as the round's evidence.
+  private val LoadFence = 2.0
+  private val LoadWaitS = 600L
+
   /** Published per-query steady-state bars for this run's convention,
     * parsed from BASELINE.md (single source of truth — the same table the
     * judge reads). A "Per-query" heading line selects which convention's
@@ -40,62 +56,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Harness.session(cpus)
-    // Warmup (untimed): first Spark query in a JVM pays ~10 s of Janino /
-    // JIT / parquet-reader init that has nothing to do with the query being
-    // measured — exercise codegen+shuffle+agg once first.
-    spark.range(200000).selectExpr("md5(cast(id as string)) h")
-      .groupBy("h").count().count()
-    // NonFatal + StackOverflowError: an SOE from one deep Catalyst plan must
-    // not kill the whole bench (the JSON contract reports it as failed
-    // instead), while a genuine OOM still aborts — timing after heap
-    // exhaustion would be fiction anyway
-    val benchRecoverable: Throwable => Boolean =
-      t => NonFatal(t) || t.isInstanceOf[StackOverflowError]
-    // Optional comma-separated allowlist for local iteration on specific
-    // queries (SPARK_GRAFT_ONLY=dedup_clusters_star,kmeans_iter). The
-    // driver never sets it, so driver runs always time the full registry.
-    val registry = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .map { keep =>
-        // a typo'd name would otherwise silently shrink (or empty) the run
-        // and print a plausible-looking 0-second total
-        val unknown = keep -- SparkEntry.queries.keySet
-        if (unknown.nonEmpty)
-          System.err.println(
-            s"[bench] SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(", ")}")
-        val kept = SparkEntry.queries.filter { case (n, _) => keep(n) }
-        // an all-typos filter must fail loudly, not print a green 0-query
-        // JSON that a local iteration loop would chase
-        require(kept.nonEmpty,
-          s"SPARK_GRAFT_ONLY matched no registered query: ${keep.mkString(", ")}")
-        kept
-      }
-      .getOrElse(SparkEntry.queries)
-    // Materialize the bench dir's RawGen corpus caches (MEMORY_AND_DISK)
-    // untimed so per-query numbers measure steady state, not cache build.
-    try graft.gen.RawGen.events(spark, sfDir).count()
-    catch { case NonFatal(_) => () }
-    Seq("documents", "embeddings", "lineitem", "orders", "customer",
-      "nation", "region", "part", "supplier").foreach { t =>
-      try graft.gen.RawGen.table(spark, sfDir, t).count()
-      catch { case NonFatal(_) => () }
-    }
-    // The derived wire corpora are input data too (see RawGen.wire): the
-    // translator/router queries read them like tables, so they join the
-    // untimed materialization pass.
-    graft.gen.RawGen.wireKinds.foreach { k =>
-      try graft.gen.RawGen.wire(spark, sfDir, k).count()
-      catch { case NonFatal(_) => () }
-    }
-    // ...and so are the registered derived archives (WARC fixtures —
-    // registration happens in SparkEntry's init, which the registry
-    // lookup above already forced). Materializing here, BEFORE the warm
-    // pass, puts their blocks in every query's persistedBefore set so
-    // the per-query leak fence never evicts them.
-    graft.gen.RawGen.derivedKinds.foreach { k =>
-      try graft.gen.RawGen.derived(spark, sfDir, k).count()
-      catch { case NonFatal(_) => () }
-    }
+    val registry = Harness.selected()
+    Harness.warm(spark, sfDir)
     // Warm pass AT THE BENCH SF (round-13 directive): rounds 11–13 warmed
     // the registry at the smallest sibling SF, which populates the
     // codegen cache (SF-independent) but NOT the bench dir's page cache,
@@ -105,16 +67,13 @@ object Bench {
     // cmf_ford 12.09 s vs its 0.73 s steady-state bar). Running the full
     // registry once untimed at the BENCH dir costs one extra registry
     // sweep (~2.5 min at sf0.1) and makes the first timed query see the
-    // same warm world as the last. The per-query unpersist fence below
-    // mirrors measure()'s, so a warm query's leaked cache blocks can't
-    // occupy memory for the rest of the warm pass or the timed run.
-    registry.foreach { case (_, fn) =>
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).queryExecution.toRdd.count()
-      catch { case t: Throwable if benchRecoverable(t) => () }
-      val persistedNow = spark.sparkContext.getPersistentRDDs
-      (persistedNow.keySet -- persistedBefore).foreach { id =>
-        persistedNow.get(id).foreach(_.unpersist(blocking = false))
+    // same warm world as the last. Each warm query is leak-fenced like
+    // measure()'s samples, so its leaked cache blocks can't occupy memory
+    // for the rest of the warm pass or the timed run.
+    registry.foreach { q =>
+      Harness.fenced(spark) {
+        try q.run(spark, sfDir).queryExecution.toRdd.count()
+        catch { case t: Throwable if Harness.recoverable(t) => () }
       }
     }
     // Host-load telemetry: round-6's driver run reported 9-48x inflated
@@ -126,40 +85,36 @@ object Bench {
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split("\\s+").head.toDouble
       catch { case NonFatal(_) => -1.0 }
-    // Load FENCE, enforced in code instead of operator discipline: two
-    // rounds running, the committed per-query evidence was a contended-host
-    // run (r11: loadavg 7.6→17.4, 37/122 bars breached by uniform 2-3x
-    // inflation) while the round's actual quiet runs went uncommitted. A
-    // timing run that STARTS hot now waits for the host to go quiet
-    // (1-minute loadavg < threshold, default 2.0 per the project's own
-    // fence, up to SPARK_GRAFT_LOAD_WAIT seconds, default 600); if it
-    // never does, the run still completes — the driver must always get
-    // its JSON — but is self-labeled "canonical":false so a loaded
-    // artifact can never again masquerade as the round's evidence.
-    val loadFence = sys.env.get("SPARK_GRAFT_LOAD_FENCE")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(2.0)
-    val loadWaitS = sys.env.get("SPARK_GRAFT_LOAD_WAIT")
-      .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(600L)
-    val waitDeadline = System.nanoTime() + loadWaitS * 1000000000L
     var fenceWaited = 0L
-    while (loadavg() >= loadFence && System.nanoTime() < waitDeadline) {
-      System.err.println(
-        s"[bench] loadavg ${loadavg()} >= $loadFence — waiting for quiet host")
-      Thread.sleep(15000)
-      fenceWaited += 15
+    // Waits up to LoadWaitS for the loadavg to fall under the idle fence;
+    // true when the host is quiet (or its load unreadable).
+    def awaitQuiet(purpose: String): Boolean = {
+      val deadline = System.nanoTime() + LoadWaitS * 1000000000L
+      while (loadavg() >= LoadFence && System.nanoTime() < deadline) {
+        System.err.println(
+          s"[bench] loadavg ${loadavg()} >= $LoadFence — waiting $purpose")
+        Thread.sleep(15000)
+        fenceWaited += 15
+      }
+      loadavg() < LoadFence
     }
+    awaitQuiet("for quiet host")
     val loadBefore = loadavg()
+    // SPARK_GRAFT_SAMPLES=1 drops to single-sample timing — ONLY for
+    // long evidence runs at non-canonical SFs (the sf1 exponent run:
+    // min2med3 would triple a multi-hour sweep). Unset = the default
+    // min2med3 contract the driver's canonical runs rely on.
+    val singleSample = sys.env.get("SPARK_GRAFT_SAMPLES").contains("1")
     // toRdd.count(), NOT count(): a count() action lets Catalyst prune
     // every deterministic projection (and the sort), so scan-fused
     // operators — md5/regexp/transform pipelines, the very work being
     // measured — would be timed as zero-column scans
-    def sampleOf(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[Double] = {
+    def sampleOf(q: Query): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count()
+      try { q.run(spark, sfDir).queryExecution.toRdd.count()
             Some((System.nanoTime() - t0) / 1e9) }
-      catch { case t: Throwable if benchRecoverable(t) =>
-        System.err.println(s"[bench] $name FAILED: ${t.getMessage}"); None
+      catch { case t: Throwable if Harness.recoverable(t) =>
+        System.err.println(s"[bench] ${q.name} FAILED: ${t.getMessage}"); None
       }
     }
     // One sample per query is defenseless against a transient load spike
@@ -181,73 +136,49 @@ object Bench {
     // evidence DURING the run is load ABOVE own parallelism: the
     // contaminated driver artifact read 17.8 at cpus=32 against this
     // bound's 34. Before-run keeps the strict idle fence.
-    val runFence = loadFence + cpus.toDouble
-    // Returns (seconds, ok, cleanLoad): cleanLoad is the 1-minute loadavg
-    // read at the query's start AND end both under the mid-run fence —
-    // per-QUERY contamination evidence, because round 12 proved a run can
-    // pass the before-run fence at 1.88 and be contended to 17.8 mid-run.
-    def measure(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (String, Double, Boolean, Boolean) = {
+    val runFence = LoadFence + cpus.toDouble
+    // Per-QUERY contamination evidence (Row.clean), because round 12
+    // proved a run can pass the before-run fence at 1.88 and be contended
+    // to 17.8 mid-run. The leak fence keeps the round-7 simhash_neardup
+    // 2.1x "regression" mechanism (stacked blocks from earlier queries)
+    // out of every sample.
+    def measure(q: Query): Row = {
       val la0 = loadavg()
-      // Leak fence between queries: release any block a sample persisted and
-      // didn't unpersist (managed operators release their own; this catches
-      // everything else), so stacked MEMORY_AND_DISK blocks from query k
-      // can't evict cache / inflate GC for queries k+1..n — the round-7
-      // simhash_neardup 2.1x "regression" mechanism. The pre-warmed RawGen
-      // corpus caches are in persistedBefore and survive.
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      // SPARK_GRAFT_SAMPLES=1 drops to single-sample timing — ONLY for
-      // long evidence runs at non-canonical SFs (the sf1 exponent run:
-      // min2med3 would triple a multi-hour sweep). Unset = the default
-      // min2med3 contract the driver's canonical runs rely on.
-      val singleSample = sys.env.get("SPARK_GRAFT_SAMPLES").contains("1")
-      val timed =
-        if (singleSample) sampleOf(name, fn)
-        else sampleOf(name, fn).flatMap { t1 =>
-        sampleOf(name, fn) match {
-          case Some(t2) if math.max(t1, t2) <= math.min(t1, t2) * 1.5 =>
-            Some(math.min(t1, t2))
-          case Some(t2) => sampleOf(name, fn).map(t3 => Seq(t1, t2, t3).sorted.apply(1))
-          case None     => None
+      val timed = Harness.fenced(spark) {
+        if (singleSample) sampleOf(q)
+        else sampleOf(q).flatMap { t1 =>
+          sampleOf(q) match {
+            case Some(t2) if math.max(t1, t2) <= math.min(t1, t2) * 1.5 =>
+              Some(math.min(t1, t2))
+            case Some(t2) => sampleOf(q).map(t3 => Seq(t1, t2, t3).sorted.apply(1))
+            case None     => None
+          }
         }
-      }
-      val persistedNow = spark.sparkContext.getPersistentRDDs
-      (persistedNow.keySet -- persistedBefore).foreach { id =>
-        persistedNow.get(id).foreach(_.unpersist(blocking = false))
       }
       val la1 = loadavg()
       // BOTH reads must succeed (-1.0 = /proc read failure): missing
       // evidence is not clean evidence
       val clean = la0 >= 0.0 && la0 < runFence && la1 >= 0.0 && la1 < runFence
-      (name, timed.getOrElse(0.0), timed.isDefined, clean)
+      Row(q.name, timed.getOrElse(0.0), timed.isDefined, clean)
     }
-    val firstPass = registry.map { case (name, fn) => measure(name, fn) }
+    // Re-measures the named queries in isolation once the host is quiet
+    // again; nothing when the host never quiets within the wait budget, so
+    // the original numbers stand and the run self-labels canonical:false.
+    def remeasure(names: Set[String], why: String): Map[String, Row] =
+      if (names.isEmpty || !awaitQuiet(s"to re-run ${names.size} $why queries"))
+        Map.empty
+      else registry.filter(q => names(q.name)).map(q => q.name -> measure(q)).toMap
+    val firstPass = registry.map(measure)
     // Auto-rerun, the round-12 directive: queries whose samples ran while
     // the host was contended (per-query loadavg evidence above) are
-    // re-measured in isolation after the host goes quiet again — their
-    // first-pass numbers measure co-tenant CPU steal, not the code. If the
-    // host never quiets within the wait budget, the original numbers stand
-    // and the run self-labels canonical:false.
-    val dirtyNames = firstPass.filter(r => r._3 && !r._4).map(_._1).toSet
-    val retried = if (dirtyNames.isEmpty) Map.empty[String, (String, Double, Boolean, Boolean)]
-    else {
-      val retryDeadline = System.nanoTime() + loadWaitS * 1000000000L
-      while (loadavg() >= loadFence && System.nanoTime() < retryDeadline) {
-        System.err.println(
-          s"[bench] loadavg ${loadavg()} >= $loadFence — waiting to re-run " +
-            s"${dirtyNames.size} contended queries")
-        Thread.sleep(15000)
-        fenceWaited += 15
-      }
-      if (loadavg() >= loadFence) Map.empty[String, (String, Double, Boolean, Boolean)]
-      else registry.filter { case (n, _) => dirtyNames(n) }
-        .map { case (name, fn) => name -> measure(name, fn) }.toMap
-    }
-    // a retry only replaces its first-pass row when the retry itself ran
-    // clean — a contended retry of a contended query is no evidence at all
+    // re-measured — their first-pass numbers measure co-tenant CPU steal,
+    // not the code. A retry only replaces its first-pass row when the
+    // retry itself ran clean — a contended retry of a contended query is
+    // no evidence at all.
+    val retried = remeasure(
+      firstPass.filter(r => r.ok && !r.clean).map(_.name).toSet, "contended")
     val afterLoadRetry = firstPass.map { r =>
-      retried.get(r._1).filter(rr => rr._3 && rr._4).getOrElse(r)
+      retried.get(r.name).filter(rr => rr.ok && rr.clean).getOrElse(r)
     }
     // Bar-breach auto-rerun (round-13 directive): the per-query load
     // windows above are blind to co-tenant load below `cpus` during a
@@ -260,56 +191,28 @@ object Bench {
     // adopted. A query that reproduces its breach in isolation keeps the
     // number and stays listed under "bar_breaches": a REAL regression
     // must survive into the artifact, only interference may not.
-    val timingMode =
-      if (sys.env.get("SPARK_GRAFT_SAMPLES").contains("1")) "single"
-      else "min2med3"
     val bars = parseBars(sys.env.getOrElse("SPARK_GRAFT_BARS", "BASELINE.md"), cpus)
-    val breachedNames = afterLoadRetry
-      .filter(r => r._3 && bars.get(r._1).exists(b => r._2 > 2.0 * b))
-      .map(_._1).toSet
-    val barRetried =
-      if (breachedNames.isEmpty) Map.empty[String, (String, Double, Boolean, Boolean)]
-      else {
-        val retryDeadline = System.nanoTime() + loadWaitS * 1000000000L
-        while (loadavg() >= loadFence && System.nanoTime() < retryDeadline) {
-          System.err.println(
-            s"[bench] loadavg ${loadavg()} >= $loadFence — waiting to re-run " +
-              s"${breachedNames.size} bar-breaching queries")
-          Thread.sleep(15000)
-          fenceWaited += 15
-        }
-        if (loadavg() >= loadFence) Map.empty[String, (String, Double, Boolean, Boolean)]
-        else registry.filter { case (n, _) => breachedNames(n) }
-          .map { case (name, fn) => name -> measure(name, fn) }.toMap
-      }
+    def breached(r: Row) = r.ok && bars.get(r.name).exists(b => r.sec > 2.0 * b)
+    val barRetried = remeasure(
+      afterLoadRetry.filter(breached).map(_.name).toSet, "bar-breaching")
     val results = afterLoadRetry.map { r =>
-      barRetried.get(r._1).filter(rr => rr._3 && rr._4)
+      barRetried.get(r.name).filter(rr => rr.ok && rr.clean)
         // min of the two clean measurements of identical steady-state
         // work — the same estimator the min2med3 sampler already uses
-        .map(rr => if (rr._2 < r._2) rr else r).getOrElse(r)
+        .map(rr => if (rr.sec < r.sec) rr else r).getOrElse(r)
     }
-    val barBreaches = results
-      .filter(r => r._3 && bars.get(r._1).exists(b => r._2 > 2.0 * b))
-      .map(_._1).toSeq.sorted
     val loadAfter = loadavg()
     // canonical now demands the WHOLE run's evidence be quiet-host: the
     // strict idle fence BEFORE, the mid-run fence (idle fence + own
     // parallelism) on the after reading and on every per-query window
     // (round 11/12 both shipped artifacts whose before-load passed while
     // the run itself was contended — this labeling closes that gap)
-    val canonical = loadBefore >= 0.0 && loadBefore < loadFence &&
-      loadAfter >= 0.0 && loadAfter < runFence && results.forall(r => !r._3 || r._4)
+    val canonical = loadBefore >= 0.0 && loadBefore < LoadFence &&
+      loadAfter >= 0.0 && loadAfter < runFence && results.forall(r => !r.ok || r.clean)
     // Driver contract: "queries" maps name -> seconds. Failed queries are
     // omitted from it (and from the total) and listed under "failed" instead.
-    val okResults = results.filter(_._3).map(r => (r._1, r._2, r._3))
-    val retriedJson = retried.keys.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val contendedJson = results.filter(r => r._3 && !r._4).map(_._1).toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val barRetriedJson = barRetried.keys.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val barBreachJson = barBreaches
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val okResults = results.filter(_.ok)
+    def jsonArr(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Millisecond precision (%.3f), not full double digits: sub-ms digits
     // of a wall-clock sample are noise, and shorter numbers give the
     // inline form below more headroom. (Round 10 proved %.3f alone is NOT
@@ -323,9 +226,7 @@ object Bench {
       val t = s.reverse.dropWhile(_ == '0').reverse
       if (t.endsWith(".")) t + "0" else t
     }
-    val qs = okResults.map { case (k, v, _) => s""""$k":${f3(v)}""" }.mkString("{", ",", "}")
-    val total = okResults.map(_._2).sum
-    val failed = results.filterNot(_._3).map(r => "\"" + r._1 + "\"").mkString("[", ",", "]")
+    val qs = okResults.map(r => s""""${r.name}":${f3(r.sec)}""").mkString("{", ",", "}")
     // The driver captures only a bounded TAIL of stdout: at 107 registered
     // queries even the %.3f-compacted line overflowed it in rounds 8-10
     // (driver recorded parsed:null; 16 queries' times unrecoverable).
@@ -334,25 +235,22 @@ object Bench {
     // queries map on the printed line only while the whole line still fits
     // a conservative tail window — otherwise point at the detail file so
     // the head (metric/value/ok_count) can never be cut again.
-    // A FILTERED run (SPARK_GRAFT_ONLY) defaults its dump to /tmp: the
-    // repo's BENCH_DETAIL.json is the full-registry record the judge
-    // reads, and a targeted 3-query re-measure silently clobbering it
-    // cost this round two restores.
-    val defaultDetail =
-      if (sys.env.contains("SPARK_GRAFT_ONLY")) "/tmp/BENCH_DETAIL.json"
-      else "BENCH_DETAIL.json"
+    // A FILTERED run (SPARK_GRAFT_ONLY) dumps to /tmp: the repo's
+    // BENCH_DETAIL.json is the full-registry record the judge reads, and a
+    // targeted 3-query re-measure silently clobbering it cost this round
+    // two restores.
     val detailPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", defaultDetail))
-    val detailJson =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"ok_count":${okResults.size},"failed":$failed,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"canonical":$canonical,"retried":$retriedJson,"contended":$contendedJson,"bar_retried":$barRetriedJson,"bar_breaches":$barBreachJson,"fence_waited_sec":$fenceWaited,"timing":"$timingMode","sf":"$sfDir"}"""
+      if (sys.env.contains("SPARK_GRAFT_ONLY")) "/tmp/BENCH_DETAIL.json"
+      else "BENCH_DETAIL.json")
+    val timingMode = if (singleSample) "single" else "min2med3"
+    def line(queriesField: String) =
+      s"""{"metric":"total","value":${f3(okResults.map(_.sec).sum)},"unit":"sec",$queriesField,"ok_count":${okResults.size},"failed":${jsonArr(results.filterNot(_.ok).map(_.name))},"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"canonical":$canonical,"retried":${jsonArr(retried.keys.toSeq.sorted)},"contended":${jsonArr(results.filter(r => r.ok && !r.clean).map(_.name).sorted)},"bar_retried":${jsonArr(barRetried.keys.toSeq.sorted)},"bar_breaches":${jsonArr(results.filter(breached).map(_.name).sorted)},"fence_waited_sec":$fenceWaited,"timing":"$timingMode","sf":"$sfDir"}"""
+    val detailJson = line(s""""queries":$qs""")
     try java.nio.file.Files.writeString(detailPath, detailJson + "\n")
     catch { case NonFatal(t) =>
       System.err.println(s"[bench] could not write $detailPath: ${t.getMessage}") }
-    val inline =
-      if (detailJson.length <= 1600) detailJson
-      else
-        s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries_in":"${detailPath.toString}","ok_count":${okResults.size},"failed":$failed,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"canonical":$canonical,"retried":$retriedJson,"contended":$contendedJson,"bar_retried":$barRetriedJson,"bar_breaches":$barBreachJson,"fence_waited_sec":$fenceWaited,"timing":"$timingMode","sf":"$sfDir"}"""
-    println(inline)
+    println(if (detailJson.length <= 1600) detailJson
+      else line(s""""queries_in":"$detailPath""""))
     spark.stop()
   }
 }

@@ -8,6 +8,21 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** One registered query: the plan `run` builds over an sf directory, and
+  * the DuckDB SQL that recomputes the same result from the same tables. */
+final case class Query(name: String, run: (SparkSession, String) => DataFrame,
+                       oracleSql: String)
+
+object Query {
+  /** `qs` in order, failing if any name appears twice: the driver keys
+    * results and oracles on the name. */
+  def registry(qs: Query*): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, "duplicate query names: " + dups.toSeq.sorted.mkString(", "))
+    qs
+  }
+}
+
 /** Driver contract: one registered query per implemented operator
   * (SURVEY.md §2), each with a DuckDB-runnable oracle that recomputes the
   * same result from the same parquet tables. Raw-message corpora are derived
@@ -2343,200 +2358,6 @@ object SparkEntry {
         sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
       .orderBy("c_mktsegment")
   }
-
-  // ---------- registry ----------
-
-  // ListMap: registry order is execution order in Verify/Bench, so per-query
-  // timings are attributed the same way every round (a HashMap would hand
-  // whichever query iterates first the residual JIT warmup).
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    scala.collection.immutable.ListMap(
-    "q1_agg" -> (q1Agg _),
-    "cmf_geotab" -> (cmfGeotab _),
-    "cmf_calamp" -> (cmfCalamp _),
-    "cmf_ford" -> (cmfFord _),
-    "quarantine_counts" -> (quarantineCounts _),
-    "route_filterer" -> (routeFilterer _),
-    "route_topic_sink" -> (routeTopicSink _),
-    "route_splitter" -> (routeSplitter _),
-    "legacy_translate" -> (legacyTranslate _),
-    "union_sources" -> (unionSources _),
-    "q_join_agg" -> (qJoinAgg _),
-    "q_window_topk" -> (qWindowTopk _),
-    "q_rollup" -> (qRollup _),
-    "q_semi" -> (qSemi _),
-    "q_anti" -> (qAnti _),
-    "dedup_exact" -> (dedupExactDocs _),
-    "dedup_exact_norm" -> (dedupExactNormQ _),
-    "events_dedup" -> (eventsDedup _),
-    "text_stats" -> (textStats _),
-    "lang_id" -> (langId _),
-    "lang_id_ngram" -> (langIdNgramQ _),
-    "q_part_stats" -> (qPartStats _),
-    "q_supplier_nation" -> (qSupplierNation _),
-    "doc_fingerprint" -> (docFingerprint _),
-    "quality_filter" -> (qualityFilterQ _),
-    "gopher_repetition" -> (gopherRepetitionQ _),
-    "gopher_quality" -> (gopherQualityQ _),
-    "winnow_fingerprint" -> (winnowQ _),
-    "neardup_minhash" -> (neardupMinhash _),
-    "simhash_buckets" -> (simhashBuckets _),
-    "knn_brute" -> (knnBrute _),
-    "knn_lsh" -> (knnLsh _),
-    "knn_lsh_probe" -> (knnLshProbe _),
-    "knn_ivf" -> (knnIvf _),
-    "knn_ivf_indexed" -> (knnIvfIndexedQ _),
-    "knn_ivf_trained_indexed" -> (knnIvfTrainedIndexedQ _),
-    "knn_pq" -> (knnPq _),
-    "knn_pq_recall" -> (knnPqRecallQ _),
-    "knn_ivf_pq" -> (knnIvfPq _),
-    "knn_ivf_pq_recall" -> (knnIvfPqRecallQ _),
-    "knn_ivf_pq_trained" -> (knnIvfPqTrainedQ _),
-    "knn_ivf_pq_rerank" -> (knnIvfPqRerankQ _),
-    "asof_join" -> (asofJoinQ _),
-    "window_tumbling" -> (windowTumbling _),
-    "sessionize" -> (sessionizeQ _),
-    "multimodal_meta" -> (multimodalMeta _),
-    "media_decode" -> (mediaDecode _),
-    "image_phash" -> (imagePhashQ _),
-    "image_phash_neardup" -> (imagePhashNeardupQ _),
-    "media_frames" -> (mediaFrames _),
-    "neardup_cosine" -> (neardupCosine _),
-    "approx_distinct" -> (approxDistinct _),
-    "q_cohort_retention" -> (qCohortRetention _),
-    "q_sketch_rollup" -> (qSketchRollup _),
-    "neardup_jaccard" -> (neardupJaccardQ _),
-    "dedup_clusters" -> (dedupClustersQ _),
-    "dedup_clusters_star" -> (dedupClustersStarQ _),
-    "pii_scrub" -> (piiScrubQ _),
-    "sample_stratified" -> (sampleStratifiedQ _),
-    "dsir_weights" -> (dsirWeightsQ _),
-    "dsir_sample" -> (dsirSampleQ _),
-    "q_cube" -> (qCube _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_monthly_lag" -> (qMonthlyLag _),
-    "repetition_ratio" -> (repetitionRatioQ _),
-    "range_join" -> (rangeJoinQ _),
-    "seq_pack" -> (seqPackQ _),
-    "dedup_apply" -> (dedupApplyQ _),
-    "dedup_apply_best" -> (dedupApplyBestQ _),
-    "lm_unigram_score" -> (lmUnigramQ _),
-    "knn_recall" -> (knnRecallQ _),
-    "q_moving_avg" -> (qMovingAvg _),
-    "knn_topk_agg" -> (knnTopkAgg _),
-    "simhash_neardup" -> (simhashNeardupQ _),
-    "q_distinct_agg" -> (qDistinctAgg _),
-    "q_pivot" -> (qPivot _),
-    "tfidf_top_terms" -> (tfidfQ _),
-    "decontaminate" -> (decontaminateQ _),
-    "dedup_segment" -> (dedupSegmentQ _),
-    "dedup_substring" -> (dedupSubstringQ _),
-    "curate_e2e" -> (curateE2E _),
-    "embed_quant" -> (embedQuantQ _),
-    "token_budget" -> (tokenBudgetQ _),
-    "window_sliding" -> (windowSliding _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_intersect" -> (qIntersect _),
-    "q_except" -> (qExcept _),
-    "q_ntile" -> (qNtile _),
-    "q_string_agg" -> (qStringAgg _),
-    "q_gaps" -> (qGaps _),
-    "q_hist" -> (qHist _),
-    "q_range_frame" -> (qRangeFrame _),
-    "q_first_last" -> (qFirstLast _),
-    "dedup_incremental" -> (dedupIncrementalQ _),
-    "dedup_incremental_sharded" -> (dedupIncrementalShardedQ _),
-    "doc_chunk" -> (docChunkQ _),
-    "shard_assign" -> (shardAssignQ _),
-    "ngram_counts" -> (ngramCountsQ _),
-    "domain_mix" -> (domainMixQ _),
-    "corpus_stats" -> (corpusStatsQ _),
-    "q_corr" -> (qCorr _),
-    "q_mode" -> (qMode _),
-    "q_scalar_sub" -> (qScalarSub _),
-    "q_zero_fill" -> (qZeroFill _),
-    "kmeans_assign" -> (kmeansAssignQ _),
-    "kmeans_update" -> (kmeansUpdateQ _),
-    "kmeans_iter" -> (kmeansIterQ _),
-    "dedup_semantic" -> (dedupSemanticQ _),
-    "bm25_search" -> (bm25Q _),
-    "bm25_search_indexed" -> (bm25IndexedQ _),
-    "bpe_pairs" -> (bpePairsQ _),
-    "embed_outliers" -> (embedOutliersQ _),
-    "curate_semantic" -> (curateSemanticQ _),
-    "q_union" -> (qUnion _),
-    "approx_quantiles" -> (qApproxQuantiles _),
-    "q_rank_family" -> (qRankFamily _),
-    "q_not_in" -> (qNotIn _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "lm_bigram_score" -> (lmBigramQ _),
-    "bpe_train" -> (bpeTrainQ _),
-    "bpe_encode" -> (bpeEncodeQ _),
-    "graph_pagerank" -> (pageRankQ _),
-    "link_extract" -> (linkExtractQ _),
-    "anchor_text" -> (anchorTextQ _),
-    "link_graph" -> (linkGraphQ _),
-    "host_pagerank" -> (hostPageRankQ _),
-    "link_discover_e2e" -> (linkDiscoverQ _),
-    "meta_refresh" -> (metaRefreshQ _),
-    "rel_canonical" -> (relCanonicalQ _),
-    "redirect_resolve" -> (redirectResolveQ _),
-    "link_discover_resolved" -> (linkDiscoverResolvedQ _),
-    "crawl_discover_learned" -> (crawlDiscoverLearnedQ _),
-    "link_discover_learned" -> (linkDiscoverLearnedQ _),
-    "link_discover_resolved_learned" -> (linkDiscoverResolvedLearnedQ _),
-    "frontier_anchor_rank" -> (frontierAnchorRankQ _),
-    "frontier_authority_rank" -> (frontierAuthorityRankQ _),
-    "dedup_canonical" -> (dedupCanonicalQ _),
-    "anchor_endorsed_curate" -> (anchorCurateQ _),
-    "ccnet_buckets" -> (ccnetBucketsQ _),
-    "q_merge_upsert" -> (qMergeUpsert _),
-    "q_merge_tombstone" -> (qMergeTombstone _),
-    "q_market_share" -> (qMarketShare _),
-    "q_scd2" -> (qScd2 _),
-    "hybrid_rrf" -> (hybridRrfQ _),
-    "hybrid_rrf_indexed" -> (hybridRrfIndexedQ _),
-    "html_extract" -> (htmlExtractQ _),
-    "html_paragraphs" -> (htmlParagraphsQ _),
-    "c4_page_filter" -> (c4PageFilterQ _),
-    "crawl_curate_e2e" -> (crawlCurateE2eQ _),
-    "url_dedup" -> (urlDedupQ _),
-    "url_gate" -> (urlGateQ _),
-    "url_frontier" -> (urlFrontierQ _),
-    "robots_gate" -> (robotsGateQ _),
-    "robots_gate_agent" -> (robotsGateAgentQ _),
-    "robots_meta" -> (robotsMetaQ _),
-    "robots_meta_agent" -> (robotsMetaAgentQ _),
-    "crawl_budget" -> (crawlBudgetQ _),
-    "crawl_budget_agent" -> (crawlBudgetAgentQ _),
-    "sitemap_seeds" -> (sitemapSeedsQ _),
-    "sitemap_lastmod" -> (sitemapLastmodQ _),
-    "recrawl_queue" -> (recrawlQueueQ _),
-    "sitemap_index" -> (sitemapIndexQ _),
-    "crawl_discover_e2e" -> (crawlDiscoverE2eQ _),
-    "text_normalize" -> (textNormalizeQ _),
-    "heavy_hitters" -> (heavyHittersQ _),
-    "domain_stats" -> (domainStatsQ _),
-    "url_param_stats" -> (urlParamStatsQ _),
-    "url_dedup_learned" -> (urlDedupLearnedQ _),
-    "url_dedup_corroborated" -> (urlDedupCorroboratedQ _),
-    "url_frontier_learned" -> (urlFrontierLearnedQ _),
-    "domain_quota_sample" -> (domainQuotaSampleQ _),
-    "quality_classifier" -> (qualityClassifierQ _),
-    "classifier_curate" -> (classifierCurateQ _),
-    "lid_classifier" -> (lidClassifierQ _),
-    "warc_read" -> (warcReadQ _),
-    "warc_read_gz" -> (warcReadGzQ _),
-    "warc_curate_e2e" -> (warcCurateE2eQ _),
-    "audio_fingerprint" -> (audioFingerprintQ _),
-    "audio_fingerprint_neardup" -> (audioNeardupQ _),
-    "q_global_seq" -> (qGlobalSeq _),
-    "layout_zorder" -> (layoutZorderQ _),
-    "snm_editdist" -> (snmEditDistQ _),
-    "q_funnel" -> (qFunnel _),
-    "zonemap_prune" -> (zonemapPruneQ _),
-    "profile_table" -> (profileTableQ _)
-  )
 
   // ---------- DuckDB oracles ----------
 
@@ -6179,198 +6000,216 @@ object SparkEntry {
        |  (ddj.clf_keep AND COALESCE(fr.dedup_first, FALSE)) AS final_keep
        |FROM ddj LEFT JOIN fr USING (doc_id) ORDER BY ddj.doc_id""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "cmf_geotab" -> cmfGeotabSql,
-    "cmf_calamp" -> cmfCalampSql,
-    "cmf_ford" -> cmfFordSql,
-    "quarantine_counts" -> quarantineSql,
-    "route_filterer" -> routeFiltererSql,
-    "route_topic_sink" -> routeTopicSinkSql,
-    "route_splitter" -> routeSplitterSql,
-    "legacy_translate" -> legacyTranslateSql,
-    "union_sources" -> unionSourcesSql,
-    "q1_agg" -> q1AggSql,
-    "q_join_agg" -> qJoinAggSql,
-    "q_window_topk" -> qWindowTopkSql,
-    "q_rollup" -> qRollupSql,
-    "q_semi" -> qSemiSql,
-    "q_anti" -> qAntiSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_exact_norm" -> dedupExactNormSql,
-    "events_dedup" -> eventsDedupSql,
-    "text_stats" -> textStatsSql,
-    "lang_id" -> langIdSql,
-    "lang_id_ngram" -> langIdNgramSql,
-    "q_part_stats" -> qPartStatsSql,
-    "q_supplier_nation" -> qSupplierNationSql,
-    "doc_fingerprint" -> docFingerprintSql,
-    "quality_filter" -> qualityFilterSql,
-    "gopher_repetition" -> gopherRepetitionSql,
-    "gopher_quality" -> gopherQualitySql,
-    "winnow_fingerprint" -> winnowSql,
-    "neardup_minhash" -> neardupMinhashSql,
-    "simhash_buckets" -> simhashSql,
-    "knn_brute" -> knnBruteSql,
-    "knn_lsh" -> knnLshSql,
-    "knn_lsh_probe" -> knnLshProbeSql,
-    "knn_ivf" -> knnIvfSql,
+  // ---------- registry ----------
+
+  // Registry order is execution order in Verify/Bench, so per-query
+  // timings are attributed the same way every round (a hash order would
+  // hand whichever query iterates first the residual JIT warmup). Declared
+  // last, so every oracle SQL val above is initialized before it is read.
+  val registry: Seq[Query] = Query.registry(
+    Query("q1_agg", q1Agg, q1AggSql),
+    Query("cmf_geotab", cmfGeotab, cmfGeotabSql),
+    Query("cmf_calamp", cmfCalamp, cmfCalampSql),
+    Query("cmf_ford", cmfFord, cmfFordSql),
+    Query("quarantine_counts", quarantineCounts, quarantineSql),
+    Query("route_filterer", routeFilterer, routeFiltererSql),
+    Query("route_topic_sink", routeTopicSink, routeTopicSinkSql),
+    Query("route_splitter", routeSplitter, routeSplitterSql),
+    Query("legacy_translate", legacyTranslate, legacyTranslateSql),
+    Query("union_sources", unionSources, unionSourcesSql),
+    Query("q_join_agg", qJoinAgg, qJoinAggSql),
+    Query("q_window_topk", qWindowTopk, qWindowTopkSql),
+    Query("q_rollup", qRollup, qRollupSql),
+    Query("q_semi", qSemi, qSemiSql),
+    Query("q_anti", qAnti, qAntiSql),
+    Query("dedup_exact", dedupExactDocs, dedupExactSql),
+    Query("dedup_exact_norm", dedupExactNormQ, dedupExactNormSql),
+    Query("events_dedup", eventsDedup, eventsDedupSql),
+    Query("text_stats", textStats, textStatsSql),
+    Query("lang_id", langId, langIdSql),
+    Query("lang_id_ngram", langIdNgramQ, langIdNgramSql),
+    Query("q_part_stats", qPartStats, qPartStatsSql),
+    Query("q_supplier_nation", qSupplierNation, qSupplierNationSql),
+    Query("doc_fingerprint", docFingerprint, docFingerprintSql),
+    Query("quality_filter", qualityFilterQ, qualityFilterSql),
+    Query("gopher_repetition", gopherRepetitionQ, gopherRepetitionSql),
+    Query("gopher_quality", gopherQualityQ, gopherQualitySql),
+    Query("winnow_fingerprint", winnowQ, winnowSql),
+    Query("neardup_minhash", neardupMinhash, neardupMinhashSql),
+    Query("simhash_buckets", simhashBuckets, simhashSql),
+    Query("knn_brute", knnBrute, knnBruteSql),
+    Query("knn_lsh", knnLsh, knnLshSql),
+    Query("knn_lsh_probe", knnLshProbe, knnLshProbeSql),
+    Query("knn_ivf", knnIvf, knnIvfSql),
     // indexed serving is row-identical to the live probe by construction
-    "knn_ivf_indexed" -> knnIvfSql,
-    "knn_ivf_trained_indexed" -> knnIvfTrainedIndexedSql,
-    "knn_pq" -> knnPqSql,
-    "knn_pq_recall" -> knnPqRecallSql,
-    "knn_ivf_pq" -> knnIvfPqSql,
-    "knn_ivf_pq_recall" -> knnIvfPqRecallSql,
-    "knn_ivf_pq_trained" -> knnIvfPqTrainedSql,
-    "knn_ivf_pq_rerank" -> knnIvfPqRerankSql,
-    "asof_join" -> asofJoinSql,
-    "window_tumbling" -> windowTumblingSql,
-    "sessionize" -> sessionizeSql,
-    "multimodal_meta" -> multimodalMetaSql,
-    "media_decode" -> mediaDecodeSql,
-    "image_phash" -> imagePhashSql,
-    "image_phash_neardup" -> imagePhashNeardupSql,
-    "media_frames" -> mediaFramesSql,
-    "neardup_cosine" -> neardupCosineSql,
-    "approx_distinct" -> approxDistinctSql,
-    "q_cohort_retention" -> qCohortRetentionSql,
-    "q_sketch_rollup" -> qSketchRollupSql,
-    "neardup_jaccard" -> neardupJaccardSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_clusters_star" -> dedupClustersSql,
-    "pii_scrub" -> piiScrubSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "dsir_weights" -> dsirWeightsSql,
-    "dsir_sample" -> dsirSampleSql,
-    "q_cube" -> qCubeSql,
-    "q_percentiles" -> qPercentilesSql,
-    "q_monthly_lag" -> qMonthlyLagSql,
-    "repetition_ratio" -> repetitionRatioSql,
-    "range_join" -> rangeJoinSql,
-    "seq_pack" -> seqPackSql,
-    "dedup_apply" -> dedupApplySql,
-    "dedup_apply_best" -> dedupApplyBestSql,
-    "lm_unigram_score" -> lmUnigramSql,
-    "knn_recall" -> knnRecallSql,
-    "q_moving_avg" -> qMovingAvgSql,
+    Query("knn_ivf_indexed", knnIvfIndexedQ, knnIvfSql),
+    Query("knn_ivf_trained_indexed", knnIvfTrainedIndexedQ,
+      knnIvfTrainedIndexedSql),
+    Query("knn_pq", knnPq, knnPqSql),
+    Query("knn_pq_recall", knnPqRecallQ, knnPqRecallSql),
+    Query("knn_ivf_pq", knnIvfPq, knnIvfPqSql),
+    Query("knn_ivf_pq_recall", knnIvfPqRecallQ, knnIvfPqRecallSql),
+    Query("knn_ivf_pq_trained", knnIvfPqTrainedQ, knnIvfPqTrainedSql),
+    Query("knn_ivf_pq_rerank", knnIvfPqRerankQ, knnIvfPqRerankSql),
+    Query("asof_join", asofJoinQ, asofJoinSql),
+    Query("window_tumbling", windowTumbling, windowTumblingSql),
+    Query("sessionize", sessionizeQ, sessionizeSql),
+    Query("multimodal_meta", multimodalMeta, multimodalMetaSql),
+    Query("media_decode", mediaDecode, mediaDecodeSql),
+    Query("image_phash", imagePhashQ, imagePhashSql),
+    Query("image_phash_neardup", imagePhashNeardupQ, imagePhashNeardupSql),
+    Query("media_frames", mediaFrames, mediaFramesSql),
+    Query("neardup_cosine", neardupCosine, neardupCosineSql),
+    Query("approx_distinct", approxDistinct, approxDistinctSql),
+    Query("q_cohort_retention", qCohortRetention, qCohortRetentionSql),
+    Query("q_sketch_rollup", qSketchRollup, qSketchRollupSql),
+    Query("neardup_jaccard", neardupJaccardQ, neardupJaccardSql),
+    Query("dedup_clusters", dedupClustersQ, dedupClustersSql),
+    Query("dedup_clusters_star", dedupClustersStarQ, dedupClustersSql),
+    Query("pii_scrub", piiScrubQ, piiScrubSql),
+    Query("sample_stratified", sampleStratifiedQ, sampleStratifiedSql),
+    Query("dsir_weights", dsirWeightsQ, dsirWeightsSql),
+    Query("dsir_sample", dsirSampleQ, dsirSampleSql),
+    Query("q_cube", qCube, qCubeSql),
+    Query("q_percentiles", qPercentiles, qPercentilesSql),
+    Query("q_monthly_lag", qMonthlyLag, qMonthlyLagSql),
+    Query("repetition_ratio", repetitionRatioQ, repetitionRatioSql),
+    Query("range_join", rangeJoinQ, rangeJoinSql),
+    Query("seq_pack", seqPackQ, seqPackSql),
+    Query("dedup_apply", dedupApplyQ, dedupApplySql),
+    Query("dedup_apply_best", dedupApplyBestQ, dedupApplyBestSql),
+    Query("lm_unigram_score", lmUnigramQ, lmUnigramSql),
+    Query("knn_recall", knnRecallQ, knnRecallSql),
+    Query("q_moving_avg", qMovingAvg, qMovingAvgSql),
     // same semantics as knn_brute, different engine path (typed Aggregator)
-    "knn_topk_agg" -> knnBruteSql,
-    "simhash_neardup" -> simhashNeardupSql,
-    "q_distinct_agg" -> qDistinctAggSql,
-    "q_pivot" -> qPivotSql,
-    "tfidf_top_terms" -> tfidfSql,
-    "decontaminate" -> decontaminateSql,
-    "dedup_segment" -> dedupSegmentSql,
-    "dedup_substring" -> dedupSubstringSql,
-    "curate_e2e" -> curateE2ESql,
-    "embed_quant" -> embedQuantSql,
-    "token_budget" -> tokenBudgetSql,
-    "window_sliding" -> windowSlidingSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_intersect" -> qIntersectSql,
-    "q_except" -> qExceptSql,
-    "q_ntile" -> qNtileSql,
-    "q_string_agg" -> qStringAggSql,
-    "q_gaps" -> qGapsSql,
-    "q_hist" -> qHistSql,
-    "q_range_frame" -> qRangeFrameSql,
-    "q_first_last" -> qFirstLastSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_incremental_sharded" -> dedupIncrementalSql,
-    "doc_chunk" -> docChunkSql,
-    "shard_assign" -> shardAssignSql,
-    "ngram_counts" -> ngramCountsSql,
-    "domain_mix" -> domainMixSql,
-    "corpus_stats" -> corpusStatsSql,
-    "q_corr" -> qCorrSql,
-    "q_mode" -> qModeSql,
-    "q_scalar_sub" -> qScalarSubSql,
-    "q_zero_fill" -> qZeroFillSql,
-    "kmeans_assign" -> kmeansAssignSql,
-    "dedup_semantic" -> dedupSemanticSql,
-    "bm25_search" -> bm25Sql,
+    Query("knn_topk_agg", knnTopkAgg, knnBruteSql),
+    Query("simhash_neardup", simhashNeardupQ, simhashNeardupSql),
+    Query("q_distinct_agg", qDistinctAgg, qDistinctAggSql),
+    Query("q_pivot", qPivot, qPivotSql),
+    Query("tfidf_top_terms", tfidfQ, tfidfSql),
+    Query("decontaminate", decontaminateQ, decontaminateSql),
+    Query("dedup_segment", dedupSegmentQ, dedupSegmentSql),
+    Query("dedup_substring", dedupSubstringQ, dedupSubstringSql),
+    Query("curate_e2e", curateE2E, curateE2ESql),
+    Query("embed_quant", embedQuantQ, embedQuantSql),
+    Query("token_budget", tokenBudgetQ, tokenBudgetSql),
+    Query("window_sliding", windowSliding, windowSlidingSql),
+    Query("q_grouping_sets", qGroupingSets, qGroupingSetsSql),
+    Query("q_intersect", qIntersect, qIntersectSql),
+    Query("q_except", qExcept, qExceptSql),
+    Query("q_ntile", qNtile, qNtileSql),
+    Query("q_string_agg", qStringAgg, qStringAggSql),
+    Query("q_gaps", qGaps, qGapsSql),
+    Query("q_hist", qHist, qHistSql),
+    Query("q_range_frame", qRangeFrame, qRangeFrameSql),
+    Query("q_first_last", qFirstLast, qFirstLastSql),
+    Query("dedup_incremental", dedupIncrementalQ, dedupIncrementalSql),
+    Query("dedup_incremental_sharded", dedupIncrementalShardedQ,
+      dedupIncrementalSql),
+    Query("doc_chunk", docChunkQ, docChunkSql),
+    Query("shard_assign", shardAssignQ, shardAssignSql),
+    Query("ngram_counts", ngramCountsQ, ngramCountsSql),
+    Query("domain_mix", domainMixQ, domainMixSql),
+    Query("corpus_stats", corpusStatsQ, corpusStatsSql),
+    Query("q_corr", qCorr, qCorrSql),
+    Query("q_mode", qMode, qModeSql),
+    Query("q_scalar_sub", qScalarSub, qScalarSubSql),
+    Query("q_zero_fill", qZeroFill, qZeroFillSql),
+    Query("kmeans_assign", kmeansAssignQ, kmeansAssignSql),
+    Query("kmeans_update", kmeansUpdateQ, kmeansUpdateSql),
+    Query("kmeans_iter", kmeansIterQ, kmeansIterSql),
+    Query("dedup_semantic", dedupSemanticQ, dedupSemanticSql),
+    Query("bm25_search", bm25Q, bm25Sql),
     // indexed serving shares the live scoring core — same oracle
-    "bm25_search_indexed" -> bm25Sql,
-    "bpe_pairs" -> bpePairsSql,
-    "embed_outliers" -> embedOutliersSql,
-    "curate_semantic" -> curateSemanticSql,
-    "kmeans_update" -> kmeansUpdateSql,
-    "kmeans_iter" -> kmeansIterSql,
-    "q_union" -> qUnionSql,
-    "approx_quantiles" -> approxQuantilesSql,
-    "q_rank_family" -> qRankFamilySql,
-    "q_not_in" -> qNotInSql,
-    "q_salted_join" -> qSaltedJoinSql,
-    "lm_bigram_score" -> lmBigramSql,
-    "bpe_train" -> bpeTrainSql,
-    "bpe_encode" -> bpeEncodeSql,
-    "graph_pagerank" -> pageRankSql,
-    "link_extract" -> linkExtractSql,
-    "anchor_text" -> anchorTextSql,
-    "link_graph" -> linkGraphSql,
-    "host_pagerank" -> hostPageRankSql,
-    "link_discover_e2e" -> linkDiscoverSql,
-    "meta_refresh" -> metaRefreshSql,
-    "rel_canonical" -> relCanonicalSql,
-    "redirect_resolve" -> redirectResolveSql,
-    "link_discover_resolved" -> linkDiscoverResolvedSql,
-    "crawl_discover_learned" -> crawlDiscoverLearnedSql,
-    "link_discover_learned" -> linkDiscoverLearnedSql,
-    "link_discover_resolved_learned" -> linkDiscoverResolvedLearnedSql,
-    "frontier_anchor_rank" -> frontierAnchorRankSql,
-    "dedup_canonical" -> dedupCanonicalSql,
-    "anchor_endorsed_curate" -> anchorCurateSql,
-    "frontier_authority_rank" -> frontierAuthorityRankSql,
-    "ccnet_buckets" -> ccnetBucketsSql,
-    "q_merge_upsert" -> qMergeUpsertSql,
-    "q_merge_tombstone" -> qMergeTombstoneSql,
-    "q_market_share" -> qMarketShareSql,
-    "q_scd2" -> qScd2Sql,
-    "hybrid_rrf" -> hybridRrfSql,
+    Query("bm25_search_indexed", bm25IndexedQ, bm25Sql),
+    Query("bpe_pairs", bpePairsQ, bpePairsSql),
+    Query("embed_outliers", embedOutliersQ, embedOutliersSql),
+    Query("curate_semantic", curateSemanticQ, curateSemanticSql),
+    Query("q_union", qUnion, qUnionSql),
+    Query("approx_quantiles", qApproxQuantiles, approxQuantilesSql),
+    Query("q_rank_family", qRankFamily, qRankFamilySql),
+    Query("q_not_in", qNotIn, qNotInSql),
+    Query("q_salted_join", qSaltedJoin, qSaltedJoinSql),
+    Query("lm_bigram_score", lmBigramQ, lmBigramSql),
+    Query("bpe_train", bpeTrainQ, bpeTrainSql),
+    Query("bpe_encode", bpeEncodeQ, bpeEncodeSql),
+    Query("graph_pagerank", pageRankQ, pageRankSql),
+    Query("link_extract", linkExtractQ, linkExtractSql),
+    Query("anchor_text", anchorTextQ, anchorTextSql),
+    Query("link_graph", linkGraphQ, linkGraphSql),
+    Query("host_pagerank", hostPageRankQ, hostPageRankSql),
+    Query("link_discover_e2e", linkDiscoverQ, linkDiscoverSql),
+    Query("meta_refresh", metaRefreshQ, metaRefreshSql),
+    Query("rel_canonical", relCanonicalQ, relCanonicalSql),
+    Query("redirect_resolve", redirectResolveQ, redirectResolveSql),
+    Query("link_discover_resolved", linkDiscoverResolvedQ,
+      linkDiscoverResolvedSql),
+    Query("crawl_discover_learned", crawlDiscoverLearnedQ,
+      crawlDiscoverLearnedSql),
+    Query("link_discover_learned", linkDiscoverLearnedQ,
+      linkDiscoverLearnedSql),
+    Query("link_discover_resolved_learned", linkDiscoverResolvedLearnedQ,
+      linkDiscoverResolvedLearnedSql),
+    Query("frontier_anchor_rank", frontierAnchorRankQ, frontierAnchorRankSql),
+    Query("frontier_authority_rank", frontierAuthorityRankQ,
+      frontierAuthorityRankSql),
+    Query("dedup_canonical", dedupCanonicalQ, dedupCanonicalSql),
+    Query("anchor_endorsed_curate", anchorCurateQ, anchorCurateSql),
+    Query("ccnet_buckets", ccnetBucketsQ, ccnetBucketsSql),
+    Query("q_merge_upsert", qMergeUpsert, qMergeUpsertSql),
+    Query("q_merge_tombstone", qMergeTombstone, qMergeTombstoneSql),
+    Query("q_market_share", qMarketShare, qMarketShareSql),
+    Query("q_scd2", qScd2, qScd2Sql),
+    Query("hybrid_rrf", hybridRrfQ, hybridRrfSql),
     // the indexed form is row-identical to the live fusion by construction
     // (exact dense leg at nprobe = numCentroids) — same oracle
-    "hybrid_rrf_indexed" -> hybridRrfSql,
-    "html_extract" -> htmlExtractSql,
-    "html_paragraphs" -> htmlParagraphsSql,
-    "c4_page_filter" -> c4PageFilterSql,
-    "crawl_curate_e2e" -> crawlCurateE2eSql,
-    "url_dedup" -> urlDedupSql,
-    "url_gate" -> urlGateSql,
-    "url_frontier" -> urlFrontierSql,
-    "robots_gate" -> robotsGateSql,
-    "robots_gate_agent" -> robotsGateAgentSql,
-    "robots_meta" -> robotsMetaSql,
-    "robots_meta_agent" -> robotsMetaAgentSql,
-    "crawl_budget" -> crawlBudgetSql,
-    "crawl_budget_agent" -> crawlBudgetAgentSql,
-    "sitemap_seeds" -> sitemapSeedsSql,
-    "sitemap_lastmod" -> sitemapLastmodSql,
-    "recrawl_queue" -> recrawlQueueSql,
-    "sitemap_index" -> sitemapIndexSql,
-    "crawl_discover_e2e" -> crawlDiscoverE2eSql,
-    "text_normalize" -> textNormalizeSql,
-    "heavy_hitters" -> heavyHittersSql,
-    "domain_stats" -> domainStatsSql,
-    "url_param_stats" -> urlParamStatsSql,
-    "url_dedup_learned" -> urlDedupLearnedSql,
-    "url_dedup_corroborated" -> urlDedupCorroboratedSql,
-    "url_frontier_learned" -> urlFrontierLearnedSql,
-    "domain_quota_sample" -> domainQuotaSampleSql,
-    "quality_classifier" -> qualityClassifierSql,
-    "classifier_curate" -> classifierCurateSql,
-    "lid_classifier" -> lidClassifierSql,
-    "warc_read" -> warcReadSql,
-    "warc_read_gz" -> warcReadSql,
+    Query("hybrid_rrf_indexed", hybridRrfIndexedQ, hybridRrfSql),
+    Query("html_extract", htmlExtractQ, htmlExtractSql),
+    Query("html_paragraphs", htmlParagraphsQ, htmlParagraphsSql),
+    Query("c4_page_filter", c4PageFilterQ, c4PageFilterSql),
+    Query("crawl_curate_e2e", crawlCurateE2eQ, crawlCurateE2eSql),
+    Query("url_dedup", urlDedupQ, urlDedupSql),
+    Query("url_gate", urlGateQ, urlGateSql),
+    Query("url_frontier", urlFrontierQ, urlFrontierSql),
+    Query("robots_gate", robotsGateQ, robotsGateSql),
+    Query("robots_gate_agent", robotsGateAgentQ, robotsGateAgentSql),
+    Query("robots_meta", robotsMetaQ, robotsMetaSql),
+    Query("robots_meta_agent", robotsMetaAgentQ, robotsMetaAgentSql),
+    Query("crawl_budget", crawlBudgetQ, crawlBudgetSql),
+    Query("crawl_budget_agent", crawlBudgetAgentQ, crawlBudgetAgentSql),
+    Query("sitemap_seeds", sitemapSeedsQ, sitemapSeedsSql),
+    Query("sitemap_lastmod", sitemapLastmodQ, sitemapLastmodSql),
+    Query("recrawl_queue", recrawlQueueQ, recrawlQueueSql),
+    Query("sitemap_index", sitemapIndexQ, sitemapIndexSql),
+    Query("crawl_discover_e2e", crawlDiscoverE2eQ, crawlDiscoverE2eSql),
+    Query("text_normalize", textNormalizeQ, textNormalizeSql),
+    Query("heavy_hitters", heavyHittersQ, heavyHittersSql),
+    Query("domain_stats", domainStatsQ, domainStatsSql),
+    Query("url_param_stats", urlParamStatsQ, urlParamStatsSql),
+    Query("url_dedup_learned", urlDedupLearnedQ, urlDedupLearnedSql),
+    Query("url_dedup_corroborated", urlDedupCorroboratedQ,
+      urlDedupCorroboratedSql),
+    Query("url_frontier_learned", urlFrontierLearnedQ, urlFrontierLearnedSql),
+    Query("domain_quota_sample", domainQuotaSampleQ, domainQuotaSampleSql),
+    Query("quality_classifier", qualityClassifierQ, qualityClassifierSql),
+    Query("classifier_curate", classifierCurateQ, classifierCurateSql),
+    Query("lid_classifier", lidClassifierQ, lidClassifierSql),
+    Query("warc_read", warcReadQ, warcReadSql),
+    Query("warc_read_gz", warcReadGzQ, warcReadSql),
     // round-trip identity: parsing the synthetic WARC recovers exactly the
     // (doc_id, html) frame the direct pipeline starts from — same oracle
-    "warc_curate_e2e" -> crawlCurateE2eSql,
-    "audio_fingerprint" -> audioFingerprintSql,
-    "audio_fingerprint_neardup" -> audioNeardupSql,
-    "q_global_seq" -> qGlobalSeqSql,
-    "layout_zorder" -> layoutZorderSql,
-    "snm_editdist" -> snmEditDistSql,
-    "q_funnel" -> qFunnelSql,
-    "zonemap_prune" -> zonemapPruneSql,
-    "profile_table" -> profileTableSql
+    Query("warc_curate_e2e", warcCurateE2eQ, crawlCurateE2eSql),
+    Query("audio_fingerprint", audioFingerprintQ, audioFingerprintSql),
+    Query("audio_fingerprint_neardup", audioNeardupQ, audioNeardupSql),
+    Query("q_global_seq", qGlobalSeq, qGlobalSeqSql),
+    Query("layout_zorder", layoutZorderQ, layoutZorderSql),
+    Query("snm_editdist", snmEditDistQ, snmEditDistSql),
+    Query("q_funnel", qFunnel, qFunnelSql),
+    Query("zonemap_prune", zonemapPruneQ, zonemapPruneSql),
+    Query("profile_table", profileTableQ, profileTableSql)
   )
+
+  /** Name → query, in registry order. */
+  val byName: Map[String, Query] =
+    scala.collection.immutable.ListMap(registry.map(q => q.name -> q): _*)
 }

@@ -1,7 +1,5 @@
 package graft.gen
 
-import scala.util.control.NonFatal
-
 /** Dump `.explain("formatted")` for registered queries to files — the
   * optimization rounds' plan-evidence artifact (plans/rNN/<query>_<tag>.txt).
   * Usage:
@@ -17,22 +15,18 @@ object Plans {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r20")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val registry = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .map(keep => graft.SparkEntry.queries.filter { case (n, _) => keep(n) })
-      .getOrElse(graft.SparkEntry.queries)
+    val queries = graft.Harness.selected()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    registry.foreach { case (name, fn) =>
+    queries.foreach { q =>
       try {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
+        val txt = q.run(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"), txt)
-        println(s"[plans] wrote $outDir/${name}_$tag.txt")
+          java.nio.file.Paths.get(outDir, s"${q.name}_$tag.txt"), txt)
+        println(s"[plans] wrote $outDir/${q.name}_$tag.txt")
       } catch {
-        case t: Throwable if NonFatal(t) || t.isInstanceOf[StackOverflowError] =>
-          println(s"[plans] $name FAILED: ${t.getMessage}")
+        case t: Throwable if graft.Harness.recoverable(t) =>
+          println(s"[plans] ${q.name} FAILED: ${t.getMessage}")
       }
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.gen
 
 import org.apache.spark.scheduler._
-import scala.util.control.NonFatal
 
 /** Measurement harness for the optimization rounds (guide §1: measure
   * first): breaks a registered query's wall time into plan construction,
@@ -63,33 +62,18 @@ object Profile {
     val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val counts = new Counts
     spark.sparkContext.addSparkListener(counts)
-    // same warmup + corpus materialization as Bench so numbers line up
-    spark.range(200000).selectExpr("md5(cast(id as string)) h")
-      .groupBy("h").count().count()
-    try RawGen.events(spark, sfDir).count() catch { case NonFatal(_) => () }
-    Seq("documents", "embeddings", "lineitem", "orders", "customer",
-      "nation", "region", "part", "supplier").foreach { t =>
-      try RawGen.table(spark, sfDir, t).count() catch { case NonFatal(_) => () }
-    }
-    RawGen.wireKinds.foreach { k =>
-      try RawGen.wire(spark, sfDir, k).count() catch { case NonFatal(_) => () }
-    }
-    RawGen.derivedKinds.foreach { k =>
-      try RawGen.derived(spark, sfDir, k).count() catch { case NonFatal(_) => () }
-    }
-    val registry = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .map(keep => graft.SparkEntry.queries.filter { case (n, _) => keep(n) })
-      .getOrElse(graft.SparkEntry.queries)
+    val registry = graft.Harness.selected()
+    // same warm-up as Bench so numbers line up
+    graft.Harness.warm(spark, sfDir)
     def t[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
-    registry.foreach { case (name, fn) =>
-      try {
-        val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    registry.foreach { q =>
+      val name = q.name
+      try graft.Harness.fenced(spark) {
         val (cg0n, cg0ms) = codegenStats()
         counts.reset()
-        val (df, tBuild) = t(fn(spark, sfDir))
+        val (df, tBuild) = t(q.run(spark, sfDir))
         val (_, tOpt) = t(df.queryExecution.optimizedPlan)
         val (_, tPlan) = t(df.queryExecution.executedPlan)
         val (_, tExec1) = t(df.queryExecution.toRdd.count())
@@ -97,13 +81,9 @@ object Profile {
         val tasks1 = counts.tasks; val tt1 = counts.taskTimeMs
         val (cg1n, cg1ms) = codegenStats()
         counts.reset()
-        val (df2, _) = t(fn(spark, sfDir))
+        val (df2, _) = t(q.run(spark, sfDir))
         val (_, tExec2) = t(df2.queryExecution.toRdd.count())
         val (cg2n, cg2ms) = codegenStats()
-        val persistedNow = spark.sparkContext.getPersistentRDDs
-        (persistedNow.keySet -- persistedBefore).foreach { id =>
-          persistedNow.get(id).foreach(_.unpersist(blocking = false))
-        }
         println(f"[profile] $name%-28s build=$tBuild%6.2f opt=$tOpt%6.2f " +
           f"plan=$tPlan%6.2f exec1=$tExec1%6.2f exec2=$tExec2%6.2f " +
           f"jobs=$jobs1%3d stages=$stages1%3d tasks=$tasks1%5d " +
@@ -114,7 +94,7 @@ object Profile {
           counts.topStages(sys.env("SPARK_GRAFT_PROFILE_STAGES").toInt)
             .foreach(println)
       } catch {
-        case t: Throwable if NonFatal(t) || t.isInstanceOf[StackOverflowError] =>
+        case t: Throwable if graft.Harness.recoverable(t) =>
           println(s"[profile] $name FAILED: ${t.getMessage}")
       }
     }

@@ -1,6 +1,6 @@
 package graft.gen
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -14,14 +14,7 @@ import graft.ops.Similarity
 object RecallSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     val emb = RawGen.table(spark, sfDir, "embeddings").cache()
     emb.count()
     val queries = emb.filter(col("vec_id") < 8)

@@ -1,6 +1,6 @@
 package graft.gen
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility behind DESIGN.md's measured-scaling tables: times selected
@@ -13,14 +13,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("32")
 
     val docs1 = RawGen.table(spark, sfDir, "documents")
     val docs10 = (0 until 10).map { r =>
@@ -61,20 +54,16 @@ object ScaleProbe {
     def pair(name: String, at1x: => DataFrame, at10x: => DataFrame): Unit =
       if (only.forall(_.contains(name))) { probed += 1; pairImpl(name, at1x, at10x) }
 
-    def pairImpl(name: String, at1x: => DataFrame, at10x: => DataFrame): Unit = {
-      // leak fence (same rationale as Bench's): each by-name evaluation of
-      // a managed frame leaves its eagerly-checkpointed result blocks until
-      // GC — 4 evaluations per pair at 10x scale would contaminate later
-      // pairs' measurements. The corpus caches predate the probe loop and
-      // survive the diff.
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t1 = time(s"$name 1x", at1x)
-      val t10 = time(s"$name 10x", at10x)
-      println(f"[probe] $name%-28s exponent=${math.log10(t10 / t1)}%5.2f")
-      val now = spark.sparkContext.getPersistentRDDs
-      (now.keySet -- before).foreach(id =>
-        now.get(id).foreach(_.unpersist(blocking = false)))
-    }
+    // leak fence: each by-name evaluation of a managed frame leaves its
+    // eagerly-checkpointed result blocks until GC — 4 evaluations per pair
+    // at 10x scale would contaminate later pairs' measurements. The corpus
+    // caches predate the probe loop and survive the fence.
+    def pairImpl(name: String, at1x: => DataFrame, at10x: => DataFrame): Unit =
+      graft.Harness.fenced(spark) {
+        val t1 = time(s"$name 1x", at1x)
+        val t10 = time(s"$name 10x", at10x)
+        println(f"[probe] $name%-28s exponent=${math.log10(t10 / t1)}%5.2f")
+      }
 
     import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
     val d1 = docs1.select(col("doc_id"), col("text"))

@@ -1,6 +1,6 @@
 package graft.gen
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf scale-up generator (round-16 directive: one full-registry
@@ -26,15 +26,7 @@ object ScaleUp {
     val inDir = args(0)
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$inDir/$name.parquet")

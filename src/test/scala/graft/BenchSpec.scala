@@ -58,9 +58,9 @@ class BenchSpec extends AnyFunSuite {
     // FULL registry coverage, both directions: every registered query has
     // a bar (new queries get quiet-host entries in the same change that
     // registers them), and bars only exist for registered queries
-    val unbarred = SparkEntry.queries.keySet -- b32.keySet
+    val unbarred = SparkEntry.byName.keySet -- b32.keySet
     assert(unbarred.isEmpty, s"registered queries with no bars: $unbarred")
-    val unknown = b32.keySet -- SparkEntry.queries.keySet
+    val unknown = b32.keySet -- SparkEntry.byName.keySet
     assert(unknown.isEmpty, s"bars for unregistered queries: $unknown")
     // spot-pin two entries against the committed round-15 tables so a
     // section-selection bug (right rows, wrong table) is caught —

@@ -1065,7 +1065,7 @@ class OpsSpec extends SparkSpec {
 
   test("q_merge_upsert: aggregate latest-wins equals the window row_number form") {
     val dir = "/root/testdata/sf0.001"
-    val got = SparkEntry.queries("q_merge_upsert")(spark, dir).collect().toSeq
+    val got = SparkEntry.byName("q_merge_upsert").run(spark, dir).collect().toSeq
     val e = graft.gen.RawGen.events(spark, dir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
         col("event_id").isNotNull && col("event_type").isNotNull)
@@ -1087,7 +1087,7 @@ class OpsSpec extends SparkSpec {
 
   test("q_scd2: validity intervals chain exactly and one current row per key") {
     val dir = "/root/testdata/sf0.001"
-    val rows = SparkEntry.queries("q_scd2")(spark, dir).collect()
+    val rows = SparkEntry.byName("q_scd2").run(spark, dir).collect()
     assert(rows.nonEmpty)
     val byKey = rows.groupBy(r => (r.getLong(0), r.getString(1)))
     for ((_, vs) <- byKey) {

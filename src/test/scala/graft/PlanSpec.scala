@@ -28,7 +28,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_join_agg broadcasts the small dimension tables") {
-    val p = plan(SparkEntry.queries("q_join_agg")(spark, "/root/testdata/sf0.001"))
+    val p = plan(SparkEntry.byName("q_join_agg").run(spark, "/root/testdata/sf0.001"))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")
   }
 
@@ -102,12 +102,12 @@ class PlanSpec extends SparkSpec {
       "domain_quota_sample", // embeds domainStats' 1-row total cross join
       "q_zero_fill")
     val dir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val p = fn(spark, dir).queryExecution.executedPlan.toString
-      assert(!p.contains("CartesianProduct"), s"$name plans a cartesian product")
-      if (!bnljAllowed.contains(name))
+    SparkEntry.registry.foreach { q =>
+      val p = q.run(spark, dir).queryExecution.executedPlan.toString
+      assert(!p.contains("CartesianProduct"), s"${q.name} plans a cartesian product")
+      if (!bnljAllowed.contains(q.name))
         assert(!p.contains("BroadcastNestedLoopJoin"),
-          s"$name plans an unexpected nested-loop join")
+          s"${q.name} plans an unexpected nested-loop join")
     }
   }
 
