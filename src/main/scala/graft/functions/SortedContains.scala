@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the param-policy apply path (round 19): a crawl-trap megadomain can
   * flag 10⁵+ strippable param NAMES, and the per-URL strip filter
   * probes that one per-domain array once per query param — the
-  * ScaleProbe `param_vocab_policy` pair measured the linear scan at
+  * 10× scale probe's `param_vocab_policy` pair measured the linear scan at
   * exponent 1.79 (7.3 s → 447 s for 10× rows × 10× vocabulary); the
   * binary search restores the row-local apply's linearity without
   * adding an explode/join/regroup shuffle to the pass.

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback: inside a whole-stage-codegen'd join stage, every
   * row crossing that eval boundary re-materialized the build side's
   * policy array — ~55 s for 2M rows against a 10⁵-name crawl-trap
-  * strip list on the ScaleProbe megadomain, with the actual string
+  * strip list on the 10× scale-probe megadomain, with the actual string
   * work accounting for ~1 s. As a binary native expression the array
   * stays a reference and the whole projection stays in codegen.
   *

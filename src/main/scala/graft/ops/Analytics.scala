@@ -3,9 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Event-analytics rollups shared by the registry queries and
-  * gen/ScaleProbe (one body, so the probe can never silently measure a
-  * diverged copy of the query it claims to characterize). */
+/** Event-analytics rollups behind the registry queries. */
 object Analytics {
 
   private val usPerDay = 86400000000L

@@ -244,10 +244,8 @@ object Dedup {
     reassembleSegs(counts, kept)
   }
 
-  /** Fixed-size word segmentation shared by [[segmentDedup]] and
-    * [[segmentDedupIncrement]], so the batch and incremental forms agree on
-    * segment boundaries byte-for-byte: adds `_ws` (words) and `_segs`
-    * (segWords-word chunks). */
+  /** Fixed-size word segmentation for [[segmentDedup]]: adds `_ws`
+    * (words) and `_segs` (segWords-word chunks). */
   private def segmented(docs: DataFrame, segWords: Int): DataFrame = {
     val segs = transform(
       sequence(lit(0), ceil(size(col("_ws")) / lit(segWords.toDouble)).cast("int") - 1),
@@ -271,66 +269,6 @@ object Dedup {
         coalesce(col("n_kept"), lit(0L)).cast("long").as("n_kept"),
         length(col("_new_text")).cast("long").as("kept_chars"),
         md5(col("_new_text")).as("kept_md5"))
-  }
-
-  /** One micro-batch of INCREMENTAL segment-level dedup — the ingest-time
-    * form of [[segmentDedup]], mirroring [[incrementalDedup]]'s
-    * bloom-prefiltered catalog pattern at segment granularity. `catalog`
-    * holds the md5 of every segment kept by earlier batches (one `seg_md5`
-    * column); a segment survives iff it is the batch's own first occurrence
-    * (the batch operator's (doc_id, seg_idx) window) AND absent from the
-    * catalog. Returns (deduped docs in [[segmentDedup]]'s exact output
-    * schema, the FULL surviving-segment frame — EAGERLY CHECKPOINTED, so
-    * the bloom build + anti-join run once for both outputs; the caller
-    * projects `col("_h").as("seg_md5")` for the catalog append and then
-    * `releaseCheckpoint`s this frame. Hashes are already distinct because
-    * intra-batch firsts are unique per hash).
-    *
-    * Scale shape per batch: the sized bloom sketch prefilters catalog
-    * membership scan-side, so only catalog-positive segments (true dups +
-    * ~1% false positives) reach the exact anti-join — the fresh majority of
-    * a clean crawl never shuffles against the catalog, and the catalog side
-    * stays a slim 32-char hash column regardless of segment length.
-    *
-    * Parity contract (asserted in StreamingSpec): processing the corpus in
-    * ascending (doc_id) order across ANY micro-batch split reproduces the
-    * batch operator byte-for-byte, because "kept by an earlier batch" and
-    * "earlier (doc_id, seg_idx)" then agree on which occurrence is first.
-    * Out-of-order arrival keeps the dedup exact but may crown a different
-    * (earlier-arriving) copy as the kept first occurrence — the same
-    * arrival-order semantics as [[incrementalDedup]]. */
-  def segmentDedupIncrement(batch: DataFrame, catalog: DataFrame,
-                            segWords: Int = 10,
-                            expectedCatalogSize: Long = 1000000L,
-                            shards: Int = 1): (DataFrame, DataFrame) = {
-    val withSegs = segmented(batch, segWords)
-    val counts = withSegs.select(col("doc_id"),
-      size(col("_segs")).cast("long").as("n_segs"))
-    val exploded = withSegs
-      .select(col("doc_id"), posexplode(col("_segs")).as(Seq("seg_idx", "seg")))
-      .withColumn("_h", md5(col("seg")))
-    val firstWin = Window.partitionBy("_h").orderBy(col("doc_id"), col("seg_idx"))
-    val intraFirst = exploded
-      .withColumn("_rn", row_number().over(firstWin))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-    // same prefilter recipe as incrementalDedup (scalar sketch at
-    // shards=1, hash-prefix-sharded family above — see bloomMaybe)
-    val flagged = bloomMaybe(intraFirst, "_h", catalog, "seg_md5",
-      expectedCatalogSize, shards)
-    val fresh = flagged.filter(!col("_maybe"))
-    // hint on the RIGHT (build) side, same as incrementalDedup: the catalog
-    // is slim per row but corpus-scale in cardinality
-    val verified = flagged.filter(col("_maybe"))
-      .join(catalog.hint("shuffle_hash"), col("_h") === col("seg_md5"), "left_anti")
-    // Materialize survivors ONCE: both returned frames derive from it, so
-    // without this the bloom build (a full catalog scan sized to the ever-
-    // growing catalog) and the anti-join would run twice per batch — once
-    // for the dedup output, once for the catalog append. The caller owns
-    // the block: write both outputs, then releaseCheckpoint the second
-    // element (it IS the checkpointed frame, so release resolves it).
-    val survivorsMat = fresh.unionByName(verified).localCheckpoint()
-    (reassembleSegs(counts, survivorsMat.drop("_h", "_maybe")), survivorsMat)
   }
 
   /** Substring-level exact dedup (the Lee-et-al "Deduplicating Training Data
@@ -485,7 +423,7 @@ object Dedup {
   private def candidatePairs(docs: DataFrame, numHashes: Int, bandSize: Int,
                              shingleSize: Int,
                              maxBucket: Int,
-                             managed: Boolean = false): DataFrame = {
+                             managed: Boolean): DataFrame = {
     val numBands = numHashes / bandSize
     val sigs = minhashSignatures(docs, numHashes, bandSize, shingleSize)
     val slim = sigs.select(col("doc_id"),
@@ -559,66 +497,6 @@ object Dedup {
       .agg(max(col("_enc")).as("_m"))
       .select(col("cluster_id"),
         (lit(twoTo32 - 1) - pmod(col("_m"), lit(twoTo32))).as("doc_id"))
-  }
-
-  /** Incremental (delta-vs-catalog) MinHash LSH near-dup — the ingest-time
-    * form of [[minhashNeardup]]: the catalog persists each seen document's
-    * slim signature row `(doc_id, text, mh, bands)`; a new batch band-joins
-    * its signatures against batch ∪ catalog and emits exactly the pairs
-    * with at least one endpoint in the batch. Pair identity is normalized
-    * with least/greatest, and bands are content-derived, so processing a
-    * corpus in ANY micro-batch split yields the same `(doc_a, doc_b,
-    * est_jaccard, jaccard)` set as one batch pass — asserted in
-    * StreamingSpec.
-    *
-    * Scale shape: the batch side of the band join is |delta|·numBands rows
-    * — the catalog never re-explodes per batch beyond this one equi-join,
-    * and the exact-Jaccard verify re-shingles only candidate docs (the
-    * same shrink-then-verify shape as the batch form). `shuffle_hash` pins
-    * the join off broadcast (the catalog side is corpus-sized).
-    *
-    * @return (pairs for this batch, signature rows to append to the
-    *         catalog — eagerly materialized, release after writing) */
-  def minhashNeardupIncrement(batch: DataFrame, catalog: DataFrame,
-                              numHashes: Int = 8, bandSize: Int = 4,
-                              shingleSize: Int = 3): (DataFrame, DataFrame) = {
-    val numBands = numHashes / bandSize
-    val sigs = minhashSignatures(batch, numHashes, bandSize, shingleSize)
-    // materialized once: feeds the pair join, the verify universe, AND the
-    // caller's catalog append (which must observe pre-append pairs first)
-    val slimB = sigs.select(col("doc_id"),
-        array((1 to numHashes).map(j => col(s"mh$j")): _*).as("mh"),
-        array((0 until numBands).map(b => col(s"band_$b")): _*).as("bands"))
-      .join(batch.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .select(col("doc_id"), col("text"), col("mh"), col("bands"))
-      .localCheckpoint()
-    val all = slimB.unionByName(catalog)
-    val eb = slimB.select(col("doc_id").as("a_doc_id"), col("mh").as("a_mh"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    val ea = all.select(col("doc_id").as("b_doc_id"), col("mh").as("b_mh"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    val estMatches = aggregate(
-      zip_with(col("a_mh"), col("b_mh"), (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x)
-    val cand = eb.hint("shuffle_hash").join(ea, Seq("band_idx", "band_val"))
-      .filter(col("a_doc_id") =!= col("b_doc_id"))
-      .select(least(col("a_doc_id"), col("b_doc_id")).as("doc_a"),
-        greatest(col("a_doc_id"), col("b_doc_id")).as("doc_b"),
-        (estMatches.cast("double") / numHashes).as("est_jaccard"))
-      .dropDuplicates("doc_a", "doc_b")
-    val candIds = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val texts = batch.select(col("doc_id"), col("text"))
-      .unionByName(catalog.select(col("doc_id"), col("text")))
-    val docSh = texts.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingles(words(col("text")), shingleSize).as("sh"))
-    val pairs = cand
-      .join(docSh.select(col("doc_id").as("doc_a"), col("sh").as("a_sh")), "doc_a")
-      .join(docSh.select(col("doc_id").as("doc_b"), col("sh").as("b_sh")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"),
-        ngramJaccard(col("a_sh"), col("b_sh")).as("jaccard"))
-    (pairs, slimB)
   }
 
   /** SimHash over word tokens: hash family = parity of the k-th md5 hex

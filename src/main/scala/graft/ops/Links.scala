@@ -903,9 +903,9 @@ object Links {
         (col("_rn") === 1 && col("url_ok")).as("keep"))
   }
 
-  /** The per-page keying stage shared by [[canonicalDedup]] and its
-    * streaming increment: URL gate verdict + whether a canonical was
-    * declared + the dedup key `coalesce(canonical_canon, url_canon)`.
+  /** The per-page keying stage of [[canonicalDedup]]: URL gate verdict
+    * + whether a canonical was declared + the dedup key
+    * `coalesce(canonical_canon, url_canon)`.
     * ONE page scan (round 19, r18 ADVICE): the gate verdict columns
     * (scheme + blocklist broadcast probe on the page's registrable
     * domain) compute row-locally in the same projection that extracts
@@ -933,33 +933,6 @@ object Links {
         // already computed here — re-deriving it downstream would
         // re-inline the canonicalize tree
         col("_base").as("url_canon"))
-  }
-
-  /** One micro-batch of [[canonicalDedup]] against an accumulated key
-    * catalog (the [[graft.streaming.StreamingOps]] catalog-stream
-    * shape): gate-passing pages keyed as in the batch form, ONE
-    * first-occurrence winner per key WITHIN the batch (lowest doc_id,
-    * min-encoded — map-side combinable), then a novelty anti-join
-    * against every key any earlier batch admitted. Returns the novel
-    * keepers `(doc_id, declared, dedup_key)`; the stream appends their
-    * keys to the catalog. Processing batches in ascending doc_id order
-    * reproduces exactly the batch form's keeper set; out-of-order
-    * arrival stays exact on novelty and crowns the earlier-ARRIVING
-    * copy (the family's arrival-order semantics). */
-  def canonicalDedupIncrement(pages: DataFrame, catalog: DataFrame,
-                              blocked: Seq[String],
-                              htmlCol: String = "html",
-                              baseUrlCol: String = "base_url",
-                              idCol: String = "doc_id"): DataFrame = {
-    val keyed = canonicalKeys(pages, blocked, htmlCol, baseUrlCol, idCol)
-      .filter(col("url_ok"))
-    val intra = keyed.groupBy("dedup_key")
-      .agg(min(struct(col(idCol), col("declared"))).as("_w"))
-      .select(col("_w")(idCol).as(idCol),
-        col("_w")("declared").as("declared"), col("dedup_key"))
-    intra.join(catalog.select(col("dedup_key").as("_cat"))
-        .hint("shuffle_hash"),
-      col("dedup_key") === col("_cat"), "left_anti")
   }
 
   /** Deterministic per-document HTML pages with a FIXED 8-slot `<a>`

@@ -307,29 +307,6 @@ object Multimodal {
       .distinct() // a pair may collide in several bands — emit once
   }
 
-  /** Delta-vs-catalog increment over 64-bit signature frames — the shared
-    * core of [[imagePhashIncrement]] and [[audioFingerprintIncrement]]:
-    * band-join the delta against catalog ∪ delta, verify collisions
-    * exactly, canonicalize pairs (least, greatest) so the emitted set is
-    * arrival-order independent. `delta` must already be materialized
-    * (localCheckpoint) — it feeds both the join and the catalog append. */
-  private def neardupIncrement64(delta: DataFrame, catalog: DataFrame,
-                                 maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3,
-      s"4x16-bit banding guarantees exact recall only for maxHamming <= 3, got $maxHamming")
-    val all = banded64(catalog.unionByName(delta), "a")
-    val d = banded64(delta, "b")
-    all.join(d, Seq("band_idx", "band_val"))
-      .filter(col("a_id") =!= col("b_id"))
-      .select(least(col("a_id"), col("b_id")).as("a_id"),
-        greatest(col("a_id"), col("b_id")).as("b_id"),
-        (bit_count(col("a_hi").bitwiseXOR(col("b_hi"))) +
-          bit_count(col("a_lo").bitwiseXOR(col("b_lo"))))
-          .cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct() // multi-band collisions of the same pair emit once
-  }
-
   // ---- audio fingerprint (near-dup) ----------------------------------
 
   /** Per-clip 64-bit frame-energy fingerprint: (doc_id, afp_hi, afp_lo)
@@ -353,44 +330,6 @@ object Multimodal {
     neardupPairs64(audioFingerprint(media)
       .select(col("doc_id"), col("afp_hi").as("h_hi"),
         col("afp_lo").as("h_lo")), maxHamming)
-
-  /** Delta-vs-catalog audio near-dup — the ingest-time increment behind
-    * [[graft.streaming.StreamingOps.audioFingerprintStream]], mirroring
-    * [[imagePhashIncrement]]: fingerprint ONLY the delta's clips,
-    * band-join against catalog ∪ delta, emit canonicalized pairs.
-    * @return (near-dup pairs for this epoch, catalog rows to append —
-    *         the delta's fingerprints, eagerly materialized) */
-  def audioFingerprintIncrement(batch: DataFrame, catalog: DataFrame,
-                                maxHamming: Int = 3): (DataFrame, DataFrame) = {
-    // the checkpointed frame itself is returned (release-ownership
-    // contract of the catalog streams); the banding core reads a rename
-    val fp = audioFingerprint(batch).localCheckpoint()
-    def h(df: DataFrame) = df.select(col("doc_id"),
-      col("afp_hi").as("h_hi"), col("afp_lo").as("h_lo"))
-    (neardupIncrement64(h(fp), h(catalog), maxHamming), fp)
-  }
-
-  /** Delta-vs-catalog image near-dup — the ingest-time increment behind
-    * [[graft.streaming.StreamingOps.imagePhashStream]], mirroring
-    * [[Dedup.minhashNeardupIncrement]]: hash ONLY the delta's BMPs
-    * (the catalog already carries its hashes — payload bytes are never
-    * re-read), band-join the delta against catalog ∪ delta, and verify
-    * colliding pairs with the exact popcount distance. Pairs are
-    * canonicalized (least, greatest) and deduped, so the emitted set is
-    * arrival-order independent: a pair is found in the epoch its SECOND
-    * member arrives, whatever the id order — the union of per-epoch
-    * outputs equals the batch operator over the accumulated corpus
-    * (StreamingSpec parity).
-    *
-    * @return (near-dup pairs for this epoch, catalog rows to append —
-    *         the delta's hashes, eagerly materialized) */
-  def imagePhashIncrement(batch: DataFrame, catalog: DataFrame,
-                          maxHamming: Int = 3): (DataFrame, DataFrame) = {
-    val ph = imagePhash(batch).localCheckpoint()
-    def h(df: DataFrame) = df.select(col("doc_id"),
-      col("phash_hi").as("h_hi"), col("phash_lo").as("h_lo"))
-    (neardupIncrement64(h(ph), h(catalog), maxHamming), ph)
-  }
 
   /** Frame sampling as pure expressions: fixed-size byte frames; the FIRST
     * frame and the `stride`-th frame are fingerprinted (a fixed-arity probe

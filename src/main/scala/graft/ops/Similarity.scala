@@ -797,25 +797,22 @@ object Similarity {
     // the caller's scope (bench leak fence / test session teardown).
     val withVec = semanticWithVec(embs, semanticCentroids(embs, k))
       .localCheckpoint()
-    semanticVerdicts(withVec, withVec, semanticMinDot(tau), chunk)
+    semanticVerdicts(withVec, semanticMinDot(tau), chunk)
   }
 
   // 127²·tau, ceil'd: an integer bar in the normalized-int8 dot domain
   private def semanticMinDot(tau: Double): Long =
     math.ceil(tau * 127L * 127L).toLong
 
-  /** The k-lowest-id integer centroids [[semanticDedup]] seeds with —
-    * exposed so the STREAMING form can train once (on the corpus or a
-    * sample) and assign every micro-batch against the same fixed frame. */
-  def semanticCentroids(embs: DataFrame, k: Int = 8): DataFrame = {
+  /** The k-lowest-id integer centroids [[semanticDedup]] seeds with. */
+  private def semanticCentroids(embs: DataFrame, k: Int): DataFrame = {
     val q = quantizedVecs(embs)
     q.orderBy("vec_id").limit(k)
       .select(col("vec_id").as("cid"), col("qv").as("cq"))
   }
 
   // (cid, vec_id, nv): cluster assignment + normalized-int8 vector (as
-  // exact doubles) — the row shape the pairwise stage and the streaming
-  // catalog share
+  // exact doubles) — the row shape the pairwise stage reads
   private def semanticWithVec(embs: DataFrame, cents: DataFrame): DataFrame =
     assignToCentroids(quantizedVecs(embs), cents)
       .select(col("vec_id"), col("cid"))
@@ -829,10 +826,8 @@ object Similarity {
     * plan degenerates to the plain cid equi-join (plus a k-row size agg). */
   private val SemanticChunk = 8192
 
-  // verdicts for every hiSide vector: dropped iff ANY loSide vector with
-  // a lower id in the same cluster clears minDot. loSide ⊇ hiSide gives
-  // the batch form; loSide = catalog ∪ batch, hiSide = batch gives the
-  // incremental form.
+  // verdicts for every withVec vector: dropped iff ANY vector with a
+  // lower id in the same cluster clears minDot.
   //
   // Hot-cluster guard: the known failure mode of SemDeDup at scale is one
   // skewed cluster whose Σn² pairwise work lands on a single cid reducer
@@ -845,20 +840,17 @@ object Similarity {
   // shuffles O(n·m) = O(pairs/chunk) rows — strictly dominated by the
   // O(pairs) dot-product work the stage does anyway. Verdicts are
   // bit-identical to the unchunked join (SimilaritySpec parity at chunk=4).
-  private def semanticVerdicts(loSide: DataFrame, hiSide: DataFrame,
-                               minDot: Long,
+  private def semanticVerdicts(withVec: DataFrame, minDot: Long,
                                chunk: Int = SemanticChunk): DataFrame = {
-    // k rows (cid → m); sized from the LO side, the superset in both the
-    // batch (lo == hi) and incremental (lo = catalog ∪ batch) forms.
-    // Catalyst prunes nv out of this count-only subtree.
-    val sizes = loSide.groupBy("cid")
+    // k rows (cid → m); Catalyst prunes nv out of this count-only subtree
+    val sizes = withVec.groupBy("cid")
       .agg(ceil(count(lit(1)) / lit(chunk.toDouble)).cast("int").as("m"))
     val chunkOf = pmod(xxhash64(col("vec_id")), col("m")).cast("int")
-    val lo = loSide.join(broadcast(sizes), "cid")
+    val lo = withVec.join(broadcast(sizes), "cid")
       .select(col("cid"), chunkOf.as("lc"),
         explode(sequence(lit(0), col("m") - 1)).as("hc"),
         col("vec_id").as("lo_id"), col("nv").as("lo_nv"))
-    val hi = hiSide.join(broadcast(sizes), "cid")
+    val hi = withVec.join(broadcast(sizes), "cid")
       .select(col("cid"), chunkOf.as("hc"),
         explode(sequence(lit(0), col("m") - 1)).as("lc"),
         col("vec_id").as("hi_id"), col("nv").as("hi_nv"))
@@ -871,7 +863,7 @@ object Similarity {
       .filter(col("dt") >= minDot)
       .groupBy("hi_id")
       .agg(count(lit(1)).as("n_sim"), max(col("dt")).as("max_dot"))
-    val assigned = hiSide.select(col("vec_id"), col("cid"))
+    val assigned = withVec.select(col("vec_id"), col("cid"))
     assigned.join(dots, assigned("vec_id") === dots("hi_id"), "left")
       .select(col("vec_id"), col("cid"),
         coalesce(col("n_sim"), lit(0L)).cast("long").as("n_sim_lower"),
@@ -937,69 +929,8 @@ object Similarity {
       .join(normalizedQuantVecs(embs), "vec_id")
       .select(col("cid"), col("vec_id"), col("qv").cast("array<double>").as("nv"))
       .localCheckpoint() // four verdict-stage consumers — see semanticDedup
-    (semanticVerdicts(withVec, withVec, semanticMinDot(tau)),
+    (semanticVerdicts(withVec, semanticMinDot(tau)),
       outliersFromAssign(asg, zThresh))
-  }
-
-  /** Incremental SemDeDup against a catalog of previously-seen vectors —
-    * the ingest-time form of [[semanticDedup]], same verdict semantics:
-    * a batch vector drops iff some lower-id vector IN THE SAME CLUSTER
-    * (from the catalog or this batch) clears `tau`. Centroids are a
-    * FIXED frame trained once via [[semanticCentroids]] — per-batch
-    * re-seeding would silently re-cluster the space every epoch and
-    * verdicts would stop being comparable across batches. When vec_ids
-    * arrive in ascending order (the batch-split scenario), the union of
-    * per-batch outputs equals the batch operator's output exactly
-    * (StreamingSpec parity); out-of-order arrival only MISSES
-    * comparisons against lower ids that have not arrived yet, so an
-    * emitted DROP is always correct but an emitted KEEP may be one the
-    * batch operator would have dropped — verdicts never flip from keep
-    * to drop, and a consumer needing full dedup coverage under
-    * out-of-order ingest must re-check keeps once the stream drains.
-    *
-    * Scale shape: the pairwise stage is |batch| × (catalog cluster
-    * partners) under the same cid equi-join as the batch form — the
-    * catalog never self-joins, so a long-running stream pays per-batch
-    * cost linear in catalog size, exactly the bound k ∝ N controls.
-    *
-    * @return (verdicts for this batch, catalog rows to append — eagerly
-    *         materialized, release after writing) */
-  def semanticDedupIncrement(batch: DataFrame, catalog: DataFrame,
-                             cents: DataFrame,
-                             tau: Double = 0.35): (DataFrame, DataFrame) = {
-    val withVec = semanticWithVec(batch, cents).localCheckpoint()
-    (semanticVerdicts(withVec.unionByName(catalog), withVec,
-      semanticMinDot(tau)), withVec)
-  }
-
-  /** Cap a batch's catalog-append rows so no cluster ever holds more than
-    * `cap` representative vectors — the growth bound that makes
-    * [[graft.streaming.StreamingOps.semanticDedupStream]] scale-safe on
-    * a long-running stream (round-12 VERDICT: with FIXED centroids the
-    * uncapped catalog grows ∝ N per cluster, so day-N of ingest paid
-    * O(N) per batch; capped, the per-batch pairwise stage is bounded by
-    * |batch| · (k·cap + |batch|) FOREVER). Earliest-id rows fill the cap
-    * (deterministic under retries; matches first-occurrence-wins — the
-    * low ids are exactly the vectors that can drop later ones).
-    *
-    * Semantics under the cap: every DROP verdict remains sound (its
-    * partner is a genuinely earlier vector), but a KEEP may miss a
-    * partner that arrived after its cluster filled — the standard
-    * representative-capping recall trade (the SemDeDup paper's k ∝ N
-    * regime removes the need for a cap by keeping clusters small; a
-    * fixed-centroid stream cannot re-train, so it caps instead). While
-    * no cluster has reached the cap the trim is a no-op and the stream
-    * is verdict-identical to the uncapped form (StreamingSpec pins
-    * both). The per-batch rank window partitions by cid over BATCH rows
-    * only — never the catalog. */
-  def semanticCatalogTrim(append: DataFrame, catalog: DataFrame,
-                          cap: Int): DataFrame = {
-    val have = catalog.groupBy("cid").agg(count(lit(1)).as("_have"))
-    val rn = row_number().over(Window.partitionBy("cid").orderBy("vec_id"))
-    append.join(broadcast(have), Seq("cid"), "left")
-      .withColumn("_rn", rn)
-      .filter(col("_rn") + coalesce(col("_have"), lit(0L)) <= cap)
-      .select("cid", "vec_id", "nv")
   }
 
   /** Product-quantization ANN with asymmetric-distance (ADC) scoring — the

@@ -691,8 +691,8 @@ object TextAnalysis {
     * where the unigram model cannot tell. Docs with fewer than two
     * tokens have no bigram and drop out (mirrored by the oracle).
     *
-    * Scale shape (reworked twice — r10 plan audit, then the r11
-    * ScaleProbe): the corpus-sized explode runs twice as a cheap
+    * Scale shape (reworked twice — r10 plan audit, then the r11 10×
+    * scale probe): the corpus-sized explode runs twice as a cheap
     * scan-fused Generate — once into the `c12` hash-agg, once into the
     * scoring join — and CORPUS-sized data is never materialized (the
     * checkpoint-the-instance-frame variant probed at exponent 1.31 on

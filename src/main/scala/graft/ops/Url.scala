@@ -1451,7 +1451,7 @@ object Url {
     * expression ([[graft.functions.StripParams]], round 19 — binary
     * search per param name over the policy's SORTED array): the
     * `array_contains` spelling scanned O(|strip list|) per param
-    * (ScaleProbe's param-vocab megadomain, 10⁵ flagged names, measured
+    * (the 10× scale probe's param-vocab megadomain, 10⁵ flagged names, measured
     * exponent 1.79 — the crawl-trap axis turning the apply pass
     * quadratic), and the higher-order `filter` spelling was
     * CodegenFallback, whose per-row eval boundary re-materialized the

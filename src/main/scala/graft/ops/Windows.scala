@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
 /** Event-time windowing and sessionization over the events stream table
   * (SURVEY.md §2.5 — the reference carries event time as data but never
   * windows on it; these are the mandated beyond-reference stateful ops).
-  * Batch forms here; the streaming forms (window()/session_window() with
-  * watermarks over readStream) share the same semantics and live in
-  * graft.streaming.
+  * Batch forms only: the pipeline's streaming path is stateless
+  * translation and routing, so nothing here runs over readStream.
   */
 object Windows {
 

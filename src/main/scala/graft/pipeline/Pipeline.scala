@@ -80,6 +80,24 @@ object Pipeline {
     (t, EventTypeSplitter.route(t.valid.select(col("event_json").as("value"))))
   }
 
+  /** The topology's two outputs, cut from one tagged CMF frame
+    * ([[vehicleCmfBatch]] / [[vehicleCmfStream]]): publish takes the
+    * valid, routable rows as (topic, CMF wire); dead-letter is one
+    * projection of everything else — a quarantined row keeps its raw value
+    * and its translator's name, an unroutable one its CMF wire and
+    * "filterer". Routing reads the `cmf` struct the translator built
+    * ([[Filterer.tenantIdOf]], same drop rule and topic naming as
+    * [[Filterer.route]]) instead of parsing its wire form back. */
+  def publishAndDeadLetter(cmfTopic: DataFrame): (DataFrame, DataFrame) = {
+    val tenantId = Filterer.tenantIdOf(col("cmf"))
+    val published = Translated.ok && Routed.notBlank(tenantId)
+    (cmfTopic.filter(published)
+       .select(Filterer.topic(tenantId).as("topic"), col("value")),
+     cmfTopic.filter(!published)
+       .select(col("value"),
+         when(Translated.ok, lit("filterer")).otherwise(col("source")).as("source")))
+  }
+
   /** The COMPLETE E1/E2 dataflow as continuously-running streaming jobs —
     * the reference's deployed shape (pipeline.yaml:41–68 end to end):
     * spool sources → three translators → CMF union → Filterer → dynamic
@@ -89,13 +107,7 @@ object Pipeline {
     * by origin for per-source replay (SURVEY.md §2.3 R4).
     *
     * Each query translates every record once: both are cut from the same
-    * tagged CMF frame ([[vehicleCmfStream]]), and the Filterer routes on
-    * the `cmf` struct the translator built ([[Filterer.tenantIdOf]], same
-    * drop rule and topic naming as [[Filterer.route]]) instead of parsing
-    * its wire form back. Publish takes the valid, routable rows as
-    * (topic, CMF wire); dead-letter is one projection of everything else —
-    * a quarantined row keeps its raw value and its translator's name, an
-    * unroutable one its CMF wire and "filterer".
+    * tagged CMF frame ([[vehicleCmfStream]]) by [[publishAndDeadLetter]].
     *
     * Two streaming queries, each with its own checkpoint: streaming
     * DataFrames cannot fork into two sinks inside one query, and an
@@ -108,18 +120,13 @@ object Pipeline {
                          checkpointRoot: String, tenant: String = "acme")
       : (org.apache.spark.sql.streaming.StreamingQuery,
          org.apache.spark.sql.streaming.StreamingQuery) = {
-    def cmfTopic = vehicleCmfStream(spark, spoolBase, tenant).tagged
-    val tenantId = Filterer.tenantIdOf(col("cmf"))
-    val published = Translated.ok && Routed.notBlank(tenantId)
-    val publish = cmfTopic.filter(published)
-      .select(Filterer.topic(tenantId).as("topic"), col("value"))
+    def outputs = publishAndDeadLetter(vehicleCmfStream(spark, spoolBase, tenant).tagged)
+    val publish = outputs._1
       .writeStream.format("graft-spool")
       .option("topics", "true").option("path", busRoot)
       .option("checkpointLocation", s"$checkpointRoot/publish")
       .outputMode("append").start()
-    val deadLetter = cmfTopic.filter(!published)
-      .select(col("value"),
-        when(Translated.ok, lit("filterer")).otherwise(col("source")).as("source"))
+    val deadLetter = outputs._2
       .writeStream.format("parquet").partitionBy("source")
       .option("path", deadLetterDir)
       .option("checkpointLocation", s"$checkpointRoot/dead-letter")

@@ -38,9 +38,9 @@ object Routed {
   * the same drop rule ([[Routed.notBlank]]) and [[topic]] naming, without
   * parsing its own wire form back.
   *
-  * Scale shape: extraction is a scan-fused projection; the fan-out is
-  * `partitionBy(tenantId)` on write — one shuffle-free pass, files clustered
-  * per tenant, no driver-side loop over tenants.
+  * Scale shape: extraction is a scan-fused projection; the fan-out is one
+  * row-level `topic` column on write ([[fanOutTopics]]) — one shuffle-free
+  * pass, no driver-side loop over tenants.
   */
 object Filterer {
 
@@ -65,12 +65,6 @@ object Filterer {
       routed = withTenant.filter(ok).withColumn("topic", topic(col("tenantId"))),
       dropped = withTenant.filter(!ok).select("value"))
   }
-
-  /** Physical per-tenant isolation (architecture.md:113–118): one parquet
-    * directory per tenant, written in a single distributed pass. */
-  def fanOutParquet(routed: DataFrame, baseDir: String): Unit =
-    routed.select("tenantId", "value")
-      .write.mode("overwrite").partitionBy("tenantId").parquet(baseDir)
 
   /** Dynamic per-tenant TOPIC publish — the reference Filterer's actual
     * sink shape (Filterer.kt:36–41: `persistent://{tenantId}/integration/
@@ -124,8 +118,4 @@ object EventTypeSplitter {
         .withColumn("topic", topicFor(col("eventType"), tenant, namespace)),
       dropped = withType.filter(!ok).select("value"))
   }
-
-  def fanOutParquet(routed: DataFrame, baseDir: String): Unit =
-    routed.select("eventType", "value")
-      .write.mode("overwrite").partitionBy("eventType").parquet(baseDir)
 }

@@ -3,7 +3,6 @@ package graft.translate
 import graft.time.IsoTime
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** One legacy business-event translator's behavior. The five translator
   * sources are absent from the reference tree; this spec is fully recovered

@@ -228,7 +228,6 @@ object VehicleTranslators {
     val parsed = jsonTupled(raw, top)
       .select(col("*"),
         json_tuple(col("_j_coords"), sub: _*).as(sub.map(f => s"_j_c_$f")))
-    def jc(f: String): Column = col(s"_j_c_$f")
     def jcd(f: String): Column = expr(s"try_cast(_j_c_$f AS DOUBLE)")
     val ok = j("vin").isNotNull && j("esn").isNotNull &&
       jl("captureTime").isNotNull &&

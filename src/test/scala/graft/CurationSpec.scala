@@ -39,7 +39,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("shardAssign: deterministic, balanced-ish, positions dense per shard") {
-    import spark.implicits._
     val d = spark.range(1000).select(col("id").as("doc_id"))
     val r = Sampling.shardAssign(d, "doc_id", 8).cache()
     assert(r.count() === 1000)
@@ -58,7 +57,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("mixtureSample: quotas bind per stratum, deterministic hash-order prefix") {
-    import spark.implicits._
     val d = spark.range(300).select(col("id").as("doc_id"),
       concat(lit("s"), (col("id") % 3).cast("string")).as("source"))
     val picked = Sampling.mixtureSample(d, "source", "doc_id",
@@ -73,7 +71,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("mixtureSample: quota larger than stratum keeps the whole stratum") {
-    import spark.implicits._
     val d = spark.range(10).select(col("id").as("doc_id"), lit("s0").as("source"))
     val picked = Sampling.mixtureSample(d, "source", "doc_id",
       Map("s0" -> 1.0), budget = 100)

@@ -139,32 +139,6 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.jaccardNeardup(d, threshold = 0.0, maxDocFreq = 1).count() === 0)
   }
 
-  test("minhashNeardupIncrement plan: no cartesian; band join not a corpus broadcast") {
-    import spark.implicits._
-    val batch = docs(3L -> "a b c d e", 4L -> "a b c d e")
-    val catalog = {
-      // a pre-built signature catalog for docs 1-2 (same schema the stream
-      // persists): derive it through the increment itself from an empty seed
-      val empty = spark.range(0).select(col("id").as("doc_id"),
-        lit(null).cast("string").as("text"),
-        lit(null).cast("array<string>").as("mh"),
-        lit(null).cast("array<string>").as("bands"))
-      graft.ops.Dedup.minhashNeardupIncrement(
-        docs(1L -> "a b c d e", 2L -> "x y z w v"), empty)._2
-    }
-    val (pairs, _) = graft.ops.Dedup.minhashNeardupIncrement(batch, catalog)
-    val plan = pairs.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
-    // the batch ∪ catalog side is corpus-sized: the shuffle_hash hint must
-    // pin the band join off auto-broadcast
-    assert(plan.contains("ShuffledHashJoin"), s"band join not shuffle-pinned:\n$plan")
-    // and the pairs are right: batch doc 3 matches catalog doc 1 AND batch
-    // sibling 4; catalog-internal pair (1,2) must NOT re-emit
-    val got = pairs.select("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === Set((1L, 3L), (1L, 4L), (3L, 4L)))
-  }
-
   test("bestPerCluster: keeps highest score, ties break to lowest id; HashAggregate plan") {
     import spark.implicits._
     val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L), (9L, 9L))
@@ -382,16 +356,6 @@ class DedupSpec extends SparkSpec {
     val fresh = Dedup.incrementalDedup(delta,
       Seq.empty[(Long, String)].toDF("doc_id", "text"), shards = 8)
     assert(fresh.count() === delta.count())
-    // and the segment-level increment takes the same parameter
-    val docs = (1L to 20L).map(i =>
-      (i, (1 to 30).map(w => s"w${(i * 31 + w) % 97}").mkString(" ")))
-      .toDF("doc_id", "text")
-    val catalog = Seq.empty[String].toDF("seg_md5")
-    val (out1, sig1) = Dedup.segmentDedupIncrement(docs, catalog)
-    val (out8, sig8) = Dedup.segmentDedupIncrement(docs, catalog, shards = 8)
-    assert(out1.orderBy("doc_id").collect().toSeq ===
-      out8.orderBy("doc_id").collect().toSeq)
-    Dedup.releaseCheckpoint(sig1); Dedup.releaseCheckpoint(sig8)
   }
 
   test("incrementalDedup sizes its sketch without touching session confs") {

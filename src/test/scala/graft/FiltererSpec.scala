@@ -1,7 +1,6 @@
 package graft
 
 import graft.route.{EventTypeSplitter, Filterer}
-import org.apache.spark.sql.functions._
 
 /** The 8 router cases from FiltererTest.kt:100–193, plus EventTypeSplitter
   * topic naming (load-test-verification-playbook.md:119–125). */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Gopher
-import org.apache.spark.sql.functions._
 
 /** Gopher/MassiveText quality rules (round 12): hand-computed signal
   * values, threshold behavior, and the zero-exchange plan. */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Layout
-import org.apache.spark.sql.functions._
 
 /** Data-layout operators (round 11): scalable global sequence numbers and
   * Z-order clustering. */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Graph, Links, Url}
+import graft.ops.{Graph, Links}
 import org.apache.spark.sql.functions._
 
 /** The HTML link layer (round 17): href resolution semantics, tag
@@ -184,7 +184,6 @@ class LinksSpec extends SparkSpec {
 
   test("hostGraph drops nofollow edges and intra-domain self-loops; " +
     "parallel edges kept as weight") {
-    import spark.implicits._
     val docs = spark.range(0, 60).select(col("id").as("doc_id"),
       lit("src0").as("source"), lit(40L).as("n_chars"))
     val g = Links.hostGraph(
@@ -217,7 +216,6 @@ class LinksSpec extends SparkSpec {
   test("plan shapes: linkExtract is scan-fused (zero exchanges); " +
     "resolveChains plans equi-joins only (no cartesian, no broadcast " +
     "nested loop)") {
-    import spark.implicits._
     val docs = spark.range(0, 100).select(col("id").as("doc_id"),
       lit("src0").as("source"), lit(40L).as("n_chars"))
     val p1 = plan(Links.linkExtract(Links.syntheticLinkedHtml(docs)))
@@ -603,7 +601,6 @@ class LinksSpec extends SparkSpec {
     "is NOT re-admitted in linkDiscover, crawlDiscover, and " +
     "linkDiscoverResolved; winner+anti-join share the learned key and " +
     "the plan keeps the single shuffle-hash anti-join") {
-    import spark.implicits._
     // ≥21 docs per source: a sess group only corroborates once TWO
     // docs share (domain, page) — the within-source wheel repeats a
     // (g%4, g%5) cell every 20 g's, so 25 docs/source gives every

@@ -9,33 +9,7 @@ import org.apache.spark.sql.functions._
   * (vehicle sources → CMF → Filterer) and E3 (legacy → splitter), batch and
   * streaming resolution of the same sources. */
 class PipelineSpec extends SparkSpec {
-
-  private def writeSpool(baseDir: String, topic: String, lines: Seq[String]): Unit = {
-    val dir = java.nio.file.Paths.get(baseDir, topic)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve("part-0.txt"),
-      String.join("\n", lines: _*).getBytes("UTF-8"))
-  }
-
-  private def spoolDir(): String = {
-    val base = java.nio.file.Files.createTempDirectory("spool").toString
-    writeSpool(base, Sources.kinesisInput.outputTopic, Seq(
-      """{"Device_ID":"g1","Vehicle_ID":"v1","Record_DateTime":"2023-10-26T10:00:00Z","Latitude":1.0,"Longitude":2.0}""",
-      """{"Device_ID":"broken"""))
-    writeSpool(base, Sources.kafkaInput.outputTopic, Seq(
-      """{"unit_id":"c1","vid":"v2","msg_ts":1698314400,"gps_lat":3.0,"gps_lon":4.0}"""))
-    writeSpool(base, Sources.httpInput.outputTopic, Seq(
-      """{"vin":"v3","esn":"e3","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000}}""",
-      fordSmuggler))
-    base
-  }
-
-  /** Hostile Ford record: its `fordExtraData` text trails a second member
-    * which, spliced into the wire verbatim, would add a top-level
-    * `"meta": {"tenantId":"evil"}` ahead of the real one. */
-  private val fordSmuggler =
-    """{"vin":"v4","esn":"e4","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000},""" +
-    """"fordExtraData":"{\"a\":1}, \"meta\": {\"tenantId\":\"evil\"}"}"""
+  import PipelineSpec._
 
   /** Runs the streaming topology over `base` to completion; returns the
     * bus root and the dead-letter frame. */
@@ -97,10 +71,9 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.routeCmf(strings(routable :+ """{"meta":{}}""": _*))
     assert(r.routed.count() === 4)
     assert(r.dropped.count() === 1)
-    val out = java.nio.file.Files.createTempDirectory("tenants").toString
-    Filterer.fanOutParquet(r.routed, out)
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs === Array("tenantId=t-0", "tenantId=t-1"))
+    val topics = r.routed.select("topic").distinct().collect().map(_.getString(0)).sorted
+    assert(topics === Array("persistent://t-0/integration/telemetry",
+      "persistent://t-1/integration/telemetry"))
   }
 
   test("graft-spool V2: bridged sources resolve through the custom TableProvider") {
@@ -362,4 +335,35 @@ class PipelineSpec extends SparkSpec {
         autoCommitEnabled = true, outputTopic = "raw")
     }
   }
+}
+
+object PipelineSpec {
+  def writeSpool(baseDir: String, topic: String, lines: Seq[String]): Unit = {
+    val dir = java.nio.file.Paths.get(baseDir, topic)
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.write(dir.resolve("part-0.txt"),
+      String.join("\n", lines: _*).getBytes("UTF-8"))
+  }
+
+  /** A vehicle spool: one valid record per source, a poisoned Geotab
+    * record and the hostile Ford record below. */
+  def spoolDir(): String = {
+    val base = java.nio.file.Files.createTempDirectory("spool").toString
+    writeSpool(base, Sources.kinesisInput.outputTopic, Seq(
+      """{"Device_ID":"g1","Vehicle_ID":"v1","Record_DateTime":"2023-10-26T10:00:00Z","Latitude":1.0,"Longitude":2.0}""",
+      """{"Device_ID":"broken"""))
+    writeSpool(base, Sources.kafkaInput.outputTopic, Seq(
+      """{"unit_id":"c1","vid":"v2","msg_ts":1698314400,"gps_lat":3.0,"gps_lon":4.0}"""))
+    writeSpool(base, Sources.httpInput.outputTopic, Seq(
+      """{"vin":"v3","esn":"e3","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000}}""",
+      fordSmuggler))
+    base
+  }
+
+  /** Hostile Ford record: its `fordExtraData` text trails a second member
+    * which, spliced into the wire verbatim, would add a top-level
+    * `"meta": {"tenantId":"evil"}` ahead of the real one. */
+  val fordSmuggler =
+    """{"vin":"v4","esn":"e4","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000},""" +
+    """"fordExtraData":"{\"a\":1}, \"meta\": {\"tenantId\":\"evil\"}"}"""
 }

@@ -150,7 +150,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("shardAssign: exactly one hash exchange (the per-shard rank window)") {
-    import spark.implicits._
     val docs = spark.range(100).select(col("id").as("doc_id"))
     val p = plan(graft.ops.Sampling.shardAssign(docs, "doc_id", 8))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
@@ -180,5 +179,35 @@ class PlanSpec extends SparkSpec {
     // full shingle arrays (`sh`) only appear in the candidate-verify joins
     assert(p.contains("band_idx"), s"band join missing:\n$p")
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("E1/E2 and E3 pipeline plans compile whole-stage with codegen fallback off") {
+    import spark.implicits._
+    // the deployed topology would absorb a failed whole-stage compile by
+    // falling back to interpreted execution; with fallback off it throws
+    val key = "spark.sql.codegen.fallback"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val tagged = graft.pipeline.Pipeline.vehicleCmfBatch(spark, PipelineSpec.spoolDir()).tagged
+      val (publish, deadLetter) = graft.pipeline.Pipeline.publishAndDeadLetter(tagged)
+      assert(countPlanNodes(tagged, "WholeStageCodegen") > 0)
+      assert(tagged.collect().length === 5)
+      assert(publish.collect().isEmpty) // the translators' CMF carries no tenantId
+      assert(deadLetter.collect().length === 5)
+      val raw = Seq(
+        ("""{"uid":1,"name":"u","created":1698314400}""", 0),
+        ("""{"shipId":"S-1","status":"SHIPPED","deliveredAt":1698314400}""", 4),
+        ("""{"poison":true}""", 0)).toDF("value", "kind")
+      val (t, routed) = graft.pipeline.Pipeline.legacyEvents(raw)
+      assert(countPlanNodes(t.valid, "WholeStageCodegen") > 0)
+      assert(t.valid.collect().length === 2)
+      assert(t.quarantine.collect().length === 1)
+      assert(routed.routed.collect().length === 2)
+      assert(routed.dropped.collect().isEmpty)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

@@ -5,20 +5,19 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate dedupes across
-  * suites in the forked test JVM). Same session config as Verify/Bench —
-  * UTC + nanosAsLong is part of the library's documented contract. */
+  * suites in the forked test JVM), built by [[Harness.session]] so the
+  * suites run under the configuration the measurement mains use — UTC +
+  * nanosAsLong is part of the library's documented contract. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = {
     // fresh warehouse per JVM: saveAsTable locations must not collide with
-    // leftovers from previous runs
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    // leftovers from previous runs. SparkConf loads spark.* system
+    // properties, so the session picks it up as it is built.
+    if (!sys.props.contains("spark.sql.warehouse.dir"))
+      sys.props("spark.sql.warehouse.dir") =
+        java.nio.file.Files.createTempDirectory("graft-wh").toString
+    Harness.session("4")
+  }
 
   def strings(vals: String*): DataFrame = {
     import spark.implicits._

@@ -1,16 +1,15 @@
 package graft
 
 import graft.route.Filterer
-import graft.streaming.StreamingOps
 import graft.translate.VehicleTranslators
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Batch/stream parity: the translators and routers are pure Catalyst
-  * transforms, so running them over a MemoryStream must produce
-  * byte-identical output to the batch path; plus the streaming-only ops
-  * (watermarked windows, session windows). */
+/** Batch/stream parity: the translators, routers and row-local curation
+  * ops are pure Catalyst transforms, so running them over a MemoryStream
+  * must produce byte-identical output to the batch path. Also the
+  * streaming sinks the pipeline uses: a foreachBatch ingest loop and the
+  * graft-spool topic publish. */
 class StreamingSpec extends SparkSpec {
 
   private def geotabMsg(i: Int): String =
@@ -98,189 +97,6 @@ class StreamingSpec extends SparkSpec {
       "persistent://acme/integration/shipment-events"))
   }
 
-  test("streaming tumbling window: watermark advances and emits closed windows") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, String, Double, Long)](spark)
-    val events = stream.toDF().toDF("event_id", "event_type", "value", "epoch_us")
-    val counts = StreamingOps.tumblingCounts(events, windowSeconds = 60,
-      watermarkDelay = "30 seconds")
-    val q = counts.writeStream.format("memory").queryName("win_stream")
-      .outputMode("append").start()
-    val us = (s: Long) => s * 1000000L
-    stream.addData((1L, "click", 1.5, us(10)), (2L, "click", 2.5, us(20)))
-    q.processAllAvailable()
-    // advance event time far past window [0,60) + watermark 30s -> it closes
-    stream.addData((3L, "view", 1.0, us(200)))
-    q.processAllAvailable()
-    stream.addData((4L, "view", 1.0, us(400)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("win_stream")
-      .select(date_format(col("window_start"), "HH:mm:ss"), col("event_type"),
-        col("cnt"), col("sum_value")).collect()
-    assert(rows.contains(Row("00:00:00", "click", 2L, 4.0)))
-  }
-
-  test("streaming sliding window: each event lands in width/slide windows, closed by watermark") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, String, Double, Long)](spark)
-    val events = stream.toDF().toDF("event_id", "event_type", "value", "epoch_us")
-    val counts = StreamingOps.slidingCounts(events, widthSeconds = 120,
-      slideSeconds = 60, watermarkDelay = "30 seconds")
-    val q = counts.writeStream.format("memory").queryName("slide_stream")
-      .outputMode("append").start()
-    val us = (s: Long) => s * 1000000L
-    stream.addData((1L, "click", 1.5, us(70)))
-    q.processAllAvailable()
-    // event time 1000s: watermark passes both of event 1's windows
-    stream.addData((2L, "view", 1.0, us(1000)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("slide_stream")
-      .select(date_format(col("window_start"), "HH:mm:ss"),
-        date_format(col("window_end"), "HH:mm:ss"), col("event_type"), col("cnt"))
-      .collect()
-    // event at 70s belongs to [0,120) and [60,180) — both emitted once closed
-    assert(rows.contains(Row("00:00:00", "00:02:00", "click", 1L)))
-    assert(rows.contains(Row("00:01:00", "00:03:00", "click", 1L)))
-  }
-
-  test("streaming session_window groups events within the gap per user") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, Long, Long)](spark)
-    val events = stream.toDF().toDF("event_id", "user_id", "epoch_us")
-    val sessions = StreamingOps.sessionWindows(events, gapSeconds = 100,
-      watermarkDelay = "10 seconds")
-    val q = sessions.writeStream.format("memory").queryName("sess_stream")
-      .outputMode("complete").start()
-    val us = (s: Long) => s * 1000000L
-    stream.addData((1L, 10L, us(0)), (2L, 10L, us(50)),   // one session (gap 50 < 100)
-      (3L, 10L, us(1000)),                                 // second session
-      (4L, 20L, us(10)))                                   // other user
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("sess_stream")
-      .select("user_id", "n_events").orderBy("user_id", "n_events").collect()
-    assert(rows === Array(Row(10L, 1L), Row(10L, 2L), Row(20L, 1L)))
-  }
-
-  test("stream-stream interval join: clicks attribute to in-window views only") {
-    import spark.implicits._
-    val clicks = MemoryStream[(Long, Long, Long)](spark)
-    val views = MemoryStream[(Long, Long, Long)](spark)
-    val toEv = (s: MemoryStream[(Long, Long, Long)]) =>
-      s.toDF().toDF("user_id", "event_id", "epoch_us")
-    val joined = StreamingOps.intervalJoin(toEv(clicks), toEv(views),
-      maxDelaySeconds = 60, watermarkDelay = "1 minute")
-    val q = joined.writeStream.format("memory").queryName("ij_stream")
-      .outputMode("append").start()
-    val us = (s: Long) => s * 1000000L
-    // user 1: view at 10s then click at 40s (in window); stale view at -100
-    // relative is impossible, so use view at 300s vs click at 500s (out of 60s window)
-    views.addData((1L, 100L, us(10)), (1L, 101L, us(300)))
-    clicks.addData((1L, 200L, us(40)), (1L, 201L, us(500)))
-    // advance both watermarks far past everything so results finalize
-    // (distinct users so the advancer rows can't join each other)
-    views.addData((8L, 999L, us(5000)))
-    clicks.addData((9L, 998L, us(5000)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ij_stream")
-      .select("click_id", "view_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    // click 200 @40s matches view 100 @10s (30s delay <= 60s);
-    // click 201 @500s matches nothing (view 101 @300s is 200s stale)
-    assert(rows.toSet === Set((200L, 100L)))
-  }
-
-  test("stream-stream LEFT OUTER interval join: unattributed clicks emit " +
-    "null-padded after the watermark closes their window") {
-    import spark.implicits._
-    val clicks = MemoryStream[(Long, Long, Long)](spark)
-    val views = MemoryStream[(Long, Long, Long)](spark)
-    val toEv = (s: MemoryStream[(Long, Long, Long)]) =>
-      s.toDF().toDF("user_id", "event_id", "epoch_us")
-    val joined = StreamingOps.intervalJoinLeftOuter(toEv(clicks), toEv(views),
-      maxDelaySeconds = 60, watermarkDelay = "1 minute")
-    val q = joined.writeStream.format("memory").queryName("ij_left")
-      .outputMode("append").start()
-    val us = (s: Long) => s * 1000000L
-    // click 200 has an in-window view; click 201 has none (view 101 is
-    // 200s stale, outside the 60s window)
-    views.addData((1L, 100L, us(10)), (1L, 101L, us(300)))
-    clicks.addData((1L, 200L, us(40)), (1L, 201L, us(500)))
-    q.processAllAvailable()
-    // advance both watermarks far past 500s so 201's window provably
-    // closed; a second tick gives the outer-null emission its own batch
-    views.addData((8L, 999L, us(5000)))
-    clicks.addData((9L, 998L, us(5000)))
-    q.processAllAvailable()
-    views.addData((8L, 997L, us(6000)))
-    clicks.addData((9L, 996L, us(6000)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ij_left").select("click_id", "view_id").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
-    val byClick = rows.groupBy(_._1)
-    // the matched click appears exactly once, WITH its view; the
-    // unmatched click surfaces null-padded instead of vanishing
-    assert(byClick(200L).toSeq === Seq((200L, Some(100L))))
-    assert(byClick(201L).toSeq === Seq((201L, None)))
-  }
-
-  test("streaming dedup within watermark drops repeated keys") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, Long, Long)](spark)
-    val events = stream.toDF().toDF("event_id", "user_id", "epoch_us")
-    val dd = StreamingOps.dedupWithinWatermark(events, Seq("user_id"))
-    val q = dd.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    val us = (s: Long) => s * 1000000L
-    stream.addData((1L, 10L, us(0)), (2L, 10L, us(1)), (3L, 20L, us(2)))
-    q.processAllAvailable()
-    q.stop()
-    val users = spark.table("dedup_stream").select("user_id")
-      .collect().map(_.getLong(0)).sorted
-    assert(users === Array(10L, 20L))
-  }
-
-  test("flatMapGroupsWithState sessionization: gap closes eagerly, timeout closes trailing") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, Long)](spark)
-    val events = stream.toDF().toDF("user_id", "epoch_us")
-    val sessions = StreamingOps.sessionizeWithState(events, gapSeconds = 100)
-    val q = sessions.writeStream.format("memory").queryName("fmgws_stream")
-      .outputMode("append").start()
-    // keep event times off epoch zero: the initial watermark is 0, and rows
-    // at-or-before the watermark are dropped as late
-    val us = (s: Long) => (1000 + s) * 1000000L
-    // session 1: u10 at +0s and +50s (within gap)
-    stream.addData((10L, us(0)), (10L, us(50)))
-    q.processAllAvailable()
-    // event at +1000s: gap exceeded -> session 1 closes EAGERLY (no watermark wait)
-    stream.addData((10L, us(1000)))
-    q.processAllAvailable()
-    val afterEager = spark.table("fmgws_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(afterEager === Array((10L, us(0), us(50), 2L)))
-    // watermark advance past +1000s + gap -> session 2 closes via event-time timeout
-    stream.addData((99L, us(3000)))
-    q.processAllAvailable()
-    stream.addData((99L, us(3001)))
-    q.processAllAvailable()
-    q.stop()
-    val all = spark.table("fmgws_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
-    assert(all.contains((10L, us(1000), us(1000), 1L)))
-    // matches the batch sessionize gap rule for every closed session
-    val batch = graft.ops.Windows.sessionize(
-      Seq((10L, 1L, us(0)), (10L, 2L, us(50)), (10L, 3L, us(1000)))
-        .toDF("user_id", "event_id", "epoch_us"), gapSeconds = 100)
-      .select("user_id", "start_us", "end_us", "n_events")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
-    assert(batch === Array((10L, us(0), us(50), 2L), (10L, us(1000), us(1000), 1L)))
-    assert(all.filter(_._1 == 10L) === batch)
-  }
-
   test("TopKAggregator maintains a streaming top-k leaderboard across micro-batches") {
     import spark.implicits._
     import graft.ops.ScoredPair
@@ -301,28 +117,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(rows(1L) === Seq(11L, 12L)) // 0.9, 0.7 survive; 0.5 displaced
     assert(rows(2L) === Seq(20L))
-  }
-
-  test("sessionizeWithState: out-of-order event inside the watermark extends session START") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, Long)](spark)
-    val events = stream.toDF().toDF("user_id", "epoch_us")
-    val sessions = StreamingOps.sessionizeWithState(events, gapSeconds = 100)
-    val q = sessions.writeStream.format("memory").queryName("ooo_stream")
-      .outputMode("append").start()
-    val us = (s: Long) => s * 1000000L
-    stream.addData((10L, us(1000)))
-    q.processAllAvailable()
-    // watermark is 1000-100=900s, so 950s is legal late data; it precedes
-    // the open session's start and must extend it backward
-    stream.addData((10L, us(950)))
-    q.processAllAvailable()
-    stream.addData((10L, us(3000))) // gap-close the session
-    q.processAllAvailable()
-    q.stop()
-    val r = spark.table("ooo_stream").collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
-    assert(r === Array((10L, us(950), us(1000), 2L)))
   }
 
   test("dsirScore streams append-mode: fixed ratio table, scan-fused scoring == batch") {
@@ -503,507 +297,6 @@ class StreamingSpec extends SparkSpec {
     assert(cat.select("text").distinct().count() === 4)
   }
 
-  test("incremental segment dedup over micro-batches == batch segmentDedup") {
-    import spark.implicits._
-    // 5-sentence vocab, 4-word sentences, segWords=4 -> segments ARE the
-    // sentences, so duplicates abound both within docs (i where the three
-    // picks collide) and across docs/batches; docs past the first batch are
-    // mostly fully-duplicated (exercises the n_kept=0 / NULL kept_md5 path)
-    val sent = Vector("a b c d", "e f g h", "i j k l", "m n o p", "q r s t")
-    val docs = (0L until 30L).map { i =>
-      (i, Seq(sent((i % 5).toInt), sent(((i * 2) % 5).toInt),
-        sent(((i * i) % 5).toInt)).mkString(" "))
-    }
-    val dir = java.nio.file.Files.createTempDirectory("segdedup").toString
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = StreamingOps.segmentDedupStream(stream.toDF().toDF("doc_id", "text"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt", segWords = 4)
-    // ascending doc_id across batches — the documented parity contract
-    docs.grouped(10).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    val batchDf = graft.ops.Dedup.segmentDedup(docs.toDF("doc_id", "text"), segWords = 4)
-    // per-batch partition dirs (the idempotent-retry layout) surface a
-    // `batch` column — read through the helper that drops it
-    val streamed = StreamingOps.readBatched(spark, s"$dir/out")
-      .select(batchDf.columns.map(col): _*)
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    val batch = batchDf.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    assert(streamed === batch)
-    // catalog holds exactly the corpus's distinct segments (the 5 sentences)
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    assert(cat.count() === 5)
-    assert(cat.distinct().count() === 5)
-    // one partition dir per epoch — the overwrite target a retry would hit
-    assert(new java.io.File(s"$dir/out").listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("batch=")) === 3)
-  }
-
-  test("incremental image phash near-dup over micro-batches == batch " +
-    "imagePhashNeardup, including OUT-OF-ORDER arrival") {
-    import spark.implicits._
-    // even doc_ids → BMPs; ids sharing (id%2, id%31, id%17) AND text are
-    // pixel-identical (hamming 0). Feed batches OUT of id order: the
-    // canonicalized pair emit must still reconstruct the batch answer.
-    val dup = 2L + 2 * 31 * 17 // 1056: same image as doc 2
-    val docs = Seq(
-      (dup, "alpha beta gamma"), (4L, "delta epsilon zeta"),
-      (2L, "alpha beta gamma"), (6L, "eta theta iota"),
-      (8L, "alpha beta gamma"), (10L, "delta epsilon zeta"))
-    val dir = java.nio.file.Files.createTempDirectory("imgdedup").toString
-    val stream = MemoryStream[(Long, String)](spark)
-    val media = graft.ops.Multimodal.syntheticMedia(
-      stream.toDF().toDF("doc_id", "text"))
-    val q = StreamingOps.imagePhashStream(media,
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt")
-    docs.grouped(2).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    def norm(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      .sortBy(identity[(Long, Long, Int)])
-    val streamed = norm(StreamingOps.readBatched(spark, s"$dir/out")
-      .select("a_id", "b_id", "hamming").collect())
-    val batch = norm(graft.ops.Multimodal.imagePhashNeardup(
-      graft.ops.Multimodal.syntheticMedia(docs.toDF("doc_id", "text")))
-      .collect())
-    assert(streamed === batch)
-    // the known pixel-identical pair was found ACROSS batches, despite
-    // the larger id arriving FIRST
-    assert(streamed.contains((2L, dup, 0)))
-    // catalog carries one hash row per image, no payload bytes
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    assert(cat.count() === docs.size)
-    assert(cat.columns.toSet === Set("doc_id", "phash_hi", "phash_lo"))
-  }
-
-  test("incremental minhash near-dup over micro-batches == batch minhashNeardup") {
-    import spark.implicits._
-    // small word vocab + doc templates that repeat across batches, so LSH
-    // bands collide both within one micro-batch and across them; several
-    // docs are exact copies (jaccard 1.0) and several share most shingles
-    val tpl = Vector(
-      "the quick brown fox jumps over the lazy dog tonight",
-      "the quick brown fox jumps over the lazy cat tonight",
-      "pack my box with five dozen liquor jugs again now",
-      "pack my box with five dozen liquor mugs again now",
-      "sphinx of black quartz judge my vow tonight again")
-    val docs = (0L until 24L).map(i => (i, tpl((i % 5).toInt)))
-    val dir = java.nio.file.Files.createTempDirectory("mhdedup").toString
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = StreamingOps.minhashNeardupStream(
-      stream.toDF().toDF("doc_id", "text"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt")
-    docs.grouped(8).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    def norm(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getLong(0), r.getLong(1),
-        math.round(r.getDouble(2) * 1e9), math.round(r.getDouble(3) * 1e9)))
-      .sortBy(t => (t._1, t._2))
-    val streamed = norm(StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_a", "doc_b", "est_jaccard", "jaccard").collect())
-    val batch = norm(
-      graft.ops.Dedup.minhashNeardup(docs.toDF("doc_id", "text")).collect())
-    assert(streamed === batch)
-    // pairs exist both within one batch and across batches
-    assert(streamed.exists { case (a, b, _, _) => a / 8 == b / 8 })
-    assert(streamed.exists { case (a, b, _, _) => a / 8 != b / 8 })
-    // exact duplicates score jaccard 1.0; the catalog holds every doc once
-    assert(streamed.count(_._4 == 1000000000L) > 0)
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    assert(cat.count() === 24)
-    assert(cat.select("doc_id").distinct().count() === 24)
-    // retry semantics (foreachBatch is at-least-once): re-running the LAST
-    // epoch against its pre-batch catalog view and overwriting its
-    // partitions — exactly what a crashed-then-restarted epoch does — must
-    // leave output and catalog byte-identical
-    val lastChunk = docs.grouped(8).toSeq.last.toDF("doc_id", "text")
-    val preCat = StreamingOps.readBatched(spark, s"$dir/catalog", Some(2L))
-    val (rp, rs) = graft.ops.Dedup.minhashNeardupIncrement(lastChunk, preCat)
-    rp.write.mode("overwrite").parquet(s"$dir/out/batch=2")
-    rs.write.mode("overwrite").parquet(s"$dir/catalog/batch=2")
-    graft.ops.Dedup.releaseCheckpoint(rs)
-    val retried = norm(StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_a", "doc_b", "est_jaccard", "jaccard").collect())
-    assert(retried === batch)
-    assert(StreamingOps.readBatched(spark, s"$dir/catalog").count() === 24)
-  }
-
-  test("streaming URL frontier over micro-batches: ascending arrival " +
-    "admits exactly urlDedup's keeper set; idempotent epoch retry leaves " +
-    "output and catalog byte-identical (round-14 VERDICT: the one " +
-    "streaming op with no batch-parity test)") {
-    import spark.implicits._
-    // (i%7, i%5) collide across i and i+35 — cross-batch re-discoveries,
-    // the common case in a crawl frontier; messy raw forms canonical-fold
-    val raw = (0L until 60L).map { i =>
-      val mess = if (i % 3 == 0) s"HTTP://WWW.h${i % 7}.ex.com:80/p/${i % 5}"
-      else s"http://h${i % 7}.ex.com/p/${i % 5}"
-      (i, mess)
-    }
-    val dir = java.nio.file.Files.createTempDirectory("urlfrontier").toString
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = StreamingOps.urlFrontierStream(stream.toDF().toDF("doc_id", "url"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt")
-    raw.grouped(20).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "url_canon").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    // ascending-arrival parity contract: the batch dedup's keeper set
-    val expected = graft.ops.Url.urlDedup(raw.toDF("doc_id", "url"))
-      .select(col("keep_doc_id").as("doc_id"), col("url_canon")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    assert(streamed === expected)
-    assert(streamed.size === 35) // 7 hosts x 5 paths
-    // the catalog carries ONE canonical string per admitted URL
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    assert(cat.count() === 35)
-    assert(cat.select("url_canon").distinct().count() === 35)
-    // retry semantics (foreachBatch is at-least-once): re-run the LAST
-    // epoch against its pre-batch catalog view, overwrite its partitions —
-    // a crashed-then-restarted epoch — output/catalog must not change
-    val lastChunk = raw.grouped(20).toSeq.last.toDF("doc_id", "url")
-    val preCat = StreamingOps.readBatched(spark, s"$dir/catalog", Some(2L))
-      .select("url_canon")
-    val novel = graft.ops.Url.urlFrontierIncrement(lastChunk, preCat)
-    novel.write.mode("overwrite").parquet(s"$dir/out/batch=2")
-    novel.select("url_canon").write.mode("overwrite")
-      .parquet(s"$dir/catalog/batch=2")
-    val retried = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "url_canon").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    assert(retried === expected)
-    assert(StreamingOps.readBatched(spark, s"$dir/catalog").count() === 35)
-  }
-
-  test("streaming canonical-declaration dedup over micro-batches: " +
-    "ascending arrival admits exactly canonicalDedup's keeper set; " +
-    "idempotent epoch retry leaves output and catalog byte-identical") {
-    import spark.implicits._
-    import graft.ops.Links
-    // every 4th page declares the canonical of its (i%6) group — pages
-    // across batches collapse onto one declared key; others dedup on
-    // their own canon (i%9 path variants collide too); every 10th page
-    // is on the blocked domain and must never claim a slot
-    def page(i: Long): (Long, String, String) = {
-      val head = if (i % 4 == 0)
-        s"""<link rel="canonical" href="https://canon.ex.com/g/${i % 6}">"""
-      else ""
-      val host = if (i % 10 == 0) "bad.blocked.org" else s"h${i % 7}.ex.com"
-      (i, s"<html><head>$head</head><body>x</body></html>",
-        s"http://$host/p/${i % 9}/")
-    }
-    val raw = (0L until 60L).map(page)
-    val dir = java.nio.file.Files.createTempDirectory("canondedup").toString
-    val stream = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingOps.canonicalDedupStream(
-      stream.toDF().toDF("doc_id", "html", "base_url"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt", Seq("blocked.org"))
-    raw.grouped(20).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "dedup_key").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    // ascending-arrival parity: the batch form's keeper set
-    val batchKeep = Links.canonicalDedup(
-        raw.toDF("doc_id", "html", "base_url"), Seq("blocked.org"))
-      .filter(col("keep")).select("doc_id", "dedup_key").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    assert(streamed === batchKeep)
-    assert(streamed.nonEmpty)
-    // blocked pages never admitted
-    assert(!streamed.exists(_._2.contains("blocked.org")))
-    // the declared key collapsed cross-batch: i%4==0 declarers are all
-    // even, so i%6 covers {0,2,4} — exactly 3 g/<k> admissions
-    assert(streamed.count(_._2.startsWith("https://canon.ex.com/g/")) === 3)
-    // idempotent retry of the LAST epoch against its pre-batch view
-    val lastChunk = raw.grouped(20).toSeq.last
-      .toDF("doc_id", "html", "base_url")
-    val preCat = StreamingOps.readBatched(spark, s"$dir/catalog", Some(2L))
-      .select("dedup_key")
-    val novel = Links.canonicalDedupIncrement(lastChunk, preCat,
-      Seq("blocked.org"))
-    novel.write.mode("overwrite").parquet(s"$dir/out/batch=2")
-    novel.select("dedup_key").write.mode("overwrite")
-      .parquet(s"$dir/catalog/batch=2")
-    val retried = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "dedup_key").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    assert(retried === streamed)
-  }
-
-  test("streaming link discovery over micro-batches: ascending arrival " +
-    "admits exactly linkDiscover's novel-target set (gates included); " +
-    "idempotent epoch retry leaves output and catalog byte-identical " +
-    "(round 19 — the link loop's incremental form, r17 task #7)") {
-    import spark.implicits._
-    import graft.ops.Links
-    // per page: one SHARED target (t<i%5> — cross-batch re-discoveries,
-    // the frontier's common case), one unique target, one blocked, one
-    // robots-disallowed, one nofollow — only the first two may admit
-    def page(i: Long): (Long, String, String) = {
-      (i, s"""<html><body><a href="http://t${i % 5}.ex.com/page">a</a>""" +
-        s"""<a href="http://u$i.ex.com/only">b</a>""" +
-        """<a href="http://bad.blocked.org/x">c</a>""" +
-        s"""<a href="http://t${i % 5}.ex.com/private/x">d</a>""" +
-        """<a rel="nofollow" href="http://nof.ex.com/n">n</a>""" +
-        "</body></html>",
-        s"http://src$i.ex.com/")
-    }
-    val raw = (0L until 60L).map(page)
-    val robots = Seq(("ex.com", "User-agent: *\nDisallow: /private\n"))
-      .toDF("domain", "robots_txt")
-    val dir = java.nio.file.Files.createTempDirectory("linkdisc").toString
-    val stream = MemoryStream[(Long, String, String)](spark)
-    val q = StreamingOps.linkDiscoverStream(
-      stream.toDF().toDF("doc_id", "html", "base_url"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt", Seq("blocked.org"), robots)
-    raw.grouped(20).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "link_idx", "target_canon").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(_._3).toSeq
-    // ascending-arrival parity: the batch op against an empty catalog
-    val batch = Links.linkDiscover(raw.toDF("doc_id", "html", "base_url"),
-        Seq("blocked.org"), robots,
-        spark.emptyDataset[String].toDF("url_canon"))
-      .select("doc_id", "link_idx", "target_canon").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(_._3).toSeq
-    assert(streamed === batch)
-    assert(streamed.size === 65) // 5 shared + 60 unique targets
-    assert(!streamed.exists(_._3.contains("blocked.org")))
-    assert(!streamed.exists(_._3.contains("/private")))
-    assert(!streamed.exists(_._3.contains("nof.ex.com")))
-    // catalog: one canonical string per admitted target
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    assert(cat.count() === 65)
-    assert(cat.select("url_canon").distinct().count() === 65)
-    // idempotent retry of the LAST epoch against its pre-batch view
-    val lastChunk = raw.grouped(20).toSeq.last
-      .toDF("doc_id", "html", "base_url")
-    val preCat = StreamingOps.readBatched(spark, s"$dir/catalog", Some(2L))
-      .select("url_canon")
-    val novel = Links.linkDiscover(lastChunk, Seq("blocked.org"), robots,
-      preCat)
-    novel.write.mode("overwrite").parquet(s"$dir/out/batch=2")
-    novel.select(col("target_canon").as("url_canon")).write.mode("overwrite")
-      .parquet(s"$dir/catalog/batch=2")
-    val retried = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "link_idx", "target_canon").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(_._3).toSeq
-    assert(retried === streamed)
-  }
-
-  test("streaming URL frontier under OUT-OF-ORDER arrival: novelty stays " +
-    "exact (one admission per canonical key), the earlier-ARRIVING copy " +
-    "is crowned — the incrementalDedup arrival-order semantics") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("urlfrontier2").toString
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = StreamingOps.urlFrontierStream(stream.toDF().toDF("doc_id", "url"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt")
-    // the HIGH doc_id copy of /dup arrives in epoch 0, the low one later
-    stream.addData((50L, "http://x.ex.com/dup"), (51L, "http://x.ex.com/a"))
-    q.processAllAvailable()
-    stream.addData((1L, "http://x.ex.com/dup"), (2L, "http://x.ex.com/b"))
-    q.processAllAvailable()
-    q.stop()
-    val got = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "url_canon").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._2).toSeq
-    assert(got === Seq(
-      (51L, "http://x.ex.com/a"),
-      (2L, "http://x.ex.com/b"),
-      (50L, "http://x.ex.com/dup"))) // 50 arrived first: crowned; 1 dropped
-  }
-
-  test("streaming LEARNED-KEY frontier over micro-batches: ascending " +
-    "arrival admits exactly the batch increment's keeper set — a later " +
-    "epoch's session variant of an admitted page is NOT re-admitted; " +
-    "idempotent epoch retry leaves output and catalog byte-identical") {
-    import spark.implicits._
-    // sid is the learned strip param; (i%3, i%5) page identities recur
-    // across epochs under FRESH sid values — the crawl-trap arrival
-    // shape the learned key exists for (static canonicals never repeat)
-    val raw = (0L until 60L).map(i =>
-      (i, s"http://h${i % 3}.ex.com/p/${i % 5}?sid=s$i"))
-    val policy = Seq(("ex.com", Seq("sid"))).toDF("domain", "_drop")
-    val dir = java.nio.file.Files.createTempDirectory("urlflearn").toString
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = StreamingOps.urlFrontierLearnedStream(
-      stream.toDF().toDF("doc_id", "url"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt", policy)
-    raw.grouped(20).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "url_canon", "learned_canon").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1).toSeq
-    val emptyCat = spark.range(0)
-      .select(lit(null).cast("string").as("learned_canon"))
-    val expected = graft.ops.Url.urlFrontierLearnedIncrement(
-        raw.toDF("doc_id", "url"), emptyCat, policy)
-      .select("doc_id", "url_canon", "learned_canon").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1).toSeq
-    assert(streamed === expected)
-    assert(streamed.size === 15) // 3 hosts x 5 pages — every sid folded
-    // ids 0..14 already cover all 15 page identities, so every later
-    // epoch's fresh-sid variants of admitted pages must emit NOTHING
-    assert(streamed.map(_._1).max < 15L)
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    assert(cat.count() === 15)
-    assert(cat.select("learned_canon").distinct().count() === 15)
-    // retry semantics (foreachBatch is at-least-once): re-run the LAST
-    // epoch against its pre-batch catalog view, overwrite its
-    // partitions — output/catalog must not change
-    val lastChunk = raw.grouped(20).toSeq.last.toDF("doc_id", "url")
-    val preCat = StreamingOps.readBatched(spark, s"$dir/catalog", Some(2L))
-      .select("learned_canon")
-    val novel = graft.ops.Url.urlFrontierLearnedIncrement(
-      lastChunk, preCat, policy)
-    novel.write.mode("overwrite").parquet(s"$dir/out/batch=2")
-    novel.select("learned_canon").write.mode("overwrite")
-      .parquet(s"$dir/catalog/batch=2")
-    val retried = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("doc_id", "url_canon", "learned_canon").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1).toSeq
-    assert(retried === expected)
-    assert(StreamingOps.readBatched(spark, s"$dir/catalog").count() === 15)
-  }
-
-  test("incremental semantic dedup over micro-batches == batch semanticDedup") {
-    import spark.implicits._
-    import graft.ops.Similarity
-    def vec(vals: (Int, Float)*): Seq[Float] = {
-      val a = Array.fill(8)(0f); vals.foreach { case (i, v) => a(i) = v }; a.toSeq
-    }
-    // two directional clusters seeded by ids 1/2; later members are near
-    // copies of their group (dropped), except two low-magnitude orthogonal
-    // outliers (7: cluster 1, 16: cluster 2) that survive
-    val docs = (1L to 24L).map {
-      case 7L  => (7L, vec(0 -> 0.1f, 3 -> 3f))
-      case 16L => (16L, vec(0 -> -0.1f, 5 -> 3f))
-      case i if i % 2 == 1 => (i, vec(0 -> 10f, (i % 4).toInt -> 0.5f))
-      case i => (i, vec(0 -> -10f, (i % 4).toInt -> 0.5f))
-    }
-    val corpus = docs.toDF("vec_id", "embedding")
-    // trained ONCE on the corpus (the parity scenario); every micro-batch
-    // assigns against this fixed frame
-    val cents = Similarity.semanticCentroids(corpus, k = 2)
-    val dir = java.nio.file.Files.createTempDirectory("semdedup").toString
-    val stream = MemoryStream[(Long, Seq[Float])](spark)
-    val q = StreamingOps.semanticDedupStream(
-      stream.toDF().toDF("vec_id", "embedding"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt", cents)
-    // ascending vec_id across batches — the documented parity contract
-    docs.grouped(8).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    val batchDf = Similarity.semanticDedup(corpus, k = 2)
-    val streamed = StreamingOps.readBatched(spark, s"$dir/out")
-      .select(batchDf.columns.map(col): _*)
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    val batch = batchDf.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    assert(streamed === batch)
-    // survivors: the two seeds + the two orthogonal outliers — keeps occur
-    // in batches past the first, so the catalog comparison did the work
-    val keep = streamed.filter(_.last.asInstanceOf[Boolean])
-      .map(_.head.asInstanceOf[Long]).toSet
-    assert(keep === Set(1L, 2L, 7L, 16L))
-    // catalog holds every vector once (kept or not — verdicts compare
-    // against ALL lower ids, not just survivors)
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    assert(cat.count() === 24)
-    assert(cat.select("vec_id").distinct().count() === 24)
-  }
-
-  test("capped semantic dedup stream: catalog bounded at perClusterCap, " +
-    "drops remain sound, cap-binding keeps are the documented recall trade") {
-    import spark.implicits._
-    import graft.ops.Similarity
-    def vec(vals: (Int, Float)*): Seq[Float] = {
-      val a = Array.fill(8)(0f); vals.foreach { case (i, v) => a(i) = v }; a.toSeq
-    }
-    // one directional cluster of near-copies + one opposite cluster
-    val docs = (1L to 20L).map {
-      case i if i % 2 == 1 => (i, vec(0 -> 10f, (i % 4).toInt -> 0.5f))
-      case i => (i, vec(0 -> -10f, (i % 4).toInt -> 0.5f))
-    }
-    val corpus = docs.toDF("vec_id", "embedding")
-    val cents = Similarity.semanticCentroids(corpus, k = 2)
-    val dir = java.nio.file.Files.createTempDirectory("semcap").toString
-    val stream = MemoryStream[(Long, Seq[Float])](spark)
-    val q = StreamingOps.semanticDedupStream(
-      stream.toDF().toDF("vec_id", "embedding"),
-      s"$dir/catalog", s"$dir/out", s"$dir/ckpt", cents,
-      perClusterCap = 3)
-    docs.grouped(5).foreach { chunk =>
-      stream.addData(chunk: _*); q.processAllAvailable()
-    }
-    q.stop()
-    // THE BOUND: no cluster ever exceeds cap rows, so batch N's pairwise
-    // join is against <= k*cap catalog rows no matter how long the
-    // stream has run
-    val cat = StreamingOps.readBatched(spark, s"$dir/catalog")
-    val perCluster = cat.groupBy("cid").count().collect()
-      .map(r => r.getLong(1))
-    assert(perCluster.forall(_ <= 3), s"cap breached: ${perCluster.toSeq}")
-    assert(cat.count() <= 2 * 3)
-    // drops remain sound: every streamed drop is also a batch-form drop
-    // (a capped catalog can only MISS partners, never invent them)
-    val streamed = StreamingOps.readBatched(spark, s"$dir/out")
-      .select("vec_id", "keep").collect()
-      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val batch = Similarity.semanticDedup(corpus, k = 2).select("vec_id", "keep")
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    streamed.foreach { case (id, keep) =>
-      if (!keep) assert(!batch(id), s"capped stream dropped $id, batch kept it")
-    }
-    // near-copies arriving while the cap is filled still drop (the cap
-    // keeps representatives, not nothing)
-    assert(streamed.count(!_._2) > 10)
-  }
-
-  test("streaming fan-out writes per-tenant directories via foreachBatch") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("fanout").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
-    val stream = MemoryStream[String](spark)
-    val routed = Filterer.route(stream.toDF()).routed
-    val q = StreamingOps.fanOutTenants(routed, out, ckpt)
-    stream.addData((0 to 5).map(cmfMsg): _*)
-    q.processAllAvailable()
-    q.stop()
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).sorted
-    assert(dirs === Array("tenantId=tenant-0", "tenantId=tenant-1"))
-    val readBack = spark.read.parquet(out)
-    assert(readBack.count() === 6)
-    // round-trip preserves the original message bytes
-    val one = readBack.filter(col("value").contains("\"veh-3\"")).select("value")
-      .head().getString(0)
-    assert(one === cmfMsg(3))
-  }
-
   test("streaming topic publish: route -> graft-spool sink, epochs append per topic") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("spool_stream_sink")
@@ -1040,308 +333,5 @@ class StreamingSpec extends SparkSpec {
     val leftovers = all.filterNot(_.startsWith("."))
       .filterNot(_.matches("part-\\d{8}-[0-9a-f]{8}"))
     assert(leftovers.isEmpty, leftovers.mkString(","))
-  }
-
-  test("streaming CDC compaction: latest-wins snapshot, late versions never displace") {
-    import spark.implicits._
-    // (event_id, epoch_us, user_id, event_type, value)
-    val stream = MemoryStream[(Long, Long, Long, String, Double)](spark)
-    val events = stream.toDF()
-      .toDF("event_id", "epoch_us", "user_id", "event_type", "value")
-    val q = StreamingOps.latestSnapshotStream(events)
-      .writeStream.format("memory").queryName("cdc_snap")
-      .outputMode("update").start()
-    def snap(): Map[(Long, String), (Long, Long, Double, Long)] = {
-      // memory sink in update mode APPENDS each re-emission — the live
-      // snapshot is each key's latest emitted row (max n_versions)
-      val rows = spark.table("cdc_snap").collect()
-      rows.groupBy(r => (r.getLong(0), r.getString(1)))
-        .map { case (k, rs) =>
-          val last = rs.maxBy(_.getLong(5))
-          k -> (last.getLong(2), last.getLong(3), last.getDouble(4),
-            last.getLong(5))
-        }
-    }
-    try {
-      stream.addData((1L, 100L, 7L, "click", 1.0), (2L, 200L, 7L, "click", 2.0),
-        (3L, 50L, 8L, "view", 3.0))
-      q.processAllAvailable()
-      assert(snap() === Map(
-        (7L, "click") -> (2L, 200L, 2.0, 2L),
-        (8L, "view") -> (3L, 50L, 3.0, 1L)))
-      // batch 2: a LATE out-of-order version for (7,click) older than the
-      // current snapshot — counted, but must not displace event 2 — plus
-      // a genuinely newer version for (8,view)
-      stream.addData((4L, 150L, 7L, "click", 9.9), (5L, 300L, 8L, "view", 4.0))
-      q.processAllAvailable()
-      assert(snap() === Map(
-        (7L, "click") -> (2L, 200L, 2.0, 3L),
-        (8L, "view") -> (5L, 300L, 4.0, 2L)))
-    } finally q.stop()
-    // parity with the batch aggregate shape: same merge rule over the
-    // union of both batches gives the same snapshot
-    val all = Seq((1L, 100L, 7L, "click", 1.0), (2L, 200L, 7L, "click", 2.0),
-      (3L, 50L, 8L, "view", 3.0), (4L, 150L, 7L, "click", 9.9),
-      (5L, 300L, 8L, "view", 4.0))
-      .toDF("event_id", "epoch_us", "user_id", "event_type", "value")
-    val batch = all.groupBy("user_id", "event_type")
-      .agg(count(lit(1)).cast("long").as("n_versions"),
-        max(struct(col("epoch_us"), col("event_id"), col("value"))).as("m"))
-      .select(col("user_id"), col("event_type"), col("m.event_id"),
-        col("m.epoch_us"), col("m.value"), col("n_versions"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3), r.getDouble(4), r.getLong(5))).toMap
-    assert(snap() === batch)
-  }
-
-  test("streaming tombstone compaction: delete wins, no late resurrection, " +
-    "batch parity") {
-    import spark.implicits._
-    // (event_id, epoch_us, user_id, event_type, value); value < 10 = delete
-    val stream = MemoryStream[(Long, Long, Long, String, Double)](spark)
-    val events = stream.toDF()
-      .toDF("event_id", "epoch_us", "user_id", "event_type", "value")
-    val q = StreamingOps.latestSnapshotStreamTombstone(events)
-      .writeStream.format("memory").queryName("tomb_snap")
-      .outputMode("update").start()
-    def snap(): Map[(Long, String), (Long, Boolean, Long, Long)] = {
-      val rows = spark.table("tomb_snap").collect()
-      rows.groupBy(r => (r.getLong(0), r.getString(1))).map { case (k, rs) =>
-        val last = rs.maxBy(_.getLong(6)) // n_versions identifies latest emission
-        k -> (last.getLong(2), last.getBoolean(5), last.getLong(6), last.getLong(7))
-      }
-    }
-    try {
-      stream.addData((1L, 100L, 7L, "click", 50.0))
-      q.processAllAvailable()
-      assert(snap()((7L, "click")) === ((1L, false, 1L, 0L)))
-      // a newer delete marker tombstones the key
-      stream.addData((2L, 200L, 7L, "click", 5.0))
-      q.processAllAvailable()
-      assert(snap()((7L, "click")) === ((2L, true, 2L, 1L)))
-      // LATE pre-tombstone live version: counted, but must NOT resurrect
-      stream.addData((3L, 150L, 7L, "click", 60.0))
-      q.processAllAvailable()
-      assert(snap()((7L, "click")) === ((2L, true, 3L, 1L)))
-      // a genuinely newer live version revives the key
-      stream.addData((4L, 300L, 7L, "click", 70.0))
-      q.processAllAvailable()
-      assert(snap()((7L, "click")) === ((4L, false, 4L, 1L)))
-    } finally q.stop()
-    // parity with the batch tombstone aggregate over the full history
-    val all = Seq((1L, 100L, 50.0), (2L, 200L, 5.0), (3L, 150L, 60.0),
-      (4L, 300L, 70.0)).toDF("event_id", "epoch_us", "value")
-    val batch = all
-      .withColumn("is_del", col("value") < 10.0)
-      .agg(max(struct(col("epoch_us"), col("event_id"), col("is_del"))).as("m"),
-        sum(when(col("is_del"), 1L).otherwise(0L)).as("n_del"),
-        count(lit(1)).as("n"))
-      .select(col("m.event_id"), col("m.is_del"), col("n"), col("n_del"))
-      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2),
-        r.getLong(3))).head
-    assert(snap()((7L, "click")) === batch)
-  }
-
-  test("streaming snapshot + tombstone survive NULL values; a null value " +
-    "is not a delete marker (batch-aggregate parity)") {
-    import spark.implicits._
-    // (event_id, epoch_us, user_id, event_type, value) — Option value so
-    // the memory stream can carry genuine nulls, as generated events do
-    val stream = MemoryStream[(Long, Long, Long, String, Option[Double])](spark)
-    val events = stream.toDF()
-      .toDF("event_id", "epoch_us", "user_id", "event_type", "value")
-    val qs = StreamingOps.latestSnapshotStream(events)
-      .writeStream.format("memory").queryName("null_snap")
-      .outputMode("update").start()
-    val qt = StreamingOps.latestSnapshotStreamTombstone(events)
-      .writeStream.format("memory").queryName("null_tomb")
-      .outputMode("update").start()
-    try {
-      // a delete marker, then a NEWER null-value version: pre-fix the
-      // encoder NPE'd on the null row; post-fix the null version wins as
-      // a LIVE row (batch `value < 10` is NULL → counted as not-delete)
-      stream.addData((1L, 100L, 7L, "click", Some(5.0)),
-        (2L, 200L, 7L, "click", None))
-      qs.processAllAvailable()
-      qt.processAllAvailable()
-      val s = spark.table("null_snap").collect()
-        .maxBy(_.getLong(5)) // n_versions picks the latest emission
-      assert(s.getLong(2) === 2L && s.isNullAt(4) && s.getLong(5) === 2L)
-      val t = spark.table("null_tomb").collect().maxBy(_.getLong(6))
-      assert(t.getLong(2) === 2L && t.isNullAt(4))
-      assert(t.getBoolean(5) === false, "null value must not tombstone")
-      assert(t.getLong(6) === 2L && t.getLong(7) === 1L)
-    } finally { qs.stop(); qt.stop() }
-  }
-
-  test("scd2Stream: validity chains converge to the batch window form; a " +
-    "LATE middle version re-emits its shortened predecessor; redelivery " +
-    "is a no-op") {
-    import spark.implicits._
-    // (event_id, epoch_us, user_id, event_type, value)
-    val stream = MemoryStream[(Long, Long, Long, String, Option[Double])](spark)
-    val events = stream.toDF()
-      .toDF("event_id", "epoch_us", "user_id", "event_type", "value")
-    val q = StreamingOps.scd2Stream(events)
-      .writeStream.format("memory").queryName("scd2_chain")
-      .outputMode("update").start()
-    // latest emission per (user, type, event_id) IS the live chain row —
-    // the Update-mode upsert contract a dimension table applies
-    def chain(): Map[Long, (Long, Option[Long], Boolean)] = {
-      val rows = spark.table("scd2_chain").collect()
-      rows.zipWithIndex.groupBy(r => r._1.getLong(2)).map { case (eid, rs) =>
-        val r = rs.maxBy(_._2)._1 // arrival order = upsert order
-        eid -> (r.getLong(3),
-          if (r.isNullAt(5)) None else Some(r.getLong(5)), r.getBoolean(6))
-      }
-    }
-    try {
-      stream.addData((1L, 100L, 7L, "click", Some(1.0)),
-        (2L, 300L, 7L, "click", Some(2.0)))
-      q.processAllAvailable()
-      assert(chain() === Map(
-        1L -> ((100L, Some(300L), false)),
-        2L -> ((300L, None, true))))
-      // LATE middle version: closes v1 early, takes v2 as its successor
-      stream.addData((3L, 200L, 7L, "click", None))
-      q.processAllAvailable()
-      assert(chain() === Map(
-        1L -> ((100L, Some(200L), false)),
-        3L -> ((200L, Some(300L), false)),
-        2L -> ((300L, None, true))))
-      // at-least-once redelivery of v3: nothing re-emitted
-      val emitted = spark.table("scd2_chain").count()
-      stream.addData((3L, 200L, 7L, "click", None))
-      q.processAllAvailable()
-      assert(spark.table("scd2_chain").count() === emitted)
-      // a genuinely newer version extends the chain
-      stream.addData((4L, 400L, 7L, "click", Some(4.0)))
-      q.processAllAvailable()
-      assert(chain()(2L) === ((300L, Some(400L), false)))
-      assert(chain()(4L) === ((400L, None, true)))
-    } finally q.stop()
-    // parity with the batch q_scd2 window over the full history
-    val all = Seq((1L, 100L, Some(1.0)), (2L, 300L, Some(2.0)),
-      (3L, 200L, Option.empty[Double]), (4L, 400L, Some(4.0)))
-      .toDF("event_id", "epoch_us", "value")
-    val w = org.apache.spark.sql.expressions.Window.orderBy("epoch_us", "event_id")
-    val batch = all.select(col("event_id"), col("epoch_us"),
-        lead(col("epoch_us"), 1).over(w).as("valid_to_us"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)),
-        r.isNullAt(2))).toMap
-    assert(chainAfterStop(spark) === batch)
-  }
-
-  private def chainAfterStop(spark: org.apache.spark.sql.SparkSession):
-      Map[Long, (Long, Option[Long], Boolean)] = {
-    val rows = spark.table("scd2_chain").collect()
-    rows.zipWithIndex.groupBy(r => r._1.getLong(2)).map { case (eid, rs) =>
-      val r = rs.maxBy(_._2)._1
-      eid -> (r.getLong(3),
-        if (r.isNullAt(5)) None else Some(r.getLong(5)), r.getBoolean(6))
-    }
-  }
-
-  test("funnelStreamN genuinely generalizes: a 4-step funnel tracks all " +
-    "four steps with the same ordering rules") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, Long, Long, String)](spark)
-    val events = stream.toDF()
-      .toDF("event_id", "epoch_us", "user_id", "event_type")
-    val q = StreamingOps.funnelStreamN(events,
-      Seq("land", "view", "cart", "buy"))
-      .writeStream.format("memory").queryName("funnel4")
-      .outputMode("update").start()
-    try {
-      stream.addData((1L, 10L, 1L, "land"), (2L, 20L, 1L, "view"),
-        (3L, 30L, 1L, "cart"))
-      q.processAllAvailable()
-      stream.addData((4L, 40L, 1L, "buy"), (5L, 15L, 2L, "view"))
-      q.processAllAvailable()
-      // the Option encoding round-trips through the sink as array<bigint>
-      // with nulls, so read back raw
-      val rows = spark.table("funnel4").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
-      assert(rows(1L) === Seq(10L, 20L, 30L, 40L))
-      // user 2's view precedes any land — rejected, never emitted
-      assert(!rows.contains(2L))
-    } finally q.stop()
-  }
-
-  test("streaming funnel: ordered-arrival batch parity, late improvements, " +
-    "documented rejected-candidate divergence") {
-    import spark.implicits._
-    // (event_id, epoch_us, user_id, event_type)
-    val stream = MemoryStream[(Long, Long, Long, String)](spark)
-    val events = stream.toDF()
-      .toDF("event_id", "epoch_us", "user_id", "event_type")
-    val q = StreamingOps.funnelStream(events)
-      .writeStream.format("memory").queryName("funnel_state")
-      .outputMode("update").start()
-    def prog(): Map[Long, (Option[Long], Option[Long], Option[Long])] = {
-      val rows = spark.table("funnel_state").collect()
-      // update-mode memory sink appends re-emissions; times only ever
-      // improve (decrease), so a user's live row minimizes each column
-      rows.groupBy(_.getLong(0)).map { case (u, rs) =>
-        def m(i: Int): Option[Long] = {
-          val vs = rs.flatMap(r => if (r.isNullAt(i)) None else Some(r.getLong(i)))
-          if (vs.isEmpty) None else Some(vs.min)
-        }
-        u -> (m(1), m(2), m(3))
-      }
-    }
-    try {
-      // user 1 completes in event-time order across two batches; user 2's
-      // click arrives before any view (rejected, not buffered)
-      stream.addData((1L, 10L, 1L, "view"), (2L, 20L, 1L, "click"),
-        (3L, 7L, 2L, "click"), (4L, 10L, 2L, "view"))
-      q.processAllAvailable()
-      assert(prog() === Map(
-        1L -> (Some(10L), Some(20L), None),
-        2L -> (Some(10L), None, None)))
-      // in-order continuation: purchase completes user 1's funnel
-      stream.addData((5L, 30L, 1L, "purchase"))
-      q.processAllAvailable()
-      assert(prog()(1L) === ((Some(10L), Some(20L), Some(30L))))
-      // LATE improvements for user 1: earlier view and an earlier click
-      // that is still after the improved view — both take effect, and the
-      // strictly-increasing chain survives
-      stream.addData((6L, 5L, 1L, "view"), (7L, 8L, 1L, "click"))
-      q.processAllAvailable()
-      assert(prog()(1L) === ((Some(5L), Some(8L), Some(30L))))
-      // divergence contract: user 2's late view@5 improves t1, but the
-      // click@7 rejected in batch 1 was not buffered — streaming stays
-      // stalled at step 2 where the batch operator would emit t2=7
-      stream.addData((8L, 5L, 2L, "view"))
-      q.processAllAvailable()
-      assert(prog()(2L) === ((Some(5L), None, None)))
-      val batchAnswer = graft.ops.Windows.funnel(
-        Seq((2L, "click", 7L), (2L, "view", 10L), (2L, "view", 5L))
-          .toDF("user_id", "event_type", "epoch_us"))
-        .collect().map(r => (Option(r.get(1)), Option(r.get(2)))).head
-      assert(batchAnswer === ((Some(5L), Some(7L))))
-    } finally q.stop()
-  }
-
-  test("guardStateSchema: same-schema restarts pass, a changed state shape " +
-    "refuses with the named remedy (round-12 ADVICE regression)") {
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-guard").toString
-    val scd2 = StreamingOps.stateSchemas("scd2")
-    StreamingOps.guardStateSchema(spark, ckpt, "scd2", scd2) // first stamp
-    StreamingOps.guardStateSchema(spark, ckpt, "scd2", scd2) // restart, same
-    // a build whose Scd2State changed shape must be refused up front
-    val changed = StreamingOps.stateSchemas("funnel")
-    val e = intercept[IllegalStateException] {
-      StreamingOps.guardStateSchema(spark, ckpt, "scd2", changed)
-    }
-    assert(e.getMessage.contains("DIFFERENT 'scd2' state schema"))
-    assert(e.getMessage.contains("fresh checkpoint directory"))
-    // ops are stamped independently: the same dir's funnel stamp is fresh
-    StreamingOps.guardStateSchema(spark, ckpt, "funnel", changed)
-    // and the schema map covers every built-in stateful op
-    assert(StreamingOps.stateSchemas.keySet ===
-      Set("scd2", "funnel", "latest", "tombstone"))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class WarcSpec extends SparkSpec {
 
   private def rec(typ: String, id: String, uri: String, body: String,
-                  extra: String = ""): String = {
+                  extra: String): String = {
     val b = body.getBytes("UTF-8")
     s"WARC/1.0\r\nWARC-Type: $typ\r\nWARC-Record-ID: <$id>\r\n" +
       (if (uri != null) s"WARC-Target-URI: $uri\r\n" else "") +
