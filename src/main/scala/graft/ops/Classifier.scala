@@ -63,9 +63,11 @@ object Classifier {
     * cost. `feats` may cover a superset of the labeled docs (the join
     * restricts it; dsirFeatures' per-doc agg commutes with the per-doc
     * label join, so the restricted frame is row-identical to computing
-    * features on the labeled slice directly). `nonEmpty` supplies the
-    * class priors and must already carry trainLinear's empty-text
-    * filter. */
+    * features on the labeled slice directly). That holds only with ONE
+    * label row per `doc_id`: trainLinear features the labeled rows, so a
+    * doc labeled twice has its counts doubled there but not here.
+    * `nonEmpty` supplies the class priors and must already carry
+    * trainLinear's empty-text filter. */
   private[graft] def trainLinearFrom(feats: DataFrame,
                                      nonEmpty: DataFrame): DataFrame = {
     val spark = nonEmpty.sparkSession
@@ -207,7 +209,9 @@ object Classifier {
     * labels as METADATA (the synthetic `documents.lang` column; in a real
     * crawl, a labeled subset), distill the text→language classifier from
     * those. The rule-LID default above is the zero-label bootstrap; this
-    * is what a pipeline with any labeled data uses instead. */
+    * is what a pipeline with any labeled data uses instead. `teacher`
+    * must carry one label row per `doc_id`: the model is then the one
+    * [[trainLinear]] fits on the labeled docs (see [[trainLinearFrom]]). */
   def lidClassifierWith(docs: DataFrame, teacher: DataFrame): DataFrame = {
     // ONE feature pass (round 21): train and classify both read this
     // checkpointed frame — previously each ran its own corpus-wide

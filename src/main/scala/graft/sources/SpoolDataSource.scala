@@ -1,11 +1,13 @@
 package graft.sources
 
+import java.nio.file.{Files, attribute}
 import java.util
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -106,26 +108,52 @@ object SpoolDataSource {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
+  /** The FileSystem every graft-spool read, write, commit and listing
+    * goes through. For a path on the stock local FileSystem it is a fresh
+    * `LocalFileSystem` over [[SpoolRawLocalFileSystem]]: the same
+    * checksummed local FS (`.crc` sidecars, umask-derived permission
+    * bits), except that a permission change is the chmod system call
+    * rather than a forked `chmod` process. Without libhadoop, Hadoop's
+    * local FS forks one for every file it creates: twice per spool file,
+    * the data file and its `.crc`. Any other scheme or FileSystem class
+    * is returned as `path.getFileSystem(conf)`. The instance is not
+    * cached: callers build it once per writer task, commit, listing,
+    * stream or reader. */
+  private[sources] def fileSystem(path: Path, conf: Configuration): FileSystem = {
+    val fs = path.getFileSystem(conf)
+    if (!StockLocal.contains(fs.getClass.getName)) fs
+    else {
+      // FileSystem.get's own construction: setConf, then initialize
+      val local = new LocalFileSystem(new SpoolRawLocalFileSystem)
+      local.setConf(conf)
+      local.initialize(fs.getUri, conf)
+      local
+    }
+  }
+
+  /** The classes `file:` resolves to out of the box. On Spark's
+    * Hive-enabled classpath hive-exec registers its ProxyLocalFileSystem
+    * for the scheme: a LocalFileSystem whose only change is a rename that
+    * will not replace an existing file, and [[SpoolCommit]] already
+    * refuses a rename onto an existing name. */
+  private val StockLocal = Set(classOf[LocalFileSystem].getName,
+    "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem")
+
   /** Sorted (name, fullPath) listing of the spool; missing dir = empty
     * (the topic simply has not produced yet — matches broker semantics). */
-  private[sources] def listFiles(dir: String, conf: Configuration): Seq[(String, String)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
+  private[sources] def listFiles(fs: FileSystem, p: Path): Seq[(String, String)] =
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
         !s.getPath.getName.startsWith("_"))
       .map(s => (s.getPath.getName, s.getPath.toString))
       .sortBy(_._1)
-  }
 
   /** `topics` mode listing: every topic sub-directory of the bus root,
     * flattened to (decoded topic, filePath). Directory count is
     * topology-scale (one per topic/tenant); file listing parallelism is
     * not needed at that cardinality. */
-  private[sources] def listTopicFiles(root: String, conf: Configuration): Seq[(String, String)] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(conf)
+  private[sources] def listTopicFiles(fs: FileSystem, p: Path): Seq[(String, String)] =
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.filter(_.isDirectory)
       // same hidden-name contract as the file listing: checkpoint /
@@ -139,7 +167,7 @@ object SpoolDataSource {
         // to every read of the whole bus
         try {
           val topic = topicFromDir(d.getPath.getName)
-          listFiles(d.getPath.toString, conf).map { case (_, fp) => (topic, fp) }
+          listFiles(fs, d.getPath).map { case (_, fp) => (topic, fp) }
         } catch {
           case _: NumberFormatException | _: StringIndexOutOfBoundsException =>
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -148,6 +176,24 @@ object SpoolDataSource {
             Seq.empty
         }
       }
+}
+
+/** `RawLocalFileSystem` whose `setPermission` makes the chmod system call
+  * through `Files.setPosixFilePermissions` — what Hadoop itself does when
+  * libhadoop's NativeIO is loaded — instead of running `chmod` as a child
+  * process. The bits set, the symlink following and the error on a
+  * missing file are the same; a sticky bit (which `PosixFilePermission`
+  * cannot express) or a file store without POSIX attributes falls back to
+  * Hadoop's own path. Built only by [[SpoolDataSource.fileSystem]]. */
+private[sources] class SpoolRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val file = pathToFile(p).toPath
+    if (permission.getStickyBit ||
+      Files.getFileAttributeView(file, classOf[attribute.PosixFileAttributeView]) == null)
+      super.setPermission(p, permission)
+    else // without a sticky bit, toString is the nine-letter "rwxr-x---" form
+      Files.setPosixFilePermissions(file,
+        attribute.PosixFilePermissions.fromString(permission.toString))
   }
 }
 
@@ -186,13 +232,16 @@ class SpoolTable(path: String, topics: Boolean = false,
   private val conf = new SerializableConfiguration(SpoolDataSource.hadoopConf())
   // batch consistency: freeze the listing at first batch use, NOT per
   // action — df.count() then df.collect() must see the same files
-  private lazy val batchSnapshot: Seq[SpoolFilePartition] =
+  private lazy val batchSnapshot: Seq[SpoolFilePartition] = {
+    val p = new Path(path)
+    val fs = SpoolDataSource.fileSystem(p, conf.value)
     if (topics)
-      SpoolDataSource.listTopicFiles(path, conf.value)
+      SpoolDataSource.listTopicFiles(fs, p)
         .map { case (t, fp) => SpoolFilePartition(fp, t) }
     else
-      SpoolDataSource.listFiles(path, conf.value)
+      SpoolDataSource.listFiles(fs, p)
         .map { case (_, fp) => SpoolFilePartition(fp, null) }
+  }
 
   override def name(): String = s"${SpoolDataSource.NAME}($path)"
   override def schema(): StructType =
@@ -324,6 +373,9 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration,
   // committed offsets from its own checkpoint on restart, so this guard
   // only needs to span one stream instance's lifetime.)
   @transient private var highWater: String = ""
+  // driver-side and stateless: one FileSystem for every trigger's listing
+  @transient private lazy val dir = new Path(path)
+  @transient private lazy val fs = SpoolDataSource.fileSystem(dir, conf.value)
 
   override def initialOffset(): Offset = SpoolOffset("")
   override def deserializeOffset(json: String): Offset = {
@@ -334,7 +386,7 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration,
     o
   }
   override def latestOffset(): Offset = {
-    val files = SpoolDataSource.listFiles(path, conf.value)
+    val files = SpoolDataSource.listFiles(fs, dir)
     val seen = if (files.isEmpty) "" else files.last._1
     if (seen > highWater) highWater = seen
     SpoolOffset(highWater)
@@ -342,7 +394,7 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[SpoolOffset].watermark
     val hi = end.asInstanceOf[SpoolOffset].watermark
-    val files = SpoolDataSource.listFiles(path, conf.value)
+    val files = SpoolDataSource.listFiles(fs, dir)
     noteDropped(files, lo)
     val batch = files.filter { case (name, _) => name > lo && name <= hi }
     accounted ++= batch.map(_._1)
@@ -373,19 +425,24 @@ case class SpoolCommitMessage(entries: Seq[SpoolWriteEntry]) extends WriterCommi
   * lexicographically-increasing-name contract the streaming watermark
   * needs, so a micro-batch consumer tails a spool that a batch job is
   * publishing into. A failed task's temp files are deleted by abort; a
-  * crashed executor's stragglers stay hidden behind the dot prefix. */
+  * crashed executor's stragglers stay hidden behind the dot prefix.
+  *
+  * What one file costs: the task's create of the temp file and its
+  * `.crc` sidecar (plus a `mkdirs` of a new topic directory), then one
+  * rename here, which moves the sidecar with it. No step starts a
+  * process: every FileSystem comes from [[SpoolDataSource.fileSystem]],
+  * built once per commit or abort. */
 private object SpoolCommit {
   /** Driver-side commit: per directory, rename the batch's temp files to
     * the next zero-padded sequence names after the highest already
     * committed. Shared by the batch and streaming forms — an epoch commit
     * IS a batch commit over that epoch's temp files. */
-  def commit(messages: Array[WriterCommitMessage],
+  def commit(root: String, messages: Array[WriterCommitMessage],
              conf: SerializableConfiguration): Unit = {
     val entries = messages.collect { case SpoolCommitMessage(es) => es }.flatten
+    val fs = SpoolDataSource.fileSystem(new Path(root), conf.value)
     entries.groupBy(_.dir).foreach { case (dir, es) =>
-      val p = new Path(dir)
-      val fs = p.getFileSystem(conf.value)
-      val existing = SpoolDataSource.listFiles(dir, conf.value)
+      val existing = SpoolDataSource.listFiles(fs, new Path(dir))
         .map(_._1).filter(_.startsWith("part-"))
       var seq = existing
         .map(n => n.stripPrefix("part-").takeWhile(_.isDigit))
@@ -415,13 +472,15 @@ private object SpoolCommit {
     }
   }
 
-  def abort(messages: Array[WriterCommitMessage],
-            conf: SerializableConfiguration): Unit =
-    messages.collect { case SpoolCommitMessage(es) => es }.flatten.foreach { e =>
+  def abort(root: String, messages: Array[WriterCommitMessage],
+            conf: SerializableConfiguration): Unit = {
+    val entries = messages.collect { case SpoolCommitMessage(es) => es }.flatten
+    val fs = SpoolDataSource.fileSystem(new Path(root), conf.value)
+    entries.foreach { e =>
       val p = new Path(e.dir, e.tmpName)
-      val fs = p.getFileSystem(conf.value)
       if (fs.exists(p)) fs.delete(p, false)
     }
+  }
 }
 
 class SpoolBatchWrite(root: String, valueIdx: Int, topicIdx: Int,
@@ -429,9 +488,9 @@ class SpoolBatchWrite(root: String, valueIdx: Int, topicIdx: Int,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new SpoolWriterFactory(root, valueIdx, topicIdx, conf)
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    SpoolCommit.commit(messages, conf)
+    SpoolCommit.commit(root, messages, conf)
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    SpoolCommit.abort(messages, conf)
+    SpoolCommit.abort(root, messages, conf)
 }
 
 /** Streaming publish: one [[SpoolCommit]] per epoch. Delivery is
@@ -447,9 +506,9 @@ class SpoolStreamingWrite(root: String, valueIdx: Int, topicIdx: Int,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new SpoolStreamingWriterFactory(root, valueIdx, topicIdx, conf)
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    SpoolCommit.commit(messages, conf)
+    SpoolCommit.commit(root, messages, conf)
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    SpoolCommit.abort(messages, conf)
+    SpoolCommit.abort(root, messages, conf)
 }
 
 /** Top-level (NOT an inner class): the factory ships to executors, and an
@@ -470,6 +529,10 @@ class SpoolWriterFactory(root: String, valueIdx: Int, topicIdx: Int,
     new SpoolDataWriter(root, valueIdx, topicIdx, partitionId, taskId, conf)
 }
 
+/** One task's writer: one temp file per topic it sees. A file costs one
+  * create of the data file and one of its `.crc` sidecar, and no process
+  * (see [[SpoolCommit]]); the task's one FileSystem comes from
+  * [[SpoolDataSource.fileSystem]] on first use. */
 class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
                       partitionId: Int, taskId: Long,
                       conf: SerializableConfiguration,
@@ -480,13 +543,13 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
   private val open = scala.collection.mutable.LinkedHashMap[
     String, (SpoolWriteEntry, java.io.BufferedWriter)]()
   private var n = 0
+  private lazy val fs = SpoolDataSource.fileSystem(new Path(root), conf.value)
 
   private def writerFor(dir: String): java.io.BufferedWriter =
     open.getOrElseUpdate(dir, {
       val epochTag = if (epochId < 0) "" else s"e$epochId-"
       val name = f".tmp-$epochTag$partitionId%05d-$taskId-${open.size}%03d"
       val p = new Path(dir, name)
-      val fs = p.getFileSystem(conf.value)
       fs.mkdirs(new Path(dir))
       (SpoolWriteEntry(dir, name, partitionId), new java.io.BufferedWriter(
         new java.io.OutputStreamWriter(fs.create(p, false),
@@ -523,7 +586,6 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
     open.values.foreach { case (e, w) =>
       try w.close() catch { case _: Exception => () }
       val p = new Path(e.dir, e.tmpName)
-      val fs = p.getFileSystem(conf.value)
       if (fs.exists(p)) fs.delete(p, false)
     }
   }
@@ -541,7 +603,7 @@ class WarcReaderFactory(conf: SerializableConfiguration)
     new PartitionReader[InternalRow] {
       private val p = new Path(part.filePath)
       private val fileName = UTF8String.fromString(p.getName)
-      private val in = p.getFileSystem(conf.value).open(p)
+      private val in = SpoolDataSource.fileSystem(p, conf.value).open(p)
       private val records = Warc.parseStream(in).zipWithIndex
       private var current: InternalRow = _
       private def utf8(s: String): AnyRef =
@@ -572,7 +634,7 @@ class SpoolReaderFactory(conf: SerializableConfiguration)
       // hadoop FS (not java.io) with the SESSION conf, so hdfs:/s3a: spools
       // read identically on a cluster (credentials, nameservices included)
       private val p = new Path(part.filePath)
-      private val in = p.getFileSystem(conf.value).open(p)
+      private val in = SpoolDataSource.fileSystem(p, conf.value).open(p)
       private val lines = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
       private val topicUtf8 =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Classifier
+import graft.ops.{Classifier, Sampling}
 import org.apache.spark.sql.functions._
 
 /** Hashed-ngram linear classifier (round 13): training shape, generic
@@ -26,6 +26,25 @@ class ClassifierSpec extends SparkSpec {
     assert(model.filter(col("bucket") === -1L).count() === 2)
     // weights are fixed-point longs, never null (full spine contract)
     assert(model.filter(col("w").isNull).count() === 0)
+  }
+
+  test("trainLinearFrom over a superset feature frame == trainLinear on the " +
+    "labeled slice, with one label row per doc") {
+    import spark.implicits._
+    // a blank labeled doc exercises the empty-text filter; the unlabeled
+    // docs are in the feature frame only
+    val lab = labeled().union(Seq((50L, "   ", "en")).toDF("doc_id", "text", "label"))
+    val unlabeled = (200L until 220L).map(i => (i, s"gnart quick drong lazy $i"))
+      .toDF("doc_id", "text")
+    val superset = Sampling.dsirFeatures(
+      lab.select("doc_id", "text").union(unlabeled))
+    val nonEmpty = lab.filter(length(trim(col("text"))) > 0)
+    def rows(m: org.apache.spark.sql.DataFrame) =
+      m.select("label", "bucket", "w").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val want = rows(Classifier.trainLinear(lab))
+    assert(want.length === 2 * 1025)
+    assert(rows(Classifier.trainLinearFrom(superset, nonEmpty)) === want)
   }
 
   test("classify separates disjoint vocabularies and matches the " +

@@ -5,6 +5,8 @@ import graft.route.Filterer
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** End-to-end topology wiring over the SourceDef spool layout: E1/E2
   * (vehicle sources → CMF → Filterer) and E3 (legacy → splitter), batch and
   * streaming resolution of the same sources. */
@@ -250,8 +252,6 @@ class PipelineSpec extends SparkSpec {
 
   test("graft-spool sink: rejects values the line framing cannot carry") {
     import spark.implicits._
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
     // \n splits a message; a bare \r does too (readLine terminates on
     // both), and a trailing \r would be silently dropped — all rejected
     for (bad <- Seq("line1\nline2", "line1\rline2", "trailing\r")) {
@@ -264,6 +264,66 @@ class PipelineSpec extends SparkSpec {
       assert(causes(e).exists(c =>
         c.getMessage != null && c.getMessage.contains("line terminator")),
         s"value ${bad.replace("\n", "\\n").replace("\r", "\\r")} not rejected")
+    }
+  }
+
+  test("graft-spool sink: a 64-topic write starts no process on the bus") {
+    val root = java.nio.file.Files.createTempDirectory("spool_procs").toFile
+      .getCanonicalPath
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try publishTopics(root, 64)
+    finally rec.stop()
+    val dump = java.nio.file.Files.createTempFile("spool_procs", ".jfr")
+    try rec.dump(dump) finally rec.close()
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+      .map(_.getString("command"))
+    val onBus = commands.filter(_.contains(root))
+    assert(onBus.size == 0, s"launches on the bus, e.g. ${onBus.take(3)}")
+    assert(spark.read.format("graft-spool").option("topics", "true").load(root)
+      .count() === 64 * 5)
+  }
+
+  test("graft-spool sink: every part file keeps its .crc sidecar, and a " +
+    "flipped byte fails the read with a checksum error") {
+    val root = java.nio.file.Files.createTempDirectory("spool_crc").toFile
+    publishTopics(root.toString, 64)
+    val parts = topicDirs(root).flatMap(_.listFiles())
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.length === 64 * 4)
+    parts.foreach(p => assert(new java.io.File(p.getParent, s".${p.getName}.crc").isFile,
+      s"no .crc sidecar for $p"))
+    val victim = parts.head.toPath
+    val bytes = java.nio.file.Files.readAllBytes(victim)
+    bytes(0) = (bytes(0) ^ 1).toByte
+    java.nio.file.Files.write(victim, bytes)
+    val e = intercept[Exception] {
+      spark.read.format("graft-spool").load(parts.head.getParent).collect()
+    }
+    assert(causes(e).exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
+  }
+
+  test("graft-spool sink: part files and topic directories carry the bits " +
+    "Hadoop's local FileSystem gives a file and a directory it creates") {
+    import java.nio.file.Files.getPosixFilePermissions
+    val tmp = java.nio.file.Files.createTempDirectory("spool_perms").toFile
+    val root = new java.io.File(tmp, "bus")
+    publishTopics(root.toString, 64)
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val refDir = new org.apache.hadoop.fs.Path(tmp.toString, "ref-dir")
+    val refFile = new org.apache.hadoop.fs.Path(tmp.toString, "ref-file")
+    local.mkdirs(refDir)
+    local.create(refFile, false).close()
+    val dirBits = getPosixFilePermissions(new java.io.File(tmp, "ref-dir").toPath)
+    val fileBits = getPosixFilePermissions(new java.io.File(tmp, "ref-file").toPath)
+    val crcBits = getPosixFilePermissions(new java.io.File(tmp, ".ref-file.crc").toPath)
+    val dirs = topicDirs(root)
+    assert(dirs.length === 64)
+    dirs.foreach(d => assert(getPosixFilePermissions(d.toPath) === dirBits, d))
+    dirs.flatMap(_.listFiles()).foreach { f =>
+      val want = if (f.getName.endsWith(".crc")) crcBits else fileBits
+      assert(getPosixFilePermissions(f.toPath) === want, f)
     }
   }
 
@@ -338,6 +398,25 @@ class PipelineSpec extends SparkSpec {
 }
 
 object PipelineSpec {
+  def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  /** Publishes five messages to each of `topics` tenant topics under the
+    * bus `root` in four partitions, so each topic gets four part files. */
+  def publishTopics(root: String, topics: Int): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    import spark.implicits._
+    // parallelize slices in order: each quarter of the rows spans every topic
+    spark.sparkContext.parallelize((0 until topics * 5)
+      .map(i => (s"persistent://t-${i % topics}/integration/telemetry", s"m$i")), 4)
+      .toDF("topic", "value")
+      .write.format("graft-spool").mode("append")
+      .option("topics", "true").option("path", root).save()
+  }
+
+  def topicDirs(root: java.io.File): Array[java.io.File] =
+    root.listFiles().filter(d => d.isDirectory && !d.getName.startsWith("."))
+
   def writeSpool(baseDir: String, topic: String, lines: Seq[String]): Unit = {
     val dir = java.nio.file.Paths.get(baseDir, topic)
     java.nio.file.Files.createDirectories(dir)
