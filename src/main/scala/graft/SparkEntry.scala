@@ -1879,7 +1879,7 @@ object SparkEntry {
 
   // WARC crawl ingestion (round 13): synthetic ISO-28500 files over the
   // url × html fixtures, split + parsed by the real Content-Length-framed
-  // record reader (graft.sources.Warc / the graft-spool format=warc seam).
+  // record reader (graft.sources.Warc.readRecords).
   // Both archive forms are INPUT DATA (a crawl reads files that already
   // exist), so they persist through RawGen.derived — benchmarks time the
   // PARSE, not the per-run fixture synthesis (round-14 VERDICT: the

@@ -1,9 +1,10 @@
 package graft.gen
 
 /** Dump `.explain("formatted")` for registered queries to files — the
-  * optimization rounds' plan-evidence artifact (plans/rNN/<query>_<tag>.txt).
+  * optimization rounds' plan-evidence artifact (<dir>/<query>_<tag>.txt;
+  * the default dir, target/plans, is a build directory git ignores).
   * Usage:
-  *   SPARK_GRAFT_ONLY=a,b SPARK_GRAFT_PLAN_DIR=plans/r20 \
+  *   SPARK_GRAFT_ONLY=a,b SPARK_GRAFT_PLAN_DIR=target/plans \
   *     SPARK_GRAFT_PLAN_TAG=before sbt "runMain graft.gen.Plans"
   * Runs in the shared [[graft.Harness]] session (local[$SPARK_GRAFT_CPUS],
   * shuffle.partitions=cpus), as Bench does, so the captured plan is the
@@ -12,7 +13,7 @@ package graft.gen
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r20")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val queries = graft.Harness.selected()

@@ -154,7 +154,7 @@ object RawGen {
   /** Geotab raw corpus. event_id%10==0 → malformed JSON (truncated);
     * event_id%10==5 → schema-valid JSON missing required `Vehicle_ID`
     * (the two poison classes of GeotabTranslator.kt:154–157). */
-  def geotabRaw(ev: DataFrame): DataFrame = {
+  private def geotabRaw(ev: DataFrame): DataFrame = {
     val full = to_json(struct(
       concat(lit("geo-"), s(col("event_id"))).as("Device_ID"),
       concat(lit("veh-"), s(col("user_id"))).as("Vehicle_ID"),
@@ -186,7 +186,7 @@ object RawGen {
   }
 
   /** CalAmp raw corpus (msg_ts = epoch SECONDS — CalAmpTranslator.kt:100). */
-  def calAmpRaw(ev: DataFrame): DataFrame = {
+  private def calAmpRaw(ev: DataFrame): DataFrame = {
     val full = to_json(struct(
       concat(lit("cal-"), s(col("event_id"))).as("unit_id"),
       concat(lit("cv-"), s(col("user_id"))).as("vid"),
@@ -211,7 +211,7 @@ object RawGen {
 
   /** Ford raw corpus: nested coords, epoch-ms capture time (so the canonical
     * ISO output exercises the fractional-seconds path), open fordExtraData. */
-  def fordRaw(ev: DataFrame): DataFrame = {
+  private def fordRaw(ev: DataFrame): DataFrame = {
     val coords = struct(
       (col("user_id") % 170 - 85 + lit(0.5)).as("latValue"),
       (col("event_id") % 350 - 175 + lit(0.25)).as("lonValue"),
@@ -248,7 +248,7 @@ object RawGen {
     * empty / blank tenantId, malformed JSON) plus the routable case. Built
     * with string concatenation — NOT to_json — so byte-preservation can be
     * asserted via exact lengths in the oracle. */
-  def cmfRoutingRaw(ev: DataFrame): DataFrame = {
+  private def cmfRoutingRaw(ev: DataFrame): DataFrame = {
     val veh = concat(lit("veh-"), s(col("user_id")))
     val ms = s(col("epoch_ms"))
     val tenant = concat(lit("tenant-"), s(col("user_id") % 4))

@@ -23,27 +23,27 @@ import org.apache.spark.sql.types._
   */
 object Cmf {
 
-  val locationType: StructType = StructType(Seq(
+  private val locationType: StructType = StructType(Seq(
     StructField("timestamp", StringType),
     StructField("lon", DoubleType),
     StructField("lat", DoubleType)
   ))
 
-  val tirePressureType: StructType = StructType(Seq(
+  private val tirePressureType: StructType = StructType(Seq(
     StructField("pressures", MapType(StringType, DoubleType))
   ))
 
-  val windowStatusType: StructType = StructType(Seq(
+  private val windowStatusType: StructType = StructType(Seq(
     StructField("statuses", MapType(StringType, StringType))
   ))
 
-  val brakePadLifeType: StructType = StructType(Seq(
+  private val brakePadLifeType: StructType = StructType(Seq(
     StructField("frontPct", DoubleType),
     StructField("rearPct", DoubleType)
   ))
 
   /** CommonTelemetry fields in declaration order (CommonMessageFormat.kt:282–419). */
-  val telemetryFields: Seq[StructField] = Seq(
+  private val telemetryFields: Seq[StructField] = Seq(
     StructField("location", locationType),
     StructField("ignitionStatus", StringType),
     StructField("speedCanMph", DoubleType),
@@ -114,16 +114,14 @@ object Cmf {
     StructField("fuelAmountAdjusted", DoubleType)
   )
 
-  val telemetryType: StructType = StructType(telemetryFields)
-
-  val dtcEventType: StructType = StructType(Seq(
+  private val dtcEventType: StructType = StructType(Seq(
     StructField("code", StringType),
     StructField("description", StringType),
     StructField("timestamp", StringType),
     StructField("isActive", BooleanType)
   ))
 
-  val serviceWarningEventType: StructType = StructType(Seq(
+  private val serviceWarningEventType: StructType = StructType(Seq(
     StructField("warningType", StringType),
     StructField("message", StringType),
     StructField("timestamp", StringType),
@@ -131,26 +129,26 @@ object Cmf {
   ))
 
   /** Hard accel / hard braking / harsh cornering (CommonMessageFormat.kt CommonHAHBHC). */
-  val hahbhcType: StructType = StructType(Seq(
+  private val hahbhcType: StructType = StructType(Seq(
     StructField("type", StringType),
     StructField("magnitude", DoubleType),
     StructField("timestamp", StringType),
     StructField("durationMs", LongType)
   ))
 
-  val predeliveryEventType: StructType = StructType(Seq(
+  private val predeliveryEventType: StructType = StructType(Seq(
     StructField("eventName", StringType),
     StructField("timestamp", StringType),
     StructField("details", StringType) // Map<String,Any> → raw JSON
   ))
 
-  val deviceEventType: StructType = StructType(Seq(
+  private val deviceEventType: StructType = StructType(Seq(
     StructField("eventType", StringType),
     StructField("timestamp", StringType),
     StructField("details", StringType) // Map<String,Any> → raw JSON
   ))
 
-  val eventsType: StructType = StructType(Seq(
+  private val eventsType: StructType = StructType(Seq(
     StructField("dtcEvents", ArrayType(dtcEventType)),
     StructField("serviceWarningsEvents", ArrayType(serviceWarningEventType)),
     StructField("hardBraking", ArrayType(hahbhcType)),
@@ -163,30 +161,6 @@ object Cmf {
   val metaType: StructType = StructType(Seq(
     StructField("additionalProperties", MapType(StringType, StringType))
   ))
-
-  /** Full envelope (CommonMessageFormat.kt:467–479). `sourceSpecificData`
-    * is the generic `T` payload → raw JSON text. */
-  val envelopeType: StructType = StructType(Seq(
-    StructField("dateTime", StringType),
-    StructField("epochSource", LongType),
-    StructField("vehicleId", StringType),
-    StructField("deviceId", StringType),
-    StructField("tenantId", StringType),
-    StructField("sourceType", StringType),
-    StructField("partitionKey", StringType),
-    StructField("telemetry", telemetryType),
-    StructField("events", eventsType),
-    StructField("sourceSpecificData", StringType),
-    StructField("meta", metaType)
-  ))
-
-  /** The 20 SourceType enum names (CommonMessageFormat.kt SourceType).
-    * Written exactly (Jackson writes the enum name, e.g. "Geotab" —
-    * GeotabTranslatorTest.kt:58); read case-insensitively. */
-  val sourceTypes: Seq[String] = Seq(
-    "Geotab", "CalAmp", "Gm", "Toyota", "Ford", "DaimlerPro", "FleetComplete",
-    "Volkswagen", "Tesla", "Bmw", "Azuga", "Mb", "PlatformScience", "Samsara",
-    "Stellantis", "Rivian", "Isaac", "Motive", "Hyundai", "OmnitracsOT1")
 
   /** Build a full CommonTelemetry struct column: every field present (in
     * declaration order), overridden fields bound, the rest typed nulls.

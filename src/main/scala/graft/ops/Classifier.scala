@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
 object Classifier {
 
   /** Fixed-point scale for weights/scores (micro-nats). */
-  val Scale = 1000000L
+  private val Scale = 1000000L
   /** Feature-bucket count — MUST match [[Sampling.dsirFeatures]]' space
     * (the oracle replays that spelling). */
   private val B = 1024
@@ -179,39 +179,20 @@ object Classifier {
         col("score"))
   }
 
-  /** The self-distilled quality classifier — the FineWeb-Edu recipe shape
-    * with a rule gate as the (free, deterministic) teacher: label every
-    * doc keep/drop by [[TextAnalysis.qualityFilter]] (the corpus-tuned
-    * gate — the paper-threshold [[Gopher.qualityGate]] drops ~100% of the
-    * short synthetic docs, which would leave the student a single-class
-    * no-op), train the hashed-ngram linear model on those labels, and
-    * score the corpus with it. Output: per-doc fixed-point scores for
-    * both classes, the argmax verdict, the teacher's verdict, and
-    * agreement — the evaluation frame a curation team reads before
-    * swapping the cheap student in for the expensive teacher. The model
-    * is checkpointed once and shared between branches (released before
-    * return — the dsirWeights pattern). */
-  /** Multi-class language-ID head (round-13 directive): the same
-    * distillation recipe as [[qualityClassifier]] with the rule-based
-    * stopword LID ([[TextAnalysis.langId]]) as the teacher — 4 classes
-    * (en/fr/de/es), exercising [[classify]]'s generic encoded argmax
-    * beyond the binary case (4 ≪ the encoding's 64-class ceiling; a
-    * wider head shards the label space per the classify() contract).
-    * Output is the per-doc evaluation frame: the student's verdict and
-    * fixed-point score, the teacher's language, and agreement — the
-    * per-class agreement matrix is one groupBy away. */
-  def lidClassifier(docs: DataFrame): DataFrame =
-    lidClassifierWith(docs, TextAnalysis.langId(docs)
-      .select(col("doc_id"), col("lang_guess").as("label")))
-
-  /** [[lidClassifier]] with a caller-supplied `(doc_id, label)` teacher —
-    * the supervised-fastText setting: when the corpus carries language
-    * labels as METADATA (the synthetic `documents.lang` column; in a real
-    * crawl, a labeled subset), distill the text→language classifier from
-    * those. The rule-LID default above is the zero-label bootstrap; this
-    * is what a pipeline with any labeled data uses instead. `teacher`
-    * must carry one label row per `doc_id`: the model is then the one
-    * [[trainLinear]] fits on the labeled docs (see [[trainLinearFrom]]). */
+  /** Multi-class language-ID head: the same distillation recipe as
+    * [[qualityClassifier]] with a caller-supplied `(doc_id, label)`
+    * teacher — the supervised-fastText setting: when the corpus carries
+    * language labels as METADATA (the synthetic `documents.lang` column;
+    * in a real crawl, a labeled subset), distill the text→language
+    * classifier from those. Exercises [[classify]]'s generic encoded
+    * argmax beyond the binary case (a handful of classes ≪ the encoding's
+    * 64-class ceiling; a wider head shards the label space per the
+    * classify() contract). `teacher` must carry one label row per
+    * `doc_id`: the model is then the one [[trainLinear]] fits on the
+    * labeled docs (see [[trainLinearFrom]]). Output is the per-doc
+    * evaluation frame: the student's verdict and fixed-point score, the
+    * teacher's language, and agreement — the per-class agreement matrix
+    * is one groupBy away. */
   def lidClassifierWith(docs: DataFrame, teacher: DataFrame): DataFrame = {
     // ONE feature pass (round 21): train and classify both read this
     // checkpointed frame — previously each ran its own corpus-wide
@@ -231,6 +212,18 @@ object Classifier {
     mat
   }
 
+  /** The self-distilled quality classifier — the FineWeb-Edu recipe shape
+    * with a rule gate as the (free, deterministic) teacher: label every
+    * doc keep/drop by [[TextAnalysis.qualityFilter]] (the corpus-tuned
+    * gate — the paper-threshold [[Gopher.qualityGate]] drops ~100% of the
+    * short synthetic docs, which would leave the student a single-class
+    * no-op), train the hashed-ngram linear model on those labels, and
+    * score the corpus with it. Output: per-doc fixed-point scores for
+    * both classes, the argmax verdict, the teacher's verdict, and
+    * agreement — the evaluation frame a curation team reads before
+    * swapping the cheap student in for the expensive teacher. The model
+    * is checkpointed once and shared between branches (released before
+    * return — the dsirWeights pattern). */
   def qualityClassifier(docs: DataFrame): DataFrame = {
     val teacher = TextAnalysis.qualityFilter(docs)
       .select(col("doc_id"),

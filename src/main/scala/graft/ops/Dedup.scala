@@ -350,7 +350,7 @@ object Dedup {
 
   /** doc → (doc_id, sh, mh1..mhH, band_1..band_B) signature frame.
     * Docs with fewer than `shingleSize` words are dropped (no signature). */
-  def minhashSignatures(docs: DataFrame, numHashes: Int, bandSize: Int,
+  private def minhashSignatures(docs: DataFrame, numHashes: Int, bandSize: Int,
                         shingleSize: Int): DataFrame = {
     require(numHashes % bandSize == 0, "numHashes must be divisible by bandSize")
     val w = words(col("text"))
@@ -575,7 +575,7 @@ object Dedup {
 
   /** n-gram Jaccard similarity for an explicit pair list (verification pass
     * after LSH candidate generation). */
-  def ngramJaccard(aSh: Column, bSh: Column): Column =
+  private def ngramJaccard(aSh: Column, bSh: Column): Column =
     size(array_intersect(aSh, bSh)).cast("double") / size(array_union(aSh, bSh))
 
   /** EXACT n-gram Jaccard near-dup via an inverted shingle index — the

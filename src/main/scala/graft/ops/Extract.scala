@@ -49,7 +49,7 @@ object Extract {
   /** The newline-split, whitespace-normalized, non-empty LINES of a
     * stripped page: each line trimmed, runs of whitespace collapsed to
     * single spaces. This is the unit the C4 line filter judges. */
-  def textLines(text: Column): Column =
+  private def textLines(text: Column): Column =
     filter(
       transform(split(text, "\n"),
         l => trim(regexp_replace(l, "\\s+", " "))),

@@ -10,20 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Partitioning {
 
-  /** Persist a table bucketed by `key` so every future equi-join or
-    * aggregation on `key` between co-bucketed tables runs WITHOUT a shuffle
-    * (both sides arrive hash-clustered on disk; PlanSpec asserts the
-    * exchange-free join). The write itself shuffles once — amortized over
-    * every subsequent query. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    numBuckets: Int = 32): Unit = {
-    dropManagedTable(df.sparkSession, table)
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-  }
-
   /** Drop a managed table AND its warehouse directory. `saveAsTable` with
     * mode("overwrite") replaces a table the CATALOG knows about, but a
     * fresh JVM's in-memory catalog is empty while the warehouse directory

@@ -72,12 +72,8 @@ object Sampling {
     * caps each source at N tokens rather than N documents.
     *
     * Shape: one shuffle (window partitioned by stratum). The running sum is
-    * inherently sequential per stratum; at 100 TB a hot stratum makes this
-    * window the straggler — the scale-out form splits each stratum into
-    * hash-prefix buckets, computes per-bucket token totals (tiny frame),
-    * prefix-sums those offsets centrally, and broadcasts them so each
-    * bucket's window runs independently. Semantics are identical; this
-    * single-window form is the oracle-checkable reference. */
+    * inherently sequential per stratum, so at 100 TB a hot stratum makes
+    * this window the straggler. */
   def tokenBudget(docs: DataFrame, budget: Long, strataCol: String = "lang",
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val w = Window.partitionBy(strataCol)
@@ -89,54 +85,6 @@ object Sampling {
     docs
       .withColumn("n_tokens", nTok.cast("long"))
       .withColumn("cum_before", sum(col("n_tokens")).over(w) - col("n_tokens"))
-      .filter(col("cum_before") < budget)
-      .select(col(idCol), col(strataCol), col("n_tokens"), col("cum_before"))
-  }
-
-  /** The scale-out form of [[tokenBudget]] promised in its scaladoc:
-    * identical semantics (greedy prefix per stratum in global md5-hash
-    * order), but the inherently-sequential running sum is split into
-    * `numBuckets` hash-PREFIX ranges per stratum — bucket id is a monotone
-    * function of the hash, so (bucket, hash, id) order IS the global hash
-    * order. Per-bucket token totals (a strata×buckets frame — tiny at any
-    * corpus size) are prefix-summed into bucket offsets and broadcast back;
-    * each bucket's window then runs independently with `offset` added.
-    * One corpus shuffle keyed (stratum, bucket) — numBuckets× the
-    * parallelism of the single-stratum window, same output bit-for-bit
-    * (asserted against [[tokenBudget]] in CurationSpec). */
-  def tokenBudgetBucketed(docs: DataFrame, budget: Long,
-                          strataCol: String = "lang", idCol: String = "doc_id",
-                          textCol: String = "text",
-                          numBuckets: Int = 16): DataFrame = {
-    require(numBuckets >= 1 && numBuckets <= 256, "1 <= numBuckets <= 256")
-    val h = md5(col(idCol).cast("string"))
-    // floor(b2 * numBuckets / 256) over the first two hex digits: monotone
-    // in the hash prefix, so bucket order preserves global hash order
-    val bucket = (conv(substring(h, 1, 2), 16, 10).cast("int") * numBuckets)
-      .divide(lit(256)).cast("int")
-    val base = docs
-      .withColumn("_h", h)
-      .withColumn("_bkt", bucket)
-      .withColumn("n_tokens", size(Dedup.words(col(textCol))).cast("long"))
-    val wOff = Window.partitionBy(strataCol).orderBy("_bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = base.groupBy(col(strataCol), col("_bkt"))
-      .agg(sum(col("n_tokens")).as("_bt"))
-      .withColumn("_offset", coalesce(sum(col("_bt")).over(wOff), lit(0L)))
-      .select(col(strataCol), col("_bkt"), col("_offset"))
-    val wIn = Window.partitionBy(strataCol, "_bkt")
-      .orderBy(col("_h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // Null-safe (<=>) join keys: tokenBudget's window keeps a NULL stratum
-    // as its own partition, so the bucketed form must too — a plain equi-join
-    // would silently drop those rows and break the bit-for-bit parity.
-    val off = offsets.withColumnRenamed(strataCol, "_os")
-      .withColumnRenamed("_bkt", "_ob")
-    base
-      .join(broadcast(off),
-        col(strataCol) <=> col("_os") && col("_bkt") <=> col("_ob"))
-      .withColumn("cum_before",
-        col("_offset") + sum(col("n_tokens")).over(wIn) - col("n_tokens"))
       .filter(col("cum_before") < budget)
       .select(col(idCol), col(strataCol), col("n_tokens"), col("cum_before"))
   }
@@ -252,11 +200,6 @@ object Sampling {
   private def dsirModel(feats: DataFrame, name: String): DataFrame =
     feats.groupBy("bucket").agg(sum(col("c")).cast("long").as(name))
 
-  /** Per-bucket log importance ratio log p̂_target(b) − log p̂_raw(b). */
-  def dsirLogRatio(rawDocs: DataFrame, targetDocs: DataFrame): DataFrame =
-    smoothedLogRatio(dsirModel(dsirFeatures(rawDocs), "cq"),
-      dsirModel(dsirFeatures(targetDocs), "cp"))
-
   /** Per-document log importance weight: Σ_features c · logratio(bucket).
     * The raw corpus' feature frame is computed ONCE (localCheckpoint) and
     * shared between the q model and the scoring join — the raw explode is
@@ -270,31 +213,6 @@ object Sampling {
       .groupBy("doc_id")
       .agg(sum(col("c")).cast("long").as("n_feats"),
         sum(col("c") * col("logratio")).as("logw"))
-  }
-
-  /** Row-local scoring against a FIXED log-ratio table — the ingest-time
-    * form: models are trained offline on a snapshot, arriving documents
-    * are scored as they land. The B-row table is pulled to the driver (a
-    * k-row pull, same family as the k-means centroid loop) and inlined as
-    * a literal array, so the score is a pure scan-fused projection: zero
-    * shuffles, no per-doc aggregation state — append-mode streaming safe
-    * (the join+agg form of [[dsirWeights]] would need stateful streaming
-    * aggregation). Same logw as dsirWeights up to summation order. */
-  def dsirScore(docs: DataFrame, logRatio: DataFrame): DataFrame = {
-    val ratio = logRatio.orderBy("bucket").collect()
-    require(ratio.length == dsirBuckets,
-      s"expected $dsirBuckets log-ratio rows, got ${ratio.length}")
-    val ratioLit = array(ratio.toIndexedSeq.map(r => lit(r.getDouble(1))): _*)
-    // n_feats from the WORD count (L words → 2L−1 grams, L=1 → 1), not
-    // size(buckets): ArrayAggregate is a CodegenFallback HOF, so the
-    // codegen'd size() could not share the md5 pass with the fold and the
-    // whole bucket computation would run twice per row
-    val nWords = size(Dedup.words(col("text")))
-    docs.filter(length(trim(col("text"))) > 0)
-      .withColumn("n_feats",
-        when(nWords >= 2, nWords * 2 - 1).otherwise(nWords).cast("long"))
-      .withColumn("logw", aggregate(dsirBucketsCol, lit(0.0),
-        (acc, b) => acc + element_at(ratioLit, (b + 1).cast("int"))))
   }
 
   /** Gumbel top-k resampling: key = logw + Gumbel(doc_id) samples k docs

@@ -126,7 +126,7 @@ object Similarity {
   /** Deterministic ±1 hyperplane coefficient for (plane, dim), derived from
     * md5 parity — reproducible anywhere (the DuckDB oracle inlines the same
     * values via [[planes]]). */
-  def planeCoef(plane: Int, dim: Int): Double = {
+  private def planeCoef(plane: Int, dim: Int): Double = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$plane:$dim".getBytes("UTF-8"))
     if ((digest(0) & 1) == 1) 1.0 else -1.0
@@ -136,7 +136,7 @@ object Similarity {
     (0 until numPlanes).map(p => (0 until dim).map(d => planeCoef(p, d)))
 
   /** b-bit random-hyperplane signature of an embedding column. */
-  def lshSignature(emb: Column, planeSeq: Seq[Seq[Double]]): Column = {
+  private def lshSignature(emb: Column, planeSeq: Seq[Seq[Double]]): Column = {
     val bits = planeSeq.map { coefs =>
       val p = array(coefs.map(lit): _*)
       when(dot(emb, p) > 0.0, "1").otherwise("0")
@@ -195,8 +195,8 @@ object Similarity {
     * nearest deterministic coarse centroid — (neighbor_id, c_emb, c_norm,
     * cid). This is the expensive corpus-sized pass; the serving pair
     * below amortizes it into one bucketed write. */
-  def ivfAssignCorpus(corpus: DataFrame, numCentroids: Int = 16,
-                      dim: Int = 64): DataFrame = {
+  private def ivfAssignCorpus(corpus: DataFrame, numCentroids: Int,
+                              dim: Int): DataFrame = {
     val cents = ivfCentroids(numCentroids, dim)
     def scores(emb: Column): Column =
       array(cents.map(cv => dot(emb, array(cv.map(lit): _*))): _*)
@@ -230,44 +230,10 @@ object Similarity {
     // the quantizer geometry IS part of the index: a query probing with a
     // different centroid set would still cid-equi-join plausibly and
     // return silently wrong neighbors — persist it and assert at read.
-    // The bucket spec rides along so incremental appends can never
-    // mismatch the table's layout.
     val spark = corpus.sparkSession
     import spark.implicits._
     Seq((numCentroids, dim, buckets)).toDF("num_centroids", "dim", "buckets")
       .write.mode("overwrite").saveAsTable(s"${prefix}_meta")
-  }
-
-  /** Incremental maintenance for the persisted IVF index — the vector
-    * sibling of [[TextAnalysis.bm25AppendIndex]]: assign ONLY the delta
-    * against the index's own persisted quantizer geometry (read from the
-    * meta table, so a caller cannot silently append under a different
-    * centroid set) and append its inverted-list rows under the same
-    * bucket spec — new files per bucket, no rewrite of old lists. IVF
-    * keeps no global stats, so unlike BM25 there is nothing to combine:
-    * append-then-search is row-identical to rebuild-then-search by
-    * construction (PartitioningSpec pins it), and an empty delta appends
-    * zero rows. At 100 TB this is the ingest-pipeline contract: the
-    * corpus-sized assignment pass happens once per DELTA, never again
-    * for the accumulated index. */
-  def ivfAppendIndex(delta: DataFrame, prefix: String = "ivf"): Unit = {
-    val spark = delta.sparkSession
-    // quantizer AND bucket spec come from the index's own meta — a
-    // caller-supplied value could silently mismatch the table layout
-    val metaDf = spark.table(s"${prefix}_meta")
-    // indexes persisted before the bucket spec rode in meta have a 2-column
-    // (num_centroids, dim) table; appending under a GUESSED bucket count
-    // would silently mismatch the lists' physical layout, so refuse with
-    // the remedy instead of an opaque out-of-bounds read
-    require(metaDf.columns.length >= 3 && metaDf.columns(2) == "buckets",
-      s"index '$prefix' meta predates bucket-spec persistence " +
-        s"(columns: ${metaDf.columns.mkString(", ")}) — rebuild the index " +
-        "with ivfWriteIndex before appending")
-    val meta = metaDf.head()
-    ivfAssignCorpus(delta, meta.getInt(0), meta.getInt(1))
-      .write.mode("append")
-      .bucketBy(meta.getInt(2), "cid").sortBy("cid")
-      .saveAsTable(s"${prefix}_lists")
   }
 
   /** Query-many half: identical semantics to [[ivfTopK]] (same probe and
@@ -317,21 +283,6 @@ object Similarity {
     Seq((centInts.size, dim, buckets, assignTop))
       .toDF("num_centroids", "dim", "buckets", "assign_top")
       .write.mode("overwrite").saveAsTable(s"${prefix}_meta")
-  }
-
-  /** Incremental maintenance of the trained index — the delta is assigned
-    * under the index's own PERSISTED centroids (never retrained: a drifted
-    * quantizer would silently mis-list the delta) and appended under the
-    * same bucket spec. Append-then-search == rebuild-then-search for the
-    * same centroid set (PartitioningSpec pins it). */
-  def ivfAppendIndexTrained(delta: DataFrame, prefix: String = "ivft"): Unit = {
-    val spark = delta.sparkSession
-    val meta = spark.table(s"${prefix}_meta").head()
-    val centInts = persistedCents(spark, prefix)
-    trainedAssign(delta, centInts, meta.getInt(3))
-      .write.mode("append")
-      .bucketBy(meta.getInt(2), "cid").sortBy("cid")
-      .saveAsTable(s"${prefix}_lists")
   }
 
   /** Query half: probe the top-`nprobe` persisted centroids by the same

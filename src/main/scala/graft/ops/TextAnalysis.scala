@@ -14,9 +14,9 @@ object TextAnalysis {
     * ([ \t\n\f\r]) written explicitly, because Java's \s additionally
     * includes vertical tab (\x0B) while the DuckDB oracle's RE2 \s does
     * not — an explicit class keeps both engines tokenizing identically. */
-  val wsChars = " \\t\\n\\f\\r"
+  private val wsChars = " \\t\\n\\f\\r"
   val wsPlus = s"[$wsChars]+"
-  val wsOne = s"[$wsChars]"
+  private val wsOne = s"[$wsChars]"
 
   /** BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation. */
   val tokenPattern = s"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9$wsChars]"
@@ -361,14 +361,10 @@ object TextAnalysis {
         explode(col("ws")).as("term"))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
 
-  // carries the raw (n_docs, dl_sum) moments alongside the derived avgdl:
-  // two stats frames then COMBINE exactly (long adds, then ONE division —
-  // the same double a full recompute produces), which is what lets
-  // [[bm25AppendIndex]] maintain the persisted stats incrementally.
+  // carries the raw (n_docs, dl_sum) moments alongside the derived avgdl.
   // dl_sum coalesces to 0 (sum over an empty frame is NULL) and avgdl
-  // null-guards n_docs=0: an all-filtered corpus must produce the (0, 0,
-  // null) identity row, not a NULL dl_sum that would poison the long adds
-  // of every later incremental combine.
+  // null-guards n_docs=0: an all-filtered corpus produces the (0, 0, null)
+  // row.
   private def bm25Stats(corpus: DataFrame): DataFrame =
     corpus.agg(count(lit(1)).as("n_docs"),
       coalesce(sum(size(col("ws")).cast("long")), lit(0L)).as("dl_sum"))
@@ -409,8 +405,7 @@ object TextAnalysis {
     * one write is the difference between a search SERVICE and a per-batch
     * scan. Bucketing by term means a future non-broadcast query set
     * (an equi-join on term) arrives pre-clustered with no shuffle on the
-    * postings side — [[graft.ops.Partitioning.writeBucketed]]'s contract
-    * applied to retrieval. */
+    * postings side. */
   def bm25WriteIndex(docs: DataFrame, prefix: String = "bm25",
                      buckets: Int = 32,
                      evalPred: Column = bm25DefaultPred): Unit = {
@@ -422,50 +417,6 @@ object TextAnalysis {
       .bucketBy(buckets, "term").sortBy("term")
       .saveAsTable(s"${prefix}_postings")
     bm25Stats(corpus).write.mode("overwrite").saveAsTable(s"${prefix}_stats")
-  }
-
-  /** Incremental maintenance for the persisted BM25 index: append a DELTA
-    * of new documents without touching the existing postings. The delta's
-    * postings rows append into the bucketed table under the SAME bucket
-    * spec (per-term clustering is preserved — new files per bucket, no
-    * rewrite of old ones), and the 1-row stats combine exactly: the
-    * persisted (n_docs, dl_sum) moments are longs, so old+delta then one
-    * division produces the identical double a full rebuild would — which
-    * is what makes append-then-search bit-identical to
-    * reindex-everything-then-search (PartitioningSpec pins it). Document
-    * FREQUENCIES need no maintenance at all: df is derived from the
-    * postings at query time, so it sees appended rows automatically. At
-    * 100 TB this turns the corpus-sized index build into a one-time cost
-    * plus delta-sized increments — the ingest-pipeline contract every
-    * other incremental op in this library follows. Deletes are out of
-    * scope (same as the underlying table format; a tombstone column +
-    * query-time anti-join is the standard bolt-on). */
-  def bm25AppendIndex(delta: DataFrame, prefix: String = "bm25",
-                      buckets: Int = 32,
-                      evalPred: Column = bm25DefaultPred): Unit = {
-    val spark = delta.sparkSession
-    val corpus = bm25Base(delta, evalPred).filter(!col("_q"))
-    // delta moments FIRST: an empty effective delta (all rows eval-query-
-    // filtered, or empty text) must be a no-op — appending zero postings
-    // rows is harmless, but rewriting the stats row with an empty frame's
-    // moments would have overwritten good stats with the identity (and,
-    // pre-coalesce, with NULL dl_sum, silently NULLing every later score)
-    val fresh = bm25Stats(corpus).select("n_docs", "dl_sum").head()
-    if (fresh.getLong(0) > 0L) {
-      bm25Postings(corpus).write.mode("append")
-        .bucketBy(buckets, "term").sortBy("term")
-        .saveAsTable(s"${prefix}_postings")
-      val old = spark.table(s"${prefix}_stats")
-        .select(col("n_docs"), col("dl_sum")).head()
-      // both moment rows are already driver-side literals, so the single
-      // combined row can be written directly — the overwrite never reads
-      // the table it replaces
-      import spark.implicits._
-      val nd = fresh.getLong(0) + old.getLong(0)
-      val dl = fresh.getLong(1) + old.getLong(1)
-      Seq((nd, dl, dl.toDouble / nd)).toDF("n_docs", "dl_sum", "avgdl")
-        .write.mode("overwrite").saveAsTable(s"${prefix}_stats")
-    }
   }
 
   /** Query-many half: identical semantics to [[bm25Search]] (same scoring

@@ -1057,8 +1057,8 @@ object Url {
     * dedup query while the frontier kept keying on the STATIC
     * canonical, so every session-id/boilerplate variant of a cataloged
     * page was re-admitted and fetched — the crawl-trap axis bites at
-    * fetch time, not corpus time). `policy` is the [[paramPolicy]] (or
-    * [[paramPolicyCorroborated]]) frame — re-learned periodically
+    * fetch time, not corpus time). `policy` is the
+    * [[paramPolicyCorroborated]] frame — re-learned periodically
     * offline, a static input here; `catalog` carries one
     * `learned_canon` per page-identity any earlier batch admitted. A
     * delta row survives iff it is the batch's own first occurrence of
@@ -1317,57 +1317,6 @@ object Url {
           .as("high_card"))
   }
 
-  /** LEARNED-POLICY URL dedup (round 18 — [[paramStats]] CONSUMED): the
-    * corpus teaches its own canonicalization. Params flagged
-    * boilerplate (`constant_val` — carrying one value adds no page
-    * identity: pages with and without it are the same page) or
-    * session-shaped (`high_card` — a near-unique value per URL splits
-    * one page into many), at `minSupport`+ occurrences on the domain,
-    * become that domain's STRIP LIST; every URL re-canonicalizes with
-    * those params removed, and first-occurrence dedup runs on the
-    * learned key. Collapses the variants the static canonicalizer's
-    * hardcoded `utm_*` list cannot know (`?sid=abc` vs `?sid=def`;
-    * `?lang=en` vs bare). Mid-cardinality params — real content
-    * selectors like `?id=5` at corpus scale — match neither flag and
-    * are KEPT. Output: one row per learned key with the lowest-doc_id
-    * keeper, the collapse count, and `n_canon_variants` (distinct
-    * STATIC canonical forms folded — >1 is the policy's added value
-    * over [[urlDedup]]).
-    *
-    * Scale shape: two corpus passes by nature (learn, then apply) —
-    * both scan-fused; the policy table is |domains|·|flagged params|
-    * rows, grouped to one strip-array per domain — BROADCAST while the
-    * caller-stated domain scale fits the ceiling, else a shuffle-hash
-    * probe ([[domainFrameSide]], round 19 — at 10⁷–10⁸ crawl domains
-    * the policy frame is GBs); the apply
-    * pass is a per-row array filter (the canonical query is already
-    * sorted, so stripping preserves key order) + the same one-exchange
-    * hash-agg as [[urlDedup]]. */
-  def paramPolicyDedup(urls: DataFrame, minSupport: Long = 2L,
-                       expectedDomains: Long = 0L): DataFrame = {
-    applyParamPolicy(urls, paramPolicy(urls, minSupport), expectedDomains)
-      .groupBy("learned_canon")
-      .agg(min(col("doc_id")).as("keep_doc_id"),
-        count(lit(1)).cast("long").as("n_dups"),
-        count_distinct(col("url_canon")).cast("long").as("n_canon_variants"))
-  }
-
-  /** The LEARN half of [[paramPolicyDedup]] as a standalone frame —
-    * one `(domain, _drop array<string>)` row per domain with at least
-    * one flagged param at `minSupport`+ distinct-page support: the
-    * per-domain STRIP LIST the apply pass (and the frontier — round 19,
-    * [[urlFrontierLearnedIncrement]]) consumes. The array is SORTED
-    * ([[applyParamPolicy]]'s binary-search contract — a crawl-trap
-    * megadomain can flag 10⁵+ param names). In production this is
-    * refreshed periodically from the accumulated corpus and persisted;
-    * the fetch path only ever JOINS it. */
-  def paramPolicy(urls: DataFrame, minSupport: Long = 2L): DataFrame =
-    paramStats(urls)
-      .filter((col("constant_val") || col("high_card")) &&
-        col("n_urls") >= minSupport)
-      .groupBy("domain")
-      .agg(sort_array(collect_set(col("param"))).as("_drop"))
-
   /** CONTENT-CORROBORATED param policy (round 19 — the r18 verdict's
     * "what's wrong" #2: value-distribution evidence alone cannot tell
     * a session id from a unique-per-page CONTENT id — `?article=12345`
@@ -1385,11 +1334,17 @@ object Url {
     * real pages). `urls` must carry `(doc_id, url, fp)` — fp is any
     * per-page content fingerprint (md5 of normalized text, a simhash
     * band, …), already in the row so the learn pass stays scan-fused.
+    * Output: one `(domain, _drop array<string>)` row per domain with at
+    * least one param to strip at `minSupport`+ distinct-page support —
+    * the per-domain STRIP LIST the apply pass (and the frontier,
+    * [[urlFrontierLearnedIncrement]]) consumes. The array is SORTED
+    * ([[applyParamPolicy]]'s binary-search contract — a crawl-trap
+    * megadomain can flag 10⁵+ param names).
     *
     * Scale shape: one extra learn aggregation keyed on (domain, param,
     * stripped-key) — input is the kv rows (params-per-URL-bounded),
     * collapsing map-side; the verdict agg is |domains|·|param vocab|
-    * as in [[paramStats]]; apply is unchanged. */
+    * as in [[paramStats]]. */
   def paramPolicyCorroborated(urls: DataFrame,
                               minSupport: Long = 2L): DataFrame = {
     val canon = Links.pinColumns(urls
@@ -1430,9 +1385,26 @@ object Url {
       .agg(sort_array(collect_set(col("param"))).as("_drop"))
   }
 
-  /** [[paramPolicyDedup]] under the corroborated policy: the strip
-    * list comes from [[paramPolicyCorroborated]] (so a unique-per-page
-    * content param SURVIVES), the apply/dedup tail is identical. */
+  /** LEARNED-POLICY URL dedup ([[paramStats]] consumed): the corpus
+    * teaches its own canonicalization. The strip list per domain comes
+    * from [[paramPolicyCorroborated]] (boilerplate and corroborated
+    * session params go; a unique-per-page content param SURVIVES);
+    * every URL re-canonicalizes with those params removed, and
+    * first-occurrence dedup runs on the learned key. Collapses the
+    * variants the static canonicalizer's hardcoded `utm_*` list cannot
+    * know (`?sid=abc` vs `?sid=def`; `?lang=en` vs bare). Output: one
+    * row per learned key with the lowest-doc_id keeper, the collapse
+    * count, and `n_canon_variants` (distinct STATIC canonical forms
+    * folded — >1 is the policy's added value over [[urlDedup]]).
+    *
+    * Scale shape: two corpus passes by nature (learn, then apply) —
+    * both scan-fused; the policy table is |domains|·|flagged params|
+    * rows, grouped to one strip-array per domain — BROADCAST while the
+    * caller-stated domain scale fits the ceiling, else a shuffle-hash
+    * probe ([[domainFrameSide]] — at 10⁷–10⁸ crawl domains the policy
+    * frame is GBs); the apply pass is a per-row array filter (the
+    * canonical query is already sorted, so stripping preserves key
+    * order) + the same one-exchange hash-agg as [[urlDedup]]. */
   def paramPolicyDedupCorroborated(urls: DataFrame, minSupport: Long = 2L,
                                    expectedDomains: Long = 0L): DataFrame =
     applyParamPolicy(urls.select(col("doc_id"), col("url")),
@@ -1442,13 +1414,14 @@ object Url {
         count(lit(1)).cast("long").as("n_dups"),
         count_distinct(col("url_canon")).cast("long").as("n_canon_variants"))
 
-  /** The APPLY half of [[paramPolicyDedup]]: per `(doc_id, url)` row,
-    * the policy-stripped LEARNED canonical key alongside the static
-    * one — `(doc_id, url_canon, learned_canon)`. Row-local once the
-    * policy row is joined in (strategy follows `expectedDomains` like
-    * every per-domain probe); stripping preserves the already-sorted
-    * canonical key order. The strip itself is ONE native codegen'd
-    * expression ([[graft.functions.StripParams]], round 19 — binary
+  /** The APPLY half of [[paramPolicyDedupCorroborated]]: per
+    * `(doc_id, url)` row, the policy-stripped LEARNED canonical key
+    * alongside the static one — `(doc_id, url_canon, learned_canon)`.
+    * Row-local once the policy row is joined in (strategy follows
+    * `expectedDomains` like every per-domain probe); stripping
+    * preserves the already-sorted canonical key order. The strip
+    * itself is ONE native codegen'd expression
+    * ([[graft.functions.StripParams]], round 19 — binary
     * search per param name over the policy's SORTED array): the
     * `array_contains` spelling scanned O(|strip list|) per param
     * (the 10× scale probe's param-vocab megadomain, 10⁵ flagged names, measured

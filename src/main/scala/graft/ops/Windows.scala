@@ -71,39 +71,6 @@ object Windows {
       .select("user_id", "start_day", "end_day", "n_days")
   }
 
-  /** The 100 TB alternative to exact ntile (DESIGN.md §4): exact n-tiling
-    * partitioned by a low-cardinality key serializes one reducer per
-    * partition value, so at scale the cut points are estimated once
-    * (percentile_approx — a mergeable sketch, fully parallel) and bucket
-    * assignment becomes a SCAN-FUSED comparison against the broadcast cut
-    * points. Trades exactness at bucket boundaries (sketch rank error) for
-    * full parallelism; bucket populations converge to n/numBuckets as the
-    * sketch accuracy grows.
-    *
-    * Shape: one pass builds per-key cut arrays (hash agg, tiny result),
-    * broadcast-joined back; assignment is `1 + #cuts below value` computed
-    * row-locally. No window, no per-key serialization. */
-  def ntileApprox(df: DataFrame, partCol: String, valueCol: String,
-                  numBuckets: Int = 4, accuracy: Int = 10000): DataFrame = {
-    val fracs = (1 until numBuckets).map(_.toDouble / numBuckets)
-    // typed percentile_approx(Column, Column, Column), not an expr() splice:
-    // a caller column named "my value" (or worse) must resolve as a column
-    // reference, never be parsed as SQL text
-    val cuts = df.groupBy(partCol).agg(
-      percentile_approx(col(valueCol),
-        array(fracs.map(lit): _*), lit(accuracy)).as("_cuts"))
-      .withColumnRenamed(partCol, "_pc")
-    // Null-safe (<=>) join: exact ntile buckets NULL partition keys as their
-    // own partition, so a plain equi-join would silently drop those rows.
-    // A NULL value gets a NULL bucket (the lambda comparison filters to
-    // false, which would otherwise misfile it into bucket 1).
-    val bucket = when(col(valueCol).isNull, lit(null).cast("int"))
-      .otherwise(lit(1) + size(filter(col("_cuts"), c => c < col(valueCol))))
-      .as("bucket")
-    df.join(broadcast(cuts), col(partCol) <=> col("_pc"))
-      .withColumn("bucket", bucket).drop("_cuts", "_pc")
-  }
-
   /** Ordered-funnel analysis: for each user, the earliest time each step
     * of `steps` was reached IN ORDER — step i+1 must occur strictly after
     * the user's earliest completion of step i (the product-analytics

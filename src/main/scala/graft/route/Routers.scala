@@ -104,7 +104,7 @@ object EventTypeSplitter {
 
   def eventType(value: Column): Column = get_json_object(value, "$.eventType")
 
-  def topicFor(eventTypeCol: Column, tenant: String, namespace: String): Column =
+  private def topicFor(eventTypeCol: Column, tenant: String, namespace: String): Column =
     concat(lit(s"persistent://$tenant/$namespace/"),
       regexp_replace(lower(regexp_replace(eventTypeCol, "_EVENT$", "")), "_", "-"),
       lit("-events"))

@@ -208,7 +208,7 @@ object Sources {
     host = "rabbitmq", queueName = "my-queue", outputTopic = "raw-rabbitmq-events")
   val httpInput: HttpSource = HttpSource("http-input",
     outputTopic = "raw-http-events")
-  val grpcInput: GrpcSource = GrpcSource("grpc-input",
+  private val grpcInput: GrpcSource = GrpcSource("grpc-input",
     grpcEndpoint = "localhost:50051", outputTopic = "raw-grpc-events")
   val pulsarInput: PulsarSource = PulsarSource("pulsar-source-input",
     serviceUrl = "pulsar://localhost:6650", inputTopic = "upstream-topic",

@@ -18,7 +18,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -65,16 +65,6 @@ object SpoolDataSource {
     * row-level topic + payload, the Kafka sink/source column contract. */
   val TOPIC_SCHEMA: StructType = StructType(Seq(
     StructField("topic", StringType), StructField("value", StringType)))
-  /** Schema of the `format=warc` mode: one row per ISO-28500 record,
-    * split by [[Warc.parseStream]]'s Content-Length framing — the crawl
-    * ingestion seam (`file` is the spool file name; HTTP responses carry
-    * status + html, other record types null them). */
-  val WARC_SCHEMA: StructType = StructType(Seq(
-    StructField("file", StringType), StructField("rec_index", IntegerType),
-    StructField("warc_type", StringType), StructField("record_id", StringType),
-    StructField("target_uri", StringType), StructField("warc_date", StringType),
-    StructField("content_length", LongType), StructField("http_status", IntegerType),
-    StructField("html", StringType)))
 
   /** Topic name → spool sub-directory. Topic URIs carry characters Hadoop
     * paths reject (the `:` in `persistent://tenant/ns/topic`), so the
@@ -89,9 +79,9 @@ object SpoolDataSource {
       case b => f"%%${b & 0xff}%02X"
     }.mkString
 
-  /** Inverse of [[topicDir]] — a bridge daemon recovers the broker topic
+  /** Inverse of [[topicDir]]: `topics` mode recovers the broker topic
     * from the spool directory name. */
-  def topicFromDir(dir: String): String = {
+  private def topicFromDir(dir: String): String = {
     val out = new java.io.ByteArrayOutputStream()
     var i = 0
     while (i < dir.length) {
@@ -200,19 +190,22 @@ private[sources] class SpoolRawLocalFileSystem extends RawLocalFileSystem {
 class SpoolDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = SpoolDataSource.NAME
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    if ("warc".equalsIgnoreCase(options.get("format"))) SpoolDataSource.WARC_SCHEMA
-    else if (options.getBoolean("topics", false)) SpoolDataSource.TOPIC_SCHEMA
+    if (options.getBoolean("topics", false)) SpoolDataSource.TOPIC_SCHEMA
     else SpoolDataSource.SCHEMA
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
-    val path = properties.get("path")
+    // option keys are case-insensitive, as inferSchema sees them
+    val options = new CaseInsensitiveStringMap(properties)
+    val path = options.get("path")
     require(path != null && path.nonEmpty, "graft-spool requires a path")
-    val warc = "warc".equalsIgnoreCase(properties.get("format"))
-    val topics = "true".equalsIgnoreCase(properties.get("topics"))
-    require(!(warc && topics),
-      "graft-spool: format=warc reads one spool directory of WARC files — " +
-        "it does not compose with topics=true bus mode")
-    new SpoolTable(path, topics, warc)
+    // the spool frames one message per line; no other record format is
+    // read here, and a `format` option silently ignored would split
+    // foreign bytes (a WARC archive) into lines
+    require(!options.containsKey("format"), s"${SpoolDataSource.NAME}: " +
+      s"unsupported option format=${options.get("format")} — the spool " +
+      "reads line-framed messages only; read WARC files with " +
+      "graft.sources.Warc.readRecords")
+    new SpoolTable(path, options.getBoolean("topics", false))
   }
 }
 
@@ -224,8 +217,7 @@ class SpoolDataSource extends TableProvider with DataSourceRegister {
   * tagged with its topic; writes route each row to its topic's directory.
   * Streaming reads stay per-topic (a multi-topic watermark would couple
   * unrelated topics' progress; subscribe per topic as Kafka does). */
-class SpoolTable(path: String, topics: Boolean = false,
-                 warc: Boolean = false)
+class SpoolTable(path: String, topics: Boolean = false)
     extends Table with SupportsRead with SupportsWrite {
   // captured at table creation (driver): one conf for every scan this
   // DataFrame plans, serializable for the executor-side readers
@@ -245,17 +237,9 @@ class SpoolTable(path: String, topics: Boolean = false,
 
   override def name(): String = s"${SpoolDataSource.NAME}($path)"
   override def schema(): StructType =
-    if (warc) SpoolDataSource.WARC_SCHEMA
-    else if (topics) SpoolDataSource.TOPIC_SCHEMA else SpoolDataSource.SCHEMA
+    if (topics) SpoolDataSource.TOPIC_SCHEMA else SpoolDataSource.SCHEMA
   override def capabilities(): util.Set[TableCapability] =
-    // warc: read-only — batch (a crawl archive as a replay corpus) and
-    // micro-batch (a LIVE crawl tailing the spool: per-file batches over
-    // the same filename-watermark offsets, round-13 directive). Writes
-    // stay unadvertised: a value/topic write against the 9-column WARC
-    // schema has no meaning, and the missing capability is a clean
-    // analysis error
-    (if (warc) Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-     else if (topics)
+    (if (topics)
       Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
         TableCapability.STREAMING_WRITE)
      else Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
@@ -263,7 +247,7 @@ class SpoolTable(path: String, topics: Boolean = false,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan =
-        new SpoolScan(path, topics, conf, () => batchSnapshot, warc)
+        new SpoolScan(path, topics, conf, () => batchSnapshot)
     }
 
   /** Publish seam (the write half of the bridge contract): the Kafka sink's
@@ -303,25 +287,19 @@ class SpoolTable(path: String, topics: Boolean = false,
 }
 
 class SpoolScan(path: String, topics: Boolean, conf: SerializableConfiguration,
-                snapshot: () => Seq[SpoolFilePartition],
-                warc: Boolean = false) extends Scan {
+                snapshot: () => Seq[SpoolFilePartition]) extends Scan {
   override def readSchema(): StructType =
-    if (warc) SpoolDataSource.WARC_SCHEMA
-    else if (topics) SpoolDataSource.TOPIC_SCHEMA else SpoolDataSource.SCHEMA
+    if (topics) SpoolDataSource.TOPIC_SCHEMA else SpoolDataSource.SCHEMA
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
       snapshot().map(p => p: InputPartition).toArray
     override def createReaderFactory(): PartitionReaderFactory =
-      if (warc) new WarcReaderFactory(conf) else new SpoolReaderFactory(conf)
+      new SpoolReaderFactory(conf)
   }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     require(!topics, s"${SpoolDataSource.NAME}: streaming reads are per-topic " +
       "— point readStream at one topic directory (topics=true is batch-only)")
-    // warc streams too (round-13 directive): a live crawl is the one
-    // genuinely streaming source in the domain — per-FILE micro-batches
-    // over the same filename-watermark offsets, each batch's files parsed
-    // by the record reader exactly as in batch mode
-    new SpoolMicroBatchStream(path, conf, warc)
+    new SpoolMicroBatchStream(path, conf)
   }
 }
 
@@ -332,8 +310,7 @@ case class SpoolOffset(watermark: String) extends Offset {
   override def json(): String = watermark
 }
 
-class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration,
-                            warc: Boolean = false)
+class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
     extends MicroBatchStream {
   @transient private lazy val log =
     org.slf4j.LoggerFactory.getLogger(classOf[SpoolMicroBatchStream])
@@ -401,7 +378,7 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration,
     batch.map(f => SpoolFilePartition(f._2): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    if (warc) new WarcReaderFactory(conf) else new SpoolReaderFactory(conf)
+    new SpoolReaderFactory(conf)
   override def commit(end: Offset): Unit = () // spool files are retained
   override def stop(): Unit = ()
 }
@@ -590,40 +567,6 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
     }
   }
   override def close(): Unit = ()
-}
-
-/** `format=warc` reader: one spool file = one sequence of ISO-28500
-  * records, split by [[Warc.parseStream]]'s Content-Length framing and
-  * emitted one row per record ([[SpoolDataSource.WARC_SCHEMA]]). The
-  * parser streams the file — a multi-GB WARC never materializes whole. */
-class WarcReaderFactory(conf: SerializableConfiguration)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[SpoolFilePartition]
-    new PartitionReader[InternalRow] {
-      private val p = new Path(part.filePath)
-      private val fileName = UTF8String.fromString(p.getName)
-      private val in = SpoolDataSource.fileSystem(p, conf.value).open(p)
-      private val records = Warc.parseStream(in).zipWithIndex
-      private var current: InternalRow = _
-      private def utf8(s: String): AnyRef =
-        if (s == null) null else UTF8String.fromString(s)
-      override def next(): Boolean =
-        if (!records.hasNext) false
-        else {
-          val ((hs, body), idx) = records.next()
-          // file_id is unused on this path (the file NAME is the id)
-          val r = Warc.toRow(0L, idx, hs, body)
-          current = new GenericInternalRow(Array[Any](fileName,
-            r.rec_index, utf8(r.warc_type), utf8(r.record_id),
-            utf8(r.target_uri), utf8(r.warc_date), r.content_length,
-            r.http_status.map(Integer.valueOf).orNull, utf8(r.html)))
-          true
-        }
-      override def get(): InternalRow = current
-      override def close(): Unit = in.close()
-    }
-  }
 }
 
 class SpoolReaderFactory(conf: SerializableConfiguration)

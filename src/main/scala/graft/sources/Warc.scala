@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
   * correct, and [[WarcSpec]] pins exactly that hostile case).
   *
   * Three pieces:
-  *  - [[Warc.parseStream]] — the streaming record splitter/parser (used
-  *    by both the in-memory operator and the graft-spool DSv2 reader:
+  *  - [[Warc.parseStream]] — the streaming record splitter/parser:
   *    version line, CRLF header block, Content-Length byte-exact body,
-  *    trailing CRLF CRLF);
+  *    trailing CRLF CRLF;
   *  - [[Warc.readRecords]] — batch operator: (file_id, payload) frames →
   *    one row per record, HTTP responses further split into status +
   *    html body (feeding [[graft.ops.Extract.htmlExtract]] /
@@ -207,13 +206,13 @@ object Warc {
     if (m.find()) Some(m.group(1)) else None
   }
 
-  /** Parsed-row conversion shared by the operator and the DSv2 reader:
-    * HTTP response bodies split at the first blank line into status line
-    * + html (decoded per the response's declared charset — see
-    * [[bodyCharset]]); other record types carry null status/html. */
-  private[sources] def toRow(fileId: Long, recIndex: Int,
-                             headers: Map[String, String],
-                             body: Array[Byte]): WarcRow = {
+  /** Parsed-row conversion for [[readRecords]]: HTTP response bodies
+    * split at the first blank line into status line + html (decoded per
+    * the response's declared charset — see [[bodyCharset]]); other
+    * record types carry null status/html. */
+  private def toRow(fileId: Long, recIndex: Int,
+                    headers: Map[String, String],
+                    body: Array[Byte]): WarcRow = {
     val isHttp = headers.get("content-type")
       .exists(_.toLowerCase(java.util.Locale.ROOT).startsWith("application/http"))
     val (status, html) =
@@ -252,7 +251,7 @@ object Warc {
     * payload is a TEXT-FIXTURE convenience that re-encodes through UTF-8
     * — fine for the synthetic corpus whose bytes ARE UTF-8, but lossy for
     * arbitrary crawls (the round-13 ADVICE case), so real files belong on
-    * the binary column or the graft-spool `format=warc` reader.
+    * the binary column.
     * Parallelism unit = file (see the class doc); one parser instance per
     * row, streaming over the payload bytes. */
   def readRecords(files: DataFrame): DataFrame = {

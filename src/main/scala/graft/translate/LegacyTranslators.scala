@@ -33,7 +33,7 @@ object LegacyTranslators {
     "USER_PROFILE_EVENT", "created", tsIsEpochSeconds = true, Seq("uid", "name", "created"))
   val orderRecord: LegacySpec = LegacySpec("order-record", "order-service",
     "ORDER_EVENT", "placedAt", tsIsEpochSeconds = false, Seq("orderId", "items", "placedAt"))
-  val inventoryUpdate: LegacySpec = LegacySpec("inventory-update", "inventory-service",
+  private val inventoryUpdate: LegacySpec = LegacySpec("inventory-update", "inventory-service",
     "INVENTORY_EVENT", "updateTime", tsIsEpochSeconds = true, Seq("sku", "qty", "updateTime"))
   val paymentNotice: LegacySpec = LegacySpec("payment-notice", "payment-gateway",
     "PAYMENT_EVENT", "time", tsIsEpochSeconds = false, Seq("txnId", "amount", "currency", "time"))

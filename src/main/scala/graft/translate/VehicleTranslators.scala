@@ -60,7 +60,7 @@ object Translated {
 object VehicleTranslators {
 
   /** GeotabInputMessage (GeotabTranslator.kt:34–47). */
-  val geotabInputSchema: StructType = StructType(Seq(
+  private val geotabInputSchema: StructType = StructType(Seq(
     StructField("Device_ID", StringType),
     StructField("Vehicle_ID", StringType),
     StructField("Record_DateTime", StringType),
@@ -75,7 +75,7 @@ object VehicleTranslators {
   ))
 
   /** CalAmpInputMessage (CalAmpTranslator.kt:31–42). */
-  val calAmpInputSchema: StructType = StructType(Seq(
+  private val calAmpInputSchema: StructType = StructType(Seq(
     StructField("unit_id", StringType),
     StructField("vid", StringType),
     StructField("msg_ts", LongType),
@@ -85,22 +85,6 @@ object VehicleTranslators {
     StructField("fuel_percent", DoubleType),
     StructField("voltage", DoubleType),
     StructField("calAmpSpecificValue", StringType)
-  ))
-
-  /** FordInputMessage + FordCoordinates (FordTranslator.kt:30–52). The open
-    * `fordExtraData: Map<String,Any>` is re-extracted as raw JSON text. */
-  val fordInputSchema: StructType = StructType(Seq(
-    StructField("vin", StringType),
-    StructField("esn", StringType),
-    StructField("captureTime", LongType),
-    StructField("coords", StructType(Seq(
-      StructField("latValue", DoubleType),
-      StructField("lonValue", DoubleType),
-      StructField("ts", LongType)
-    ))),
-    StructField("vehicleSpeed", DoubleType),
-    StructField("fuelRemainingGallons", DoubleType),
-    StructField("rpm", IntegerType)
   ))
 
   private val fordAllKeys = Seq("vin", "esn", "captureTime", "coords",

@@ -88,8 +88,9 @@ class ClassifierSpec extends SparkSpec {
     graft.ops.Dedup.releaseCheckpoint(model)
   }
 
-  test("lidClassifier: 4-class rule-LID distillation — per-class agreement " +
-    "is strong on a separable multilingual corpus, plan stays hash-agg") {
+  test("lidClassifierWith: 4-class rule-LID distillation — per-class " +
+    "agreement is strong on a separable multilingual corpus, plan stays " +
+    "hash-agg") {
     import spark.implicits._
     // each language's docs are built FROM its rule-LID stopwords plus a
     // disjoint content vocabulary, so the teacher labels are clean and
@@ -101,7 +102,9 @@ class ClassifierSpec extends SparkSpec {
       mk(100L, "le la les et est", "chien") ++
       mk(200L, "der die das und ist", "hund") ++
       mk(300L, "el los las y es", "perro")).toDF("doc_id", "text")
-    val out = graft.ops.Classifier.lidClassifier(docs)
+    val teacher = graft.ops.TextAnalysis.langId(docs)
+      .select(col("doc_id"), col("lang_guess").as("label"))
+    val out = Classifier.lidClassifierWith(docs, teacher)
     assert(out.count() === 120)
     // ≥ 3 distinct classes actually predicted (the multi-class point)
     assert(out.select("pred_label").distinct().count() >= 3)
@@ -112,9 +115,7 @@ class ClassifierSpec extends SparkSpec {
     perClass.foreach { case (lang, rate) =>
       assert(rate >= 0.8, s"per-class agreement for $lang only $rate") }
     // the generic argmax must stay a HashAggregate on the wider head too
-    val model = Classifier.trainLinear(docs.join(
-      graft.ops.TextAnalysis.langId(docs)
-        .select(col("doc_id"), col("lang_guess").as("label")), "doc_id"))
+    val model = Classifier.trainLinear(docs.join(teacher, "doc_id"))
     val p = Classifier.classify(docs, model)
       .queryExecution.executedPlan.toString
     assert(!p.contains("SortAggregate"), s"4-class argmax degraded:\n$p")

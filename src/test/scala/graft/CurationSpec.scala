@@ -236,24 +236,6 @@ class CurationSpec extends SparkSpec {
     assert(r(4).getLong(2) === 85L * 85L)
   }
 
-  test("tokenBudgetBucketed == tokenBudget bit-for-bit (scale-out form parity)") {
-    import spark.implicits._
-    // every 11th doc has a NULL stratum: the bucketed form's joins must be
-    // null-safe or these rows silently vanish from one side of the parity
-    val docs = (0L until 120L).map { i =>
-      (i, (0 to (i % 7).toInt).map(j => s"w$j").mkString(" "),
-        if (i % 11 == 0) null else s"lang${i % 3}")
-    }.toDF("doc_id", "text", "lang")
-    for (budget <- Seq(1L, 37L, 1000L); buckets <- Seq(1, 4, 16)) {
-      val single = graft.ops.Sampling.tokenBudget(docs, budget)
-        .orderBy("doc_id").collect().map(_.toSeq)
-      val bucketed = graft.ops.Sampling.tokenBudgetBucketed(docs, budget,
-          numBuckets = buckets)
-        .orderBy("doc_id").collect().map(_.toSeq)
-      assert(bucketed === single, s"budget=$budget buckets=$buckets")
-    }
-  }
-
   test("zero-fill grid emits empty cells (SparkEntry.q_zero_fill shape)") {
     import spark.implicits._
     // two types, events only on dow 0 -> grid must still have 7 rows per type

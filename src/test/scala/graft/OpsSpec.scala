@@ -96,45 +96,6 @@ class OpsSpec extends SparkSpec {
     assert(math.abs(a - e).toDouble / e < 0.05)
   }
 
-  test("ntileApprox tracks exact ntile on distinct values and balances buckets") {
-    val df = spark.range(8000).select(
-      (col("id") % 2).cast("string").as("k"),
-      col("id").as("rid"),
-      ((col("id") * 2654435761L) % 1000000L).cast("double").as("v"))
-    val w = Window.partitionBy("k").orderBy(col("v"), col("rid"))
-    val exact = df.withColumn("exact_b", ntile(4).over(w))
-    val approx = Windows.ntileApprox(df, "k", "v")
-    val joined = exact.join(approx.select(col("rid"), col("bucket")), "rid")
-    val n = joined.count()
-    // value-based cuts vs rank-based ntile: disagreement only within the
-    // sketch's rank error around each cut point
-    val agree = joined.filter(col("exact_b") === col("bucket")).count()
-    assert(agree.toDouble / n > 0.99, s"agreement ${agree.toDouble / n}")
-    // buckets stay balanced within 10% of n/4 per key
-    val sizes = approx.groupBy("k", "bucket").count().collect().map(_.getLong(2))
-    assert(sizes.length === 8)
-    assert(sizes.forall(s => math.abs(s - 1000.0) < 100), sizes.mkString(","))
-  }
-
-  test("ntileApprox null paths: NULL partition key is its own partition, NULL value -> NULL bucket") {
-    import spark.implicits._
-    val df = Seq(
-      ("a", Some(1.0)), ("a", Some(2.0)), ("a", Some(3.0)), ("a", Some(4.0)),
-      ("a", None), // NULL value inside a real partition
-      (null.asInstanceOf[String], Some(10.0)), (null, Some(20.0)),
-      (null, Some(30.0)), (null, Some(40.0))).toDF("k", "v")
-    val r = Windows.ntileApprox(df, "k", "v", numBuckets = 2)
-    // the null-safe join must KEEP the NULL-key rows and bucket them as
-    // their own partition (exact ntile's NULLS-as-a-partition behavior)
-    assert(r.count() === 9)
-    val nullKey = r.filter(col("k").isNull).collect()
-      .map(x => (x.getDouble(1), x.getInt(2))).sorted.toSeq
-    assert(nullKey === Seq((10.0, 1), (20.0, 1), (30.0, 2), (40.0, 2)))
-    // NULL value rows survive with a NULL bucket, never misfiled to bucket 1
-    val nullVal = r.filter(col("v").isNull).collect()
-    assert(nullVal.length === 1 && nullVal.head.isNullAt(2))
-  }
-
   test("cosineTopK: local-top-k pass returns exactly the global window's answer") {
     import spark.implicits._
     // deterministic pseudo-random corpus, spread over several partitions so

@@ -3,25 +3,9 @@ package graft
 import graft.ops.Partitioning
 import org.apache.spark.sql.functions._
 
-/** Co-located bucketed joins and skew salting: result parity plus the plan
-  * properties that justify them. */
+/** Persisted bucketed indexes and skew salting: result parity plus the
+  * plan properties that justify them. */
 class PartitioningSpec extends SparkSpec {
-
-  test("co-bucketed tables join without any exchange") {
-    import spark.implicits._
-    val a = (1L to 1000L).map(i => (i % 50, s"a$i")).toDF("k", "av")
-    val b = (1L to 200L).map(i => (i % 50, s"b$i")).toDF("k", "bv")
-    Partitioning.writeBucketed(a, "bkt_a", "k", numBuckets = 8)
-    Partitioning.writeBucketed(b, "bkt_b", "k", numBuckets = 8)
-    val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-    // disable broadcast so the co-location is what saves the shuffle
-    withSql("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = joined.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"), s"bucketed join still shuffles:\n$p")
-      assert(joined.count() === spark.table("bkt_a").join(
-        spark.table("bkt_b"), "k").count())
-    }
-  }
 
   test("saltedJoin returns exactly the plain join's rows") {
     import spark.implicits._
@@ -64,71 +48,6 @@ class PartitioningSpec extends SparkSpec {
     assert(gens < liveGens, s"indexed plan still explodes the corpus ($gens vs $liveGens)")
   }
 
-  test("bm25AppendIndex: build-half-then-append == full rebuild == live " +
-    "search, bit-identical") {
-    import spark.implicits._
-    import graft.ops.TextAnalysis
-    // 24 docs from a small shared vocabulary; doc 3 is the eval query
-    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
-    def text(i: Long) = (0 until 6).map(j =>
-      words(((i * 7 + j * 3) % words.size).toInt)).mkString(" ")
-    val docs = (0L until 24L).map(i => (i, text(i))).toDF("doc_id", "text")
-    val (half1, half2) =
-      (docs.filter(col("doc_id") < 12), docs.filter(col("doc_id") >= 12))
-    TextAnalysis.bm25WriteIndex(half1, "bm25inc", buckets = 4)
-    TextAnalysis.bm25AppendIndex(half2, "bm25inc", buckets = 4)
-    TextAnalysis.bm25WriteIndex(docs, "bm25full", buckets = 4)
-    val queries = TextAnalysis.bm25Queries(docs)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val appended = rows(TextAnalysis.bm25SearchIndexed(spark, queries, "bm25inc"))
-    val rebuilt = rows(TextAnalysis.bm25SearchIndexed(spark, queries, "bm25full"))
-    val live = rows(TextAnalysis.bm25Search(docs))
-    assert(appended.nonEmpty)
-    assert(appended === rebuilt)
-    assert(appended === live)
-    // the combined stats row is exactly the full-corpus moments
-    val st = spark.table("bm25inc_stats").head()
-    val stFull = spark.table("bm25full_stats").head()
-    assert(st.getLong(0) === stFull.getLong(0) &&
-      st.getLong(1) === stFull.getLong(1) &&
-      st.getDouble(2) === stFull.getDouble(2))
-  }
-
-  test("bm25AppendIndex: an EMPTY effective delta is a no-op — stats row " +
-    "survives intact and indexed search results are unchanged") {
-    import spark.implicits._
-    import graft.ops.TextAnalysis
-    val docs = Seq(
-      (1L, "apple apple common common"),
-      (2L, "apple common banana"),
-      (4L, "banana apple common common"),
-      (5L, "common common banana")).toDF("doc_id", "text")
-    TextAnalysis.bm25WriteIndex(docs, "bm25empty", buckets = 4)
-    val before = spark.table("bm25empty_stats").head()
-    val queries = TextAnalysis.bm25Queries(docs)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val resBefore = rows(TextAnalysis.bm25SearchIndexed(spark, queries, "bm25empty"))
-    // delta 1: zero rows at all; delta 2: rows whose text is null (dropped
-    // by the size>=1 gate); delta 3: only eval-query docs (filtered by
-    // !_q). Pre-fix, each of these overwrote the good stats row with
-    // (0, NULL, NULL), silently NULLing every later score.
-    TextAnalysis.bm25AppendIndex(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "bm25empty", buckets = 4)
-    TextAnalysis.bm25AppendIndex(
-      Seq((90L, Option.empty[String]), (91L, Option.empty[String]))
-        .toDF("doc_id", "text"), "bm25empty", buckets = 4)
-    TextAnalysis.bm25AppendIndex(
-      Seq((3L, "apple banana")).toDF("doc_id", "text"), "bm25empty", buckets = 4)
-    val after = spark.table("bm25empty_stats").head()
-    assert(after.getLong(0) === before.getLong(0))
-    assert(after.getLong(1) === before.getLong(1))
-    assert(after.getDouble(2) === before.getDouble(2))
-    assert(rows(TextAnalysis.bm25SearchIndexed(spark, queries, "bm25empty"))
-      === resBefore)
-  }
-
   test("ivfWriteIndex + ivfSearchIndexed == live ivfTopK; query plan is " +
     "table-backed with no corpus assignment") {
     import spark.implicits._
@@ -166,61 +85,23 @@ class PartitioningSpec extends SparkSpec {
     assert(e.getMessage.contains("different quantizer"))
   }
 
-  test("ivfAppendIndex: build-half-then-append == full rebuild == live " +
-    "ivfTopK; empty delta is a no-op; quantizer pinned by meta") {
+  test("trained persisted IVF index: search is probe-only with spill " +
+    "duplicates collapsed; centroids persist with the index") {
     import spark.implicits._
     import graft.ops.Similarity
     def vec(seed: Int): Array[Float] =
       (0 until 8).map(d => ((seed * 29 + d * 13) % 11 - 5).toFloat).toArray
     val corpus = (10L to 49L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
     val queries = (1L to 4L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
-    val (half1, half2) = (corpus.filter(col("vec_id") < 30),
-      corpus.filter(col("vec_id") >= 30))
-    Similarity.ivfWriteIndex(half1, "ivfinc", numCentroids = 4, dim = 8,
-      buckets = 4)
-    Similarity.ivfAppendIndex(half2, "ivfinc") // buckets come from meta
-    Similarity.ivfAppendIndex( // empty delta: appends zero rows
-      Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"), "ivfinc")
-    Similarity.ivfWriteIndex(corpus, "ivffull", numCentroids = 4, dim = 8,
-      buckets = 4)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    val appended = rows(Similarity.ivfSearchIndexed(spark, queries, "ivfinc",
-      k = 5, numCentroids = 4, dim = 8, nprobe = 2))
-    val rebuilt = rows(Similarity.ivfSearchIndexed(spark, queries, "ivffull",
-      k = 5, numCentroids = 4, dim = 8, nprobe = 2))
-    val live = rows(Similarity.ivfTopK(corpus, queries, k = 5,
-      numCentroids = 4, dim = 8, nprobe = 2))
-    assert(appended.nonEmpty && appended === rebuilt && appended === live)
-    assert(spark.table("ivfinc_lists").count() ===
-      spark.table("ivffull_lists").count())
-  }
-
-  test("trained persisted IVF index: append == rebuild; search is probe-" +
-    "only with spill duplicates collapsed; centroids persist with the index") {
-    import spark.implicits._
-    import graft.ops.Similarity
-    def vec(seed: Int): Array[Float] =
-      (0 until 8).map(d => ((seed * 29 + d * 13) % 11 - 5).toFloat).toArray
-    val corpus = (10L to 49L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
-    val queries = (1L to 4L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
-    val (half1, half2) = (corpus.filter(col("vec_id") < 30),
-      corpus.filter(col("vec_id") >= 30))
-    // full build vs build-half-then-append — the delta is assigned under
-    // the PERSISTED centroids, so both must serve identical rows. Note:
-    // training on half1 vs full corpus yields different quantizers, so
-    // the append path trains on half1 and the "rebuild" comparison also
-    // trains on half1 to pin the centroid set.
-    Similarity.ivfWriteIndexTrained(half1, "tvinc", numCentroids = 4,
+    Similarity.ivfWriteIndexTrained(corpus, "tvidx", numCentroids = 4,
       dim = 8, buckets = 4, iters = 3, assignTop = 2)
-    Similarity.ivfAppendIndexTrained(half2, "tvinc")
-    val cents = spark.table("tvinc_cents").orderBy("ccid").collect()
+    val cents = spark.table("tvidx_cents").orderBy("ccid").collect()
       .map(_.getSeq[Long](1).toSeq).toSeq
     assert(cents.nonEmpty && cents.forall(_.size == 8))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
     val served = rows(Similarity.ivfSearchIndexedTrained(spark, queries,
-      "tvinc", k = 5, nprobe = 4))
+      "tvidx", k = 5, nprobe = 4))
     assert(served.nonEmpty)
     // no (query, neighbor) appears twice at ANY rank (spill dedup)
     val pairs = served.toSeq.map(t => (t._1, t._2))
@@ -230,14 +111,9 @@ class PartitioningSpec extends SparkSpec {
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("int"),
         col("sim")))
     val full = rows(Similarity.ivfSearchIndexedTrained(spark, queries,
-      "tvinc", k = 5, nprobe = cents.size))
+      "tvidx", k = 5, nprobe = cents.size))
     assert(full === brute,
       "full-probe trained index must equal exact cosine top-k")
-    // appending under a MISSING index fails fast, not a silent retrain
-    val e = intercept[Exception] {
-      Similarity.ivfAppendIndexTrained(half2, "no_such_index")
-    }
-    assert(e.getMessage.toLowerCase.contains("table"))
   }
 
   test("dropManagedTable on an EXTERNAL table drops the catalog entry but " +
@@ -265,21 +141,6 @@ class PartitioningSpec extends SparkSpec {
       s"managed location $loc should have been reclaimed")
   }
 
-  test("ivfAppendIndex refuses a pre-bucket-spec 2-column meta table with " +
-    "the rebuild remedy, not an opaque index error (round-12 ADVICE)") {
-    import spark.implicits._
-    import graft.ops.Similarity
-    // an index persisted by a pre-round-13 build: meta has no buckets col
-    Seq((4, 8)).toDF("num_centroids", "dim")
-      .write.mode("overwrite").saveAsTable("oldivf_meta")
-    val delta = Seq((1L, Array.fill(8)(0.5f))).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.ivfAppendIndex(delta, "oldivf")
-    }
-    assert(e.getMessage.contains("predates bucket-spec"))
-    assert(e.getMessage.contains("ivfWriteIndex"))
-  }
-
   test("saltedJoin tolerates map-typed columns on the big side") {
     import spark.implicits._
     // hash() rejects MapType — the salt must exclude map columns (at any
@@ -290,14 +151,5 @@ class PartitioningSpec extends SparkSpec {
     val small = (0L until 5L).map(i => (i, s"dim$i")).toDF("k", "d")
     val plain = big.join(small, "k").count()
     assert(Partitioning.saltedJoin(big, small, "k").count() === plain)
-  }
-
-  private def withSql[T](kv: (String, String))(f: => T): T = {
-    val prev = spark.conf.getOption(kv._1)
-    spark.conf.set(kv._1, kv._2)
-    try f finally prev match {
-      case Some(v) => spark.conf.set(kv._1, v)
-      case None => spark.conf.unset(kv._1)
-    }
   }
 }

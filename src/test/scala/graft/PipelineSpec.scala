@@ -198,6 +198,9 @@ class PipelineSpec extends SparkSpec {
     assert(bus.columns === Array("topic", "value"))
     assert(bus.count() === 6)
     assert(bus.select("topic").distinct().count() === 3)
+    // option keys are case-insensitive: TOPICS selects the same bus mode
+    val busUpper = spark.read.format("graft-spool").option("TOPICS", "true").load(root)
+    assert(busUpper.columns === bus.columns && busUpper.count() === 6)
   }
 
   test("graft-spool sink: append continues the per-directory sequence") {

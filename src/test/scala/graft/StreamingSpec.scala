@@ -119,38 +119,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows(2L) === Seq(20L))
   }
 
-  test("dsirScore streams append-mode: fixed ratio table, scan-fused scoring == batch") {
-    import spark.implicits._
-    import graft.ops.Sampling
-    val corpus = Seq((1L, "alpha beta alpha", "en"), (2L, "alpha beta gamma", "en"),
-      (3L, "delta epsilon zeta", "fr"), (4L, "delta zeta delta", "fr"))
-      .toDF("doc_id", "text", "lang")
-    // models trained offline on the snapshot; the stream scores new docs
-    val ratio = Sampling.dsirLogRatio(corpus, corpus.filter($"lang" === "en"))
-    val arriving = Seq((10L, "alpha beta"), (11L, "delta zeta"))
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = Sampling.dsirScore(stream.toDF().toDF("doc_id", "text"), ratio)
-      .writeStream.format("memory").queryName("dsir_stream")
-      .outputMode("append").start()
-    stream.addData(arriving: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("dsir_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).sortBy(_._1)
-    val batch = Sampling.dsirScore(arriving.toDF("doc_id", "text"), ratio)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).sortBy(_._1)
-    assert(streamed === batch)
-    // scan-fused agreement with the join+agg weights form (summation
-    // order may differ -> tolerance, not equality)
-    val joined = Sampling.dsirWeights(corpus, corpus.filter($"lang" === "en"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val local = Sampling.dsirScore(corpus, ratio).select("doc_id", "logw")
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    local.foreach { case (id, w) => assert(math.abs(w - joined(id)) < 1e-9) }
-    // the English-shaped arrival outscores the French-shaped one
-    assert(streamed(0)._3 > streamed(1)._3)
-  }
-
   test("curation ops run unchanged on a stream: piiScrub over MemoryStream == batch") {
     import spark.implicits._
     import graft.ops.TextAnalysis

@@ -832,33 +832,6 @@ class UrlSpec extends SparkSpec {
       s"paramStats should be scan + one agg:\n$p")
   }
 
-  test("paramPolicyDedup: flagged params become the domain strip list " +
-    "(session-shaped AND constant boilerplate), under-supported params " +
-    "are kept, and dedup on the learned key folds variants the static " +
-    "canonicalizer can't — n_canon_variants counts the added value") {
-    import spark.implicits._
-    val urls = Seq(
-      // sid: 2 values over 2 urls on ex.com -> high_card, stripped
-      (1L, "https://a.ex.com/p?sid=x1"),
-      (2L, "https://a.ex.com/p?sid=x2"),
-      (3L, "https://a.ex.com/p"),
-      // id: 1 value over 2 urls -> constant, stripped
-      (4L, "https://b.ex.com/q?id=1"),
-      (5L, "https://b.ex.com/q?id=1"),
-      (6L, "https://b.ex.com/q"),
-      // page: support 1 < minSupport -> KEPT
-      (7L, "https://c.ex.com/r?page=2"))
-      .toDF("doc_id", "url")
-    val got = Url.paramPolicyDedup(urls, minSupport = 2L)
-      .orderBy("learned_canon")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    assert(got === Seq(
-      ("https://a.ex.com/p", 1L, 3L, 3L),          // 3 static forms folded
-      ("https://b.ex.com/q", 4L, 3L, 2L),          // ?id=1 and bare folded
-      ("https://c.ex.com/r?page=2", 7L, 1L, 1L)))  // content param kept
-  }
-
   test("paramStats support counts DISTINCT pages (r18 ADVICE): one URL " +
     "repeating a param (?a=1&a=2) is support 1, not 2 — it can neither " +
     "satisfy minSupport=2 alone nor flag high_card from one page") {
@@ -871,7 +844,8 @@ class UrlSpec extends SparkSpec {
     assert(r.getAs[Long]("n_urls") === 1L, "support must be distinct pages")
     assert(r.getAs[Long]("n_vals") === 2L)
     // and the policy (minSupport = 2) learns NOTHING from one page
-    val out = Url.paramPolicyDedup(urls, minSupport = 2L).collect()
+    val out = Url.paramPolicyDedupCorroborated(
+      urls.withColumn("fp", lit("f1")), minSupport = 2L).collect()
     assert(out.head.getString(0) === "https://a.ex.com/p?a=1&a=2",
       "a single page's repeated param must not be stripped")
   }
@@ -896,10 +870,15 @@ class UrlSpec extends SparkSpec {
       ("https://a.ex.com/p", 1L, 2L),        // sid corroborated, folded
       ("https://a.ex.com/q?id=1", 3L, 1L),   // content id KEPT apart
       ("https://a.ex.com/q?id=2", 4L, 1L)))
-    // the distribution-only policy folds BOTH — the precision loss the
-    // corroboration rule exists to prevent
-    val blind = Url.paramPolicyDedup(urls.select("doc_id", "url"),
-      minSupport = 2L).collect()
+    // the distribution-only policy (every constant_val/high_card param at
+    // minSupport) folds BOTH — the precision loss the corroboration rule
+    // exists to prevent
+    val blindPolicy = Url.paramStats(urls.select("doc_id", "url"))
+      .filter((col("constant_val") || col("high_card")) && col("n_urls") >= 2L)
+      .groupBy("domain")
+      .agg(sort_array(collect_set(col("param"))).as("_drop"))
+    val blind = Url.applyParamPolicy(urls.select("doc_id", "url"), blindPolicy)
+      .select("learned_canon").distinct().collect()
     assert(blind.length === 2,
       "fixture no longer exercises the blind policy's content-id collapse")
   }
@@ -908,12 +887,15 @@ class UrlSpec extends SparkSpec {
     "page are not re-admitted (novelty keys on the learned canonical); " +
     "genuinely novel pages pass with intra-batch first-occurrence") {
     import spark.implicits._
-    // the corpus the policy is learned from: sid is high-card on ex.com
+    // the corpus the policy is learned from: sid is high-card on ex.com,
+    // and its /p variants share one content fingerprint (session shape)
     val corpus = Seq(
-      (1L, "https://a.ex.com/p?sid=x1"), (2L, "https://a.ex.com/p?sid=x2"),
-      (3L, "https://a.ex.com/q"), (4L, "https://a.ex.com/q?sid=x9"))
-      .toDF("doc_id", "url")
-    val policy = Url.paramPolicy(corpus, minSupport = 2L)
+      (1L, "https://a.ex.com/p?sid=x1", "fpP"),
+      (2L, "https://a.ex.com/p?sid=x2", "fpP"),
+      (3L, "https://a.ex.com/q", "fpQ"),
+      (4L, "https://a.ex.com/q?sid=x9", "fpQ"))
+      .toDF("doc_id", "url", "fp")
+    val policy = Url.paramPolicyCorroborated(corpus, minSupport = 2L)
     // catalog: /p was admitted earlier (learned key, no sid)
     val catalog = Seq("https://a.ex.com/p").toDF("learned_canon")
     val delta = Seq(
@@ -928,7 +910,7 @@ class UrlSpec extends SparkSpec {
   }
 
   test("round-19 shuffle fallback: crawlDiscover, recrawlQueue and " +
-    "paramPolicyDedup per-domain frames stop broadcasting past the " +
+    "paramPolicyDedupCorroborated per-domain frames stop broadcasting past the " +
     "ceiling (r17/r18 verdict #1) — both plan modes row-identical") {
     import spark.implicits._
     val docs = spark.range(0, 120).select(col("id").as("doc_id"),
@@ -967,9 +949,10 @@ class UrlSpec extends SparkSpec {
       Url.recrawlQueue(sitemaps, fetchLog, robots,
         expectedDomains = 1L << 40),
       Seq("domain", "queue_rank"))
-    modes("paramPolicyDedup",
-      Url.paramPolicyDedup(urls),
-      Url.paramPolicyDedup(urls, expectedDomains = 1L << 40),
+    val sessionUrls = Url.syntheticSessionUrls(docs).localCheckpoint()
+    modes("paramPolicyDedupCorroborated",
+      Url.paramPolicyDedupCorroborated(sessionUrls),
+      Url.paramPolicyDedupCorroborated(sessionUrls, expectedDomains = 1L << 40),
       Seq("learned_canon"))
   }
 }

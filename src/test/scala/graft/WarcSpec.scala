@@ -4,8 +4,8 @@ import graft.sources.Warc
 import org.apache.spark.sql.functions._
 
 /** ISO-28500 WARC record reader (round 13): Content-Length framing,
-  * hostile payloads, generator round-trip, and the graft-spool
-  * `format=warc` DSv2 path. */
+  * hostile payloads, generator round-trip, and graft-spool's refusal of
+  * a `format` option. */
 class WarcSpec extends SparkSpec {
 
   private def rec(typ: String, id: String, uri: String, body: String,
@@ -85,76 +85,31 @@ class WarcSpec extends SparkSpec {
     assert(back === expect)
   }
 
-  test("graft-spool format=warc: real files through the DSv2 seam match " +
-    "the in-memory operator row-for-row; plan is a BatchScan") {
+  test("graft-spool rejects a format option: a WARC directory read " +
+    "through the line-framed spool fails loudly and names Warc.readRecords") {
     import spark.implicits._
-    val pages = (0L until 30L).map(i =>
-      (i, s"http://h.example.com/p/$i", s"<html><p>page $i.</p></html>"))
+    val pages = Seq((0L, "http://h.example.com/p/0", "<html><p>page 0.</p></html>"))
       .toDF("doc_id", "url", "html")
-    val files = Warc.syntheticWarc(pages, numFiles = 3)
     val dir = java.nio.file.Files.createTempDirectory("warc-spool")
-    files.collect().foreach { r =>
-      java.nio.file.Files.write(
-        dir.resolve(f"crawl-${r.getLong(0)}%05d.warc"),
+    Warc.syntheticWarc(pages, numFiles = 1).collect().foreach { r =>
+      java.nio.file.Files.write(dir.resolve("crawl-00000.warc"),
         r.getString(1).getBytes("UTF-8"))
     }
-    val df = spark.read.format("graft-spool")
-      .option("format", "warc").load(dir.toString)
-    assert(df.queryExecution.executedPlan.toString.contains("BatchScan"),
-      "format=warc did not go through the DSv2 scan")
-    // file name carries the generator's file_id: crawl-000NN.warc
-    val viaDsv2 = df.select(
-        substring(col("file"), 7, 5).cast("long").as("file_id"),
-        col("rec_index"), col("warc_type"), col("record_id"),
-        col("target_uri"), col("content_length"), col("http_status"),
-        col("html"))
-      .orderBy("file_id", "rec_index").collect().toSeq
-    val viaOp = Warc.readRecords(files)
-      .select(col("file_id"), col("rec_index"), col("warc_type"),
-        col("record_id"), col("target_uri"), col("content_length"),
-        col("http_status"), col("html"))
-      .orderBy("file_id", "rec_index").collect().toSeq
-    assert(viaDsv2 === viaOp)
-  }
-
-  test("streaming format=warc: a live crawl tails the spool per-file — " +
-    "streamed rows equal the batch parse, arrivals append in order") {
-    import spark.implicits._
-    def pages(lo: Long, hi: Long) = (lo until hi).map(i =>
-      (i, s"http://h.example.com/p/$i", s"<html><p>page $i.</p></html>"))
-      .toDF("doc_id", "url", "html")
-    val dir = java.nio.file.Files.createTempDirectory("warc-stream")
-    def writeFiles(df: org.apache.spark.sql.DataFrame, tag: String): Unit =
-      Warc.syntheticWarc(df, numFiles = 2).collect().foreach { r =>
-        java.nio.file.Files.write(
-          dir.resolve(f"crawl-$tag-${r.getLong(0)}%05d.warc"),
-          r.getString(1).getBytes("UTF-8"))
-      }
-    writeFiles(pages(0L, 20L), "a")
-    val q = spark.readStream.format("graft-spool")
-      .option("format", "warc").load(dir.toString)
-      .writeStream.format("memory").queryName("warc_stream_sink")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      def streamed() = spark.table("warc_stream_sink")
-        .select("file", "rec_index", "warc_type", "record_id", "target_uri",
-          "content_length", "http_status", "html")
-        .orderBy("file", "rec_index").collect().toSeq
-      def batch() = spark.read.format("graft-spool")
-        .option("format", "warc").load(dir.toString)
-        .select("file", "rec_index", "warc_type", "record_id", "target_uri",
-          "content_length", "http_status", "html")
-        .orderBy("file", "rec_index").collect().toSeq
-      val first = streamed()
-      assert(first.nonEmpty && first === batch())
-      // a fresh crawl file lands above the watermark -> next micro-batch
-      // appends exactly its records, never re-reading earlier files
-      writeFiles(pages(100L, 110L), "b")
-      q.processAllAvailable()
-      assert(streamed() === batch())
-      assert(streamed().size > first.size)
-    } finally q.stop()
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    val reads: Seq[(String, () => Any)] = Seq(
+      "batch" -> (() => spark.read.format("graft-spool")
+        .option("format", "warc").load(dir.toString).collect()),
+      "batch, upper-case key" -> (() => spark.read.format("graft-spool")
+        .option("FORMAT", "warc").load(dir.toString).collect()),
+      "stream" -> (() => spark.readStream.format("graft-spool")
+        .option("format", "warc").load(dir.toString)))
+    reads.foreach { case (name, read) =>
+      val e = intercept[Exception](read())
+      assert(messages(e).contains("Warc.readRecords"),
+        s"$name: unexpected failure ${messages(e)}")
+    }
   }
 
   test("syntheticWarcGz: per-record gzip members parse byte-parity with " +
@@ -173,21 +128,6 @@ class WarcSpec extends SparkSpec {
     val viaGz = Warc.readRecords(gz)
       .orderBy("file_id", "rec_index").collect().toSeq
     assert(viaGz === plain)
-    // and the DSv2 seam reads .warc.gz files identically
-    val dir = java.nio.file.Files.createTempDirectory("warcgz-spool")
-    gz.collect().foreach { r =>
-      java.nio.file.Files.write(
-        dir.resolve(f"crawl-${r.getLong(0)}%05d.warc.gz"),
-        r.getAs[Array[Byte]]("payload"))
-    }
-    val viaDsv2 = spark.read.format("graft-spool")
-      .option("format", "warc").load(dir.toString)
-      .select(substring(col("file"), 7, 5).cast("long").as("file_id"),
-        col("rec_index"), col("html"))
-      .orderBy("file_id", "rec_index").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
-    assert(viaDsv2 === plain.map(r =>
-      (r.getLong(0), r.getInt(1), r.getString(8))))
   }
 
   test("non-UTF-8 page: body decodes per its declared charset, framing " +
