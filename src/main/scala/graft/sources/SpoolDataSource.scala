@@ -1,13 +1,18 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, attribute}
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -23,17 +28,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** Spool-directory DataSourceV2 — the real source-API seam behind the
-  * bridged connectors (SURVEY.md §2.1: RabbitMQ S3 / HTTP S5 / gRPC S6 have
-  * no first-party Spark source; a receiver bridges messages into a spool
-  * directory). Where the previous resolution borrowed the built-in text
-  * file stream, this is the connector seam itself: a `TableProvider`
-  * exposing BATCH_READ and MICRO_BATCH_READ over the spool, registered as
-  * `graft-spool` — exactly the interface a live RabbitMQ/HTTP receiver
-  * source would implement, with the spool directory standing in for the
-  * broker cursor.
+/** Spool-directory DataSourceV2 — the one source-API seam every offline
+  * topic reads through ([[SourceDef.stream]] / [[SourceDef.batch]]).
+  * RabbitMQ S3 / HTTP S5 / gRPC S6 have no first-party Spark source, so a
+  * receiver bridges their messages into a spool directory (SURVEY.md
+  * §2.1); the broker-backed sources use the same layout offline. A
+  * `TableProvider` exposing BATCH_READ and MICRO_BATCH_READ over the
+  * spool, registered as `graft-spool` — exactly the interface a live
+  * receiver source would implement, with the spool directory standing in
+  * for the broker cursor.
   *
   * Contract (matches the bridge receivers' behavior):
+  *  - one message per line, framed as the built-in text source frames it
+  *    (`\n`, `\r` or `\r\n` ends a line), its bytes kept as they are;
   *  - files are IMMUTABLE once written, with LEXICOGRAPHICALLY increasing
   *    names: the streaming watermark is a plain string comparison, so
   *    numeric sequence names MUST be zero-padded ("part-00009" then
@@ -54,17 +61,19 @@ import org.apache.spark.util.SerializableConfiguration
   *  - one InputPartition per file (a production receiver coalesces spool
   *    files; at 100 TB the spool is the bridge buffer, not the lake);
   *  - the SESSION's Hadoop configuration rides to both the driver listing
-  *    and the executor readers (SerializableConfiguration), so an
-  *    hdfs:/s3a: spool with `spark.hadoop.*` credentials behaves exactly
-  *    like a local one.
+  *    and, broadcast ([[SpoolDataSource.ship]]), the executor readers and
+  *    writers, so an hdfs:/s3a: spool with `spark.hadoop.*` credentials
+  *    behaves exactly like a local one.
   */
 object SpoolDataSource {
   val NAME = "graft-spool"
-  val SCHEMA: StructType = StructType(Seq(StructField("value", StringType)))
-  /** Schema of the `topics` mode (option `topics=true`): the whole bus —
-    * row-level topic + payload, the Kafka sink/source column contract. */
-  val TOPIC_SCHEMA: StructType = StructType(Seq(
-    StructField("topic", StringType), StructField("value", StringType)))
+
+  /** `(value)` for one topic directory; `(topic, value)` in `topics` mode
+    * (option `topics=true`): the whole bus — row-level topic + payload,
+    * the Kafka sink/source column contract. */
+  private[sources] def schema(topics: Boolean): StructType = StructType(
+    (if (topics) Seq(StructField("topic", StringType)) else Nil) :+
+      StructField("value", StringType))
 
   /** Topic name → spool sub-directory. Topic URIs carry characters Hadoop
     * paths reject (the `:` in `persistent://tenant/ns/topic`), so the
@@ -72,7 +81,7 @@ object SpoolDataSource {
     * deterministic, collision-free, and reversible, so a bridge daemon
     * draining spool dirs to a real broker can recover the exact topic. */
   def topicDir(topic: String): String =
-    topic.getBytes(java.nio.charset.StandardCharsets.UTF_8).map {
+    topic.getBytes(UTF_8).map {
       case b if (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
         (b >= '0' && b <= '9') || b == '.' || b == '_' || b == '-' =>
         b.toChar.toString
@@ -80,8 +89,11 @@ object SpoolDataSource {
     }.mkString
 
   /** Inverse of [[topicDir]]: `topics` mode recovers the broker topic
-    * from the spool directory name. */
-  private def topicFromDir(dir: String): String = {
+    * from the spool directory name. None for a name [[topicDir]] never
+    * produces — a truncated or signed escape (`%2`, `%-1`, `%+A`), a
+    * lower-case hex pair, a character outside [A-Za-z0-9._-] — which would
+    * otherwise decode to a topic no writer published to. */
+  private def topicFromDir(dir: String): Option[String] = Try {
     val out = new java.io.ByteArrayOutputStream()
     var i = 0
     while (i < dir.length) {
@@ -89,14 +101,19 @@ object SpoolDataSource {
         out.write(Integer.parseInt(dir.substring(i + 1, i + 3), 16)); i += 3
       } else { out.write(dir.charAt(i).toInt); i += 1 }
     }
-    new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-  }
+    new String(out.toByteArray, UTF_8)
+  }.toOption.filter(topicDir(_) == dir)
 
   /** The active session's Hadoop conf — spark.hadoop.* settings included. */
   private[sources] def hadoopConf(): Configuration =
     SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
+
+  /** `conf` for executors, as Spark's file sources ship theirs: a broadcast
+    * is deserialized once per executor, a conf in a factory once per task. */
+  private[sources] def ship(conf: SerializableConfiguration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(conf)
 
   /** The FileSystem every graft-spool read, write, commit and listing
     * goes through. For a path on the stock local FileSystem it is a fresh
@@ -155,11 +172,9 @@ object SpoolDataSource {
         // a directory that does not decode as a topic (someone else's
         // data dropped under the bus root) is skipped loudly, not fatal
         // to every read of the whole bus
-        try {
-          val topic = topicFromDir(d.getPath.getName)
-          listFiles(fs, d.getPath).map { case (_, fp) => (topic, fp) }
-        } catch {
-          case _: NumberFormatException | _: StringIndexOutOfBoundsException =>
+        topicFromDir(d.getPath.getName) match {
+          case Some(topic) => listFiles(fs, d.getPath).map { case (_, fp) => (topic, fp) }
+          case None =>
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"$NAME: ignoring non-topic directory ${d.getPath} " +
                 "(name is not a percent-encoded topic)")
@@ -190,8 +205,7 @@ private[sources] class SpoolRawLocalFileSystem extends RawLocalFileSystem {
 class SpoolDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = SpoolDataSource.NAME
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    if (options.getBoolean("topics", false)) SpoolDataSource.TOPIC_SCHEMA
-    else SpoolDataSource.SCHEMA
+    SpoolDataSource.schema(options.getBoolean("topics", false))
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     // option keys are case-insensitive, as inferSchema sees them
@@ -217,10 +231,10 @@ class SpoolDataSource extends TableProvider with DataSourceRegister {
   * tagged with its topic; writes route each row to its topic's directory.
   * Streaming reads stay per-topic (a multi-topic watermark would couple
   * unrelated topics' progress; subscribe per topic as Kafka does). */
-class SpoolTable(path: String, topics: Boolean = false)
+class SpoolTable(path: String, topics: Boolean)
     extends Table with SupportsRead with SupportsWrite {
-  // captured at table creation (driver): one conf for every scan this
-  // DataFrame plans, serializable for the executor-side readers
+  // captured at table creation (driver): one conf for every scan and
+  // write this table plans
   private val conf = new SerializableConfiguration(SpoolDataSource.hadoopConf())
   // batch consistency: freeze the listing at first batch use, NOT per
   // action — df.count() then df.collect() must see the same files
@@ -235,19 +249,17 @@ class SpoolTable(path: String, topics: Boolean = false)
         .map { case (_, fp) => SpoolFilePartition(fp, null) }
   }
 
+  private val readSchema = SpoolDataSource.schema(topics)
+
   override def name(): String = s"${SpoolDataSource.NAME}($path)"
-  override def schema(): StructType =
-    if (topics) SpoolDataSource.TOPIC_SCHEMA else SpoolDataSource.SCHEMA
+  override def schema(): StructType = readSchema
   override def capabilities(): util.Set[TableCapability] =
-    (if (topics)
-      Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-        TableCapability.STREAMING_WRITE)
-     else Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE)).asJava
+    (Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE) ++
+      (if (topics) Nil else Seq(TableCapability.MICRO_BATCH_READ))).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan =
-        new SpoolScan(path, topics, conf, () => batchSnapshot)
+        new SpoolScan(path, topics, readSchema, conf, () => batchSnapshot)
     }
 
   /** Publish seam (the write half of the bridge contract): the Kafka sink's
@@ -276,25 +288,22 @@ class SpoolTable(path: String, topics: Boolean = false)
       s"${SpoolDataSource.NAME} sink: topics=true requires a `topic` column " +
         "(rows without one would land in the bus root, unreadable in topics mode)")
     new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite =
-          new SpoolBatchWrite(path, s.fieldNames.indexOf("value"), topicIdx, conf)
-        override def toStreaming: StreamingWrite =
-          new SpoolStreamingWrite(path, s.fieldNames.indexOf("value"), topicIdx, conf)
-      }
+      override def build(): Write =
+        new SpoolWrite(path, s.fieldNames.indexOf("value"), topicIdx, conf)
     }
   }
 }
 
-class SpoolScan(path: String, topics: Boolean, conf: SerializableConfiguration,
+class SpoolScan(path: String, topics: Boolean, schema: StructType,
+                conf: SerializableConfiguration,
                 snapshot: () => Seq[SpoolFilePartition]) extends Scan {
-  override def readSchema(): StructType =
-    if (topics) SpoolDataSource.TOPIC_SCHEMA else SpoolDataSource.SCHEMA
+  private lazy val shipped = SpoolDataSource.ship(conf)
+  override def readSchema(): StructType = schema
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
       snapshot().map(p => p: InputPartition).toArray
     override def createReaderFactory(): PartitionReaderFactory =
-      new SpoolReaderFactory(conf)
+      new SpoolReaderFactory(shipped)
   }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     require(!topics, s"${SpoolDataSource.NAME}: streaming reads are per-topic " +
@@ -353,6 +362,7 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
   // driver-side and stateless: one FileSystem for every trigger's listing
   @transient private lazy val dir = new Path(path)
   @transient private lazy val fs = SpoolDataSource.fileSystem(dir, conf.value)
+  @transient private lazy val shipped = SpoolDataSource.ship(conf)
 
   override def initialOffset(): Offset = SpoolOffset("")
   override def deserializeOffset(json: String): Offset = {
@@ -378,7 +388,7 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
     batch.map(f => SpoolFilePartition(f._2): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new SpoolReaderFactory(conf)
+    new SpoolReaderFactory(shipped)
   override def commit(end: Offset): Unit = () // spool files are retained
   override def stop(): Unit = ()
 }
@@ -460,50 +470,50 @@ private object SpoolCommit {
   }
 }
 
-class SpoolBatchWrite(root: String, valueIdx: Int, topicIdx: Int,
-                      conf: SerializableConfiguration) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new SpoolWriterFactory(root, valueIdx, topicIdx, conf)
+/** The sink's one Write, for batch jobs and streaming queries alike: an
+  * epoch commit IS a batch commit over that epoch's temp files, so both
+  * forms run [[SpoolCommit]] and write through one factory.
+  *
+  * Streaming delivery is AT-LEAST-ONCE on failure recovery — matching the
+  * Kafka sink's documented guarantee (and strictly stronger than the
+  * reference Filterer's fire-and-forget `sendAsync`, which loses messages
+  * on failure, Filterer.kt:42–45): a crash between an epoch's renames and
+  * Spark's offset-log commit replays the epoch into fresh sequence
+  * numbers. Readers needing exactly-once dedup on message content, as
+  * they must with Kafka. */
+class SpoolWrite(root: String, valueIdx: Int, topicIdx: Int,
+                 conf: SerializableConfiguration)
+    extends Write with BatchWrite with StreamingWrite {
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+  override def useCommitCoordinator(): Boolean = true
+  private lazy val factory =
+    new SpoolWriterFactory(root, valueIdx, topicIdx, SpoolDataSource.ship(conf))
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = factory
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    factory
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     SpoolCommit.commit(root, messages, conf)
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     SpoolCommit.abort(root, messages, conf)
-}
-
-/** Streaming publish: one [[SpoolCommit]] per epoch. Delivery is
-  * AT-LEAST-ONCE on failure recovery — matching the Kafka sink's
-  * documented guarantee (and strictly stronger than the reference
-  * Filterer's fire-and-forget `sendAsync`, which loses messages on
-  * failure, Filterer.kt:42–45): a crash between an epoch's renames and
-  * Spark's offset-log commit replays the epoch into fresh sequence
-  * numbers. Readers needing exactly-once dedup on message content, as
-  * they must with Kafka. */
-class SpoolStreamingWrite(root: String, valueIdx: Int, topicIdx: Int,
-                          conf: SerializableConfiguration) extends StreamingWrite {
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new SpoolStreamingWriterFactory(root, valueIdx, topicIdx, conf)
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    SpoolCommit.commit(root, messages, conf)
+    commit(messages)
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    SpoolCommit.abort(root, messages, conf)
+    abort(messages)
 }
 
 /** Top-level (NOT an inner class): the factory ships to executors, and an
-  * anonymous subclass would drag its enclosing StreamingWrite — which
-  * holds nothing serializable-worthy — into the task closure. */
-class SpoolStreamingWriterFactory(root: String, valueIdx: Int, topicIdx: Int,
-                                  conf: SerializableConfiguration)
-    extends StreamingDataWriterFactory {
+  * inner class would drag its enclosing Write into the task closure. A
+  * streaming writer's temp names carry the epoch. */
+class SpoolWriterFactory(root: String, valueIdx: Int, topicIdx: Int,
+                         conf: Broadcast[SerializableConfiguration])
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new SpoolDataWriter(root, valueIdx, topicIdx, partitionId, taskId, conf)
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new SpoolDataWriter(root, valueIdx, topicIdx, partitionId, taskId,
       conf, epochId)
-}
-
-class SpoolWriterFactory(root: String, valueIdx: Int, topicIdx: Int,
-                         conf: SerializableConfiguration) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SpoolDataWriter(root, valueIdx, topicIdx, partitionId, taskId, conf)
 }
 
 /** One task's writer: one temp file per topic it sees. A file costs one
@@ -512,7 +522,7 @@ class SpoolWriterFactory(root: String, valueIdx: Int, topicIdx: Int,
   * [[SpoolDataSource.fileSystem]] on first use. */
 class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
                       partitionId: Int, taskId: Long,
-                      conf: SerializableConfiguration,
+                      conf: Broadcast[SerializableConfiguration],
                       epochId: Long = -1L) extends DataWriter[InternalRow] {
   // one open temp file per topic this task has seen; task-scoped names
   // (partitionId + taskId, plus the epoch in streaming mode) cannot
@@ -520,7 +530,7 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
   private val open = scala.collection.mutable.LinkedHashMap[
     String, (SpoolWriteEntry, java.io.BufferedWriter)]()
   private var n = 0
-  private lazy val fs = SpoolDataSource.fileSystem(new Path(root), conf.value)
+  private lazy val fs = SpoolDataSource.fileSystem(new Path(root), conf.value.value)
 
   private def writerFor(dir: String): java.io.BufferedWriter =
     open.getOrElseUpdate(dir, {
@@ -529,16 +539,15 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
       val p = new Path(dir, name)
       fs.mkdirs(new Path(dir))
       (SpoolWriteEntry(dir, name, partitionId), new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(fs.create(p, false),
-          java.nio.charset.StandardCharsets.UTF_8)))
+        new java.io.OutputStreamWriter(fs.create(p, false), UTF_8)))
     })._2
 
   override def write(row: InternalRow): Unit = {
     require(!row.isNullAt(valueIdx),
       s"${SpoolDataSource.NAME} sink: null `value` (row ${n} of partition $partitionId)")
     val value = row.getUTF8String(valueIdx).toString
-    // BufferedReader.readLine() on the consume side terminates on \n, \r,
-    // AND \r\n — a bare carriage return would silently split the message
+    // the consume side's LineReader terminates on \n, \r, AND \r\n — a
+    // bare carriage return would silently split the message
     require(!value.exists(c => c == '\n' || c == '\r'),
       s"${SpoolDataSource.NAME} sink: `value` contains a line terminator — " +
         "the spool frames one message per line (escape or re-encode the payload)")
@@ -569,7 +578,7 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
   override def close(): Unit = ()
 }
 
-class SpoolReaderFactory(conf: SerializableConfiguration)
+class SpoolReaderFactory(conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[SpoolFilePartition]
@@ -577,18 +586,19 @@ class SpoolReaderFactory(conf: SerializableConfiguration)
       // hadoop FS (not java.io) with the SESSION conf, so hdfs:/s3a: spools
       // read identically on a cluster (credentials, nameservices included)
       private val p = new Path(part.filePath)
-      private val in = SpoolDataSource.fileSystem(p, conf.value).open(p)
-      private val lines = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+      // Hadoop's LineReader, as the built-in text source frames lines: \n,
+      // \r or \r\n ends one. A row keeps the line's bytes as they are; a
+      // decode and re-encode would turn invalid UTF-8 into U+FFFD
+      private val lines = new LineReader(SpoolDataSource.fileSystem(p, conf.value.value).open(p))
+      private val line = new Text()
       private val topicUtf8 =
         if (part.topic == null) null else UTF8String.fromString(part.topic)
-      private var current: String = _
-      override def next(): Boolean = { current = lines.readLine(); current != null }
-      override def get(): InternalRow =
-        if (topicUtf8 == null)
-          new GenericInternalRow(Array[Any](UTF8String.fromString(current)))
-        else
-          new GenericInternalRow(Array[Any](topicUtf8, UTF8String.fromString(current)))
+      override def next(): Boolean = lines.readLine(line) > 0
+      override def get(): InternalRow = {
+        val value = UTF8String.fromBytes(line.copyBytes())
+        new GenericInternalRow(
+          if (topicUtf8 == null) Array[Any](value) else Array[Any](topicUtf8, value))
+      }
       override def close(): Unit = lines.close()
     }
   }

@@ -77,21 +77,17 @@ object LegacyTranslators {
   /** Translate raw payloads (`value` string column) for one source.
     *
     * `eventId` is a random UUID in the reference (asserted only non-blank,
-    * TranslatorsIntegrationTest.kt:226). `deterministicIds=true` derives it
-    * as sha256(source|eventType|payload) instead so results are
-    * oracle-checkable; the wire shape is identical.
+    * TranslatorsIntegrationTest.kt:226). Here it is
+    * sha256(source|eventType|payload), as [[translateMux]] derives it, so
+    * results are oracle-checkable; the wire shape is identical.
     */
-  def translate(raw: DataFrame, spec: LegacySpec,
-                deterministicIds: Boolean = false): Translated = {
+  def translate(raw: DataFrame, spec: LegacySpec): Translated = {
     val value = col("value")
     val required = spec.requiredFields
       .map(f => get_json_object(value, "$." + f).isNotNull)
       .reduce(_ && _)
     val ts = tsColumn(value, spec)
-    val eventId =
-      if (deterministicIds)
-        sha2(concat_ws("|", lit(spec.source), lit(spec.eventType), value), 256)
-      else expr("uuid()")
+    val eventId = sha2(concat_ws("|", lit(spec.source), lit(spec.eventType), value), 256)
     Translated.tag(raw, required && ts.isNotNull,
       "eventId" -> eventId,
       "source" -> lit(spec.source),

@@ -12,24 +12,21 @@ class LegacySpec extends SparkSpec {
 
   test("user-profile: epoch-seconds `created` canonicalized to ISO (ref :259-283)") {
     val in = """{"uid":42,"name":"user-42","created":1698314400}"""
-    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.userProfile,
-      deterministicIds = true)
+    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.userProfile)
     val r = t.valid.select("source", "eventType", "timestamp").head()
     assert(r === Row("user-service", "USER_PROFILE_EVENT", "2023-10-26T10:00:00Z"))
   }
 
   test("order-record: ISO `placedAt` passes through unchanged (ref :285-301)") {
     val in = """{"orderId":"ORD-7","items":["item-1"],"placedAt":"2023-10-26T10:00:00Z"}"""
-    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.orderRecord,
-      deterministicIds = true)
+    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.orderRecord)
     val r = t.valid.select("source", "eventType", "timestamp").head()
     assert(r === Row("order-service", "ORDER_EVENT", "2023-10-26T10:00:00Z"))
   }
 
   test("envelope: data carries the ORIGINAL payload verbatim; eventId non-blank (ref :223-231)") {
     val in = """{"txnId":"TXN-1","amount":995,"currency":"EUR","time":"2023-10-26T10:00:00Z"}"""
-    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.paymentNotice,
-      deterministicIds = true)
+    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.paymentNotice)
     val r = t.valid.select(
       get_json_object(col("event_json"), "$.eventId"),
       get_json_object(col("event_json"), "$.source"),
@@ -57,7 +54,7 @@ class LegacySpec extends SparkSpec {
 
   test("poison payload (missing required fields) quarantined") {
     val t = LegacyTranslators.translate(strings("""{"poison":true}""", null),
-      LegacyTranslators.shipmentStatus, deterministicIds = true)
+      LegacyTranslators.shipmentStatus)
     assert(t.valid.count() === 0)
     assert(t.quarantine.count() === 2)
   }
@@ -66,7 +63,7 @@ class LegacySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val bad = """{"uid":1,"name":"x","created":"oops"}"""
     val t = LegacyTranslators.translate(strings(bad),
-      LegacyTranslators.userProfile, deterministicIds = true)
+      LegacyTranslators.userProfile)
     assert(t.valid.count() === 0 && t.quarantine.count() === 1)
     import spark.implicits._
     val mux = LegacyTranslators.translateMux(Seq((bad, 0)).toDF("value", "kind"), col("kind"))
@@ -85,8 +82,7 @@ class LegacySpec extends SparkSpec {
     val raw = rows.toDF("value", "kind")
     val mux = LegacyTranslators.translateMux(raw, col("kind"))
     val perSource = LegacyTranslators.all.zipWithIndex.map { case (spec, k) =>
-      LegacyTranslators.translate(raw.filter(col("kind") === k), spec,
-        deterministicIds = true).valid
+      LegacyTranslators.translate(raw.filter(col("kind") === k), spec).valid
     }.reduce(_ unionByName _)
     val muxRows = mux.valid.select("event_json").collect().map(_.getString(0)).sorted
     val refRows = perSource.select("event_json").collect().map(_.getString(0)).sorted
@@ -98,8 +94,7 @@ class LegacySpec extends SparkSpec {
     // json extraction UNESCAPES, so the splice must re-escape or the
     // envelope is malformed and the splitter silently nulls it
     val in = """{"txnId":"T","amount":1,"currency":"EUR","time":"12:00\"x\\y"}"""
-    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.paymentNotice,
-      deterministicIds = true)
+    val t = LegacyTranslators.translate(strings(in), LegacyTranslators.paymentNotice)
     val r = t.valid.select(
       get_json_object(col("event_json"), "$.timestamp").as("ts"),
       get_json_object(col("event_json"), "$.eventType").as("et")).head()

@@ -80,16 +80,27 @@ class PipelineSpec extends SparkSpec {
 
   test("graft-spool V2: bridged sources resolve through the custom TableProvider") {
     val base = spoolDir()
-    // batch plan is a DSv2 BatchScan over our table, not the text file source
-    val plan = Sources.httpInput.batch(spark, base)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BatchScan graft-spool"), s"expected V2 scan, got:\n$plan")
-    // and it reads the same rows the built-in text source would
-    val viaV2 = Sources.httpInput.batch(spark, base)
-      .collect().map(_.getString(0)).sorted
-    val viaText = spark.read.text(s"$base/${Sources.httpInput.outputTopic}")
-      .collect().map(_.getString(0)).sorted
-    assert(viaV2 === viaText)
+    Pipeline.vehicleBindings.map(_.source).foreach { source =>
+      // batch plan is a DSv2 BatchScan over our table, not the text file source
+      val plan = source.batch(spark, base).queryExecution.executedPlan.toString
+      assert(plan.contains("BatchScan graft-spool"),
+        s"${source.name}: expected V2 scan, got:\n$plan")
+      // and it reads the same rows the built-in text source would
+      val viaV2 = source.batch(spark, base).collect().map(_.getString(0)).sorted
+      val viaText = spark.read.text(s"$base/${source.outputTopic}")
+        .collect().map(_.getString(0)).sorted
+      assert(viaV2 === viaText, source.name)
+      // the streaming plan scans the same table, micro-batch by micro-batch
+      val q = source.stream(spark, base).writeStream.format("memory")
+        .queryName(s"resolve_${source.name.replace('-', '_')}").start()
+      val streamPlan = try {
+        q.processAllAvailable()
+        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan.toString
+      } finally q.stop()
+      assert(streamPlan.contains("MicroBatchScan") && streamPlan.contains("SpoolScan"),
+        s"${source.name}: expected a graft-spool micro-batch scan, got:\n$streamPlan")
+    }
   }
 
   test("graft-spool V2: micro-batches advance on new spool files (watermark offsets)") {
@@ -330,6 +341,47 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("E1/E2 topology dead-letter keeps each source's poison bytes: invalid " +
+    "UTF-8 survives, a bare CR ends a line") {
+    val base = java.nio.file.Files.createTempDirectory("spool_bytes").toString
+    // per source: a valid record, a CR-only break, a poison record, LF
+    val poison = Pipeline.vehicleBindings.map { b =>
+      val dir = java.nio.file.Paths.get(base, b.source.outputTopic)
+      java.nio.file.Files.createDirectories(dir)
+      val bad = rawPoison(b.functionName)
+      java.nio.file.Files.write(dir.resolve("part-0.txt"),
+        vehicleLines(b.source.outputTopic).head.getBytes("UTF-8") ++ Array('\r'.toByte) ++ bad ++
+          Array('\n'.toByte))
+      b.functionName -> bad.toSeq
+    }.toMap
+    val (_, dl) = runTopology(base)
+    poison.foreach { case (fn, bad) =>
+      val got = dl.filter(col("source") === fn).select(col("value").cast("binary"))
+        .collect().map(_.getAs[Array[Byte]](0).toSeq).toSeq
+      assert(got === Seq(bad), s"$fn: dead-letter bytes differ from the spool's")
+    }
+    // each valid record was split from its poison line by the bare CR
+    assert(dl.filter(col("source") === "filterer").count() === 3)
+  }
+
+  test("graft-spool bus read skips directory names no topic encodes to") {
+    val root = java.nio.file.Files.createTempDirectory("spool_ghosts")
+    val real = "persistent://t-0/integration/telemetry"
+    writeSpool(root.toString, graft.sources.SpoolDataSource.topicDir(real), Seq("r1", "r2"))
+    // %-1 and %+A parse as signed hex (0xFF, a line feed), %2 is truncated
+    Seq("%-1", "%+A", "%2").foreach(d => writeSpool(root.toString, d, Seq(s"ghost $d")))
+    // a non-ASCII name, made by the shell: the JVM's file-name encoding
+    // may not be able to spell it
+    val mk = new ProcessBuilder("sh", "-c",
+      """d="$(printf 'caf\303\251')" && mkdir "$d" && printf 'ghost\n' > "$d/part-0.txt"""")
+      .directory(root.toFile).inheritIO().start()
+    assert(mk.waitFor() === 0)
+    assert(root.toFile.list().length === 5)
+    val bus = spark.read.format("graft-spool").option("topics", "true").load(root.toString)
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    assert(bus === Array(real -> "r1", real -> "r2"))
+  }
+
   test("broker option-mapping lands on a real DataStreamReader: format + " +
     "reference-config options, asserted without a broker") {
     // reflect the reader's internals (source format + extraOptions) — the
@@ -390,13 +442,6 @@ class PipelineSpec extends SparkSpec {
     // receiver; the V2 seam takes only the spool path at load())
     assert(Sources.rabbitMqInput.readerOptions.isEmpty)
     assert(Sources.httpInput.readerOptions.isEmpty)
-
-    // Spark's Kafka source forbids enable.auto.commit — a config asking
-    // for it must fail at DEFINITION time, not at stream start
-    intercept[IllegalArgumentException] {
-      graft.sources.KafkaSource("bad", "b:9092", "t", "g",
-        autoCommitEnabled = true, outputTopic = "raw")
-    }
   }
 }
 
@@ -427,20 +472,29 @@ object PipelineSpec {
       String.join("\n", lines: _*).getBytes("UTF-8"))
   }
 
-  /** A vehicle spool: one valid record per source, a poisoned Geotab
-    * record and the hostile Ford record below. */
-  def spoolDir(): String = {
-    val base = java.nio.file.Files.createTempDirectory("spool").toString
-    writeSpool(base, Sources.kinesisInput.outputTopic, Seq(
+  /** The vehicle spool, by topic: one valid record per source, a
+    * poisoned Geotab record and the hostile Ford record below. */
+  def vehicleLines: Map[String, Seq[String]] = Map(
+    Sources.kinesisInput.outputTopic -> Seq(
       """{"Device_ID":"g1","Vehicle_ID":"v1","Record_DateTime":"2023-10-26T10:00:00Z","Latitude":1.0,"Longitude":2.0}""",
-      """{"Device_ID":"broken"""))
-    writeSpool(base, Sources.kafkaInput.outputTopic, Seq(
-      """{"unit_id":"c1","vid":"v2","msg_ts":1698314400,"gps_lat":3.0,"gps_lon":4.0}"""))
-    writeSpool(base, Sources.httpInput.outputTopic, Seq(
+      """{"Device_ID":"broken"""),
+    Sources.kafkaInput.outputTopic -> Seq(
+      """{"unit_id":"c1","vid":"v2","msg_ts":1698314400,"gps_lat":3.0,"gps_lon":4.0}"""),
+    Sources.httpInput.outputTopic -> Seq(
       """{"vin":"v3","esn":"e3","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000}}""",
       fordSmuggler))
+
+  def spoolDir(): String = {
+    val base = java.nio.file.Files.createTempDirectory("spool").toString
+    vehicleLines.foreach { case (topic, lines) => writeSpool(base, topic, lines) }
     base
   }
+
+  /** A poison record whose bytes are not UTF-8: `{"x":"` 0xC3 0x28 `"}`
+    * plus a tag (0xC3 opens a two-byte sequence that 0x28 cannot end). */
+  def rawPoison(tag: String): Array[Byte] =
+    s"""{"x":"$tag:""".getBytes("UTF-8") ++ Array(0xC3.toByte, 0x28.toByte) ++
+      "\"}".getBytes("UTF-8")
 
   /** Hostile Ford record: its `fordExtraData` text trails a second member
     * which, spliced into the wire verbatim, would add a top-level

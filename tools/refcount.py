@@ -1,0 +1,284 @@
+#!/usr/bin/env python3
+"""Report the code that only tests reach, and the knobs nothing sets.
+
+Usage, from the root of a checkout (or with the checkout as argument):
+
+    python3 tools/refcount.py [ROOT]
+
+Reads every .scala/.py/.sh file under src/main/scala, src/test/scala,
+pipebench/src and tools, with comments and string literals stripped (a
+string's `$name` and `${...}` interpolations are kept, as code). Prints
+three lists and exits 0; it gates nothing.
+
+1. Test-only members. Every `def`/`val`/`var` declared at member indent
+   (two spaces) in src/main/scala that is not `private` or `override`.
+   Its name is counted as a whole word (not next to [A-Za-z0-9_$]) per
+   area: the declaring file minus the declaration line, other src/main
+   files, pipebench/src, tools, src/test. A member that only src/test
+   names is listed.
+2. File-local members. Members of that kind that nothing outside their
+   own file names: candidates for `private`, so the unused lint sees them.
+   (The compiler rejects a `private` member that another class or object
+   in the same file uses; compile after each change.)
+3. Knobs nothing sets. Every defaulted parameter of a `def` or class in
+   src/main/scala that no call outside src/test passes, by name or by
+   position, with a value other than its default. Calls are found by the
+   callee's name followed by its argument lists; `.copy(...)` of a case
+   class counts as a call of the class. A call in another file counts only
+   if that file names the callee's object or class, and a call with more
+   arguments than the callee has parameters is another method's.
+
+Name collisions only over-count, so lists 1 and 2 never name a member
+that is used; they can hide one that is not. List 3 can also miss a call
+made through a value whose class the calling file never names: check a
+listed parameter's callers before deleting it.
+"""
+import os
+import re
+import sys
+
+AREAS = ("src/main/scala", "src/test/scala", "pipebench/src", "tools")
+EXTS = (".scala", ".py", ".sh")
+WORD = "A-Za-z0-9_$"
+
+MEMBER = re.compile(
+    r"^  ((?:(?:final|lazy|implicit|private\[\w+\]|protected\[\w+\])\s+)*)"
+    r"(def|val|var)\s+([A-Za-z_][A-Za-z0-9_]*)")
+OWNER = re.compile(r"^(?:(?:private|final|sealed|abstract|case|implicit)\s+)*"
+                   r"(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
+SOURCES = {}  # file -> unstripped .scala text, filled by load()
+DEFAULTED = re.compile(
+    r"\b(?:def\s+([A-Za-z_][A-Za-z0-9_]*)(?:\[[^\]]*\])?|class\s+([A-Za-z_][A-Za-z0-9_]*)(?:\[[^\]]*\])?)\s*\(")
+
+
+def strip_scala(src):
+    """Blanks comments and string literals, keeping interpolated `$name` /
+    `${...}` text. Every offset holds, so a span of the result is the same
+    span of the source."""
+    out, i, n = [], 0, len(src)
+    while i < n:
+        c = src[i]
+        if src.startswith("//", i):
+            j = src.find("\n", i)
+            j = n if j < 0 else j
+            out.append(" " * (j - i)); i = j
+        elif src.startswith("/*", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                if src.startswith("/*", j): depth += 1; j += 2
+                elif src.startswith("*/", j): depth -= 1; j += 2
+                else: j += 1
+            out.append(re.sub(r"[^\n]", " ", src[i:j])); i = j
+        elif c == '"':
+            interp = i > 0 and re.match(r"[A-Za-z_]", src[i - 1]) is not None
+            triple = src.startswith('"""', i)
+            end = '"""' if triple else '"'
+            j = i + len(end)
+            body = []
+            while j < n and not src.startswith(end, j):
+                if not triple and src[j] == "\\":
+                    body.append("  "); j += 2; continue
+                if interp and src[j] == "$" and j + 1 < n:
+                    if src[j + 1] == "{":
+                        depth, k = 1, j + 2
+                        while k < n and depth:
+                            depth += {"{": 1, "}": -1}.get(src[k], 0); k += 1
+                        body.append("  " + src[j + 2:k - 1] + " "); j = k; continue
+                    m = re.match(r"\$([A-Za-z_][A-Za-z0-9_]*)", src[j:])
+                    if m:
+                        body.append(" " + m.group(1)); j += len(m.group(0)); continue
+                body.append("\n" if src[j] == "\n" else " "); j += 1
+            while triple and src.startswith('""""', j):  # closing run of quotes
+                body.append(" "); j += 1
+            out.append(end + "".join(body) + end); i = j + len(end)
+        elif c == "'" and re.match(r"'(\\.|[^'\\\n])'", src[i:i + 4]):
+            m = re.match(r"'(\\.|[^'\\\n])'", src[i:])
+            out.append("'" + " " * (len(m.group(0)) - 2) + "'"); i += len(m.group(0))
+        else:
+            out.append(c); i += 1
+    return "".join(out)
+
+
+def strip_script(src, ext):
+    """Blanks `#` comments and (for Python) string literals."""
+    if ext == ".py":
+        src = re.sub(r'("""|\'\'\')(?:.|\n)*?\1',
+                     lambda m: re.sub(r"[^\n]", " ", m.group(0)), src)
+        src = re.sub(r'"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])*\'', '""', src)
+    return re.sub(r"(?<![$\w])#[^\n]*", "", src)
+
+
+def load(root):
+    files = {}
+    for area in AREAS:
+        for d, _, names in os.walk(os.path.join(root, area)):
+            for name in sorted(names):
+                ext = os.path.splitext(name)[1]
+                if ext not in EXTS:
+                    continue
+                path = os.path.join(d, name)
+                with open(path, encoding="utf-8", errors="replace") as f:
+                    src = f.read()
+                rel = os.path.relpath(path, root)
+                files[rel] = (area, strip_scala(src) if ext == ".scala" else strip_script(src, ext))
+                if ext == ".scala":
+                    assert len(files[rel][1]) == len(src), rel
+                    SOURCES[rel] = src
+    return files
+
+
+def owner(text, offset):
+    """The top-level object, class or trait declared last before `offset`."""
+    names = [m.group(1) for m in OWNER.finditer(text, 0, offset)]
+    return names[-1] if names else None
+
+
+def count(text, name):
+    return len(re.findall(r"(?<![%s])%s(?![%s])" % (WORD, re.escape(name), WORD), text))
+
+
+def members(files):
+    """(file, line, name) of every public member declared in src/main."""
+    for rel, (area, text) in files.items():
+        if area != "src/main/scala" or not rel.endswith(".scala"):
+            continue
+        for no, line in enumerate(text.split("\n"), 1):
+            m = MEMBER.match(line)
+            if m and m.group(3) != "main":
+                yield rel, no, m.group(3)
+
+
+def references(files, rel, no, name):
+    """Whole-word counts of `name` per area; the declaring file apart."""
+    refs = dict.fromkeys(("own file",) + AREAS, 0)
+    for other, (area, text) in files.items():
+        if other == rel:
+            lines = text.split("\n")
+            refs["own file"] += count("\n".join(lines[:no - 1] + lines[no:]), name)
+        else:
+            refs[area] += count(text, name)
+    return refs
+
+
+def groups(text, i):
+    """The balanced `(...)` argument lists starting at text[i], in order:
+    (offset of the list's content, content)."""
+    out = []
+    while True:
+        while i < len(text) and text[i] in " \t\n":
+            i += 1
+        if i >= len(text) or text[i] != "(":
+            return out
+        depth, j = 0, i
+        while j < len(text):
+            depth += {"(": 1, ")": -1}.get(text[j], 0)
+            j += 1
+            if depth == 0:
+                break
+        out.append((i + 1, text[i + 1:j - 1])); i = j
+
+
+def split_top(args, base):
+    """Splits an argument list at its top-level commas: (offset, part)."""
+    parts, depth, start = [], 0, 0
+    for k, c in enumerate(args):
+        if c in "([{": depth += 1
+        elif c in ")]}": depth -= 1
+        elif c == "," and depth == 0:
+            parts.append((base + start, args[start:k])); start = k + 1
+    if args[start:].strip():
+        parts.append((base + start, args[start:]))
+    return parts
+
+
+PARAM = re.compile(r"\s*(?:(?:implicit|val|var|override|private|final)\s+)*"
+                   r"([A-Za-z_][A-Za-z0-9_]*)\s*:(?:[^=]|=>)*?=(?!>)\s*(.*?)\s*$", re.S)
+NAMED = re.compile(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=>])\s*(.*?)\s*$", re.S)
+
+
+def knobs(files):
+    """(file, line, callee, param, default) never set outside src/test."""
+    def written(rel, start, end):  # source text, literals and all
+        return re.sub(r"\s+", " ", SOURCES[rel][start:end])
+
+    for rel, (area, text) in files.items():
+        if area != "src/main/scala" or not rel.endswith(".scala"):
+            continue
+        for m in DEFAULTED.finditer(text):
+            callee = m.group(1) or m.group(2)
+            plists = groups(text, m.end() - 1)
+            params = []  # (list index, position, name, default as written)
+            for li, (off, plist) in enumerate(plists):
+                for pos, (poff, p) in enumerate(split_top(plist, off)):
+                    pm = PARAM.match(p)
+                    if pm:
+                        params.append((li, pos, pm.group(1),
+                                       written(rel, poff + pm.start(2), poff + pm.end(2))))
+            if not params:
+                continue
+            arity = [len(split_top(pl, off)) for off, pl in plists]
+            home = m.group(2) or owner(text, m.start())
+            decl_end = plists[-1][0] + len(plists[-1][1])
+            names = [callee] + (["copy"] if m.group(2) else [])
+            set_ = set()
+            for other, (oarea, otext) in files.items():
+                if oarea == "src/test/scala" or other not in SOURCES:
+                    continue
+                # a call in another file can only reach this one if the
+                # file names its object or class (a qualified call or an
+                # import); same-named methods elsewhere are other methods
+                if other != rel and home and count(otext, home) == 0:
+                    continue
+                for nm in names:
+                    for cm in re.finditer(r"(?<![%s])%s(?:\[[^\]()]*\])?(?=\s*\()"
+                                          % (WORD, re.escape(nm)), otext):
+                        if other == rel and m.start() <= cm.start() < decl_end:
+                            continue
+                        for li, (off, call) in enumerate(groups(otext, cm.end())):
+                            args = split_top(call, off)
+                            if li >= len(arity) or len(args) > arity[li]:
+                                break  # more arguments than parameters: another method
+                            for pos, (aoff, a) in enumerate(args):
+                                am = NAMED.match(a)
+                                for (pl, pp, pn, pd) in params:
+                                    if pl != li:
+                                        continue
+                                    if am:
+                                        hit, v = am.group(1) == pn, (aoff + am.start(2), aoff + am.end(2))
+                                    else:
+                                        hit, v = nm != "copy" and pos == pp, (aoff, aoff + len(a))
+                                    if hit and written(other, *v).strip() != pd:
+                                        set_.add(pn)
+            line = text.count("\n", 0, m.start()) + 1
+            for (_, _, pn, pd) in params:
+                if pn not in set_:
+                    yield rel, line, callee, pn, pd
+
+
+def main():
+    root = sys.argv[1] if len(sys.argv) > 1 else os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))
+    files = load(root)
+    test_only, file_local = [], []
+    for rel, no, name in members(files):
+        refs = references(files, rel, no, name)
+        outside = sum(refs[a] for a in ("src/main/scala", "pipebench/src", "tools"))
+        if outside == 0 and refs["own file"] == 0 and refs["src/test/scala"] > 0:
+            test_only.append((rel, no, name, refs["src/test/scala"]))
+        elif outside == 0 and refs["own file"] > 0:
+            file_local.append((rel, no, name, refs["own file"], refs["src/test/scala"]))
+    print("test-only members (%d): only src/test names them" % len(test_only))
+    for rel, no, name, t in test_only:
+        print("  %s:%d %s (test refs %d)" % (rel, no, name, t))
+    print("file-local members (%d): nothing outside their file names them" % len(file_local))
+    for rel, no, name, own, t in file_local:
+        print("  %s:%d %s (own-file refs %d, test refs %d)" % (rel, no, name, own, t))
+    unset = sorted(set(knobs(files)))
+    print("defaulted parameters nothing outside src/test sets (%d)" % len(unset))
+    for rel, no, callee, pn, pd in unset:
+        print("  %s:%d %s(%s = %s)" % (rel, no, callee, pn, pd))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
