@@ -114,23 +114,43 @@ object Pipeline {
     * always-on pipeline wants the failure domains separate anyway (a
     * dead-letter sink outage must not stop tenant delivery). So each
     * query scans the cheap spool source itself. Returns (publish,
-    * deadLetter) handles; the caller owns their lifecycle. */
+    * deadLetter) handles; the caller owns their lifecycle.
+    *
+    * Both queries start with `spark.sql.artifact.isolation.enabled=false`
+    * (the stream's session clone, taken at `start()`, keeps it); the
+    * caller's own setting, or its absence, is restored before returning.
+    * Under artifact isolation every query start runs in a fresh session
+    * whose tasks get their own classloader, and Spark's generated-code
+    * cache is keyed by classloader and source, so each restart of the
+    * topology compiled all of its generated classes again, byte for byte
+    * the same as the last start's. Without isolation a restart reuses
+    * them. Isolation only separates the artifacts (jars, classes) a
+    * session adds; the topology adds none and runs no UDF class. */
   def runVehicleTopology(spark: SparkSession, spoolBase: String,
                          busRoot: String, deadLetterDir: String,
                          checkpointRoot: String, tenant: String = "acme")
       : (org.apache.spark.sql.streaming.StreamingQuery,
          org.apache.spark.sql.streaming.StreamingQuery) = {
     def outputs = publishAndDeadLetter(vehicleCmfStream(spark, spoolBase, tenant).tagged)
-    val publish = outputs._1
-      .writeStream.format("graft-spool")
-      .option("topics", "true").option("path", busRoot)
-      .option("checkpointLocation", s"$checkpointRoot/publish")
-      .outputMode("append").start()
-    val deadLetter = outputs._2
-      .writeStream.format("parquet").partitionBy("source")
-      .option("path", deadLetterDir)
-      .option("checkpointLocation", s"$checkpointRoot/dead-letter")
-      .outputMode("append").start()
-    (publish, deadLetter)
+    val callers = spark.conf.getAll.get(ArtifactIsolation)
+    spark.conf.set(ArtifactIsolation, "false")
+    try {
+      val publish = outputs._1
+        .writeStream.format("graft-spool")
+        .option("topics", "true").option("path", busRoot)
+        .option("checkpointLocation", s"$checkpointRoot/publish")
+        .outputMode("append").start()
+      val deadLetter = outputs._2
+        .writeStream.format("parquet").partitionBy("source")
+        .option("path", deadLetterDir)
+        .option("checkpointLocation", s"$checkpointRoot/dead-letter")
+        .outputMode("append").start()
+      (publish, deadLetter)
+    } finally callers match {
+      case Some(v) => spark.conf.set(ArtifactIsolation, v)
+      case None => spark.conf.unset(ArtifactIsolation)
+    }
   }
+
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 }

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, attribute}
 import java.util
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -22,6 +23,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -58,8 +60,10 @@ import org.apache.spark.util.SerializableConfiguration
   *    (watermark, latest] in name order, so restarts resume exactly and a
   *    file that appears BELOW the watermark (out-of-contract) is dropped,
   *    never double-read;
-  *  - one InputPartition per file (a production receiver coalesces spool
-  *    files; at 100 TB the spool is the bridge buffer, not the lake);
+  *  - whole files are packed, in name order, into InputPartitions by
+  *    Spark's own file-source rule ([[SpoolDataSource.pack]]): small files
+  *    share a task, and a partition's reader reads its files one after
+  *    another, each in line order;
   *  - the SESSION's Hadoop configuration rides to both the driver listing
   *    and, broadcast ([[SpoolDataSource.ship]]), the executor readers and
   *    writers, so an hdfs:/s3a: spool with `spark.hadoop.*` credentials
@@ -146,21 +150,22 @@ object SpoolDataSource {
   private val StockLocal = Set(classOf[LocalFileSystem].getName,
     "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem")
 
-  /** Sorted (name, fullPath) listing of the spool; missing dir = empty
-    * (the topic simply has not produced yet — matches broker semantics). */
-  private[sources] def listFiles(fs: FileSystem, p: Path): Seq[(String, String)] =
+  /** Name-sorted listing of the spool; missing dir = empty (the topic
+    * simply has not produced yet — matches broker semantics). */
+  private[sources] def listFiles(fs: FileSystem, p: Path): Seq[SpoolFile] =
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
         !s.getPath.getName.startsWith("_"))
-      .map(s => (s.getPath.getName, s.getPath.toString))
-      .sortBy(_._1)
+      .map(s => SpoolFile(s.getPath.getName, s.getPath.toString, s.getLen))
+      .sortBy(_.name)
 
   /** `topics` mode listing: every topic sub-directory of the bus root,
-    * flattened to (decoded topic, filePath). Directory count is
+    * flattened to its files, each tagged with its decoded topic, in
+    * (directory, name) order. Directory count is
     * topology-scale (one per topic/tenant); file listing parallelism is
     * not needed at that cardinality. */
-  private[sources] def listTopicFiles(fs: FileSystem, p: Path): Seq[(String, String)] =
+  private[sources] def listTopicFiles(fs: FileSystem, p: Path): Seq[SpoolFile] =
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.filter(_.isDirectory)
       // same hidden-name contract as the file listing: checkpoint /
@@ -173,7 +178,7 @@ object SpoolDataSource {
         // data dropped under the bus root) is skipped loudly, not fatal
         // to every read of the whole bus
         topicFromDir(d.getPath.getName) match {
-          case Some(topic) => listFiles(fs, d.getPath).map { case (_, fp) => (topic, fp) }
+          case Some(topic) => listFiles(fs, d.getPath).map(_.copy(topic = topic))
           case None =>
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"$NAME: ignoring non-topic directory ${d.getPath} " +
@@ -181,6 +186,34 @@ object SpoolDataSource {
             Seq.empty
         }
       }
+
+  /** Packs whole files, in listing order, into read partitions by the rule
+    * Spark's file sources use (`FilePartition`): each file counts as its
+    * length plus `spark.sql.files.openCostInBytes`, and a partition closes
+    * before a file that would take it past
+    * min(`maxPartitionBytes`, max(openCost, total / `minPartitionNum` or
+    * the default parallelism)). Unlike Spark, files are never split (a
+    * line may not straddle two tasks) and never reordered by size, so
+    * each partition reads a run of consecutive names. The conf is the
+    * active session's: the query's own while a stream plans a trigger. */
+  private[sources] def pack(files: Seq[SpoolFile]): Seq[SpoolFilePartition] =
+    if (files.isEmpty) Nil
+    else {
+      val spark = SparkSession.active
+      val openCost = spark.sessionState.conf.filesOpenCostInBytes
+      val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.len + openCost).sum)
+      val parts = Seq.newBuilder[SpoolFilePartition]
+      var current = Vector.empty[SpoolFile]
+      var size = 0L
+      files.foreach { f =>
+        if (current.nonEmpty && size + f.len > maxSplit) {
+          parts += SpoolFilePartition(current); current = Vector.empty; size = 0L
+        }
+        current :+= f
+        size += f.len + openCost
+      }
+      (parts += SpoolFilePartition(current)).result()
+    }
 }
 
 /** `RawLocalFileSystem` whose `setPermission` makes the chmod system call
@@ -238,15 +271,11 @@ class SpoolTable(path: String, topics: Boolean)
   private val conf = new SerializableConfiguration(SpoolDataSource.hadoopConf())
   // batch consistency: freeze the listing at first batch use, NOT per
   // action — df.count() then df.collect() must see the same files
-  private lazy val batchSnapshot: Seq[SpoolFilePartition] = {
+  private lazy val batchSnapshot: Seq[SpoolFile] = {
     val p = new Path(path)
     val fs = SpoolDataSource.fileSystem(p, conf.value)
-    if (topics)
-      SpoolDataSource.listTopicFiles(fs, p)
-        .map { case (t, fp) => SpoolFilePartition(fp, t) }
-    else
-      SpoolDataSource.listFiles(fs, p)
-        .map { case (_, fp) => SpoolFilePartition(fp, null) }
+    if (topics) SpoolDataSource.listTopicFiles(fs, p)
+    else SpoolDataSource.listFiles(fs, p)
   }
 
   private val readSchema = SpoolDataSource.schema(topics)
@@ -296,12 +325,12 @@ class SpoolTable(path: String, topics: Boolean)
 
 class SpoolScan(path: String, topics: Boolean, schema: StructType,
                 conf: SerializableConfiguration,
-                snapshot: () => Seq[SpoolFilePartition]) extends Scan {
+                snapshot: () => Seq[SpoolFile]) extends Scan {
   private lazy val shipped = SpoolDataSource.ship(conf)
   override def readSchema(): StructType = schema
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      snapshot().map(p => p: InputPartition).toArray
+      SpoolDataSource.pack(snapshot()).toArray
     override def createReaderFactory(): PartitionReaderFactory =
       new SpoolReaderFactory(shipped)
   }
@@ -335,11 +364,11 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
   @transient private var accounted: Set[String] = null
   @transient private var warnedDropped: Set[String] = Set.empty
 
-  private def noteDropped(files: Seq[(String, String)], watermark: String): Unit = {
+  private def noteDropped(files: Seq[SpoolFile], watermark: String): Unit = {
     if (accounted == null)
-      accounted = files.collect { case (n, _) if n <= watermark => n }.toSet
-    val dropped = files.collect { case (n, _)
-      if n <= watermark && !accounted.contains(n) && !warnedDropped.contains(n) => n }
+      accounted = files.collect { case f if f.name <= watermark => f.name }.toSet
+    val dropped = files.map(_.name).filter(n =>
+      n <= watermark && !accounted.contains(n) && !warnedDropped.contains(n))
     if (dropped.nonEmpty) {
       log.warn(s"graft-spool($path): ${dropped.size} file(s) sort at or below " +
         s"the committed watermark '$watermark' but were never part of a batch " +
@@ -374,7 +403,7 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
   }
   override def latestOffset(): Offset = {
     val files = SpoolDataSource.listFiles(fs, dir)
-    val seen = if (files.isEmpty) "" else files.last._1
+    val seen = if (files.isEmpty) "" else files.last.name
     if (seen > highWater) highWater = seen
     SpoolOffset(highWater)
   }
@@ -383,9 +412,9 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
     val hi = end.asInstanceOf[SpoolOffset].watermark
     val files = SpoolDataSource.listFiles(fs, dir)
     noteDropped(files, lo)
-    val batch = files.filter { case (name, _) => name > lo && name <= hi }
-    accounted ++= batch.map(_._1)
-    batch.map(f => SpoolFilePartition(f._2): InputPartition).toArray
+    val batch = files.filter(f => f.name > lo && f.name <= hi)
+    accounted ++= batch.map(_.name)
+    SpoolDataSource.pack(batch).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new SpoolReaderFactory(shipped)
@@ -393,10 +422,13 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
   override def stop(): Unit = ()
 }
 
-/** One spool file; `topic` is non-null only in `topics` mode (the reader
-  * then emits the two-column (topic, value) rows). */
-case class SpoolFilePartition(filePath: String, topic: String = null)
-    extends InputPartition
+/** One listed spool file; `topic` is non-null only in `topics` mode (the
+  * reader then emits the two-column (topic, value) rows). */
+case class SpoolFile(name: String, path: String, len: Long, topic: String = null)
+
+/** One read task: whole files, read one after another in this order
+  * ([[SpoolDataSource.pack]]). */
+case class SpoolFilePartition(files: Seq[SpoolFile]) extends InputPartition
 
 /** One task-written temp file: which spool dir it belongs to, its hidden
   * temp name, and the writing partition (the commit orders by partition so
@@ -430,7 +462,7 @@ private object SpoolCommit {
     val fs = SpoolDataSource.fileSystem(new Path(root), conf.value)
     entries.groupBy(_.dir).foreach { case (dir, es) =>
       val existing = SpoolDataSource.listFiles(fs, new Path(dir))
-        .map(_._1).filter(_.startsWith("part-"))
+        .map(_.name).filter(_.startsWith("part-"))
       var seq = existing
         .map(n => n.stripPrefix("part-").takeWhile(_.isDigit))
         .filter(_.nonEmpty).map(_.toLong).foldLeft(-1L)(math.max) + 1
@@ -528,27 +560,30 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
   // (partitionId + taskId, plus the epoch in streaming mode) cannot
   // collide across speculative attempts or epochs
   private val open = scala.collection.mutable.LinkedHashMap[
-    String, (SpoolWriteEntry, java.io.BufferedWriter)]()
+    String, (SpoolWriteEntry, java.io.BufferedOutputStream)]()
   private var n = 0
   private lazy val fs = SpoolDataSource.fileSystem(new Path(root), conf.value.value)
 
-  private def writerFor(dir: String): java.io.BufferedWriter =
+  private def streamFor(dir: String): java.io.BufferedOutputStream =
     open.getOrElseUpdate(dir, {
       val epochTag = if (epochId < 0) "" else s"e$epochId-"
       val name = f".tmp-$epochTag$partitionId%05d-$taskId-${open.size}%03d"
       val p = new Path(dir, name)
       fs.mkdirs(new Path(dir))
-      (SpoolWriteEntry(dir, name, partitionId), new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(fs.create(p, false), UTF_8)))
+      (SpoolWriteEntry(dir, name, partitionId),
+        new java.io.BufferedOutputStream(fs.create(p, false)))
     })._2
 
   override def write(row: InternalRow): Unit = {
     require(!row.isNullAt(valueIdx),
       s"${SpoolDataSource.NAME} sink: null `value` (row ${n} of partition $partitionId)")
-    val value = row.getUTF8String(valueIdx).toString
+    // the value's bytes go out as they are: a decode and re-encode would
+    // turn invalid UTF-8 into U+FFFD
+    val value = row.getUTF8String(valueIdx)
     // the consume side's LineReader terminates on \n, \r, AND \r\n — a
-    // bare carriage return would silently split the message
-    require(!value.exists(c => c == '\n' || c == '\r'),
+    // bare carriage return would silently split the message. In UTF-8 the
+    // bytes 0x0A and 0x0D occur only as those two characters
+    require(!hasLineTerminator(value),
       s"${SpoolDataSource.NAME} sink: `value` contains a line terminator — " +
         "the spool frames one message per line (escape or re-encode the payload)")
     val dir =
@@ -559,9 +594,16 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
             s"$partitionId) — route or filter null topics before publishing")
         s"$root/${SpoolDataSource.topicDir(row.getUTF8String(topicIdx).toString)}"
       }
-    val w = writerFor(dir)
-    w.write(value); w.write('\n')
+    val out = streamFor(dir)
+    value.writeTo(out); out.write('\n')
     n += 1
+  }
+
+  /** Whether `v` holds a 0x0A or 0x0D byte, in one pass. */
+  private def hasLineTerminator(v: UTF8String): Boolean = {
+    var i = 0
+    while (i < v.numBytes && v.getByte(i) != '\n' && v.getByte(i) != '\r') i += 1
+    i < v.numBytes
   }
 
   override def commit(): WriterCommitMessage = {
@@ -580,26 +622,49 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
 
 class SpoolReaderFactory(conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[SpoolFilePartition]
-    new PartitionReader[InternalRow] {
-      // hadoop FS (not java.io) with the SESSION conf, so hdfs:/s3a: spools
-      // read identically on a cluster (credentials, nameservices included)
-      private val p = new Path(part.filePath)
-      // Hadoop's LineReader, as the built-in text source frames lines: \n,
-      // \r or \r\n ends one. A row keeps the line's bytes as they are; a
-      // decode and re-encode would turn invalid UTF-8 into U+FFFD
-      private val lines = new LineReader(SpoolDataSource.fileSystem(p, conf.value.value).open(p))
-      private val line = new Text()
-      private val topicUtf8 =
-        if (part.topic == null) null else UTF8String.fromString(part.topic)
-      override def next(): Boolean = lines.readLine(line) > 0
-      override def get(): InternalRow = {
-        val value = UTF8String.fromBytes(line.copyBytes())
-        new GenericInternalRow(
-          if (topicUtf8 == null) Array[Any](value) else Array[Any](topicUtf8, value))
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new SpoolPartitionReader(partition.asInstanceOf[SpoolFilePartition].files,
+      conf.value.value)
+}
+
+/** Reads one partition's files one after another, each in line order. A
+  * file is opened when the one before it is exhausted, so an empty file
+  * yields nothing and the next one follows. */
+private final class SpoolPartitionReader(files: Seq[SpoolFile], conf: Configuration)
+    extends PartitionReader[InternalRow] {
+  private val pending = files.iterator
+  // hadoop FS (not java.io) with the SESSION conf, so hdfs:/s3a: spools
+  // read identically on a cluster (credentials, nameservices included);
+  // one FileSystem for the partition, whose files share one spool root
+  private var fs: FileSystem = null
+  // Hadoop's LineReader, as the built-in text source frames lines: \n,
+  // \r or \r\n ends one. A row keeps the line's bytes as they are; a
+  // decode and re-encode would turn invalid UTF-8 into U+FFFD
+  private var lines: LineReader = null
+  private var topicUtf8: UTF8String = null
+  private val line = new Text()
+
+  @tailrec override def next(): Boolean =
+    if (lines != null && lines.readLine(line) > 0) true
+    else {
+      close()
+      if (!pending.hasNext) false
+      else {
+        val f = pending.next()
+        val p = new Path(f.path)
+        if (fs == null) fs = SpoolDataSource.fileSystem(p, conf)
+        lines = new LineReader(fs.open(p))
+        topicUtf8 = if (f.topic == null) null else UTF8String.fromString(f.topic)
+        next()
       }
-      override def close(): Unit = lines.close()
     }
+
+  override def get(): InternalRow = {
+    val value = UTF8String.fromBytes(line.copyBytes())
+    new GenericInternalRow(
+      if (topicUtf8 == null) Array[Any](value) else Array[Any](topicUtf8, value))
   }
+
+  override def close(): Unit =
+    if (lines != null) { lines.close(); lines = null }
 }

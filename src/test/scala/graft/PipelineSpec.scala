@@ -26,6 +26,27 @@ class PipelineSpec extends SparkSpec {
     (s"$out/bus", spark.read.parquet(s"$out/dead-letter"))
   }
 
+  /** [[smallFiles]]' ten files, packed: at most one partition per core
+    * (local[4]), every file once in name order, the empty file 4 between
+    * two others of its partition. */
+  private def assertPacked(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Unit = {
+    val names = parts.toSeq.map(_.asInstanceOf[graft.sources.SpoolFilePartition].files.map(_.name))
+    assert(spark.sparkContext.defaultParallelism === 4)
+    assert(names.size <= 4, names)
+    assert(names.flatten === (0 until 10).map(i => f"part-$i%05d"), names)
+    assert(names.exists { p => val i = p.indexOf("part-00004"); i > 0 && i < p.size - 1 }, names)
+  }
+
+  /** `df` (column `value`, over [[smallFiles]] at `dir`) holds the rows
+    * `spark.read.text` reads, and each file's lines in file order. */
+  private def assertReadsPacked(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    val rows = df.collect().map(_.getString(0)).toSeq
+    assert(rows.sorted === spark.read.text(dir).collect().map(_.getString(0)).toSeq.sorted)
+    rows.groupBy(_.takeWhile(_ != '-')).foreach { case (file, lines) =>
+      assert(lines === lines.indices.map(j => s"$file-l$j"), file)
+    }
+  }
+
   test("S1-S7: every connector from pipeline.yaml is defined with its output topic") {
     val topics = Sources.all.map(s => s.name -> s.outputTopic).toMap
     assert(topics === Map(
@@ -182,6 +203,48 @@ class PipelineSpec extends SparkSpec {
     assert(topics === Array(
       "persistent://acme/integration/shipment-events",
       "persistent://acme/integration/user-profile-events"))
+  }
+
+  test("graft-spool batch read packs ten small files into at most one " +
+    "partition per core, reading them as the text source does") {
+    val dir = smallFiles(java.nio.file.Files.createTempDirectory("spool_pack"), "f", 10)
+    val parts = new graft.sources.SpoolTable(dir, false)
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toBatch.planInputPartitions()
+    assertPacked(parts)
+    val df = spark.read.format("graft-spool").load(dir)
+    assert(df.rdd.getNumPartitions === parts.length)
+    assertReadsPacked(df, dir)
+  }
+
+  test("graft-spool micro-batch packs ten small files into at most one " +
+    "partition per core, reading them as the text source does") {
+    val dir = smallFiles(java.nio.file.Files.createTempDirectory("spool_pack_stream"), "f", 10)
+    val stream = new graft.sources.SpoolMicroBatchStream(dir,
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    assertPacked(stream.planInputPartitions(stream.initialOffset(), stream.latestOffset()))
+    val q = spark.readStream.format("graft-spool").load(dir)
+      .writeStream.format("memory").queryName("spool_pack_stream").start()
+    try q.processAllAvailable() finally q.stop()
+    assertReadsPacked(spark.table("spool_pack_stream"), dir)
+  }
+
+  test("graft-spool bus read: two topics' files in one partition keep each row's topic") {
+    val root = java.nio.file.Files.createTempDirectory("spool_pack_topics")
+    val topics = Seq("persistent://a/n/t", "persistent://b/n/t")
+    topics.zipWithIndex.foreach { case (t, i) =>
+      smallFiles(root.resolve(graft.sources.SpoolDataSource.topicDir(t)), s"t$i-", 5)
+    }
+    val parts = new graft.sources.SpoolTable(root.toString, true)
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toBatch.planInputPartitions()
+      .map(_.asInstanceOf[graft.sources.SpoolFilePartition].files.map(_.topic).distinct)
+    assert(parts.length <= 4 && parts.exists(_.size == 2), parts.toSeq)
+    val rows = spark.read.format("graft-spool").option("topics", "true").load(root.toString)
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(rows.length === 2 * (2 + 3 + 4 + 2)) // file 4 is empty
+    rows.foreach { case (t, v) => assert(v.startsWith(s"t${topics.indexOf(t)}-"), (t, v)) }
   }
 
   test("graft-spool sink: dynamic topic publish round-trips per tenant") {
@@ -364,6 +427,32 @@ class PipelineSpec extends SparkSpec {
     assert(dl.filter(col("source") === "filterer").count() === 3)
   }
 
+  test("graft-spool sink: a value that is not UTF-8 lands on the bus byte for byte") {
+    val root = java.nio.file.Files.createTempDirectory("spool_raw").toFile
+    spark.range(1).select(lit("persistent://a/n/t").as("topic"),
+        unhex(lit("7B2278223A22C328227D")).cast("string").as("value"))
+      .write.format("graft-spool").mode("append")
+      .option("topics", "true").option("path", root.toString).save()
+    val parts = topicDirs(root).flatMap(_.listFiles()).filter(_.getName.startsWith("part-"))
+    assert(parts.length === 1)
+    assert(java.nio.file.Files.readAllBytes(parts.head.toPath).toSeq ===
+      ("7B2278223A22C328227D0A".grouped(2).map(Integer.parseInt(_, 16).toByte).toSeq))
+  }
+
+  test("E1/E2 topology restarted over fresh directories compiles no generated " +
+    "code again and leaves the session conf as it found it") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val compiled = (1 to 2).map { _ =>
+      val conf0 = spark.conf.getAll
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      runTopology(spoolDir())
+      assert(spark.conf.getAll === conf0)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    assert(compiled(1) === 0,
+      s"the restart compiled ${compiled(1)} classes (the first start ${compiled(0)})")
+  }
+
   test("graft-spool bus read skips directory names no topic encodes to") {
     val root = java.nio.file.Files.createTempDirectory("spool_ghosts")
     val real = "persistent://t-0/integration/telemetry"
@@ -460,6 +549,19 @@ object PipelineSpec {
       .toDF("topic", "value")
       .write.format("graft-spool").mode("append")
       .option("topics", "true").option("path", root).save()
+  }
+
+  /** Writes `n` small files `part-00000` ... under `dir`: file i holds
+    * the lines `<prefix>i-l0`, `<prefix>i-l1`, ... (2 + i % 3 of them),
+    * except file 4, which is empty. Returns `dir`. */
+  def smallFiles(dir: java.nio.file.Path, prefix: String, n: Int): String = {
+    java.nio.file.Files.createDirectories(dir)
+    (0 until n).foreach { i =>
+      val lines = if (i == 4) Nil else (0 until 2 + i % 3).map(j => s"$prefix$i-l$j")
+      java.nio.file.Files.write(dir.resolve(f"part-$i%05d"),
+        lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+    }
+    dir.toString
   }
 
   def topicDirs(root: java.io.File): Array[java.io.File] =
