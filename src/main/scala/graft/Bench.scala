@@ -53,8 +53,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    import Harness.{cpus, sfDir}
     val spark = Harness.session(cpus)
     val registry = Harness.selected()
     Harness.warm(spark, sfDir)
@@ -100,11 +99,6 @@ object Bench {
     }
     awaitQuiet("for quiet host")
     val loadBefore = loadavg()
-    // SPARK_GRAFT_SAMPLES=1 drops to single-sample timing — ONLY for
-    // long evidence runs at non-canonical SFs (the sf1 exponent run:
-    // min2med3 would triple a multi-hour sweep). Unset = the default
-    // min2med3 contract the driver's canonical runs rely on.
-    val singleSample = sys.env.get("SPARK_GRAFT_SAMPLES").contains("1")
     // toRdd.count(), NOT count(): a count() action lets Catalyst prune
     // every deterministic projection (and the sort), so scan-fused
     // operators — md5/regexp/transform pipelines, the very work being
@@ -145,8 +139,7 @@ object Bench {
     def measure(q: Query): Row = {
       val la0 = loadavg()
       val timed = Harness.fenced(spark) {
-        if (singleSample) sampleOf(q)
-        else sampleOf(q).flatMap { t1 =>
+        sampleOf(q).flatMap { t1 =>
           sampleOf(q) match {
             case Some(t2) if math.max(t1, t2) <= math.min(t1, t2) * 1.5 =>
               Some(math.min(t1, t2))
@@ -242,9 +235,8 @@ object Bench {
     val detailPath = java.nio.file.Paths.get(
       if (sys.env.contains("SPARK_GRAFT_ONLY")) "/tmp/BENCH_DETAIL.json"
       else "BENCH_DETAIL.json")
-    val timingMode = if (singleSample) "single" else "min2med3"
     def line(queriesField: String) =
-      s"""{"metric":"total","value":${f3(okResults.map(_.sec).sum)},"unit":"sec",$queriesField,"ok_count":${okResults.size},"failed":${jsonArr(results.filterNot(_.ok).map(_.name))},"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"canonical":$canonical,"retried":${jsonArr(retried.keys.toSeq.sorted)},"contended":${jsonArr(results.filter(r => r.ok && !r.clean).map(_.name).sorted)},"bar_retried":${jsonArr(barRetried.keys.toSeq.sorted)},"bar_breaches":${jsonArr(results.filter(breached).map(_.name).sorted)},"fence_waited_sec":$fenceWaited,"timing":"$timingMode","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(okResults.map(_.sec).sum)},"unit":"sec",$queriesField,"ok_count":${okResults.size},"failed":${jsonArr(results.filterNot(_.ok).map(_.name))},"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"canonical":$canonical,"retried":${jsonArr(retried.keys.toSeq.sorted)},"contended":${jsonArr(results.filter(r => r.ok && !r.clean).map(_.name).sorted)},"bar_retried":${jsonArr(barRetried.keys.toSeq.sorted)},"bar_breaches":${jsonArr(results.filter(breached).map(_.name).sorted)},"fence_waited_sec":$fenceWaited,"timing":"min2med3","sf":"$sfDir"}"""
     val detailJson = line(s""""queries":$qs""")
     try java.nio.file.Files.writeString(detailPath, detailJson + "\n")
     catch { case NonFatal(t) =>

@@ -10,6 +10,13 @@ import scala.util.control.NonFatal
   * persisted-RDD leak fence. */
 object Harness {
 
+  /** Local cores for a measurement main's session (SPARK_GRAFT_CPUS). */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The corpus directory Bench, Plans and Profile run against
+    * (SPARK_GRAFT_SF_DIR). */
+  val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Harness.session(Harness.cpus)
     val queries = Harness.selected()
     new java.io.File(outDir).mkdirs()
     queries.foreach { q =>

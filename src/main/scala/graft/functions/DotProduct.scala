@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -86,43 +85,4 @@ object DotProduct {
   /** Column-API form: `dot(col("a"), col("b"))`. */
   def dot(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
-}
-
-/** Session extension registering graft's native functions for SQL callers
-  * (`spark.sql.extensions=graft.functions.GraftExtensions` →
-  * `SELECT graft_dot(a, b)`; Column-API callers don't need it) and the
-  * [[RewriteDotProduct]] optimizer rule that upgrades the composable
-  * aggregate/zip_with dot-product idiom to the fused expression. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2Squared].getName, "graft_l2sq"),
-      (children: Seq[Expression]) => L2Squared(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinSeededMd5].getName, "graft_minhash"),
-      (children: Seq[Expression]) => MinSeededMd5(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      // SQL surface takes (words_array, n) with a literal int n — the
-      // shingle width is a plan-time constant, same contract as the
-      // Column API
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"graft_shingle_hashes takes (array<string> words, int n), got ${children.size} args")
-        ShingleHashes(children(0),
-          children(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-            case other => throw new IllegalArgumentException(
-              s"graft_shingle_hashes requires a literal int shingle size, got $other")
-          })
-      }))
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
-  }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * random words; the dsir PropSpec reference recomputes it in plain
   * Scala). The parity claim holds for arrays WITHOUT null slots — which
   * is everything the `words()` splitter can produce. A null-bearing
-  * array from the raw SQL surface diverges: the composable spelling
+  * array from any other Column caller diverges: the composable spelling
   * nulls the unigram bucket and has concat_ws SKIP the null inside
   * bigrams, while this expression hashes a null slot as the empty
   * string (policy at compute()); don't feed it null-bearing arrays
@@ -81,7 +81,7 @@ object DsirBuckets {
     var i = 0
     while (i < len) {
       val s = arr.getUTF8String(i)
-      // the words() splitter never yields nulls, but the SQL surface can:
+      // the words() splitter never yields nulls, but a Column caller can:
       // hash a null slot as the empty string (same policy as
       // graft_shingle_hashes) rather than NPE-ing
       wordBytes(i) = if (s == null) Array.emptyByteArray else s.getBytes

@@ -34,8 +34,8 @@ case class MinSeededMd5(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_minhash"
 
-  // analysis-time check: the SQL surface (GraftExtensions) accepts
-  // arbitrary expressions — fail at analysis, not ClassCastException at run
+  // analysis-time check: a Column caller can pass any expression — fail
+  // at analysis, not ClassCastException at run
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -97,7 +97,7 @@ object MinSeededMd5 {
       val s = arr.getUTF8String(i)
       // null element: the composable spelling's md5(concat(prefix, NULL))
       // is NULL, which array_min IGNORES — skip, don't NPE (internal
-      // callers never produce null shingles; the SQL surface can)
+      // callers never produce null shingles; a Column caller can)
       if (s != null) {
         md.reset()
         md.update(prefixBytes)

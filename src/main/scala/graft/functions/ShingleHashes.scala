@@ -43,8 +43,8 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_shingle_hashes"
 
-  // The SQL surface (GraftExtensions) accepts arbitrary expressions, so
-  // type-check at analysis instead of ClassCastException-ing at runtime.
+  // A Column caller can pass any expression, so type-check at analysis
+  // instead of ClassCastException-ing at runtime.
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -82,8 +82,8 @@ object ShingleHashes {
     var i = 0
     while (i < len) {
       val s = arr.getUTF8String(i)
-      // internal callers (words()) never produce null elements, but the
-      // SQL surface can: hash a null slot as the empty string rather than
+      // internal callers (words()) never produce null elements, but a
+      // Column caller can: hash a null slot as the empty string rather than
       // NPE-ing (deterministic, and distinct from any real word w.h.p.
       // only when mixed with non-empty neighbors — null-vs-"" ambiguity is
       // acceptable for a hash set over tokenizer output)

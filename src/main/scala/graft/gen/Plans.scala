@@ -12,10 +12,10 @@ package graft.gen
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.Harness.sfDir
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val queries = graft.Harness.selected()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     queries.foreach { q =>

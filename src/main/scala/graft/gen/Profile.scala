@@ -58,8 +58,8 @@ object Profile {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val sfDir = graft.Harness.sfDir
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val counts = new Counts
     spark.sparkContext.addSparkListener(counts)
     val registry = graft.Harness.selected()

@@ -373,9 +373,8 @@ object Dedup {
     * the work when the caller doesn't need exact J. */
   def minhashCandidates(docs: DataFrame, numHashes: Int = 8, bandSize: Int = 4,
                         shingleSize: Int = 3,
-                        maxBucket: Int = Int.MaxValue,
                         managed: Boolean = false): DataFrame =
-    candidatePairs(docs, numHashes, bandSize, shingleSize, maxBucket, managed)
+    candidatePairs(docs, numHashes, bandSize, shingleSize, managed)
 
   /** LSH-bucketed near-duplicate candidate pairs with estimated
     * (signature-agreement) and exact (shingle) Jaccard.
@@ -394,13 +393,11 @@ object Dedup {
     */
   def minhashNeardup(docs: DataFrame, numHashes: Int = 8, bandSize: Int = 4,
                      shingleSize: Int = 3,
-                     maxBucket: Int = Int.MaxValue,
                      managed: Boolean = false): DataFrame = {
     // managed candidates are already eagerly materialized — a win here even
     // beyond lifecycle hygiene, since `cand` feeds TWO downstream consumers
     // (the semi-join id set and the final verify join)
-    val cand = candidatePairs(docs, numHashes, bandSize, shingleSize, maxBucket,
-      managed)
+    val cand = candidatePairs(docs, numHashes, bandSize, shingleSize, managed)
 
     // Exact-Jaccard verify on candidates only: shrink the corpus to docs
     // that appear in a candidate pair, then recompute shingles for those.
@@ -422,7 +419,6 @@ object Dedup {
 
   private def candidatePairs(docs: DataFrame, numHashes: Int, bandSize: Int,
                              shingleSize: Int,
-                             maxBucket: Int,
                              managed: Boolean): DataFrame = {
     val numBands = numHashes / bandSize
     val sigs = minhashSignatures(docs, numHashes, bandSize, shingleSize)
@@ -430,19 +426,8 @@ object Dedup {
       array((1 to numHashes).map(j => col(s"mh$j")): _*).as("mh"),
       array((0 until numBands).map(b => col(s"band_$b")): _*).as("bands"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val explodedAll = slim.select(col("doc_id"), col("mh"),
+    val exploded = slim.select(col("doc_id"), col("mh"),
       posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    // Skew guard: a degenerate bucket (boilerplate shared by B docs) costs
-    // B² pairs; above `maxBucket` the bucket is dropped whole. The count
-    // window shuffles on the same (band_idx, band_val) key as the join, so
-    // the exchange is reused, not added. Off by default (exact semantics =
-    // what the oracle computes); turn on at corpus scale.
-    val exploded =
-      if (maxBucket == Int.MaxValue) explodedAll
-      else explodedAll
-        .withColumn("_bsz", count(lit(1)).over(
-          Window.partitionBy("band_idx", "band_val")))
-        .filter(col("_bsz") <= maxBucket).drop("_bsz")
     val a = exploded.select(col("doc_id").as("a_doc_id"), col("mh").as("a_mh"),
       col("band_idx"), col("band_val"))
     val b = exploded.select(col("doc_id").as("b_doc_id"), col("mh").as("b_mh"),
@@ -588,16 +573,10 @@ object Dedup {
     *     |A∩B|, so exact Jaccard = c/(|A|+|B|-c) falls out of the
     *     aggregation with no array re-join;
     *  4. threshold.
-    * The quadratic risk is a shingle shared by many docs (df² pairs);
-    * `maxDocFreq` drops such stop-shingles from the index. That bounds work
-    * at corpus scale and — unlike capping candidates later — biases only
-    * pairs whose ONLY common shingles are ubiquitous ones, which a Jaccard
-    * threshold would reject anyway (any pair with J ≥ t has ≥ t·|A∪B|
-    * common shingles; for it to vanish, all of them must be ultra-common).
-    * Default off so the oracle checks exact semantics. */
+    * Work is quadratic in a shingle's document frequency: a shingle shared
+    * by df docs yields df² index pairs. */
   def jaccardNeardup(docs: DataFrame, shingleSize: Int = 3,
                      threshold: Double = 0.2,
-                     maxDocFreq: Int = Int.MaxValue,
                      managed: Boolean = false): DataFrame = {
     val w = words(col("text"))
     // Index on 64-bit shingle HASHES, not shingle strings: the match count
@@ -618,13 +597,7 @@ object Dedup {
     // persisted signature frame: 3 narrow columns, never the document text.
     // `managed = true` eagerly materializes the pair list and releases this
     // block before returning; unmanaged keeps the lazy frame + session cache.
-    val inv = {
-      val base =
-        if (maxDocFreq == Int.MaxValue) sh
-        else sh.withColumn("_df", count(lit(1)).over(Window.partitionBy("g")))
-          .filter(col("_df") <= maxDocFreq).drop("_df")
-      base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    val inv = sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = inv.select(col("doc_id").as("doc_a"), col("nsh").as("na"), col("g"))
     val b = inv.select(col("doc_id").as("doc_b"), col("nsh").as("nb"), col("g"))
     // The inverted index is CORPUS-sized — never let the optimizer broadcast

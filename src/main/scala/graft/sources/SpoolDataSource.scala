@@ -59,7 +59,9 @@ import org.apache.spark.util.SerializableConfiguration
   *  - streaming offsets are a lexicographic FILENAME WATERMARK: a batch is
   *    (watermark, latest] in name order, so restarts resume exactly and a
   *    file that appears BELOW the watermark (out-of-contract) is dropped,
-  *    never double-read;
+  *    never double-read. A restart whose checkpoint holds an offset no
+  *    spool listing could return (another source's JSON offset, a path)
+  *    fails with an error naming that offset and the spool;
   *  - whole files are packed, in name order, into InputPartitions by
   *    Spark's own file-source rule ([[SpoolDataSource.pack]]): small files
   *    share a task, and a partition's reader reads its files one after
@@ -395,6 +397,15 @@ class SpoolMicroBatchStream(path: String, conf: SerializableConfiguration)
 
   override def initialOffset(): Offset = SpoolOffset("")
   override def deserializeOffset(json: String): Offset = {
+    // A restored offset must be one this source could have written: "" or
+    // a name the spool listing returns (no `/`, no leading `.` or `_`), not
+    // another source's JSON offset. Taken as a watermark, a text file
+    // stream's {"logOffset":0} sorts after every part- name, so the restart
+    // would count every file as read and read nothing, without a word.
+    require(!(json.contains("/") || Seq(".", "_", "{", "[", "\"").exists(json.startsWith)),
+      s"${SpoolDataSource.NAME}($path): checkpoint offset '$json' is not a " +
+        "spool file name, so another source wrote it; restart from a fresh " +
+        "checkpoint location")
     // a restart seeds the high-water mark from the restored offset, so a
     // bad listing in the FIRST trigger after restart cannot regress either
     val o = SpoolOffset(json)

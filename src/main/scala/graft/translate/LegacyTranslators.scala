@@ -29,19 +29,19 @@ final case class LegacySpec(
   */
 object LegacyTranslators {
 
-  val userProfile: LegacySpec = LegacySpec("user-profile", "user-service",
-    "USER_PROFILE_EVENT", "created", tsIsEpochSeconds = true, Seq("uid", "name", "created"))
-  val orderRecord: LegacySpec = LegacySpec("order-record", "order-service",
-    "ORDER_EVENT", "placedAt", tsIsEpochSeconds = false, Seq("orderId", "items", "placedAt"))
-  private val inventoryUpdate: LegacySpec = LegacySpec("inventory-update", "inventory-service",
-    "INVENTORY_EVENT", "updateTime", tsIsEpochSeconds = true, Seq("sku", "qty", "updateTime"))
-  val paymentNotice: LegacySpec = LegacySpec("payment-notice", "payment-gateway",
-    "PAYMENT_EVENT", "time", tsIsEpochSeconds = false, Seq("txnId", "amount", "currency", "time"))
-  val shipmentStatus: LegacySpec = LegacySpec("shipment-status", "shipping-service",
-    "SHIPMENT_EVENT", "deliveredAt", tsIsEpochSeconds = true, Seq("shipId", "status", "deliveredAt"))
-
-  val all: Seq[LegacySpec] =
-    Seq(userProfile, orderRecord, inventoryUpdate, paymentNotice, shipmentStatus)
+  /** The five sources, in `kind` order: a row's `kind` is its source's
+    * index here. */
+  val all: Seq[LegacySpec] = Seq(
+    LegacySpec("user-profile", "user-service", "USER_PROFILE_EVENT",
+      "created", tsIsEpochSeconds = true, Seq("uid", "name", "created")),
+    LegacySpec("order-record", "order-service", "ORDER_EVENT",
+      "placedAt", tsIsEpochSeconds = false, Seq("orderId", "items", "placedAt")),
+    LegacySpec("inventory-update", "inventory-service", "INVENTORY_EVENT",
+      "updateTime", tsIsEpochSeconds = true, Seq("sku", "qty", "updateTime")),
+    LegacySpec("payment-notice", "payment-gateway", "PAYMENT_EVENT",
+      "time", tsIsEpochSeconds = false, Seq("txnId", "amount", "currency", "time")),
+    LegacySpec("shipment-status", "shipping-service", "SHIPMENT_EVENT",
+      "deliveredAt", tsIsEpochSeconds = true, Seq("shipId", "status", "deliveredAt")))
 
   /** JSON-escape a string that is spliced between double quotes in a
     * hand-assembled envelope: json_tuple/get_json_object UNESCAPE on
@@ -63,39 +63,6 @@ object LegacyTranslators {
     lit("\",\"timestamp\":\""), jsonEscape(col("timestamp")),
     lit("\",\"data\":"), col("value"), lit("}"))
 
-  /** The envelope timestamp for a given raw payload column. try_cast: a
-    * non-numeric epoch field must poison the RECORD (ts.isNotNull check in
-    * `ok`), never the job — ANSI-mode cast would throw. */
-  private def tsColumn(value: Column, spec: LegacySpec): Column = {
-    val raw = get_json_object(value, "$." + spec.tsField)
-    if (spec.tsIsEpochSeconds)
-      IsoTime.isoFromEpochSeconds(expr(
-        s"try_cast(get_json_object(value, '$$.${spec.tsField}') AS BIGINT)"))
-    else raw
-  }
-
-  /** Translate raw payloads (`value` string column) for one source.
-    *
-    * `eventId` is a random UUID in the reference (asserted only non-blank,
-    * TranslatorsIntegrationTest.kt:226). Here it is
-    * sha256(source|eventType|payload), as [[translateMux]] derives it, so
-    * results are oracle-checkable; the wire shape is identical.
-    */
-  def translate(raw: DataFrame, spec: LegacySpec): Translated = {
-    val value = col("value")
-    val required = spec.requiredFields
-      .map(f => get_json_object(value, "$." + f).isNotNull)
-      .reduce(_ && _)
-    val ts = tsColumn(value, spec)
-    val eventId = sha2(concat_ws("|", lit(spec.source), lit(spec.eventType), value), 256)
-    Translated.tag(raw, required && ts.isNotNull,
-      "eventId" -> eventId,
-      "source" -> lit(spec.source),
-      "eventType" -> lit(spec.eventType),
-      "timestamp" -> ts,
-      "event_json" -> envelope)
-  }
-
   /** Union of every source's payload field names: the mux parses each
     * message ONCE via the `json_tuple` generator. (A `from_json` struct is
     * the obvious alternative, but Catalyst's filter-pushdown substitutes the
@@ -115,12 +82,13 @@ object LegacyTranslators {
     else j(spec.tsField)
 
   /** All five translators multiplexed into ONE projection, selected per row
-    * by `kindCol` (0..4 indexing [[all]]). Semantically identical to running
-    * each translator on its own filtered slice and unioning, but the corpus
-    * is scanned once instead of five times and each message is JSON-parsed
-    * once instead of ~6× — at scale the five-scan union would quintuple
-    * source IO for no reason. Always deterministic-id (the oracle-checkable
-    * mode). */
+    * by `kindCol` (0..4 indexing [[all]]): the corpus is scanned once, not
+    * once per source, and each message is JSON-parsed once.
+    *
+    * `eventId` is a random UUID in the reference (asserted only non-blank,
+    * TranslatorsIntegrationTest.kt:226). Here it is
+    * sha256(source|eventType|payload), so results are oracle-checkable; the
+    * wire shape is identical. */
   def translateMux(raw: DataFrame, kindCol: Column): Translated = {
     val value = col("value")
     val jcols = muxFields.map(f => s"_j_$f")

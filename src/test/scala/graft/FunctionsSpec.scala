@@ -29,42 +29,6 @@ class FunctionsSpec extends SparkSpec {
     assert(native(3).isNullAt(1))
   }
 
-  test("graft_dot resolves in SQL once registered (GraftExtensions contract)") {
-    // SparkSessionExtensions only applies at session build; an already-built
-    // test session registers through the same registry the extension targets
-    spark.sessionState.functionRegistry.registerFunction(
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(children.head, children(1)))
-    vecs.createOrReplaceTempView("vecs")
-    val r = spark.sql("SELECT graft_dot(a, b) FROM vecs WHERE id = 1").head()
-    assert(r.getDouble(0) === 32.0)
-  }
-
-  test("RewriteDotProduct rule: composable idiom optimizes to graft_dot, same results") {
-    import graft.functions.RewriteDotProduct
-    val before = spark.experimental.extraOptimizations
-    // non-literal source: a LocalRelation of literals would be constant-folded
-    // away before the rewrite could be observed
-    def frame = spark.range(5).select(col("id"),
-      transform(sequence(lit(0), lit(3)), i => (col("id") + i).cast("double")).as("a"),
-      transform(sequence(lit(0), lit(3)), i => (col("id") * 2 + i).cast("double")).as("b"))
-    try {
-      spark.experimental.extraOptimizations = before :+ RewriteDotProduct
-      val q = frame.select(col("id"),
-        Similarity.dotComposed(col("a"), col("b")).as("d"))
-      assert(q.queryExecution.optimizedPlan.toString.contains("graft_dot"),
-        s"rule did not fire:\n${q.queryExecution.optimizedPlan}")
-      val withRule = q.orderBy("id").collect()
-      spark.experimental.extraOptimizations = before
-      val without = frame.select(col("id"),
-        Similarity.dotComposed(col("a"), col("b")).as("d")).orderBy("id").collect()
-      assert(withRule === without)
-    } finally spark.experimental.extraOptimizations = before
-  }
-
   test("graft_l2sq == composable form on long arrays, incl. NULL on length mismatch") {
     import spark.implicits._
     val lv = Seq(
@@ -158,22 +122,6 @@ class FunctionsSpec extends SparkSpec {
     val one = Seq((0L, "a b c")).toDF("doc_id", "text")
     val r = one.select(ShingleHashes.shingleHashes(Dedup.words(col("text")), 3).as("sh")).head()
     assert(r.getSeq[Long](0).size === 1)
-    // 4. SQL surface (GraftExtensions contract): literal int width, same
-    //    result as the Column API
-    spark.sessionState.functionRegistry.registerFunction(
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingle_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ShingleHashes(children(0), children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(other.toString)
-        }))
-    one.createOrReplaceTempView("shdocs")
-    val sqlR = spark.sql(
-      "SELECT graft_shingle_hashes(split(trim(text), '\\\\s+'), 3) AS sh FROM shdocs")
-      .head().getSeq[Long](0)
-    assert(sqlR === r.getSeq[Long](0))
   }
 
   test("graft_dsir_buckets: bucket-exact parity with the composable md5/conv spelling") {

@@ -191,6 +191,30 @@ class PipelineSpec extends SparkSpec {
     assert(rows === Array("r1", "r2", "r3"), "exactly-once across restart")
   }
 
+  test("graft-spool V2: a restart over a text-source checkpoint fails, naming the offset") {
+    val base = java.nio.file.Files.createTempDirectory("spool_foreign").toString
+    val topic = Sources.rabbitMqInput.outputTopic
+    val ckpt = s"$base/_checkpoint"
+    val out = s"$base/_out"
+    writeSpool(base, topic, Seq("r1", "r2"))
+    // the text file stream commits its own offset, {"logOffset":0}
+    val text = spark.readStream.format("text").load(s"$base/$topic")
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", ckpt).start()
+    try text.processAllAvailable() finally text.stop()
+    java.nio.file.Files.write(java.nio.file.Paths.get(base, topic, "part-00001"),
+      "r3".getBytes("UTF-8"))
+    val spool = Sources.rabbitMqInput.stream(spark, base)
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", ckpt).start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try spool.processAllAvailable() finally spool.stop()
+    }
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msg.contains("""'{"logOffset":0}'""") && msg.contains(s"$base/$topic"), msg)
+  }
+
   test("E3: legacy raw -> mux translate -> splitter per-type topics") {
     import spark.implicits._
     val raw = Seq(

@@ -30,16 +30,11 @@ CodeGenerator logger from every appender but its own.
 """
 import argparse
 import collections
-import importlib.util
-import json
 import os
 import re
-import subprocess
-import sys
 import tempfile
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-RUN_PY = os.path.join(ROOT, "pipebench", "run.py")
+import pipebench_runner
 
 LOG4J2 = """rootLogger.level = warn
 rootLogger.appenderRef.stderr.ref = console
@@ -59,20 +54,11 @@ RUN_ID = re.compile(r"runId = ([0-9a-f-]+)")
 STARTING = re.compile(r"^Starting \[.*runId = ([0-9a-f-]+)\]\. Use (\S+) to store the query checkpoint")
 STOPPED = re.compile(r"^Query \[.*runId = ([0-9a-f-]+)\] was stopped")
 GENERATED = re.compile(r"^Code generated in ([0-9.]+) ms")
-RUN_DIR = re.compile(r"/((?:pass|stream)-\d+)/")
-
-
-def load_run_py():
-    spec = importlib.util.spec_from_file_location("pipebench_run", RUN_PY)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def query_name(checkpoint):
     """(run directory, query) for a checkpoint path."""
-    m = RUN_DIR.search(checkpoint)
-    return (m.group(1) if m else "-", checkpoint.rstrip("/").rsplit("/", 1)[-1])
+    return (pipebench_runner.run_dir(checkpoint), checkpoint.rstrip("/").rsplit("/", 1)[-1])
 
 
 def attribute(lines):
@@ -117,25 +103,15 @@ def main():
     ap.add_argument("--seconds", type=int, default=10)
     a = ap.parse_args()
 
-    run = load_run_py()
-    tmp_root = os.path.join(run.OUT, "tmp")
-    os.makedirs(tmp_root, exist_ok=True)
-    run.classpath()  # build now, without the logging configuration
+    run = pipebench_runner.build()  # without the logging configuration
 
-    with tempfile.TemporaryDirectory(prefix="codegen-compiles-", dir=tmp_root) as tmp:
+    with tempfile.TemporaryDirectory(prefix="codegen-compiles-",
+                                     dir=os.path.join(run.OUT, "tmp")) as tmp:
         cfg = os.path.join(tmp, "log4j2.properties")
         with open(cfg, "w") as f:
             f.write(LOG4J2)
-        env = dict(os.environ)
-        flag = f"-Dlog4j2.configurationFile={cfg}"
-        env["JAVA_TOOL_OPTIONS"] = (env.get("JAVA_TOOL_OPTIONS", "") + " " + flag).strip()
-        proc = subprocess.run(
-            [sys.executable, RUN_PY, "--workload", a.workload, "--seed", str(a.seed),
-             "--seconds", str(a.seconds), "--trace", "0"],
-            cwd=ROOT, env=env, stdout=subprocess.PIPE, text=True)
-    if proc.returncode != 0:
-        sys.exit(f"codegen_compiles: pipebench/run.py exited {proc.returncode}")
-    result = json.loads(proc.stdout.strip().splitlines()[-1])
+        result = pipebench_runner.run("codegen_compiles", f"-Dlog4j2.configurationFile={cfg}",
+                                      a.workload, a.seed, a.seconds)
     with open(os.path.join(run.OUT, f"{a.workload}.trace0.log"), errors="replace") as f:
         charged = attribute(f)
 

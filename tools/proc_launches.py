@@ -21,17 +21,15 @@ libhadoop is not loaded; this is the tool that shows which writes still do.
 """
 import argparse
 import collections
-import importlib.util
 import json
 import os
-import re
 import shutil
 import subprocess
 import sys
 import tempfile
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-RUN_PY = os.path.join(ROOT, "pipebench", "run.py")
+import pipebench_runner
+
 CLASSES = ("bus", "checkpoint", "dead-letter", "spool", "other")
 
 # Only the one event is recorded: the run is not slowed by the rest of a
@@ -44,13 +42,6 @@ JFC = """<?xml version="1.0" encoding="UTF-8"?>
   </event>
 </configuration>
 """
-
-
-def load_run_py():
-    spec = importlib.util.spec_from_file_location("pipebench_run", RUN_PY)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def jdk_tool(name):
@@ -80,11 +71,6 @@ def path_class(command):
     return "other"
 
 
-def run_dir(command):
-    m = re.search(r"/((?:pass|stream)-\d+)/", command)
-    return m.group(1) if m else "-"
-
-
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True, choices=("vehicle_drain", "tenant_live"))
@@ -93,25 +79,17 @@ def main():
     ap.add_argument("--trace", choices=("0", "1"), default="0")
     a = ap.parse_args()
 
-    run = load_run_py()
-    os.makedirs(os.path.join(run.OUT, "tmp"), exist_ok=True)
-    run.classpath()  # build now, without the recording
+    pipebench_runner.build()  # without the recording
 
     with tempfile.TemporaryDirectory(prefix="proc-launches-") as tmp:
         jfc = os.path.join(tmp, "launches.jfc")
         with open(jfc, "w") as f:
             f.write(JFC)
         rec = os.path.join(tmp, "run.jfr")
-        env = dict(os.environ)
-        flag = f"-XX:StartFlightRecording=filename={rec},settings={jfc},dumponexit=true"
-        env["JAVA_TOOL_OPTIONS"] = (env.get("JAVA_TOOL_OPTIONS", "") + " " + flag).strip()
-        proc = subprocess.run(
-            [sys.executable, RUN_PY, "--workload", a.workload, "--seed", str(a.seed),
-             "--seconds", str(a.seconds), "--trace", a.trace],
-            cwd=ROOT, env=env, stdout=subprocess.PIPE, text=True)
-        if proc.returncode != 0:
-            sys.exit(f"proc_launches: pipebench/run.py exited {proc.returncode}")
-        result = json.loads(proc.stdout.strip().splitlines()[-1])
+        result = pipebench_runner.run(
+            "proc_launches",
+            f"-XX:StartFlightRecording=filename={rec},settings={jfc},dumponexit=true",
+            a.workload, a.seed, a.seconds, a.trace)
         if not os.path.isfile(rec):
             sys.exit("proc_launches: the run left no recording")
         # the jfr tool is itself a JVM: with the recording flag still in
@@ -131,7 +109,7 @@ def main():
         prog = os.path.basename(c.split()[0]) if c else ""
         by_prog[prog] += 1
         by_class[(cls, prog)] += 1
-        by_dir[cls][run_dir(c)] += 1
+        by_dir[cls][pipebench_runner.run_dir(c)] += 1
 
     print(f"workload {a.workload}  seed {a.seed}  trace {a.trace}")
     print(f"records: {result['attempted']} attempted, {result['failed']} failed; "

@@ -7,20 +7,30 @@ Usage, from the root of a checkout (or with the checkout as argument):
 
 Reads every .scala/.py/.sh file under src/main/scala, src/test/scala,
 pipebench/src and tools, with comments and string literals stripped (a
-string's `$name` and `${...}` interpolations are kept, as code). Prints
-three lists and exits 0; it gates nothing.
+string's `$name` and `${...}` interpolations are kept, as code; a package
+clause is dropped). Prints four lists and exits 0; it gates nothing.
 
 1. Test-only members. Every `def`/`val`/`var` declared at member indent
    (two spaces) in src/main/scala that is not `private` or `override`.
    Its name is counted as a whole word (not next to [A-Za-z0-9_$]) per
    area: the declaring file minus the declaration line, other src/main
-   files, pipebench/src, tools, src/test. A member that only src/test
-   names is listed.
+   files, pipebench/src, tools, src/test. For a member of an `object`
+   (`apply` and `main` apart), another file uses it only through the
+   qualified name (`Obj.name`, whitespace and newlines allowed around the
+   dot, string literals included: generated code calls members so) or
+   where it imports the name, or everything, from the object. A member
+   that only src/test names is listed.
 2. File-local members. Members of that kind that nothing outside their
    own file names: candidates for `private`, so the unused lint sees them.
    (The compiler rejects a `private` member that another class or object
    in the same file uses; compile after each change.)
-3. Knobs nothing sets. Every defaulted parameter of a `def` or class in
+3. Unused types. Every top-level class, object and trait in src/main/scala
+   that no other file outside src/test names and its own file does not
+   use apart from its declarations (a class and its companion). Objects
+   holding a `def main` and classes registered under
+   src/main/resources/META-INF/services are exempt: a launcher or a
+   ServiceLoader finds them by name.
+4. Knobs nothing sets. Every defaulted parameter of a `def` or class in
    src/main/scala that no call outside src/test passes, by name or by
    position, with a value other than its default. Calls are found by the
    callee's name followed by its argument lists; `.copy(...)` of a case
@@ -28,10 +38,15 @@ three lists and exits 0; it gates nothing.
    if that file names the callee's object or class, and a call with more
    arguments than the callee has parameters is another method's.
 
-Name collisions only over-count, so lists 1 and 2 never name a member
-that is used; they can hide one that is not. List 3 can also miss a call
-made through a value whose class the calling file never names: check a
-listed parameter's callers before deleting it.
+Name collisions only over-count, so lists 1 to 3 never name a member or
+type that is used; they can hide one that is not. Whole-word counting
+still lets a class member hide behind any same-named identifier, and an
+object member behind a same-named member of a class the file imports
+with a wildcard. A type is hidden by any same-named identifier outside
+src/test, and a class that is only ever named in a string (a
+`spark.sql.extensions` value, say) is listed although it is loaded.
+List 4 can also miss a call made through a value whose class the calling
+file never names: check a listed parameter's callers before deleting it.
 """
 import os
 import re
@@ -44,17 +59,18 @@ WORD = "A-Za-z0-9_$"
 MEMBER = re.compile(
     r"^  ((?:(?:final|lazy|implicit|private\[\w+\]|protected\[\w+\])\s+)*)"
     r"(def|val|var)\s+([A-Za-z_][A-Za-z0-9_]*)")
-OWNER = re.compile(r"^(?:(?:private|final|sealed|abstract|case|implicit)\s+)*"
-                   r"(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
+OWNER = re.compile(r"^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*"
+                   r"(object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
 SOURCES = {}  # file -> unstripped .scala text, filled by load()
+LITERALS = {}  # file -> .scala text with comments blanked, strings kept
 DEFAULTED = re.compile(
     r"\b(?:def\s+([A-Za-z_][A-Za-z0-9_]*)(?:\[[^\]]*\])?|class\s+([A-Za-z_][A-Za-z0-9_]*)(?:\[[^\]]*\])?)\s*\(")
 
 
-def strip_scala(src):
-    """Blanks comments and string literals, keeping interpolated `$name` /
-    `${...}` text. Every offset holds, so a span of the result is the same
-    span of the source."""
+def strip_scala(src, strings=True):
+    """Blanks comments and (unless `strings` is false) string literals,
+    keeping interpolated `$name` / `${...}` text. Every offset holds, so a
+    span of the result is the same span of the source."""
     out, i, n = [], 0, len(src)
     while i < n:
         c = src[i]
@@ -69,6 +85,14 @@ def strip_scala(src):
                 elif src.startswith("*/", j): depth -= 1; j += 2
                 else: j += 1
             out.append(re.sub(r"[^\n]", " ", src[i:j])); i = j
+        elif c == '"' and not strings:
+            end = '"""' if src.startswith('"""', i) else '"'
+            j = i + len(end)
+            while j < n and not src.startswith(end, j):
+                j += 2 if end == '"' and src[j] == "\\" else 1
+            while end == '"""' and src.startswith('""""', j):
+                j += 1
+            out.append(src[i:j + len(end)]); i = j + len(end)
         elif c == '"':
             interp = i > 0 and re.match(r"[A-Za-z_]", src[i - 1]) is not None
             triple = src.startswith('"""', i)
@@ -120,16 +144,19 @@ def load(root):
                 with open(path, encoding="utf-8", errors="replace") as f:
                     src = f.read()
                 rel = os.path.relpath(path, root)
+                # a package clause names packages, never a member
+                src = re.sub(r"(?m)^package\s+[\w.]+", lambda m: " " * len(m.group(0)), src)
                 files[rel] = (area, strip_scala(src) if ext == ".scala" else strip_script(src, ext))
                 if ext == ".scala":
                     assert len(files[rel][1]) == len(src), rel
                     SOURCES[rel] = src
+                    LITERALS[rel] = strip_scala(src, strings=False)
     return files
 
 
 def owner(text, offset):
     """The top-level object, class or trait declared last before `offset`."""
-    names = [m.group(1) for m in OWNER.finditer(text, 0, offset)]
+    names = [m.group(2) for m in OWNER.finditer(text, 0, offset)]
     return names[-1] if names else None
 
 
@@ -148,16 +175,87 @@ def members(files):
                 yield rel, no, m.group(3)
 
 
+def owner_kind(text, offset):
+    """(kind, name) of the top-level declaration `owner` returns."""
+    kinds = [m.group(1) for m in OWNER.finditer(text, 0, offset)]
+    return (kinds[-1] if kinds else None), owner(text, offset)
+
+
+def imports_from(text, obj, name):
+    """True if `text` imports `name` (or everything) from object `obj`."""
+    for m in re.finditer(r"\bimport\s+[\w.]*?(?<![%s])%s\s*\.\s*(_|\{[^}]*\}|[A-Za-z_]\w*)"
+                         % (WORD, re.escape(obj)), text):
+        sel = m.group(1)
+        if sel == "_" or sel == name or (sel.startswith("{") and
+                                         (count(sel, name) or re.search(r"\b_\b", sel))):
+            return True
+    return False
+
+
+def dotted(text, obj, name):
+    return len(re.findall(r"(?<![%s])%s\s*\.\s*%s(?![%s])"
+                          % (WORD, re.escape(obj), re.escape(name), WORD), text))
+
+
+def qualified(rel, text, obj, name):
+    """Uses of `obj.name` (whitespace and newlines allowed around the dot),
+    or of bare `name` where `text` imports it from `obj`. A qualified name
+    inside a string literal counts too: generated code calls members so."""
+    if imports_from(text, obj, name):
+        return count(text, name)
+    return dotted(LITERALS.get(rel, text), obj, name)
+
+
 def references(files, rel, no, name):
-    """Whole-word counts of `name` per area; the declaring file apart."""
+    """Counts of `name` per area, the declaring file apart: whole words,
+    except that another file uses a member of an `object` only through a
+    qualified name or an import (`apply` and `main` count as whole words)."""
     refs = dict.fromkeys(("own file",) + AREAS, 0)
+    lines = files[rel][1].split("\n")
+    kind, obj = owner_kind(files[rel][1], sum(len(l) + 1 for l in lines[:no - 1]))
     for other, (area, text) in files.items():
         if other == rel:
-            lines = text.split("\n")
             refs["own file"] += count("\n".join(lines[:no - 1] + lines[no:]), name)
+            if kind == "object":
+                # generated code, spliced from a string literal, calls the
+                # member from another class: a use from outside the file
+                refs[area] += dotted(LITERALS[rel], obj, name) - dotted(text, obj, name)
+        elif kind == "object" and name not in ("apply", "main"):
+            refs[area] += qualified(other, text, obj, name)
         else:
             refs[area] += count(text, name)
     return refs
+
+
+def unused_types(root, files):
+    """(file, line, kind, name) of every top-level class, object or trait in
+    src/main that no other non-test file names and its own file does not
+    use, apart from mains and META-INF/services registrations."""
+    services = set()
+    sdir = os.path.join(root, "src/main/resources/META-INF/services")
+    if os.path.isdir(sdir):
+        for svc in os.listdir(sdir):
+            with open(os.path.join(sdir, svc), encoding="utf-8") as f:
+                services |= {l.split("#")[0].strip().rsplit(".", 1)[-1] for l in f}
+    for rel, (area, text) in files.items():
+        if area != "src/main/scala" or not rel.endswith(".scala"):
+            continue
+        decls = list(OWNER.finditer(text))
+        mains = {owner(text, m.start()) for m in re.finditer(r"\bdef\s+main\b", text)}
+        for m in decls:
+            kind, name = m.group(1), m.group(2)
+            if name in mains or name in services:
+                continue
+            # every declaration of the name (a class and its companion) apart
+            rest = text
+            for d in decls:
+                if d.group(2) == name:
+                    rest = rest[:d.start()] + " " * (d.end() - d.start()) + rest[d.end():]
+            used = count(rest, name) or any(
+                count(otext, name) for other, (oarea, otext) in files.items()
+                if other != rel and oarea != "src/test/scala")
+            if not used:
+                yield rel, text.count("\n", 0, m.start()) + 1, kind, name
 
 
 def groups(text, i):
@@ -273,6 +371,10 @@ def main():
     print("file-local members (%d): nothing outside their file names them" % len(file_local))
     for rel, no, name, own, t in file_local:
         print("  %s:%d %s (own-file refs %d, test refs %d)" % (rel, no, name, own, t))
+    types = list(unused_types(root, files))
+    print("unused types (%d): no other non-test file names them, nor their own file" % len(types))
+    for rel, no, kind, name in types:
+        print("  %s:%d %s %s" % (rel, no, kind, name))
     unset = sorted(set(knobs(files)))
     print("defaulted parameters nothing outside src/test sets (%d)" % len(unset))
     for rel, no, callee, pn, pd in unset:
