@@ -334,16 +334,14 @@ object SparkEntry {
     TextAnalysis.winnow(RawGen.table(s, dir, "documents")).orderBy("doc_id")
 
   private def neardupMinhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashNeardup(RawGen.table(s, dir, "documents").select("doc_id", "text"),
-        managed = true)
+    Dedup.minhashNeardup(RawGen.table(s, dir, "documents").select("doc_id", "text"))
       .orderBy("doc_a", "doc_b")
 
   private def simhashBuckets(s: SparkSession, dir: String): DataFrame =
     Dedup.simhash(RawGen.table(s, dir, "documents")).orderBy("doc_id")
 
   private def simhashNeardupQ(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashNeardup(RawGen.table(s, dir, "documents").select("doc_id", "text"),
-        managed = true)
+    Dedup.simhashNeardup(RawGen.table(s, dir, "documents").select("doc_id", "text"))
       .orderBy("doc_a", "doc_b")
 
   private def knnQueries(s: SparkSession, dir: String): DataFrame =
@@ -581,8 +579,7 @@ object SparkEntry {
   }
 
   private def neardupJaccardQ(s: SparkSession, dir: String): DataFrame =
-    Dedup.jaccardNeardup(RawGen.table(s, dir, "documents").select("doc_id", "text"),
-        managed = true)
+    Dedup.jaccardNeardup(RawGen.table(s, dir, "documents").select("doc_id", "text"))
       .orderBy("doc_a", "doc_b")
 
   /** Cluster assignment over the minhash near-dup graph: every document gets
@@ -590,7 +587,7 @@ object SparkEntry {
     * i.e. the representative a dedup pipeline would retain. */
   private def dedupClustersQ(s: SparkSession, dir: String): DataFrame = {
     val docs = RawGen.table(s, dir, "documents")
-    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"), managed = true)
+    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"))
       .select(col("a_doc_id").as("src"), col("b_doc_id").as("dst"))
     Dedup.connectedComponents(edges, Some(docs.select(col("doc_id").as("id"))))
       .select(col("id").as("doc_id"), col("cluster_id"))
@@ -602,7 +599,7 @@ object SparkEntry {
     * variant and the oracle's transitive-closure fixpoint. */
   private def dedupClustersStarQ(s: SparkSession, dir: String): DataFrame = {
     val docs = RawGen.table(s, dir, "documents")
-    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"), managed = true)
+    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"))
       .select(col("a_doc_id").as("src"), col("b_doc_id").as("dst"))
     Dedup.connectedComponentsStar(edges, Some(docs.select(col("doc_id").as("id"))))
       .select(col("id").as("doc_id"), col("cluster_id"))
@@ -755,7 +752,7 @@ object SparkEntry {
     * the composition a curation pipeline actually ships. */
   private def dedupApplyQ(s: SparkSession, dir: String): DataFrame = {
     val docs = RawGen.table(s, dir, "documents")
-    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"), managed = true)
+    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"))
       .select(col("a_doc_id").as("src"), col("b_doc_id").as("dst"))
     val reps = Dedup.connectedComponents(edges, Some(docs.select(col("doc_id").as("id"))))
       .filter(col("id") === col("cluster_id"))
@@ -772,7 +769,7 @@ object SparkEntry {
     * the form real curation pipelines run once a quality score exists. */
   private def dedupApplyBestQ(s: SparkSession, dir: String): DataFrame = {
     val docs = RawGen.table(s, dir, "documents")
-    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"), managed = true)
+    val edges = Dedup.minhashCandidates(docs.select("doc_id", "text"))
       .select(col("a_doc_id").as("src"), col("b_doc_id").as("dst"))
     val clusters = Dedup.connectedComponents(edges,
       Some(docs.select(col("doc_id").as("id"))))

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Managed persist lifecycle for operators that cache an intermediate:
+  /** Persist lifecycle of the operators that cache an intermediate:
     * eagerly materialize the RESULT (localCheckpoint — also truncates the
     * LSH lineage), then release the intermediate's catalog-cached blocks.
     * The blocks backing the returned frame are RDD-level (not CacheManager
@@ -372,54 +372,7 @@ object Dedup {
     * candidate as an edge anyway), and skipping the shingle rejoin halves
     * the work when the caller doesn't need exact J. */
   def minhashCandidates(docs: DataFrame, numHashes: Int = 8, bandSize: Int = 4,
-                        shingleSize: Int = 3,
-                        managed: Boolean = false): DataFrame =
-    candidatePairs(docs, numHashes, bandSize, shingleSize, managed)
-
-  /** LSH-bucketed near-duplicate candidate pairs with estimated
-    * (signature-agreement) and exact (shingle) Jaccard.
-    *
-    * Scale shape (the plan DedupSpec asserts — no cartesian anywhere):
-    *  1. ONE signature pass over the corpus (tokenize → shingle → minhash),
-    *     persisted as a slim (doc_id, mh[], bands[]) frame — shingle arrays
-    *     never enter it, so nothing document-sized ever shuffles here;
-    *  2. posexplode the band values and self-join ONCE on
-    *     (band_idx, band_val) — a plain equi-join, not one join per band;
-    *  3. dedup the surviving (a, b) pairs;
-    *  4. recompute shingles ONLY for candidate docs (semi-join the corpus
-    *     down to them first) and join those back for the exact-Jaccard
-    *     verify — at 100 TB the candidate set is orders of magnitude
-    *     smaller than the corpus.
-    */
-  def minhashNeardup(docs: DataFrame, numHashes: Int = 8, bandSize: Int = 4,
-                     shingleSize: Int = 3,
-                     managed: Boolean = false): DataFrame = {
-    // managed candidates are already eagerly materialized — a win here even
-    // beyond lifecycle hygiene, since `cand` feeds TWO downstream consumers
-    // (the semi-join id set and the final verify join)
-    val cand = candidatePairs(docs, numHashes, bandSize, shingleSize, managed)
-
-    // Exact-Jaccard verify on candidates only: shrink the corpus to docs
-    // that appear in a candidate pair, then recompute shingles for those.
-    val candIds = cand
-      .select(explode(array(col("a_doc_id"), col("b_doc_id"))).as("doc_id"))
-      .distinct()
-    val docSh = docs.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingles(words(col("text")), shingleSize).as("sh"))
-
-    cand
-      .join(docSh.select(col("doc_id").as("a_doc_id"), col("sh").as("a_sh")), "a_doc_id")
-      .join(docSh.select(col("doc_id").as("b_doc_id"), col("sh").as("b_sh")), "b_doc_id")
-      .select(
-        col("a_doc_id").as("doc_a"),
-        col("b_doc_id").as("doc_b"),
-        col("est_jaccard"),
-        ngramJaccard(col("a_sh"), col("b_sh")).as("jaccard"))
-  }
-
-  private def candidatePairs(docs: DataFrame, numHashes: Int, bandSize: Int,
-                             shingleSize: Int,
-                             managed: Boolean): DataFrame = {
+                        shingleSize: Int = 3): DataFrame = {
     val numBands = numHashes / bandSize
     val sigs = minhashSignatures(docs, numHashes, bandSize, shingleSize)
     val slim = sigs.select(col("doc_id"),
@@ -440,7 +393,47 @@ object Dedup {
       .dropDuplicates("a_doc_id", "b_doc_id")
       .select(col("a_doc_id"), col("b_doc_id"),
         (estMatches.cast("double") / numHashes).as("est_jaccard"))
-    if (managed) materializeThenRelease(cand, slim) else cand
+    materializeThenRelease(cand, slim)
+  }
+
+  /** LSH-bucketed near-duplicate candidate pairs with estimated
+    * (signature-agreement) and exact (shingle) Jaccard.
+    *
+    * Scale shape (the plan DedupSpec asserts — no cartesian anywhere):
+    *  1. ONE signature pass over the corpus (tokenize → shingle → minhash),
+    *     persisted as a slim (doc_id, mh[], bands[]) frame — shingle arrays
+    *     never enter it, so nothing document-sized ever shuffles here;
+    *  2. posexplode the band values and self-join ONCE on
+    *     (band_idx, band_val) — a plain equi-join, not one join per band;
+    *  3. dedup the surviving (a, b) pairs;
+    *  4. recompute shingles ONLY for candidate docs (semi-join the corpus
+    *     down to them first) and join those back for the exact-Jaccard
+    *     verify — at 100 TB the candidate set is orders of magnitude
+    *     smaller than the corpus.
+    */
+  def minhashNeardup(docs: DataFrame, numHashes: Int = 8, bandSize: Int = 4,
+                     shingleSize: Int = 3): DataFrame = {
+    // the candidates are already eagerly materialized — a win here even
+    // beyond lifecycle hygiene, since `cand` feeds TWO downstream consumers
+    // (the semi-join id set and the final verify join)
+    val cand = minhashCandidates(docs, numHashes, bandSize, shingleSize)
+
+    // Exact-Jaccard verify on candidates only: shrink the corpus to docs
+    // that appear in a candidate pair, then recompute shingles for those.
+    val candIds = cand
+      .select(explode(array(col("a_doc_id"), col("b_doc_id"))).as("doc_id"))
+      .distinct()
+    val docSh = docs.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), shingles(words(col("text")), shingleSize).as("sh"))
+
+    cand
+      .join(docSh.select(col("doc_id").as("a_doc_id"), col("sh").as("a_sh")), "a_doc_id")
+      .join(docSh.select(col("doc_id").as("b_doc_id"), col("sh").as("b_sh")), "b_doc_id")
+      .select(
+        col("a_doc_id").as("doc_a"),
+        col("b_doc_id").as("doc_b"),
+        col("est_jaccard"),
+        ngramJaccard(col("a_sh"), col("b_sh")).as("jaccard"))
   }
 
   /** Cluster representatives by QUALITY instead of id: keeps each
@@ -515,8 +508,7 @@ object Dedup {
     * corpus/2^bandBits (quadratic within a bucket). 8-bit bands suit ~10⁴–10⁶
     * docs; a 100 TB crawl wants 64-bit fingerprints with 16-bit bands. */
   def simhashNeardup(docs: DataFrame, bits: Int = 32, bandBits: Int = 8,
-                     maxHamming: Int = 3,
-                     managed: Boolean = false): DataFrame = {
+                     maxHamming: Int = 3): DataFrame = {
     require(bits % bandBits == 0, "bits must divide into equal bands")
     val numBands = bits / bandBits
     // the banded-recall guarantee (any pair within maxHamming collides in
@@ -529,12 +521,10 @@ object Dedup {
     val bands = array((0 until numBands).map(b =>
       substring(col("simhash"), b * bandBits + 1, bandBits)): _*)
     // persist: the per-row sketch (bits× aggregate() votes) is the dominant
-    // per-doc cost and both join sides would otherwise recompute it. Cache
-    // lifetime: `managed = true` eagerly materializes the result and releases
-    // this block before returning ([[materializeThenRelease]]) — the mode for
-    // repeated invocation; unmanaged leaves it cached for the session. The
-    // fingerprint rides the join as ONE long (conv base-2), so per-pair
-    // Hamming is a single xor+bit_count — candidate volume is quadratic in
+    // per-doc cost and both join sides would otherwise recompute it; the
+    // block is released once the result is materialized
+    // ([[materializeThenRelease]]). The fingerprint rides the join as ONE
+    // long (conv base-2), so per-pair Hamming is a single xor+bit_count — candidate volume is quadratic in
     // hot buckets, and a 32-branch comparison chain there is the bottleneck
     // (measured 13 s vs 3 s at sf0.1).
     val banded = sigs.select(col("doc_id"),
@@ -555,7 +545,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("doc_a", "doc_b")
       .select("doc_a", "doc_b", "hamming")
-    if (managed) materializeThenRelease(pairs, banded) else pairs
+    materializeThenRelease(pairs, banded)
   }
 
   /** n-gram Jaccard similarity for an explicit pair list (verification pass
@@ -576,8 +566,7 @@ object Dedup {
     * Work is quadratic in a shingle's document frequency: a shingle shared
     * by df docs yields df² index pairs. */
   def jaccardNeardup(docs: DataFrame, shingleSize: Int = 3,
-                     threshold: Double = 0.2,
-                     managed: Boolean = false): DataFrame = {
+                     threshold: Double = 0.2): DataFrame = {
     val w = words(col("text"))
     // Index on 64-bit shingle HASHES, not shingle strings: the match count
     // only needs equality, so an 8-byte key carries it — the index shuffle
@@ -595,8 +584,6 @@ object Dedup {
     // Persist the slim (doc_id, nsh, shingle) index so the tokenize+shingle
     // pass runs once, not once per join side — same shape as minhash's
     // persisted signature frame: 3 narrow columns, never the document text.
-    // `managed = true` eagerly materializes the pair list and releases this
-    // block before returning; unmanaged keeps the lazy frame + session cache.
     val inv = sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = inv.select(col("doc_id").as("doc_a"), col("nsh").as("na"), col("g"))
     val b = inv.select(col("doc_id").as("doc_b"), col("nsh").as("nb"), col("g"))
@@ -611,7 +598,7 @@ object Dedup {
         col("c").cast("double") / (col("na") + col("nb") - col("c")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-    if (managed) materializeThenRelease(pairs, inv) else pairs
+    materializeThenRelease(pairs, inv)
   }
 
   /** Connected components by iterative min-label propagation: every node's

@@ -545,21 +545,18 @@ object Links {
     * layer's composition into the crawl loop, the [[Url.crawlDiscover]]
     * shape with page outlinks as the seed source): follow links only
     * (a `rel=nofollow` edge carries no endorsement and a polite
-    * LLM-data crawler does not schedule fetches from it) → scheme gate
-    * → registrable-domain blocklist (broadcast probe) → the target
-    * domain's robots rules (parsed ONCE per domain, broadcast; a
-    * domain with no robots row defaults to allowed — no rules fetched
-    * yet IS the no-restriction state) → first-occurrence winner per
+    * LLM-data crawler does not schedule fetches from it) → the crawl
+    * admission rules of [[Url]] on the target (scheme, blocklist, the
+    * target domain's robots rules) → first-occurrence winner per
     * canonical target (lowest `(doc_id, link_idx)`, min-struct, map-
     * side combinable) → novelty anti-join against the admitted
-    * catalog. Output: one row per NOVEL admitted target.
+    * catalog ([[Url.novel]]). Output: one row per NOVEL admitted target.
     *
     * Scale shape: the extraction is scan-fused; the canon columns are
     * [[pinColumns]]-pinned before the domain/path re-derivations (the
-    * hostGraph plan-size lesson); both gate frames broadcast; the
-    * winner aggregation hash-partitions on `target_canon` so the
-    * catalog anti-join adds ZERO stream-side exchange (the
-    * crawlDiscover argument — only the catalog shuffles). */
+    * hostGraph plan-size lesson); the winner aggregation hash-partitions
+    * on `target_canon`, so the catalog anti-join adds no stream-side
+    * exchange. */
   def linkDiscover(pages: DataFrame, blocked: Seq[String],
                    robots: DataFrame, catalog: DataFrame,
                    agent: String = "*",
@@ -567,62 +564,38 @@ object Links {
                    policy: Option[DataFrame] = None): DataFrame = {
     val firsts = discoverFirsts(linkExtract(pages), blocked, robots, agent,
       expectedDomains, policy)
-    val novKey = if (policy.isDefined) "target_learned" else "target_canon"
-    val catKey = if (policy.isDefined) "learned_canon" else "url_canon"
-    firsts.join(catalog.select(col(catKey).as("_cat"))
-        .hint("shuffle_hash"),
-      col(novKey) === col("_cat"), "left_anti")
+    Url.novel(firsts,
+      col(if (policy.isDefined) "target_learned" else "target_canon"),
+      catalog, policy.isDefined)
   }
 
   /** The gate-and-dedup front half of [[linkDiscover]], over an
     * already-extracted link frame (so compositions that also need the
     * links — [[frontierRank]] — extract once): follow-only → scheme →
     * blocklist → robots → first-occurrence winner per canonical
-    * target. Returns `(doc_id, link_idx, target_url, target_canon)`,
-    * hash-partitioned on `target_canon` by the winner aggregation. */
+    * target (per learned key with a `policy`, [[Url.withLearnedKey]]).
+    * Returns `(doc_id, link_idx, target_url, target_canon)`, plus
+    * `target_learned` with a policy, hash-partitioned on the winner's
+    * key. */
   private[graft] def discoverFirsts(linkFrame: DataFrame,
                                     blocked: Seq[String], robots: DataFrame,
                                     agent: String,
                                     expectedDomains: Long = 0L,
                                     policy: Option[DataFrame] = None)
       : DataFrame = {
-    val spark = linkFrame.sparkSession
-    import spark.implicits._
     val links = pinColumns(
       linkFrame.filter(!col("nofollow"))
         .select(col("doc_id"), col("link_idx"), col("href_abs"),
           col("target_canon")))
-    val rules = robots.groupBy("domain")
-      .agg(max(col("robots_txt")).as("_txt"))
-      .select(col("domain").as("_td"),
-        Url.robotsRules(col("_txt"), agent).as("_rules"))
-    val gated = links
-      .filter(substring_index(col("target_canon"), "://", 1)
-        .isin("http", "https"))
-      .withColumn("_td", Url.registrableDomain(col("target_canon")))
-      .join(broadcast(blocked.toDF("_td").distinct()
-        .withColumn("_blocked", lit(true))), Seq("_td"), "left")
-      .filter(col("_blocked").isNull)
-      // rules side follows the caller-stated domain scale (round 19 —
-      // the |domains|-sized frame must not broadcast unconditionally)
-      .join(Url.domainFrameSide(rules, expectedDomains), Seq("_td"), "left")
-      .filter(coalesce(pmod(Url.robotsBestEnc(col("_rules"),
-        Url.canonPathQuery(col("target_canon"))), lit(2)) === 1, lit(true)))
-    // LEARNED winner key (round 20, r19 verdict #2): with a param
-    // `policy` the intra-batch first-occurrence collapses on the
-    // POLICY-STRIPPED canonical — session variants of one page are ONE
-    // candidate — and the caller's novelty anti-join reuses this exact
-    // partitioning on `target_learned`. The policy probe reuses the
-    // already-derived `_td` (strategy follows `expectedDomains`).
-    val keyed = policy match {
-      case Some(p) => gated
-        .join(Url.domainFrameSide(p.select(col("domain").as("_td"),
-          col("_drop")), expectedDomains), Seq("_td"), "left")
-        .withColumn("_nov", when(col("_drop").isNull, col("target_canon"))
-          .otherwise(graft.functions.StripParams(col("target_canon"),
-            col("_drop"))))
-      case None => gated.withColumn("_nov", col("target_canon"))
-    }
+    val gated = Url.admitted(links
+        .filter(Url.schemeOk(col("target_canon")))
+        .withColumn("_td", Url.registrableDomain(col("target_canon"))),
+      "_td", "target_canon", blocked, robots, agent, expectedDomains)
+    // with a `policy` the winner collapses on the learned key (session
+    // variants of one page are ONE candidate), and the caller's novelty
+    // anti-join reuses this partitioning on `target_learned`
+    val keyed = Url.withLearnedKey(gated, policy, "_td", "target_canon",
+      "_nov", expectedDomains)
     val firsts = keyed.groupBy("_nov")
       .agg(min(struct(col("doc_id"), col("link_idx"), col("href_abs"),
         col("target_canon"))).as("_w"))
@@ -671,8 +644,6 @@ object Links {
                            agent: String = "*",
                            expectedDomains: Long = 0L,
                            policy: Option[DataFrame] = None): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
     val firsts = discoverFirsts(linkExtract(pages), blocked, robots, agent,
       expectedDomains)
     val resolved = Graph.resolveChains(redirects)
@@ -685,39 +656,18 @@ object Links {
         col("target_canon"),
         coalesce(col("final_url"), col("target_canon")).as("final_canon"),
         coalesce(col("_rh"), lit(0L)).as("hops"))
-    // re-gate the RESOLVED fetch (round 19): same rules parse as the
-    // pre-gate, probed on final_canon's registrable domain and path
-    val rules = robots.groupBy("domain")
-      .agg(max(col("robots_txt")).as("_txt"))
-      .select(col("domain").as("_fd"),
-        Url.robotsRules(col("_txt"), agent).as("_frules"))
-    val regated = pinColumns(probed)
-      .filter(substring_index(col("final_canon"), "://", 1)
-        .isin("http", "https"))
-      .withColumn("_fd", Url.registrableDomain(col("final_canon")))
-      .join(broadcast(blocked.toDF("_fd").distinct()
-        .withColumn("_fblocked", lit(true))), Seq("_fd"), "left")
-      .filter(col("_fblocked").isNull)
-      .join(Url.domainFrameSide(rules, expectedDomains), Seq("_fd"), "left")
-      .filter(coalesce(pmod(Url.robotsBestEnc(col("_frules"),
-        Url.canonPathQuery(col("final_canon"))), lit(2)) === 1, lit(true)))
-    // LEARNED novelty key on the RESOLVED fetch (round 20, r19 verdict
-    // #2): `final_canon` is the URL the scheduler actually issues, so
-    // that is where the policy strips — a stub redirecting onto a
-    // session variant of a cataloged page must fold onto the page's
-    // learned key and NOT be re-admitted. The probe reuses the
-    // re-gate's `_fd`; without a policy the key is `final_canon` and
-    // the round-19 schema/semantics are unchanged.
-    val keyed = (policy match {
-      case Some(p) => regated
-        .join(Url.domainFrameSide(p.select(col("domain").as("_fd"),
-          col("_drop")), expectedDomains), Seq("_fd"), "left")
-        .withColumn("_nov", when(col("_drop").isNull, col("final_canon"))
-          .otherwise(graft.functions.StripParams(col("final_canon"),
-            col("_drop"))))
-      case None => regated.withColumn("_nov", col("final_canon"))
-    }).select(col("doc_id"), col("link_idx"), col("target_url"),
-      col("target_canon"), col("final_canon"), col("hops"), col("_nov"))
+    // re-gate the RESOLVED fetch on final_canon's registrable domain and
+    // path
+    val regated = Url.admitted(pinColumns(probed)
+        .filter(Url.schemeOk(col("final_canon")))
+        .withColumn("_fd", Url.registrableDomain(col("final_canon"))),
+      "_fd", "final_canon", blocked, robots, agent, expectedDomains)
+    // the learned key strips the RESOLVED fetch: a stub redirecting onto
+    // a session variant of a cataloged page folds onto the page's key
+    val keyed = Url.withLearnedKey(regated, policy, "_fd", "final_canon",
+        "_nov", expectedDomains)
+      .select(col("doc_id"), col("link_idx"), col("target_url"),
+        col("target_canon"), col("final_canon"), col("hops"), col("_nov"))
     val collapsed = keyed.groupBy("_nov")
       .agg(min(struct(col("doc_id"), col("link_idx"), col("target_url"),
         col("target_canon"), col("hops"), col("final_canon"))).as("_w"))
@@ -727,14 +677,9 @@ object Links {
         col("_w.target_canon").as("target_canon"),
         col("_w.final_canon").as("final_canon"),
         col("_w.hops").as("hops"), col("_nov"))
-    val catKey = if (policy.isDefined) "learned_canon" else "url_canon"
-    val novel = collapsed
-      .join(catalog.select(col(catKey).as("_cat"))
-          .hint("shuffle_hash"),
-        col("_nov") === col("_cat"), "left_anti")
-    if (policy.isDefined)
-      novel.withColumnRenamed("_nov", "final_learned")
-    else novel.drop("_nov")
+    val fresh = Url.novel(collapsed, col("_nov"), catalog, policy.isDefined)
+    if (policy.isDefined) fresh.withColumnRenamed("_nov", "final_learned")
+    else fresh.drop("_nov")
   }
 
   /** ANCHOR-ENDORSED frontier scheduling (round 18 — the round-17
@@ -796,8 +741,6 @@ object Links {
                                hostRank: Option[DataFrame],
                                agent: String,
                                expectedDomains: Long): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
     // pin ONCE: the gate flags and the aggregation below would otherwise
     // re-inline the full canonicalize∘resolve∘decode tree per reference —
     // the plan-size failure mode pinColumns exists for. The authority
@@ -809,23 +752,15 @@ object Links {
       (if (hostRank.isDefined)
         baseCols :+ Url.registrableDomain(col("_base")).as("_srcd")
       else baseCols): _*))
-    val rules = robots.groupBy("domain")
-      .agg(max(col("robots_txt")).as("_txt"))
-      .select(col("domain").as("_td"),
-        Url.robotsRules(col("_txt"), agent).as("_rules"))
-    val flagged = links
-      .withColumn("_td", Url.registrableDomain(col("target_canon")))
-      .join(broadcast(blocked.toDF("_td").distinct()
-        .withColumn("_blocked", lit(true))), Seq("_td"), "left")
-      // rules side follows the caller-stated domain scale (round 19)
-      .join(Url.domainFrameSide(rules, expectedDomains), Seq("_td"), "left")
+    val flagged = Url.probeBlocklist(links
+        .withColumn("_td", Url.registrableDomain(col("target_canon"))),
+        blocked, "_td")
+      .join(Url.domainFrameSide(Url.domainRobotsRules(robots, agent, "_td"),
+        expectedDomains), Seq("_td"), "left")
       .withColumn("_adm", !col("nofollow") &&
-        substring_index(col("target_canon"), "://", 1)
-          .isin("http", "https") &&
-        col("_blocked").isNull &&
-        coalesce(pmod(Url.robotsBestEnc(col("_rules"),
-          Url.canonPathQuery(col("target_canon"))), lit(2)) === 1,
-          lit(true)))
+        Url.schemeOk(col("target_canon")) && col("_blocked").isNull &&
+        Url.robotsAllowed(col("_rules"),
+          Url.canonPathQuery(col("target_canon"))))
     // the authority variant probes the rank on the SRC domain — one
     // more row-local |domains|-frame join, then the same single agg
     val ranked = hostRank match {
@@ -861,9 +796,7 @@ object Links {
       col("_w.href_abs").as("target_url")) ++
       (if (hostRank.isDefined) Seq(col("authority")) else Nil) ++
       Seq(col("n_follow"), col("n_src_docs"), col("first_anchor"))
-    agg.join(catalog.select(col("url_canon").as("_cat"))
-          .hint("shuffle_hash"),
-        col("target_canon") === col("_cat"), "left_anti")
+    Url.novel(agg, col("target_canon"), catalog, learned = false)
       .select(outCols: _*)
       .withColumn("priority", row_number().over(w).cast("long"))
   }
@@ -915,15 +848,12 @@ object Links {
   private[graft] def canonicalKeys(pages: DataFrame, blocked: Seq[String],
                                    htmlCol: String = "html",
                                    baseUrlCol: String = "base_url",
-                                   idCol: String = "doc_id"): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pinColumns(relCanonicalAll(pages, htmlCol, baseUrlCol, idCol))
-      .withColumn("_dom", Url.registrableDomain(col("_base")))
-      .withColumn("_scheme_ok",
-        substring_index(col("_base"), "://", 1).isin("http", "https"))
-      .join(broadcast(blocked.toDF("_dom").distinct()
-        .withColumn("_blocked", lit(true))), Seq("_dom"), "left")
+                                   idCol: String = "doc_id"): DataFrame =
+    Url.probeBlocklist(
+        pinColumns(relCanonicalAll(pages, htmlCol, baseUrlCol, idCol))
+          .withColumn("_dom", Url.registrableDomain(col("_base")))
+          .withColumn("_scheme_ok", Url.schemeOk(col("_base"))),
+        blocked, "_dom")
       .select(col(idCol),
         (col("_scheme_ok") && col("_blocked").isNull).as("url_ok"),
         col("canonical_canon").isNotNull.as("declared"),
@@ -933,7 +863,6 @@ object Links {
         // already computed here — re-deriving it downstream would
         // re-inline the canonicalize tree
         col("_base").as("url_canon"))
-  }
 
   /** Deterministic per-document HTML pages with a FIXED 8-slot `<a>`
     * template — every field a pure function of `doc_id` so the DuckDB

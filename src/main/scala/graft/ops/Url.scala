@@ -245,33 +245,17 @@ object Url {
   /** The URL-level admission gate a crawl pipeline runs before ANY
     * content work (C4 drops non-http(s) links and pages from a host
     * blocklist at exactly this point): per row,
-    *  - `scheme_ok` — the canonical scheme is http or https (a crawl
-    *    frontier emits ftp/mailto/javascript links too; none fetch a page
-    *    worth curating), and
-    *  - `domain_ok` — the registrable domain has no blocklist entry.
-    * The blocklist arrives as a DataFrame of registrable domains and is
-    * BROADCAST into a left join on the derived domain key: a production
-    * blocklist is 10³–10⁶ domains (kilobytes to a few MB — always
-    * executor-memory-sized), so at 100 TB this is a map-side probe fused
-    * into the same scan as the canonicalizer — the CORPUS side never
-    * shuffles; the one exchange is the |blocklist|-row dedup on the
-    * broadcast build side (UrlSpec pins both). Matching on the
-    * REGISTRABLE domain means a
-    * blocklisted `example.com` also drops `sub.example.com`, the
-    * containment C4's list intends. */
+    *  - `scheme_ok` — [[schemeOk]], and
+    *  - `domain_ok` — the registrable domain has no blocklist entry
+    *    ([[probeBlocklist]]).
+    * Both fuse into the canonicalizer's scan; the corpus side never
+    * shuffles (UrlSpec pins the plan). */
   def urlGate(urls: DataFrame, blocked: DataFrame): DataFrame = {
     val canon = urls.select(col("doc_id"),
         canonicalizeUrl(col("url")).as("url_canon"))
       .withColumn("domain", registrableDomain(col("url_canon")))
-      .withColumn("scheme_ok",
-        substring_index(col("url_canon"), "://", 1).isin("http", "https"))
-    // distinct: real host blocklists carry duplicate entries, and a
-    // duplicated build-side domain would DUPLICATE every matching URL row
-    // out of the left join (round-14 ADVICE). The dedup exchange is on
-    // the |blocklist| side only — kilobytes; the corpus probe side stays
-    // exchange-free (UrlSpec pins the plan).
-    canon.join(broadcast(blocked.select(col("domain")).distinct()
-        .withColumn("_blocked", lit(true))), Seq("domain"), "left")
+      .withColumn("scheme_ok", schemeOk(col("url_canon")))
+    probeBlocklist(canon, blocked, "domain")
       .select(col("doc_id"), col("url_canon"), col("domain"),
         col("scheme_ok"), col("_blocked").isNull.as("domain_ok"),
         (col("scheme_ok") && col("_blocked").isNull).as("url_keep"))
@@ -283,6 +267,120 @@ object Url {
     import spark.implicits._
     urlGate(urls, blocked.toDF("domain"))
   }
+
+  // ---- crawl admission: one definition per rule -----------------------------
+  // Every crawl operator here and in [[Links]] admits through these
+  // functions. Each takes the key column its caller already derived, so a
+  // call site keeps its own operator order and filter-or-flag form.
+
+  /** Scheme rule: the canonical scheme is http or https. A crawl frontier
+    * emits ftp/mailto/javascript links too; none fetch a page worth
+    * curating. */
+  private[graft] def schemeOk(urlCanon: Column): Column =
+    substring_index(urlCanon, "://", 1).isin("http", "https")
+
+  /** Blocklist rule: `rows` left-joined on their registrable-domain column
+    * `key` with the blocklist's `domain` column, so `_blocked` is true on a
+    * listed row and null otherwise. Matching on the REGISTRABLE domain
+    * means a blocklisted `example.com` also drops `sub.example.com`, the
+    * containment C4's list intends. The list is BROADCAST: a production
+    * blocklist is 10³–10⁶ domains (kilobytes to a few MB), so the probe is
+    * map-side and the corpus side never shuffles. `distinct`, because real
+    * host blocklists repeat entries and a duplicated build-side domain
+    * would duplicate every matching row out of the left join; that one
+    * exchange is on the |blocklist| side. */
+  private[graft] def probeBlocklist(rows: DataFrame, blocked: DataFrame,
+                                    key: String): DataFrame =
+    rows.join(broadcast(blocked.select(col("domain").as(key)).distinct()
+      .withColumn("_blocked", lit(true))), Seq(key), "left")
+
+  /** [[probeBlocklist]] over an in-code blocklist. */
+  private[graft] def probeBlocklist(rows: DataFrame, blocked: Seq[String],
+                                    key: String): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    probeBlocklist(rows, blocked.toDF("domain"), key)
+  }
+
+  /** One robots.txt text per domain, `(domain, _txt)`. Duplicate domain
+    * rows collapse to their max text (deterministic, where
+    * dropDuplicates' winner is not): a duplicated build-side domain would
+    * fan out every matching URL row of the caller's join. The exchange is
+    * on the |domains|-sized frame only, and in a shuffle-mode probe
+    * ([[domainFrameSide]]) it doubles as the join's build-side
+    * partitioning. */
+  private def robotsTexts(robots: DataFrame): DataFrame =
+    robots.groupBy("domain").agg(max(col("robots_txt")).as("_txt"))
+
+  /** `(key, _rules)`: each domain's robots rules for `agent`, parsed once
+    * per DOMAIN ([[robotsTexts]], [[robotsRules]]), never per URL. */
+  private[graft] def domainRobotsRules(robots: DataFrame, agent: String,
+                                       key: String): DataFrame =
+    robotsTexts(robots).select(col("domain").as(key),
+      robotsRules(col("_txt"), agent).as("_rules"))
+
+  /** Robots rule: whether the domain's `rules` (null when it has no
+    * robots.txt) allow `path` ([[canonPathQuery]]). No robots row, or no
+    * matching rule, means allowed: RFC 9309's default, and no rules
+    * fetched yet IS the no-restriction state. */
+  private[graft] def robotsAllowed(rules: Column, path: Column): Column =
+    coalesce(pmod(robotsBestEnc(rules, path), lit(2)) === 1, lit(true))
+
+  /** The blocklist and robots rules as filters, in that order, on `rows`
+    * whose registrable domain is in `key` and whose canonical URL is in
+    * `canon` (the discovery loops' gate: a candidate the crawler's own
+    * verdicts forbid never reaches the fetch frontier). */
+  private[graft] def admitted(rows: DataFrame, key: String, canon: String,
+                              blocked: Seq[String], robots: DataFrame,
+                              agent: String,
+                              expectedDomains: Long): DataFrame =
+    probeBlocklist(rows, blocked, key)
+      .filter(col("_blocked").isNull)
+      .join(domainFrameSide(domainRobotsRules(robots, agent, key),
+        expectedDomains), Seq(key), "left")
+      .filter(robotsAllowed(col("_rules"), canonPathQuery(col(canon))))
+
+  /** Learned-key rule: adds `out`, the `canon` column with its domain's
+    * learned strip list removed. `policy` is [[paramPolicyCorroborated]]'s
+    * `(domain, _drop)` frame, probed on the caller's registrable-domain
+    * column `key` (strategy per [[domainFrameSide]]); a domain without a
+    * list, or no policy at all, keeps `canon`. Keying winners and novelty
+    * on this key means a session-id or boilerplate variant of a cataloged
+    * page is not re-admitted: the crawl-trap axis bites at fetch time.
+    * The strip is ONE native expression ([[graft.functions.StripParams]],
+    * a binary search per param name over the SORTED list): the
+    * `array_contains` spelling scanned O(|strip list|) per param
+    * (exponent 1.79 on a 10⁵-name megadomain), and the higher-order
+    * `filter` spelling was CodegenFallback, whose per-row eval
+    * re-materialized the policy array out of the join stage (~55 s for 2M
+    * rows). Stripping keeps the canonical query's sorted order. The
+    * DuckDB oracle keeps plain `list_contains`/`list_filter` (membership
+    * is order-insensitive). */
+  private[graft] def withLearnedKey(rows: DataFrame,
+                                    policy: Option[DataFrame], key: String,
+                                    canon: String, out: String,
+                                    expectedDomains: Long): DataFrame =
+    policy match {
+      case Some(p) => rows
+        .join(domainFrameSide(p.select(col("domain").as(key), col("_drop")),
+          expectedDomains), Seq(key), "left")
+        .withColumn(out, when(col("_drop").isNull, col(canon))
+          .otherwise(graft.functions.StripParams(col(canon), col("_drop"))))
+      case None => rows.withColumn(out, col(canon))
+    }
+
+  /** Novelty rule: the `rows` whose `key` is absent from the catalog of
+    * already-admitted keys, `learned_canon` ([[withLearnedKey]]) when
+    * `learned`, else `url_canon`. One exact anti-join; the catalog side is
+    * pinned off auto-broadcast (slim rows, corpus-scale cardinality;
+    * LeftAnti builds RIGHT). When a first-occurrence aggregation already
+    * hash-partitioned `rows` on `key`, the stream side adds no exchange. */
+  private[graft] def novel(rows: DataFrame, key: Column, catalog: DataFrame,
+                           learned: Boolean): DataFrame =
+    rows.join(catalog.select(
+        col(if (learned) "learned_canon" else "url_canon").as("_cat"))
+        .hint("shuffle_hash"),
+      key === col("_cat"), "left_anti")
 
   // ---- robots.txt admission (round 15) ------------------------------------
 
@@ -306,18 +404,15 @@ object Url {
   def robotsRules(txt: Column, agent: String): Column =
     graft.functions.RobotsRules(txt, lit(agent))
 
-  /** The RFC 9309 verdict encoding shared by [[robotsGate]] and
-    * [[crawlBudget]] (hoisted round 17 — the two inline copies could
-    * silently diverge on the next wildcard-semantics change): filter
+  /** The RFC 9309 precedence encoding behind [[robotsAllowed]]: filter
     * the domain's rules to those MATCHING the path (`startsWith` for
     * literal rules, one regex find for pre-translated wildcard ones),
     * then argmax the RFC precedence — longest rule path (as written,
     * wildcard octets included) wins, `Allow` wins length ties — encoded
     * as `length(prefix)·2 + allow` so a plain integer `array_max`
     * decides and `enc % 2 = 1` reads back "allowed". Null when no rule
-    * matches (the caller's coalesce supplies the RFC allow-default).
-    * Row-local, fused into the caller's scan. */
-  private[graft] def robotsBestEnc(rules: Column, path: Column): Column = {
+    * matches. Row-local, fused into the caller's scan. */
+  private def robotsBestEnc(rules: Column, path: Column): Column = {
     val matched = filter(rules, r =>
       when(r("wild"), regexp_like(path, r("pattern")))
         .otherwise(path.startsWith(r("prefix"))))
@@ -335,15 +430,8 @@ object Url {
     afterScheme.substr(length(hostport) + 1, lit(1 << 20))
   }
 
-  /** Broadcast ceiling for [[robotsGate]]'s per-domain rules frame, in
-    * estimated BYTES (the [[Dedup.broadcastFamilyMaxBytes]] pattern):
-    * at or under it the probe rides one broadcast per executor; above it
-    * the gate becomes a shuffle-hash equi-join on `domain` — the rules
-    * frame is |domains|-sized (a web crawl has 10⁷–10⁸ registrable
-    * domains with robots.txt — GBs with rule arrays, NOT
-    * executor-memory-sized), so a broadcast-only gate would OOM at
-    * exactly the scale a crawl admission front end targets (the
-    * round-15 VERDICT's one named scale defect). */
+  /** Broadcast ceiling of [[domainFrameSide]], in estimated BYTES (the
+    * [[Dedup.broadcastFamilyMaxBytes]] pattern). */
   private[graft] val rulesBroadcastMaxBytes: Long = 256L << 20
 
   /** Conservative per-domain byte estimate for the parsed rules frame
@@ -378,53 +466,30 @@ object Url {
     else frame.hint("shuffle_hash")
 
   /** robots.txt admission — the third gate of the crawl front end (after
-    * [[urlGate]]'s scheme + blocklist): per URL, apply its REGISTRABLE
-    * domain's robots rules with RFC 9309 precedence — the rule whose
-    * PATH (as written, wildcard octets included) is longest wins; on a
-    * length tie `Allow` wins; no matching rule (or no robots.txt at
-    * all) means allowed. §2.2.3 wildcards are MUST-level and honored:
-    * `*` in a rule path matches any char run, a trailing `$` anchors
-    * end-of-match — each wildcard rule was translated ONCE per domain
-    * into an anchored regex by [[robotsRules]], so the per-URL match is
-    * `startsWith` for literal rules and a single regex find for
-    * wildcard ones. `robots` carries `(domain, robots_txt)`; duplicate
-    * domain rows are collapsed here (deterministically, by max text —
-    * a duplicated build-side domain would fan out every matching URL
-    * row of the join, the defect class urlGate's blocklist distinct
-    * fixed in round 14).
+    * [[urlGate]]'s scheme + blocklist): per URL, its REGISTRABLE
+    * domain's verdict ([[robotsAllowed]]: RFC 9309 longest-match
+    * precedence with the §2.2.3 `*`/`$` wildcards, allowed by default).
+    * `robots` carries `(domain, robots_txt)`; the rules parse once per
+    * domain ([[domainRobotsRules]]).
     *
-    * Scale shape: rule extraction runs once per DOMAIN on the rules
-    * frame; the match itself is a ROW-LOCAL higher-order fold over that
-    * domain's rules (longest-match argmax encoded as length·2+allow, a
-    * plain integer `array_max`), fused into the same scan as the
-    * canonicalizer. The JOIN strategy follows the frame's size estimate
-    * (`expectedDomains` × [[rulesBytesPerDomain]], the bloom family's
-    * caller-stated-scale convention): BROADCAST under
-    * [[rulesBroadcastMaxBytes]] — zero corpus-side exchanges, the
-    * urlGate shape — else a shuffle-hash equi-join on `domain`, where
-    * the corpus shuffles once on the pre-aggregated registrable-domain
-    * key (megadomain skew is AQE's skew-join case: slim probe rows, and
-    * OptimizeSkewedJoin splits oversized partitions for shuffle-hash
-    * joins since Spark 3.2). UrlSpec pins BOTH plan modes and their row
-    * parity. */
+    * Scale shape: the match is a ROW-LOCAL fold over the domain's rules,
+    * fused into the canonicalizer's scan. The rules join follows
+    * [[domainFrameSide]]: a broadcast with zero corpus-side exchanges,
+    * or at crawl scale a shuffle-hash equi-join where the corpus
+    * shuffles once on the registrable domain (megadomain skew is AQE's
+    * skew-join case: OptimizeSkewedJoin splits oversized partitions for
+    * shuffle-hash joins since Spark 3.2). UrlSpec pins BOTH plan modes
+    * and their row parity. */
   def robotsGate(urls: DataFrame, robots: DataFrame,
                  expectedDomains: Long = 0L, agent: String = "*"): DataFrame = {
-    // one-row-per-domain contract ENFORCED (round-15 ADVICE): max() is
-    // deterministic where dropDuplicates' arbitrary winner is not; the
-    // exchange is on the |domains|-sized rules side only — and in
-    // shuffle mode it doubles as the join's build-side partitioning
-    val rules = robots.groupBy("domain")
-      .agg(max(col("robots_txt")).as("_txt"))
-      .select(col("domain"), robotsRules(col("_txt"), agent).as("_rules"))
+    val rules = domainRobotsRules(robots, agent, "domain")
     val canon = urls.select(col("doc_id"),
         canonicalizeUrl(col("url")).as("url_canon"))
       .withColumn("domain", registrableDomain(col("url_canon")))
       .withColumn("path", canonPathQuery(col("url_canon")))
     canon.join(domainFrameSide(rules, expectedDomains), Seq("domain"), "left")
-      .withColumn("_best", robotsBestEnc(col("_rules"), col("path")))
       .select(col("doc_id"), col("url_canon"), col("domain"), col("path"),
-        // no robots row OR no matching rule -> allowed (RFC default)
-        coalesce(pmod(col("_best"), lit(2)) === 1, lit(true)).as("robots_ok"))
+        robotsAllowed(col("_rules"), col("path")).as("robots_ok"))
   }
 
   /** Per-domain robots.txt METADATA (round 16): the selected group's
@@ -434,11 +499,10 @@ object Url {
     * every `Sitemap:` URL (group-independent per the sitemaps protocol,
     * file order). One O(lines) native pass per domain
     * ([[graft.functions.RobotsMeta]], the [[robotsRules]] shape and
-    * 500 KiB cap); duplicate domain rows collapse exactly as in
-    * [[robotsGate]]. |domains|-sized in and out — no corpus work. */
+    * 500 KiB cap); duplicate domain rows collapse in [[robotsTexts]].
+    * |domains|-sized in and out — no corpus work. */
   def robotsMeta(robots: DataFrame, agent: String = "*"): DataFrame =
-    robots.groupBy("domain")
-      .agg(max(col("robots_txt")).as("_txt"))
+    robotsTexts(robots)
       .select(col("domain"),
         graft.functions.RobotsMeta(col("_txt"), lit(agent)).as("_m"))
       .select(col("domain"),
@@ -471,29 +535,21 @@ object Url {
   def crawlBudget(urls: DataFrame, blocked: Seq[String], robots: DataFrame,
                   defaultDelayS: Double = 1.0, wallTargetS: Long = 3600L,
                   expectedDomains: Long = 0L, agent: String = "*"): DataFrame = {
-    val spark = urls.sparkSession
-    import spark.implicits._
     // rules + metadata parsed in ONE pass over the per-domain frame
-    val rules = robots.groupBy("domain")
-      .agg(max(col("robots_txt")).as("_txt"))
+    val rules = robotsTexts(robots)
       .select(col("domain"), robotsRules(col("_txt"), agent).as("_rules"),
         coalesce(
           graft.functions.RobotsMeta(col("_txt"), lit(agent))("crawl_delay"),
           lit(defaultDelayS)).as("_delay"))
-    val rulesSide = domainFrameSide(rules, expectedDomains)
     val canon = urls.select(col("doc_id"),
         canonicalizeUrl(col("url")).as("url_canon"))
       .withColumn("domain", registrableDomain(col("url_canon")))
       .withColumn("path", canonPathQuery(col("url_canon")))
-      .withColumn("scheme_ok",
-        substring_index(col("url_canon"), "://", 1).isin("http", "https"))
-    canon
-      .join(broadcast(blocked.toDF("domain").distinct()
-        .withColumn("_blocked", lit(true))), Seq("domain"), "left")
-      .join(rulesSide, Seq("domain"), "left")
-      .withColumn("_best", robotsBestEnc(col("_rules"), col("path")))
+      .withColumn("scheme_ok", schemeOk(col("url_canon")))
+    probeBlocklist(canon, blocked, "domain")
+      .join(domainFrameSide(rules, expectedDomains), Seq("domain"), "left")
       .filter(col("scheme_ok") && col("_blocked").isNull &&
-        coalesce(pmod(col("_best"), lit(2)) === 1, lit(true)))
+        robotsAllowed(col("_rules"), col("path")))
       .groupBy("domain")
       .agg(count(lit(1)).cast("long").as("n_admitted"),
         // functionally dependent on the group key (one rules row per
@@ -900,8 +956,6 @@ object Url {
                     agent: String = "*",
                     expectedDomains: Long = 0L,
                     policy: Option[DataFrame] = None): DataFrame = {
-    val spark = robots.sparkSession
-    import spark.implicits._
     val files = decodedSitemaps(sitemaps)
     // reachability frames feed LEFT SEMI joins only, so duplicates are
     // harmless — no distinct anywhere below (each would cost an
@@ -937,47 +991,15 @@ object Url {
         (col("seed_idx") + 1).cast("long").as("seed_idx"),
         xmlUnescape(trim(col("_raw"))).as("seed_url"))
       .withColumn("seed_canon", canonicalizeUrl(col("seed_url")))
-    // admission gates on the canonical column (computed once above):
-    // scheme, blocklist broadcast probe, and the domain's robots rules
-    // (one parse per domain on the |domains|-sized frame — the
-    // robotsGate shape; a seed the crawler's own robots verdict
-    // forbids must never reach the fetch frontier)
-    val rules = robots.groupBy("domain")
-      .agg(max(col("robots_txt")).as("_txt"))
-      .select(col("domain").as("_sd"),
-        robotsRules(col("_txt"), agent).as("_rules"))
-    val gated = seeds
-      .withColumn("_sd", registrableDomain(col("seed_canon")))
-      .filter(substring_index(col("seed_canon"), "://", 1)
-        .isin("http", "https"))
-      .join(broadcast(blocked.toDF("_sd").distinct()
-        .withColumn("_blocked", lit(true))), Seq("_sd"), "left")
-      .filter(col("_blocked").isNull)
-      // rules side follows the caller-stated domain scale, exactly as in
-      // robotsGate — unconditional broadcast of the |domains|-sized frame
-      // was the r17/r18 verdicts' carried scale defect
-      .join(domainFrameSide(rules, expectedDomains), Seq("_sd"), "left")
-      .filter(coalesce(pmod(robotsBestEnc(col("_rules"),
-        canonPathQuery(col("seed_canon"))), lit(2)) === 1, lit(true)))
-    // LEARNED novelty key (round 20 — the r19 verdict's #2, finishing
-    // r18 #2: with a param `policy` frame the sitemap loop keys its
-    // winner AND its novelty on the POLICY-STRIPPED canonical, so a
-    // session-id/boilerplate variant of a cataloged page is NOT
-    // re-enqueued — the crawl-trap axis bites at fetch time, and this
-    // loop IS the fetch scheduler's input. The policy probe reuses the
-    // already-derived `_sd` (strategy follows `expectedDomains`,
-    // [[domainFrameSide]]); `catalog` then carries `learned_canon`
-    // keys. Without a policy the key is the static canonical and the
-    // schema/semantics are round-17's exactly.
-    val keyed = policy match {
-      case Some(p) => gated
-        .join(domainFrameSide(p.select(col("domain").as("_sd"),
-          col("_drop")), expectedDomains), Seq("_sd"), "left")
-        .withColumn("_nov", when(col("_drop").isNull, col("seed_canon"))
-          .otherwise(graft.functions.StripParams(col("seed_canon"),
-            col("_drop"))))
-      case None => gated.withColumn("_nov", col("seed_canon"))
-    }
+    // admission on the canonical column (computed once above)
+    val gated = admitted(seeds
+        .withColumn("_sd", registrableDomain(col("seed_canon")))
+        .filter(schemeOk(col("seed_canon"))),
+      "_sd", "seed_canon", blocked, robots, agent, expectedDomains)
+    // with a `policy` the winner and the novelty key on the learned
+    // canonical, and `catalog` carries `learned_canon` keys
+    val keyed = withLearnedKey(gated, policy, "_sd", "seed_canon", "_nov",
+      expectedDomains)
     // first-occurrence winner per novelty key: min over the struct
     // orders by (sitemap, seed_idx) lexicographically — map-side
     // combinable, no per-key window sort. (String payload in the buffer
@@ -992,13 +1014,9 @@ object Url {
       .select(col("_w.domain").as("domain"), col("_w.sitemap").as("sitemap"),
         col("_w.seed_idx").as("seed_idx"), col("_w.seed_url").as("seed_url"),
         col("_w.seed_canon").as("seed_canon"), col("_nov"))
-    val catKey = if (policy.isDefined) "learned_canon" else "url_canon"
-    val novel = firsts
-      .join(catalog.select(col(catKey).as("_cat")).hint("shuffle_hash"),
-        col("_nov") === col("_cat"), "left_anti")
-    if (policy.isDefined)
-      novel.withColumnRenamed("_nov", "seed_learned")
-    else novel.drop("_nov")
+    val fresh = novel(firsts, col("_nov"), catalog, policy.isDefined)
+    if (policy.isDefined) fresh.withColumnRenamed("_nov", "seed_learned")
+    else fresh.drop("_nov")
   }
 
   /** Canonicalized-URL exact dedup, first-occurrence-wins (the library-wide
@@ -1044,11 +1062,8 @@ object Url {
     val flagged = Dedup.bloomMaybe(intraFirst, "url_canon",
       catalog, "url_canon", expectedCatalogSize, shards)
     val fresh = flagged.filter(!col("_maybe"))
-    // catalog side pinned off auto-broadcast: slim per row, corpus-scale
-    // cardinality (the incrementalDedup rule; LeftAnti builds RIGHT)
-    val verified = flagged.filter(col("_maybe"))
-      .join(catalog.select(col("url_canon").as("_cat")).hint("shuffle_hash"),
-        col("url_canon") === col("_cat"), "left_anti")
+    val verified = novel(flagged.filter(col("_maybe")), col("url_canon"),
+      catalog, learned = false)
     fresh.unionByName(verified).drop("_maybe")
   }
 
@@ -1079,9 +1094,7 @@ object Url {
       .agg(min(struct(col("doc_id"), col("url_canon"))).as("_w"))
       .select(col("_w.doc_id").as("doc_id"),
         col("_w.url_canon").as("url_canon"), col("learned_canon"))
-    intra.join(catalog.select(col("learned_canon").as("_cat"))
-        .hint("shuffle_hash"),
-      col("learned_canon") === col("_cat"), "left_anti")
+    novel(intra, col("learned_canon"), catalog, learned = true)
   }
 
   /** Deterministic session/content-param URL corpus (round 19 — the
@@ -1338,7 +1351,7 @@ object Url {
     * least one param to strip at `minSupport`+ distinct-page support —
     * the per-domain STRIP LIST the apply pass (and the frontier,
     * [[urlFrontierLearnedIncrement]]) consumes. The array is SORTED
-    * ([[applyParamPolicy]]'s binary-search contract — a crawl-trap
+    * ([[withLearnedKey]]'s binary-search contract — a crawl-trap
     * megadomain can flag 10⁵+ param names).
     *
     * Scale shape: one extra learn aggregation keyed on (domain, param,
@@ -1415,23 +1428,9 @@ object Url {
         count_distinct(col("url_canon")).cast("long").as("n_canon_variants"))
 
   /** The APPLY half of [[paramPolicyDedupCorroborated]]: per
-    * `(doc_id, url)` row, the policy-stripped LEARNED canonical key
+    * `(doc_id, url)` row, the LEARNED canonical key ([[withLearnedKey]])
     * alongside the static one — `(doc_id, url_canon, learned_canon)`.
-    * Row-local once the policy row is joined in (strategy follows
-    * `expectedDomains` like every per-domain probe); stripping
-    * preserves the already-sorted canonical key order. The strip
-    * itself is ONE native codegen'd expression
-    * ([[graft.functions.StripParams]], round 19 — binary
-    * search per param name over the policy's SORTED array): the
-    * `array_contains` spelling scanned O(|strip list|) per param
-    * (the 10× scale probe's param-vocab megadomain, 10⁵ flagged names, measured
-    * exponent 1.79 — the crawl-trap axis turning the apply pass
-    * quadratic), and the higher-order `filter` spelling was
-    * CodegenFallback, whose per-row eval boundary re-materialized the
-    * policy array out of the join stage (~55 s for 2M rows where the
-    * string work itself is ~1 s). The DuckDB oracle keeps plain
-    * `list_contains`/`list_filter` (membership is order-insensitive
-    * and the oracle's scale is tiny). */
+    * Row-local once the policy row is joined in. */
   private[graft] def applyParamPolicy(urls: DataFrame, policy: DataFrame,
                                       expectedDomains: Long = 0L): DataFrame = {
     // pin the canonical key as an ATTRIBUTE before the PSL derivation
@@ -1440,11 +1439,8 @@ object Url {
     val canon = Links.pinColumns(urls
         .select(col("doc_id"), canonicalizeUrl(col("url")).as("url_canon")))
       .withColumn("domain", registrableDomain(col("url_canon")))
-    canon
-      .join(domainFrameSide(policy, expectedDomains), Seq("domain"), "left")
-      .select(col("doc_id"), col("url_canon"),
-        when(col("_drop").isNull, col("url_canon"))
-          .otherwise(graft.functions.StripParams(col("url_canon"),
-            col("_drop"))).as("learned_canon"))
+    withLearnedKey(canon, Some(policy), "domain", "url_canon",
+        "learned_canon", expectedDomains)
+      .select(col("doc_id"), col("url_canon"), col("learned_canon"))
   }
 }

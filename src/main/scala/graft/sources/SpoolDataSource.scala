@@ -260,12 +260,13 @@ class SpoolDataSource extends TableProvider with DataSourceRegister {
 
 /** `topics = false` (default): one spool directory = one topic, schema
   * `(value)`, batch + micro-batch reads — the consumer side of a single
-  * bridged source. `topics = true`: `path` is a BUS ROOT holding one
-  * sub-directory per topic, schema `(topic, value)` — the Kafka column
-  * contract on both sides: batch read returns every message on the bus
-  * tagged with its topic; writes route each row to its topic's directory.
-  * Streaming reads stay per-topic (a multi-topic watermark would couple
-  * unrelated topics' progress; subscribe per topic as Kafka does). */
+  * bridged source; it takes no writes. `topics = true`: `path` is a BUS
+  * ROOT holding one sub-directory per topic, schema `(topic, value)` — the
+  * Kafka column contract on both sides: batch read returns every message
+  * on the bus tagged with its topic; batch and streaming writes route each
+  * row to its topic's directory. Streaming reads stay per-topic (a
+  * multi-topic watermark would couple unrelated topics' progress;
+  * subscribe per topic as Kafka does). */
 class SpoolTable(path: String, topics: Boolean)
     extends Table with SupportsRead with SupportsWrite {
   // captured at table creation (driver): one conf for every scan and
@@ -285,8 +286,9 @@ class SpoolTable(path: String, topics: Boolean)
   override def name(): String = s"${SpoolDataSource.NAME}($path)"
   override def schema(): StructType = readSchema
   override def capabilities(): util.Set[TableCapability] =
-    (Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE) ++
-      (if (topics) Nil else Seq(TableCapability.MICRO_BATCH_READ))).asJava
+    (Set(TableCapability.BATCH_READ) ++
+      (if (topics) Seq(TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE)
+       else Seq(TableCapability.MICRO_BATCH_READ))).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan =
@@ -294,33 +296,24 @@ class SpoolTable(path: String, topics: Boolean)
     }
 
   /** Publish seam (the write half of the bridge contract): the Kafka sink's
-    * row-level dynamic routing, re-expressed over the spool. Input schema is
-    * `value STRING` plus an optional `topic STRING` column — with `topic`
-    * present each row lands in `path/<topicDir(topic)>/`, mirroring the
-    * reference Filterer's dynamic `persistent://{tenantId}/...` publish
-    * (Filterer.kt:36–41); without it every row goes to `path` itself (the
-    * fixed-topic producer). Append-only, as a broker topic is: Spark's
-    * overwrite mode is rejected (no SupportsTruncate). Values are framed one
-    * per line (the read contract), so a `value` containing a newline is
-    * rejected at write time rather than silently split into two messages. */
+    * row-level dynamic routing, re-expressed over the spool. Only a
+    * `topics=true` table takes writes. Input schema is `(topic STRING,
+    * value STRING)`: each row lands in `path/<topicDir(topic)>/`,
+    * mirroring the reference Filterer's dynamic `persistent://{tenantId}/...`
+    * publish (Filterer.kt:36–41). Append-only, as a broker topic is:
+    * Spark's overwrite mode is rejected (no SupportsTruncate). Values are
+    * framed one per line (the read contract), so a `value` containing a
+    * newline is rejected at write time rather than silently split into two
+    * messages. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val s = info.schema()
-    require(s.fieldNames.contains("value") &&
-      s("value").dataType == StringType,
-      s"${SpoolDataSource.NAME} sink requires a `value` STRING column; got $s")
-    val topicIdx = s.fieldNames.indexOf("topic")
-    require(topicIdx < 0 || s("topic").dataType == StringType,
-      s"${SpoolDataSource.NAME} sink `topic` column must be STRING; got $s")
-    require(s.fieldNames.forall(f => f == "value" || f == "topic"),
-      s"${SpoolDataSource.NAME} sink accepts only (topic?, value); got $s")
-    // a topics=true bus read lists only SUB-directories — rows written to
-    // the root itself would be committed yet invisible to every reader
-    require(!topics || topicIdx >= 0,
-      s"${SpoolDataSource.NAME} sink: topics=true requires a `topic` column " +
-        "(rows without one would land in the bus root, unreadable in topics mode)")
+    require(s.fieldNames.sorted.sameElements(Array("topic", "value")) &&
+      s("topic").dataType == StringType && s("value").dataType == StringType,
+      s"${SpoolDataSource.NAME} sink requires exactly (topic STRING, value " +
+        s"STRING); got $s")
     new WriteBuilder {
-      override def build(): Write =
-        new SpoolWrite(path, s.fieldNames.indexOf("value"), topicIdx, conf)
+      override def build(): Write = new SpoolWrite(path,
+        s.fieldNames.indexOf("value"), s.fieldNames.indexOf("topic"), conf)
     }
   }
 }
@@ -597,15 +590,11 @@ class SpoolDataWriter(root: String, valueIdx: Int, topicIdx: Int,
     require(!hasLineTerminator(value),
       s"${SpoolDataSource.NAME} sink: `value` contains a line terminator — " +
         "the spool frames one message per line (escape or re-encode the payload)")
-    val dir =
-      if (topicIdx < 0) root
-      else {
-        require(!row.isNullAt(topicIdx),
-          s"${SpoolDataSource.NAME} sink: null `topic` (row $n of partition " +
-            s"$partitionId) — route or filter null topics before publishing")
-        s"$root/${SpoolDataSource.topicDir(row.getUTF8String(topicIdx).toString)}"
-      }
-    val out = streamFor(dir)
+    require(!row.isNullAt(topicIdx),
+      s"${SpoolDataSource.NAME} sink: null `topic` (row $n of partition " +
+        s"$partitionId) — route or filter null topics before publishing")
+    val out = streamFor(
+      s"$root/${SpoolDataSource.topicDir(row.getUTF8String(topicIdx).toString)}")
     value.writeTo(out); out.write('\n')
     n += 1
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.Dedup
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Dedup-family operators: exact, hash-keyed exact, MinHash LSH near-dup
@@ -62,9 +62,14 @@ class DedupSpec extends SparkSpec {
 
   test("minhash near-dup plan contains no cartesian or nested-loop join") {
     val d = docs(1L -> "a b c d e", 2L -> "a b c d e", 3L -> "x y z w v")
-    val plan = Dedup.minhashNeardup(d).queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), "cartesian product in plan")
-    assert(!plan.contains("BroadcastNestedLoopJoin"), "nested-loop join in plan")
+    // the band self-join runs in the candidates' materialization, the
+    // exact-Jaccard verify joins in the returned frame
+    var verify: DataFrame = null
+    val cand = checkpointPlans(1) { verify = Dedup.minhashNeardup(d) }
+    for (plan <- cand :+ verify.queryExecution.executedPlan.toString) {
+      assert(!plan.contains("CartesianProduct"), "cartesian product in plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin"), "nested-loop join in plan")
+    }
   }
 
   test("near-identical docs collide in at least one band (est < 1, jaccard < 1)") {
@@ -126,7 +131,8 @@ class DedupSpec extends SparkSpec {
 
   test("jaccardNeardup plan is equi-join only (no cartesian)") {
     val d = docs(1L -> "a b c d e", 2L -> "a b c d e", 3L -> "a b c x y")
-    val plan = Dedup.jaccardNeardup(d).queryExecution.executedPlan.toString
+    val plan = checkpointPlans(1) { Dedup.jaccardNeardup(d) }.head
+    assert(plan.contains("Join"), s"no join in the materialized plan:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
   }
 
@@ -249,8 +255,10 @@ class DedupSpec extends SparkSpec {
     assert(pairs.exists(p => p.getLong(0) === 1L && p.getLong(1) === 2L
       && p.getLong(2) === 0L))
     assert(!pairs.exists(p => p.getLong(1) === 3L || p.getLong(0) === 3L))
-    val plan = Dedup.simhashNeardup(docs(1L -> same, 2L -> same))
-      .queryExecution.executedPlan.toString
+    val plan = checkpointPlans(1) {
+      Dedup.simhashNeardup(docs(1L -> same, 2L -> same))
+    }.head
+    assert(plan.contains("Join"), s"no join in the materialized plan:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
   }
 
@@ -375,30 +383,23 @@ class DedupSpec extends SparkSpec {
     def persistedBeyond(base: Set[Int]): Set[Int] =
       sc.getPersistentRDDs.keySet.toSet -- base
 
-    // UNMANAGED leaves the catalog-cached intermediate alive after the action
-    val base0 = sc.getPersistentRDDs.keySet.toSet
-    val unmanaged = Dedup.jaccardNeardup(d, threshold = 0.5).collect()
-    assert(persistedBeyond(base0).nonEmpty, "expected session-cached intermediate")
-    spark.catalog.clearCache()
-
-    // MANAGED: same rows, and the only surviving block is the eagerly
-    // checkpointed RESULT the caller holds — never the intermediate index.
-    // Repeat invocation (the bench's 2-3 samples) must not stack blocks:
-    // block count after N calls stays N (result frames), not 2N.
-    for (op <- Seq[(org.apache.spark.sql.DataFrame, Boolean) => org.apache.spark.sql.DataFrame](
-        (df, m) => Dedup.jaccardNeardup(df, threshold = 0.5, managed = m),
-        (df, m) => Dedup.simhashNeardup(df, managed = m),
-        (df, m) => Dedup.minhashNeardup(df, managed = m))) {
+    // the only surviving block is the eagerly checkpointed RESULT the
+    // caller holds — never the intermediate index. Repeat invocation (the
+    // bench's 2-3 samples) must not stack blocks: block count after N
+    // calls stays N (result frames), not 2N, and the rows repeat exactly.
+    for (op <- Seq[DataFrame => DataFrame](
+        df => Dedup.jaccardNeardup(df, threshold = 0.5),
+        df => Dedup.simhashNeardup(df),
+        df => Dedup.minhashNeardup(df))) {
       val base = sc.getPersistentRDDs.keySet.toSet
-      val r1 = op(d, true); r1.count()
-      val r2 = op(d, true); r2.count()
+      val r1 = op(d); val rows1 = r1.collect()
+      val r2 = op(d); val rows2 = r2.collect()
+      assert(rows1.toSeq === rows2.toSeq)
       val extra = persistedBeyond(base)
-      // each managed call may keep exactly its checkpointed result; the
+      // each call may keep exactly its checkpointed result; the
       // persisted LSH intermediates (1+ per call) must be gone
       assert(extra.size <= 2, s"leaked blocks: $extra")
     }
-    val managedRows = Dedup.jaccardNeardup(d, threshold = 0.5, managed = true).collect()
-    assert(managedRows.toSeq === unmanaged.toSeq)
     spark.catalog.clearCache()
   }
 

@@ -173,7 +173,8 @@ class PlanSpec extends SparkSpec {
   test("minhash signature frame carries no shingle arrays into the band self-join") {
     import spark.implicits._
     val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f")).toDF("doc_id", "text")
-    val p = plan(graft.ops.Dedup.minhashNeardup(docs))
+    // the band self-join runs in the candidates' materialization
+    val p = checkpointPlans(1) { graft.ops.Dedup.minhashNeardup(docs) }.head
     // the only sort-merge/shuffle-hash join keys must be band columns, and
     // the persisted slim frame (doc_id, mh, bands) is what shuffles — the
     // full shingle arrays (`sh`) only appear in the candidate-verify joins
@@ -185,10 +186,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     // the deployed topology would absorb a failed whole-stage compile by
     // falling back to interpreted execution; with fallback off it throws
-    val key = "spark.sql.codegen.fallback"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+    withConf("spark.sql.codegen.fallback", "false") {
       val tagged = graft.pipeline.Pipeline.vehicleCmfBatch(spark, PipelineSpec.spoolDir()).tagged
       val (publish, deadLetter) = graft.pipeline.Pipeline.publishAndDeadLetter(tagged)
       assert(countPlanNodes(tagged, "WholeStageCodegen") > 0)
@@ -205,9 +203,6 @@ class PlanSpec extends SparkSpec {
       assert(t.quarantine.collect().length === 1)
       assert(routed.routed.collect().length === 2)
       assert(routed.dropped.collect().isEmpty)
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Shared local SparkSession for all suites (getOrCreate dedupes across
   * suites in the forked test JVM), built by [[Harness.session]] so the
   * suites run under the configuration the measurement mains use — UTC +
@@ -40,5 +42,40 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
     }
     nodes(df.queryExecution.executedPlan).count(_.nodeName.contains(token))
+  }
+
+  /** Runs `body` with SQL conf `key` set to `value`, then restores the
+    * session's own value, or unsets the key if it had none. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The executed plans of the first `n` `localCheckpoint` actions that
+    * `body` runs. An operator that materializes its result returns a frame
+    * over the checkpoint, so the plan it computed is seen only here. The
+    * listener bus delivers asynchronously: waits up to 60 s for `n`. */
+  def checkpointPlans(n: Int)(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size >= n, s"saw ${plans.size} localCheckpoint plans, expected $n")
+    plans.asScala.take(n).toSeq
   }
 }

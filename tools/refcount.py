@@ -8,7 +8,7 @@ Usage, from the root of a checkout (or with the checkout as argument):
 Reads every .scala/.py/.sh file under src/main/scala, src/test/scala,
 pipebench/src and tools, with comments and string literals stripped (a
 string's `$name` and `${...}` interpolations are kept, as code; a package
-clause is dropped). Prints four lists and exits 0; it gates nothing.
+clause is dropped). Prints five lists and exits 0; it gates nothing.
 
 1. Test-only members. Every `def`/`val`/`var` declared at member indent
    (two spaces) in src/main/scala that is not `private` or `override`.
@@ -38,6 +38,12 @@ clause is dropped). Prints four lists and exits 0; it gates nothing.
    if that file names the callee's object or class, and a call with more
    arguments than the callee has parameters is another method's.
 
+5. Fixed named arguments. Every parameter name, per src/main/scala file,
+   that every src/main call site of every non-`private` `def` or class
+   there declaring it passes by name, all with one literal (`true`, a number, a string,
+   `None`, ...), over two sites or more: a switch its callers never
+   throw. Call sites are found as in list 4.
+
 Name collisions only over-count, so lists 1 to 3 never name a member or
 type that is used; they can hide one that is not. Whole-word counting
 still lets a class member hide behind any same-named identifier, and an
@@ -63,6 +69,7 @@ OWNER = re.compile(r"^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|case|impli
                    r"(object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
 SOURCES = {}  # file -> unstripped .scala text, filled by load()
 LITERALS = {}  # file -> .scala text with comments blanked, strings kept
+CALLS = {}  # file -> name -> [(start, end)] of every `name(` or `name[T](`
 DEFAULTED = re.compile(
     r"\b(?:def\s+([A-Za-z_][A-Za-z0-9_]*)(?:\[[^\]]*\])?|class\s+([A-Za-z_][A-Za-z0-9_]*)(?:\[[^\]]*\])?)\s*\(")
 
@@ -151,6 +158,10 @@ def load(root):
                     assert len(files[rel][1]) == len(src), rel
                     SOURCES[rel] = src
                     LITERALS[rel] = strip_scala(src, strings=False)
+                    calls = CALLS[rel] = {}
+                    for cm in re.finditer(r"(?<![%s])([A-Za-z_][A-Za-z0-9_]*)"
+                                          r"(?:\[[^\]()]*\])?(?=\s*\()" % WORD, files[rel][1]):
+                        calls.setdefault(cm.group(1), []).append((cm.start(), cm.end()))
     return files
 
 
@@ -294,23 +305,42 @@ PARAM = re.compile(r"\s*(?:(?:implicit|val|var|override|private|final)\s+)*"
 NAMED = re.compile(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=>])\s*(.*?)\s*$", re.S)
 
 
-def knobs(files):
-    """(file, line, callee, param, default) never set outside src/test."""
-    def written(rel, start, end):  # source text, literals and all
-        return re.sub(r"\s+", " ", SOURCES[rel][start:end])
+LITERAL = re.compile(r'(?:true|false|null|None|-?\d[\d_]*(?:\.\d+)?[LlDdFf]?|"[^"\n]*")$')
 
+
+NAMES = {}  # (file, type) -> whether the file names it
+
+
+def names_type(rel, text, name):
+    if (rel, name) not in NAMES:
+        NAMES[(rel, name)] = count(text, name) > 0
+    return NAMES[(rel, name)]
+
+
+def written(rel, start, end):
+    """Source text of a span, literals and all, whitespace collapsed."""
+    return re.sub(r"\s+", " ", SOURCES[rel][start:end])
+
+
+def callables(files):
+    """Every def and class in src/main with a parameter list, with its call
+    sites outside src/test: (file, line, callee, [(list index, position,
+    param, default as written or None)], [(file, name called, [argument
+    lists, each a list of (offset, argument)])])."""
     for rel, (area, text) in files.items():
         if area != "src/main/scala" or not rel.endswith(".scala"):
             continue
         for m in DEFAULTED.finditer(text):
             callee = m.group(1) or m.group(2)
             plists = groups(text, m.end() - 1)
-            params = []  # (list index, position, name, default as written)
+            params = []
             for li, (off, plist) in enumerate(plists):
                 for pos, (poff, p) in enumerate(split_top(plist, off)):
                     pm = PARAM.match(p)
-                    if pm:
-                        params.append((li, pos, pm.group(1),
+                    nm = pm or re.match(r"\s*(?:(?:implicit|val|var|override|private|final)\s+)*"
+                                        r"([A-Za-z_][A-Za-z0-9_]*)\s*:", p)
+                    if nm:
+                        params.append((li, pos, nm.group(1), pm and
                                        written(rel, poff + pm.start(2), poff + pm.end(2))))
             if not params:
                 continue
@@ -318,39 +348,73 @@ def knobs(files):
             home = m.group(2) or owner(text, m.start())
             decl_end = plists[-1][0] + len(plists[-1][1])
             names = [callee] + (["copy"] if m.group(2) else [])
-            set_ = set()
+            sites = []
             for other, (oarea, otext) in files.items():
                 if oarea == "src/test/scala" or other not in SOURCES:
                     continue
                 # a call in another file can only reach this one if the
                 # file names its object or class (a qualified call or an
                 # import); same-named methods elsewhere are other methods
-                if other != rel and home and count(otext, home) == 0:
+                if other != rel and home and not names_type(other, otext, home):
                     continue
                 for nm in names:
-                    for cm in re.finditer(r"(?<![%s])%s(?:\[[^\]()]*\])?(?=\s*\()"
-                                          % (WORD, re.escape(nm)), otext):
-                        if other == rel and m.start() <= cm.start() < decl_end:
+                    for start, end in CALLS[other].get(nm, ()):
+                        if other == rel and m.start() <= start < decl_end:
                             continue
-                        for li, (off, call) in enumerate(groups(otext, cm.end())):
+                        lists = []
+                        for li, (off, call) in enumerate(groups(otext, end)):
                             args = split_top(call, off)
                             if li >= len(arity) or len(args) > arity[li]:
                                 break  # more arguments than parameters: another method
-                            for pos, (aoff, a) in enumerate(args):
-                                am = NAMED.match(a)
-                                for (pl, pp, pn, pd) in params:
-                                    if pl != li:
-                                        continue
-                                    if am:
-                                        hit, v = am.group(1) == pn, (aoff + am.start(2), aoff + am.end(2))
-                                    else:
-                                        hit, v = nm != "copy" and pos == pp, (aoff, aoff + len(a))
-                                    if hit and written(other, *v).strip() != pd:
-                                        set_.add(pn)
-            line = text.count("\n", 0, m.start()) + 1
-            for (_, _, pn, pd) in params:
-                if pn not in set_:
-                    yield rel, line, callee, pn, pd
+                            lists.append(args)
+                        if lists:
+                            sites.append((other, nm, lists))
+            yield rel, text.count("\n", 0, m.start()) + 1, callee, params, sites
+
+
+def knobs(files):
+    """(file, line, callee, param, default) never set outside src/test."""
+    for rel, line, callee, params, sites in callables(files):
+        set_ = set()
+        for other, nm, lists in sites:
+            for li, args in enumerate(lists):
+                for pos, (aoff, a) in enumerate(args):
+                    am = NAMED.match(a)
+                    for (pl, pp, pn, pd) in params:
+                        if pl != li or pd is None:
+                            continue
+                        if am:
+                            hit, v = am.group(1) == pn, (aoff + am.start(2), aoff + am.end(2))
+                        else:
+                            hit, v = nm != "copy" and pos == pp, (aoff, aoff + len(a))
+                        if hit and written(other, *v).strip() != pd:
+                            set_.add(pn)
+        for (_, _, pn, pd) in params:
+            if pd is not None and pn not in set_:
+                yield rel, line, callee, pn, pd
+
+
+def fixed_named(files):
+    """(file, param, literal, sites, callees): a parameter name that every
+    src/main call site of every callee in `file` declaring it passes by
+    name, all with the same literal, over two sites or more."""
+    seen = {}  # (file, param) -> ([value per site], {callee})
+    for rel, line, callee, params, sites in callables(files):
+        decl = files[rel][1].split("\n")[line - 1]
+        if re.search(r"\bprivate(?!\[)", decl):
+            continue  # a private helper's caller forwards the public switch
+        main_sites = [s for s in sites if files[s[0]][0] == "src/main/scala"]
+        for (pl, _, pn, _) in params:
+            values, callees = seen.setdefault((rel, pn), ([], set()))
+            callees.add(callee)
+            for other, _, lists in main_sites:
+                named = [written(other, aoff + am.start(2), aoff + am.end(2)).strip()
+                         for aoff, a in (lists[pl] if pl < len(lists) else [])
+                         for am in [NAMED.match(a)] if am and am.group(1) == pn]
+                values.append(named[0] if named else None)
+    for (rel, pn), (values, callees) in seen.items():
+        if len(values) >= 2 and len(set(values)) == 1 and values[0] and LITERAL.match(values[0]):
+            yield rel, pn, values[0], len(values), ", ".join(sorted(callees))
 
 
 def main():
@@ -379,6 +443,10 @@ def main():
     print("defaulted parameters nothing outside src/test sets (%d)" % len(unset))
     for rel, no, callee, pn, pd in unset:
         print("  %s:%d %s(%s = %s)" % (rel, no, callee, pn, pd))
+    fixed = sorted(set(fixed_named(files)))
+    print("named arguments every src/main call site sets to one literal (%d)" % len(fixed))
+    for rel, pn, lit, n, callees in fixed:
+        print("  %s: %s = %s at %d of %d sites (%s)" % (rel, pn, lit, n, n, callees))
     return 0
 
 
