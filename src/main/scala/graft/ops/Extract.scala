@@ -95,7 +95,7 @@ object Extract {
     * text) are what this operator provides. Output: (idCol, keep,
     * fail_reasons, n_kept_lines) — row-local, zero exchanges. */
   def c4PageFilter(raw: DataFrame, htmlCol: String = "html",
-                   idCol: String = "doc_id", minLines: Int = 5,
+                   idCol: String = "doc_id", minLines: Int,
                    minWords: Int = 3,
                    blocklist: Seq[String] = Seq.empty): DataFrame = {
     // stage the extracted lines once; the rule expressions below then

@@ -8,6 +8,12 @@ import org.apache.spark.sql.functions._
   * local-top-k pass. Top level so Encoders.product resolves it. */
 final case class ScoredPair(query_id: Long, neighbor_id: Long, sim: Double)
 
+object ScoredPair {
+  /** The order every ANN query ranks by: sim desc, then neighbor_id asc. */
+  val bestFirst: Ordering[ScoredPair] =
+    Ordering.by((e: ScoredPair) => (-e.sim, e.neighbor_id))
+}
+
 /** Approximate-nearest-neighbor / similarity search over an embedding column
   * (`Array[Float]`, SURVEY.md §2.5).
   *
@@ -15,7 +21,7 @@ final case class ScoredPair(query_id: Long, neighbor_id: Long, sim: Double)
   *  - [[cosineTopK]] — brute-force baseline: the (small) query set is
   *    broadcast against the corpus, so the "cross join" is a broadcast
   *    nested-loop with NO shuffle of the big side; per-pair cost is one
-  *    fused zip_with/aggregate dot product inside codegen.
+  *    native dot product inside codegen.
   *  - [[lshCosineTopK]] — the 100 TB path: random-hyperplane LSH. Each
   *    vector gets a b-bit signature (sign of ⟨v, p_k⟩ for deterministic
   *    md5-derived hyperplanes); candidates are only corpus rows whose
@@ -41,6 +47,40 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** Vector admission, the first step of every cosine and IVF operator:
+    * `vec_id` under the caller's alias `id`, the embedding as
+    * `array<double>` under `emb`, its norm under `nrm`, and zero-norm rows
+    * dropped. A zero vector has no cosine and no coarse list, so it can be
+    * neither a query nor a candidate. */
+  private def admitted(df: DataFrame, id: String, emb: String,
+                       nrm: String): DataFrame =
+    df.select(col("vec_id").as(id), asDouble(col("embedding")).as(emb))
+      .withColumn(nrm, norm(col(emb)))
+      .filter(col(nrm) > 0.0)
+
+  /** Cosine of an admitted query (`q_emb`, `q_norm`) and an admitted
+    * candidate (`c_emb`, `c_norm`). */
+  private def cosine: Column =
+    dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))
+
+  /** Cosine of every (query, candidate) pair that shares `key`, self-pairs
+    * dropped: (query_id, neighbor_id, sim). The query side is broadcast, so
+    * the candidate side never shuffles. */
+  private def scoredOn(c: DataFrame, q: DataFrame, key: String): DataFrame =
+    c.join(broadcast(q), Seq(key))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), cosine.cast("double").as("sim"))
+
+  /** The rank every cosine search ends with: per query, the `k` best
+    * scored pairs under (sim desc, neighbor_id asc), numbered from 1:
+    * (query_id, neighbor_id, rank, sim). */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val rn = row_number().over(
+      Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id")))
+    scored.withColumn("rank", rn).filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "rank", "sim")
+  }
+
   /** Per-partition bounded-heap top-k: keeps only the k best candidates per
     * query per input partition, so the exchange feeding the global ranking
     * window carries ≤ k·partitions·queries rows instead of
@@ -51,15 +91,13 @@ object Similarity {
     * into #queries partitions (straggler/OOM at scale). */
   private def localTopK(scored: DataFrame, k: Int): DataFrame = {
     val ds = scored.as(Encoders.product[ScoredPair])
-    // min-heap whose head is the WORST kept pair under (sim desc, id asc)
-    val worstFirst: Ordering[ScoredPair] =
-      Ordering.by((e: ScoredPair) => (-e.sim, e.neighbor_id))
     ds.mapPartitions { it =>
+      // max-heap under best-first order: its head is the WORST kept pair
       val heaps = scala.collection.mutable.Map.empty[
         Long, scala.collection.mutable.PriorityQueue[ScoredPair]]
       it.foreach { e =>
         val h = heaps.getOrElseUpdate(e.query_id,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
+          scala.collection.mutable.PriorityQueue.empty(ScoredPair.bestFirst))
         h.enqueue(e)
         if (h.size > k) h.dequeue()
       }
@@ -67,28 +105,23 @@ object Similarity {
     }(Encoders.product[ScoredPair]).toDF()
   }
 
-  /** Brute-force cosine top-k: for each row of `queries`, the k most similar
-    * `corpus` rows (self-pairs excluded). The query side is broadcast (no
-    * corpus shuffle); scoring fuses into the scan; a local top-k pass bounds
-    * the ranking exchange. Output: (query_id, neighbor_id, rank, sim). */
-  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-      .filter(col("q_norm") > 0.0)
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("c_emb"))
-      .withColumn("c_norm", norm(col("c_emb")))
-      .filter(col("c_norm") > 0.0)
-    val sim = dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+  /** The scored pairs of brute-force cosine search: every admitted
+    * (query, corpus) pair but self-pairs, in [[ScoredPair]]'s columns. The
+    * query side is broadcast, so the corpus never shuffles and scoring
+    * fuses into its scan. */
+  private def bruteScored(corpus: DataFrame, queries: DataFrame): DataFrame = {
+    val q = admitted(queries, "query_id", "q_emb", "q_norm")
+    admitted(corpus, "neighbor_id", "c_emb", "c_norm")
+      .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
-        sim.cast("double").as("sim"))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id")))
-    localTopK(scored, k).withColumn("rank", rn).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+        cosine.cast("double").as("sim"))
   }
+
+  /** Brute-force cosine top-k: for each row of `queries`, the k most similar
+    * `corpus` rows (self-pairs excluded). A local top-k pass bounds the
+    * ranking exchange. Output: (query_id, neighbor_id, rank, sim). */
+  def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankTopK(localTopK(bruteScored(corpus, queries), k), k)
 
   /** [[cosineTopK]] with the ranking done by the typed
     * [[graft.functions.TopKAggregator]] instead of localTopK+window:
@@ -98,21 +131,9 @@ object Similarity {
     * all. Registered as its own query so the two implementations stay
     * oracle-checked against each other. */
   def cosineTopKAgg(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-      .filter(col("q_norm") > 0.0)
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("c_emb"))
-      .withColumn("c_norm", norm(col("c_emb")))
-      .filter(col("c_norm") > 0.0)
-    val sim = dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
-        sim.cast("double").as("sim"))
-      .as(Encoders.product[ScoredPair])
-    val topk = new graft.functions.TopKAggregator(k).toColumn
-    scored.groupByKey(_.query_id)(Encoders.scalaLong)
+    val topk = new graft.functions.TopKAggregator(k, ScoredPair.bestFirst).toColumn
+    bruteScored(corpus, queries).as(Encoders.product[ScoredPair])
+      .groupByKey(_.query_id)(Encoders.scalaLong)
       .agg(topk)
       .flatMap { case (qid, tops) =>
         tops.iterator.zipWithIndex.map { case (e, i) =>
@@ -151,9 +172,7 @@ object Similarity {
   def cosineNeardup(corpus: DataFrame, threshold: Double,
                     numPlanes: Int = 8, dim: Int = 64): DataFrame = {
     val ps = planes(numPlanes, dim)
-    val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-      .filter(col("nrm") > 0.0)
+    val base = admitted(corpus, "vec_id", "emb", "nrm")
       .withColumn("sig", lshSignature(col("emb"), ps))
     val a = base.select(col("vec_id").as("vec_a"), col("emb").as("a_emb"),
       col("nrm").as("a_nrm"), col("sig"))
@@ -188,26 +207,47 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               numCentroids: Int = 16, dim: Int = 64,
               nprobe: Int = 2): DataFrame =
-    ivfScore(ivfAssignCorpus(corpus, numCentroids, dim),
-      ivfProbes(queries, numCentroids, dim, nprobe), k)
+    rankTopK(scoredOn(ivfAssignCorpus(corpus, numCentroids, dim),
+      ivfProbes(queries, numCentroids, dim, nprobe), "cid"), k)
+
+  /** Dot scores of `emb` against each md5 coarse centroid, in centroid
+    * order — the md5 quantizer's one scoring rule. */
+  private def scores(emb: Column, cents: Seq[Seq[Double]]): Column =
+    array(cents.map(cv => dot(emb, array(cv.map(lit): _*))): _*)
+
+  /** `df` plus `cid`, the 1-based md5 list whose centroid scores highest
+    * against `emb` (the first one on ties). */
+  private def nearestMd5(df: DataFrame, emb: String,
+                         cents: Seq[Seq[Double]]): DataFrame =
+    df.withColumn("_s", scores(col(emb), cents))
+      .withColumn("cid", array_position(col("_s"), array_max(col("_s"))))
+      .drop("_s")
+
+  /** The md5 probe set: each query row once per one of its top-`nprobe`
+    * lists as `cid`, with the `keep` columns. A rank filter over the
+    * exploded (centroid, score) pairs, ties broken by centroid index, so
+    * every query gets exactly min(nprobe, numCentroids) probes (an
+    * argmax-of-the-rest spelling degenerated to ONE probe when all scores
+    * tied). The window partitions the tiny exploded QUERY side only
+    * (|queries| x numCentroids rows), never the corpus. */
+  private def md5Probes(q: DataFrame, keep: Seq[String], emb: String,
+                        cents: Seq[Seq[Double]], nprobe: Int): DataFrame = {
+    val kept = keep.map(col)
+    q.select(kept :+ posexplode(scores(col(emb), cents)).as(Seq("_pos", "_sc")): _*)
+      .withColumn("_pr", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("_sc").desc, col("_pos"))))
+      .filter(col("_pr") <= nprobe)
+      .select(kept :+ (col("_pos") + 1).cast("long").as("cid"): _*)
+  }
 
   /** The corpus half of the IVF index: every vector assigned to its
     * nearest deterministic coarse centroid — (neighbor_id, c_emb, c_norm,
     * cid). This is the expensive corpus-sized pass; the serving pair
     * below amortizes it into one bucketed write. */
   private def ivfAssignCorpus(corpus: DataFrame, numCentroids: Int,
-                              dim: Int): DataFrame = {
-    val cents = ivfCentroids(numCentroids, dim)
-    def scores(emb: Column): Column =
-      array(cents.map(cv => dot(emb, array(cv.map(lit): _*))): _*)
-    corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("c_emb"))
-      .withColumn("c_norm", norm(col("c_emb")))
-      .filter(col("c_norm") > 0.0)
-      .withColumn("_s", scores(col("c_emb")))
-      .withColumn("cid", array_position(col("_s"), array_max(col("_s"))))
-      .drop("_s")
-  }
+                              dim: Int): DataFrame =
+    nearestMd5(admitted(corpus, "neighbor_id", "c_emb", "c_norm"), "c_emb",
+      ivfCentroids(numCentroids, dim))
 
   /** Build-once half of the IVF serving pair (the vector sibling of
     * [[TextAnalysis.bm25WriteIndex]]): persist the assigned corpus as
@@ -248,8 +288,8 @@ object Similarity {
       s"index '$prefix' was built with numCentroids=${meta.getInt(0)}, " +
         s"dim=${meta.getInt(1)} but queried with numCentroids=$numCentroids, " +
         s"dim=$dim — probes would use a different quantizer than the lists")
-    ivfScore(spark.table(s"${prefix}_lists"),
-      ivfProbes(queries, numCentroids, dim, nprobe), k)
+    rankTopK(scoredOn(spark.table(s"${prefix}_lists"),
+      ivfProbes(queries, numCentroids, dim, nprobe), "cid"), k)
   }
 
   /** Persisted TRAINED-quantizer IVF index (round-14 completion of the
@@ -286,47 +326,18 @@ object Similarity {
   }
 
   /** Query half: probe the top-`nprobe` persisted centroids by the same
-    * norm-corrected score as assignment, exact-cosine the probed lists
-    * ([[ivfScore]]'s core), and collapse spill duplicates (a neighbor
+    * norm-corrected score as assignment ([[trainedLists]]), exact-cosine
+    * the probed lists, and collapse spill duplicates (a neighbor
     * reachable through two probed lists scores identically in both — the
     * dedup is over equal values). Zero corpus work at query time. */
   def ivfSearchIndexedTrained(spark: org.apache.spark.sql.SparkSession,
                               queries: DataFrame, prefix: String = "ivft",
                               k: Int = 5, nprobe: Int = 16): DataFrame = {
-    val centInts = persistedCents(spark, prefix)
-    val centNorms = centInts.map(cv =>
-      math.sqrt(cv.map(x => (x * x).toDouble).sum))
-    def scores(qvd: Column): Column =
-      array(centInts.zip(centNorms).map { case (cv, nn) =>
-        dot(qvd, array(cv.map(x => lit(x.toDouble)): _*)) / lit(nn)
-      }: _*)
-    def normQuant(emb: Column, nrm: Column): Column =
-      transform(emb, x => greatest(lit(-127L), least(lit(127L),
-        floor(x * 127.0 / nrm + lit(0.5)).cast("long"))))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-      .filter(col("q_norm") > 0.0)
-      .withColumn("_qvd", transform(
-        normQuant(col("q_emb"), col("q_norm")), x => x.cast("double")))
-      .select(col("query_id"), col("q_emb"), col("q_norm"),
-        posexplode(scores(col("_qvd"))).as(Seq("_pos", "_sc")))
-      .withColumn("_pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("_sc").desc, col("_pos"))))
-      .filter(col("_pr") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("q_norm"),
-        (col("_pos") + 1).cast("long").as("cid"))
-    val sim = dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))
-    val scored = spark.table(s"${prefix}_lists").join(broadcast(probes), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), sim.cast("double").as("sim"))
-      // spill dedup over provably-equal sims (same raw vectors both times)
+    val probes = trainedLists(queries, "query_id", "q_emb", "q_norm",
+      centMatrix(persistedCents(spark, prefix)), nprobe)
+    rankTopK(scoredOn(spark.table(s"${prefix}_lists"), probes, "cid")
       .groupBy("query_id", "neighbor_id")
-      .agg(max(col("sim")).as("sim"))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id")))
-    scored.withColumn("rank", rn).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+      .agg(max(col("sim")).as("sim")), k)
   }
 
   /** The persisted quantizer, read back as driver-side integer centroids
@@ -336,79 +347,41 @@ object Similarity {
     spark.table(s"${prefix}_cents").orderBy("ccid").collect()
       .map(_.getSeq[Long](1).toSeq).toSeq
 
-  /** Shared corpus-assignment pass of the trained index build/append:
-    * top-`assignTop` lists by norm-corrected integer-dot score (the
-    * iterative argmax-and-mask of [[ivfPqTopKWithCents]]), emitting
-    * [[ivfScore]]'s corpus shape — (neighbor_id, c_emb, c_norm, cid). */
+  /** Integer centroids as one constant `array<array<bigint>>` column. */
+  private def centMatrix(cents: Seq[Seq[Long]]): Column =
+    array(cents.map(cv => array(cv.map(lit): _*)): _*)
+
+  /** Trained-centroid ranking, the one rule the trained IVF family assigns
+    * and probes by: each admitted vector once per one of its top-`n` lists
+    * as `cid` (1-based), with its `id`, `emb` and `nrm` — [[scoredOn]]'s
+    * frame shape. Lists rank by norm-corrected integer-dot score over the
+    * vector's normalized int8 form, ties to the lowest index, as one
+    * native loop ([[graft.functions.TopCentroids]] over
+    * [[graft.functions.NormQuantVec]]): exact integers summed in doubles
+    * (|qv·c| ≤ 127²·dim ≪ 2⁵³) over a driver-side norm, so every engine
+    * ranks alike. Row-local: never a corpus-sized ranking window. */
+  private def trainedLists(df: DataFrame, id: String, emb: String, nrm: String,
+                           cents: Column, n: Int): DataFrame =
+    admitted(df, id, emb, nrm).select(col(id), col(emb), col(nrm),
+      explode(graft.functions.TopCentroids(
+        graft.functions.NormQuantVec(col(emb), col(nrm)), cents, n)).as("cid"))
+
+  /** Corpus assignment of the trained index build: every vector SPILLED to
+    * its top-`assignTop` lists — (neighbor_id, c_emb, c_norm, cid). */
   private def trainedAssign(embs: DataFrame, centInts: Seq[Seq[Long]],
                             assignTop: Int): DataFrame = {
     require(centInts.nonEmpty, "no usable centroids")
     require(assignTop >= 1 && assignTop <= centInts.size,
       s"assignTop must be in [1, ${centInts.size}], got $assignTop")
-    val centNorms = centInts.map(cv =>
-      math.sqrt(cv.map(x => (x * x).toDouble).sum))
-    def scores(qvd: Column): Column =
-      array(centInts.zip(centNorms).map { case (cv, nn) =>
-        dot(qvd, array(cv.map(x => lit(x.toDouble)): _*)) / lit(nn)
-      }: _*)
-    def normQuant(emb: Column, nrm: Column): Column =
-      transform(emb, x => greatest(lit(-127L), least(lit(127L),
-        floor(x * 127.0 / nrm + lit(0.5)).cast("long"))))
-    var r = embs
-      .select(col("vec_id").as("neighbor_id"), asDouble(col("embedding")).as("c_emb"))
-      .withColumn("c_norm", norm(col("c_emb")))
-      .filter(col("c_norm") > 0.0)
-      .withColumn("_qvd", transform(
-        normQuant(col("c_emb"), col("c_norm")), x => x.cast("double")))
-      .withColumn("_s", scores(col("_qvd")))
-    (1 to assignTop).foreach { i =>
-      r = r.withColumn(s"_p$i",
-          array_position(col("_s"), array_max(col("_s"))))
-        .withColumn("_s", zip_with(col("_s"),
-          sequence(lit(1L), lit(centInts.size.toLong)),
-          (v, idx) => when(idx === col(s"_p$i"),
-            lit(Double.NegativeInfinity)).otherwise(v)))
-    }
-    r.select(col("neighbor_id"), col("c_emb"), col("c_norm"),
-      explode(array((1 to assignTop).map(i => col(s"_p$i")): _*)).as("cid"))
+    trainedLists(embs, "neighbor_id", "c_emb", "c_norm", centMatrix(centInts),
+      assignTop)
   }
 
   private def ivfProbes(queries: DataFrame, numCentroids: Int, dim: Int,
-                        nprobe: Int): DataFrame = {
-    val cents = ivfCentroids(numCentroids, dim)
-    def scores(emb: Column): Column =
-      array(cents.map(cv => dot(emb, array(cv.map(lit): _*))): _*)
-
-    // probe set = rank-<=nprobe filter over the exploded (centroid, score)
-    // pairs, ties broken by centroid index — every query gets exactly
-    // min(nprobe, numCentroids) probes. (The previous argmax-of-the-rest
-    // spelling silently degenerated to ONE probe when all centroid scores
-    // tied.) The ranking window partitions the tiny exploded QUERY side
-    // only (|queries| x numCentroids rows), never the corpus.
-    queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-      .filter(col("q_norm") > 0.0)
-      .select(col("query_id"), col("q_emb"), col("q_norm"),
-        posexplode(scores(col("q_emb"))).as(Seq("_pos", "_sc")))
-      .withColumn("_pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("_sc").desc, col("_pos"))))
-      .filter(col("_pr") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("q_norm"),
-        (col("_pos") + 1).cast("long").as("cid"))
-  }
-
-  // the probed-lists scoring core shared by the live and indexed forms
-  private def ivfScore(c: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    val sim = dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))
-    val scored = c.join(broadcast(q), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), sim.cast("double").as("sim"))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id")))
-    scored.withColumn("rank", rn).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
-  }
+                        nprobe: Int): DataFrame =
+    md5Probes(admitted(queries, "query_id", "q_emb", "q_norm"),
+      Seq("query_id", "q_emb", "q_norm"), "q_emb",
+      ivfCentroids(numCentroids, dim), nprobe)
 
   /** All `numPlanes`+1 multiprobe signatures of a query signature: the exact
     * bucket plus each single-bit flip. Probing adjacent buckets recovers most
@@ -431,29 +404,16 @@ object Similarity {
   def lshCosineTopKMultiprobe(corpus: DataFrame, queries: DataFrame, k: Int,
                               numPlanes: Int = 8, dim: Int = 64): DataFrame = {
     val ps = planes(numPlanes, dim)
-    val q = queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-      .filter(col("q_norm") > 0.0)
+    val q = admitted(queries, "query_id", "q_emb", "q_norm")
       .withColumn("sig",
         explode(probeSignatures(lshSignature(col("q_emb"), ps), numPlanes)))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("c_emb"))
-      .withColumn("c_norm", norm(col("c_emb")))
-      .filter(col("c_norm") > 0.0)
+    val c = admitted(corpus, "neighbor_id", "c_emb", "c_norm")
       .withColumn("sig", lshSignature(col("c_emb"), ps))
-    val sim = dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))
     // no pair dedup needed: a corpus row has exactly ONE signature and the
     // probe set (exact + single-bit flips) is pairwise distinct, so a
     // (query, neighbor) pair can match the equi-join at most once — a
     // dropDuplicates here would just add a full extra exchange
-    val scored = c.join(broadcast(q), Seq("sig"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), sim.cast("double").as("sim"))
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id")))
-    scored.withColumn("rank", rn).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+    rankTopK(scoredOn(c, q, "sig"), k)
   }
 
   /** LSH-bucketed cosine top-k: exact re-rank restricted to same-signature
@@ -462,24 +422,11 @@ object Similarity {
   def lshCosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                     numPlanes: Int = 8, dim: Int = 64): DataFrame = {
     val ps = planes(numPlanes, dim)
-    val q = queries.select(col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-      .filter(col("q_norm") > 0.0)
+    val q = admitted(queries, "query_id", "q_emb", "q_norm")
       .withColumn("sig", lshSignature(col("q_emb"), ps))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      asDouble(col("embedding")).as("c_emb"))
-      .withColumn("c_norm", norm(col("c_emb")))
-      .filter(col("c_norm") > 0.0)
+    val c = admitted(corpus, "neighbor_id", "c_emb", "c_norm")
       .withColumn("sig", lshSignature(col("c_emb"), ps))
-    val sim = dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm"))
-    val scored = c.join(broadcast(q), Seq("sig"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", sim)
-    val rn = row_number().over(
-      Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id")))
-    scored.withColumn("rank", rn).filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+    rankTopK(scoredOn(c, q, "sig"), k)
   }
 
   /** Symmetric per-vector int8 scalar quantization — the standard 4×
@@ -578,10 +525,8 @@ object Similarity {
     // analysis and codegen every round. The encoded winner is PINNED as
     // an attribute (pinColumns — a Generate is a CollapseProject barrier)
     // before the cid/dist2 decode references it twice.
-    val centMatrix = array(sorted.map { case (_, cq) =>
-      array(cq.map(lit): _*)
-    }: _*)
-    val enc = graft.functions.NearestCentroidEnc(col("qv"), centMatrix)
+    val enc = graft.functions.NearestCentroidEnc(col("qv"),
+      centMatrix(sorted.map(_._2)))
     val cidArr = array(sorted.map(c => lit(c._1)): _*)
     Links.pinColumns(q.select(col("vec_id"), col("qv"), enc.as("_enc")))
       .select(col("vec_id"),
@@ -942,99 +887,31 @@ object Similarity {
     * cells encode actual variation: recall@5 recovers to 0.15 (nprobe=2)
     * / 0.325 (nprobe=8) at the same m and k. Codebook count scales as
     * numCentroids×m (broadcast-tiny; cells are k per book max).
-    * Seeds are the k globally-lowest-id vectors residualized against
-    * EVERY list (one limit(k) + a numCentroids-row cross join) — no
-    * per-list rank window over the corpus, and seeds stay deterministic.
     *
     * Asymmetric distance on the query side: each (query, probed list)
     * pair gets its OWN lookup table over the query's residual vs that
     * list's centroid and that list's codebook — k×m×nprobe tiny rows per
-    * query, broadcast. The (ccid, sub, cid) equi-join of corpus codes
-    * against that LUT is the IVF restriction AND the ADC lookup in one:
-    * codes outside probed lists match no LUT row and never reach the
-    * aggregation — at scale only ~nprobe/numCentroids of the codes table
-    * survives the join. */
+    * query, broadcast. Codes outside probed lists match no LUT row and
+    * never reach the aggregation — at scale only ~nprobe/numCentroids of
+    * the codes table survives the join. The chain itself is
+    * [[residualPqTerms]], shared with the trained quantizer; this path
+    * assigns each vector to its one nearest md5 list ([[nearestMd5]]) and
+    * probes [[md5Probes]]. */
   def ivfPqTopK(embs: DataFrame, queries: DataFrame, m: Int = 4, k: Int = 16,
                 topK: Int = 5, dim: Int = 64,
                 numCentroids: Int = 16, nprobe: Int = 2): DataFrame = {
-    require(dim % m == 0, "dim must divide into m equal subvectors")
-    val subLen = dim / m
-    val cents = ivfCentroids(numCentroids, dim)
-    def scores(emb: Column): Column =
-      array(cents.map(cv => dot(emb, array(cv.map(lit): _*))): _*)
+    val coarse = ivfCentroids(numCentroids, dim)
     // the coarse centroids expressed in the normalized-int8 domain:
     // unit-normalizing a ±1 vector gives ±1/√dim components, which
     // quantize at scale 127 to ±round(127/√dim) — exact integers
     val cs = math.floor(127.0 / math.sqrt(dim.toDouble) + 0.5).toLong
-    val centArrs = array(cents.map(cv =>
-      array(cv.map(v => lit(if (v > 0) cs else -cs)): _*)): _*)
-    def residual(qv: Column, ccid: Column): Column =
-      zip_with(qv, element_at(centArrs, ccid.cast("int")), (a, b) => a - b)
-    def normQuant(emb: Column, nrm: Column): Column =
-      transform(emb, x => greatest(lit(-127L), least(lit(127L),
-        floor(x * 127.0 / nrm + lit(0.5)).cast("long"))))
-
-    // ONE corpus pass computes the normalized int8 vector, the coarse
-    // assignment, and the residual. Zero-norm rows have no coarse list
-    // and are unreachable candidates — filtered, exactly like ivfTopK.
-    val rcorpus = embs
-      .select(col("vec_id"), asDouble(col("embedding")).as("_emb"))
-      .withColumn("_nrm",
-        norm(col("_emb")))
-      .filter(col("_nrm") > 0.0)
-      .withColumn("_qv", normQuant(col("_emb"), col("_nrm")))
-      .withColumn("_s", scores(col("_emb")))
-      .withColumn("ccid", array_position(col("_s"), array_max(col("_s"))))
-      .select(col("vec_id"), col("ccid"),
-        residual(col("_qv"), col("ccid")).as("qv"))
-      .localCheckpoint()
-
-    // query probes: rank-<=nprobe centroids (ivfTopK's spelling), one
-    // residual PER PROBED LIST — asymmetric distance re-expresses the
-    // query in each probed list's residual frame
-    val qprobe = queries
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("_emb"))
-      .withColumn("_nrm",
-        norm(col("_emb")))
-      .filter(col("_nrm") > 0.0)
-      .withColumn("_qv", normQuant(col("_emb"), col("_nrm")))
-      .select(col("query_id"), col("_qv"),
-        posexplode(scores(col("_emb"))).as(Seq("_pos", "_sc")))
-      .withColumn("_pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("_sc").desc, col("_pos"))))
-      .filter(col("_pr") <= nprobe)
-      .select(col("query_id"), (col("_pos") + 1).cast("long").as("ccid"),
-        residual(col("_qv"), col("_pos") + 1).as("qv"))
-
-    val subs = subspacesOf(rcorpus, Seq(col("vec_id"), col("ccid")), m, subLen)
-    // seeds: reconstruct the k globally-lowest-id vectors' normalized qv
-    // from their own-list residual (qv + ownCent — exact), then residualize
-    // each against EVERY list via a numCentroids-row cross join (tiny)
-    val centDf = rcorpus.sparkSession.range(0, 1, 1, 1)
-      .select(posexplode(centArrs).as(Seq("_p", "carr")))
-      .select((col("_p") + 1).cast("long").as("bccid"), col("carr"))
-    val seedBase = rcorpus.orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cid"),
-        zip_with(col("qv"), element_at(centArrs, col("ccid").cast("int")),
-          (a, b) => a + b).as("nqv"))
-    val seeds = subspacesOf(
-      seedBase.crossJoin(centDf)
-        .select(col("cid"), col("bccid").as("ccid"),
-          zip_with(col("nqv"), col("carr"), (a, b) => a - b).as("qv")),
-      Seq(col("ccid"), col("cid")), m, subLen)
-      .select(col("ccid"), col("sub"), col("cid"), col("sv").as("cq"))
-    val books = pqTrainBooks(subs, seeds,
-      Seq("vec_id", "ccid"), Seq("ccid", "sub"))
-    val codes = pqEncode(subs, books, Seq("vec_id", "ccid"), Seq("ccid", "sub"))
-    val lut = subspacesOf(qprobe, Seq(col("query_id"), col("ccid")), m, subLen)
-      .join(broadcast(books), Seq("ccid", "sub"))
-      .select(col("query_id"), col("ccid"), col("sub"), col("cid"),
-        graft.functions.L2Squared.l2sq(col("sv"), col("cq")).as("d2"))
-    val scored = codes.join(broadcast(lut), Seq("ccid", "sub", "cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum(col("d2")).as("adc_dist2"))
-    finishPq(scored, topK, () => Seq(rcorpus, books).foreach(releaseCheckpoint))
+    val (terms, release) = residualPqTerms(embs, queries,
+      centMatrix(coarse.map(_.map(v => if (v > 0) cs else -cs))),
+      m, k, dim, perVec = 1,
+      nearestMd5(_, "_emb", coarse),
+      md5Probes(_, Seq("query_id", "_qv"), "_emb", coarse, nprobe))
+    finishPq(terms.groupBy("query_id", "vec_id")
+      .agg(sum(col("d2")).as("adc_dist2")), topK, release)
   }
 
   /** IVF-PQ with exact re-ranking — the FAISS "refine" recipe (Jégou §VII):
@@ -1098,7 +975,7 @@ object Similarity {
       i += 1
     }
     val out = cents.sortBy(_._1).map(_._2).filter(_.exists(_ != 0L))
-    releaseCheckpoint(q)
+    Dedup.releaseCheckpoint(q)
     out
   }
 
@@ -1144,95 +1021,86 @@ object Similarity {
     * one corpus scan restricted by the broadcast shortlist. */
   private def rerankExact(embs: DataFrame, queries: DataFrame,
                           short: DataFrame, topK: Int): DataFrame = {
-    def withNorm(df: DataFrame, id: String, v: String, n: String) = df
-      .select(col("vec_id").as(id), asDouble(col("embedding")).as(v))
-      .withColumn(n, norm(col(v)))
-      .filter(col(n) > 0.0)
-    val corpus = withNorm(embs, "vec_id", "_cv", "_cn")
-    val qs = withNorm(queries, "query_id", "_qv", "_qn")
-    val rescored = corpus
+    val rescored = admitted(embs, "vec_id", "c_emb", "c_norm")
       .join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        (dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn"))).as("sim"))
+      .join(broadcast(admitted(queries, "query_id", "q_emb", "q_norm")),
+        Seq("query_id"))
+      .select(col("query_id"), col("vec_id"), cosine.as("sim"))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
     rescored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= topK)
   }
 
   /** The trained-quantizer IVF-PQ core: [[ivfPqTopK]]'s residual chain
-    * re-based onto caller-supplied integer centroids, with spill
-    * assignment and per-list min-ADC dedup. Kept separate from the md5
-    * path so that path's oracle-pinned expressions stay byte-identical. */
+    * over caller-supplied integer centroids, with spill assignment
+    * ([[trainedLists]]' ranking) and per-list min-ADC dedup. */
   private def ivfPqTopKWithCents(embs: DataFrame, queries: DataFrame,
                                  centInts: Seq[Seq[Long]], m: Int, k: Int,
                                  topK: Int, dim: Int, nprobe: Int,
                                  assignTop: Int): DataFrame = {
-    require(dim % m == 0, "dim must divide into m equal subvectors")
     require(centInts.nonEmpty, "trained quantizer produced no usable centroids")
     require(assignTop >= 1 && assignTop <= centInts.size,
       s"assignTop must be in [1, ${centInts.size}], got $assignTop")
+    val cents = centMatrix(centInts)
+    def lists(n: Int)(df: DataFrame): DataFrame = df.withColumn("cid",
+      explode(graft.functions.TopCentroids(col("_qv"), cents, n)))
+    val (terms, release) = residualPqTerms(embs, queries, cents, m, k, dim,
+      perVec = assignTop, lists(assignTop), lists(nprobe))
+    // spill dedup: a vector reachable through two probed lists is scored
+    // once per list; keep the MIN full-m ADC sum (per-list codebooks make
+    // the per-list sums incomparable to pool any other way)
+    finishPq(terms.groupBy("query_id", "vec_id", "ccid")
+      .agg(sum(col("d2")).as("_adc1"))
+      .groupBy("query_id", "vec_id")
+      .agg(min(col("_adc1")).as("adc_dist2")), topK, release)
+  }
+
+  /** The residual-PQ chain both IVF-PQ quantizers share, from residual
+    * frames to ADC terms (Jégou et al. §IV; per-list codebooks, see
+    * [[ivfPqTopK]]). Corpus and query rows are admitted and quantized to
+    * normalized int8 (`_qv`, beside the raw `_emb`); `assign` gives each
+    * corpus row its coarse lists as `cid` — exactly `perVec` per vector —
+    * and `probe` each query row its probed lists. Every (vector, list) row
+    * becomes its residual against that list's row of `cents`; the corpus
+    * residuals are checkpointed (ONE corpus pass).
+    *
+    * Seeds are the k lowest-id vectors' normalized qv, rebuilt from any of
+    * their residual rows (qv + cent(ccid) is exact and list-independent,
+    * so the min() is a dedup over equal values) and residualized against
+    * EVERY list by a cross join with the list-count rows. The k lowest ids
+    * lie within the k·perVec lowest-id rows, so the dedup runs over
+    * k·perVec rows: no per-list rank window and no aggregation over the
+    * corpus.
+    *
+    * Returns the (query, vector, list, subspace) ADC terms — corpus codes
+    * joined to the per-(query, probed list) lookup table, self-pairs
+    * dropped; the (ccid, sub, cid) equi-join is the IVF restriction and
+    * the ADC lookup in one — and the release of the corpus and codebook
+    * checkpoints. */
+  private def residualPqTerms(embs: DataFrame, queries: DataFrame,
+                              cents: Column, m: Int, k: Int, dim: Int,
+                              perVec: Int, assign: DataFrame => DataFrame,
+                              probe: DataFrame => DataFrame
+                             ): (DataFrame, () => Unit) = {
+    require(dim % m == 0, "dim must divide into m equal subvectors")
     val subLen = dim / m
-    // norm-corrected integer-dot scores: numerator sums exact integers in
-    // doubles (|qv·c| ≤ 127²·dim ≪ 2⁵³ — no rounding at all), denominator
-    // is a driver-computed constant; both engines produce bit-identical
-    // doubles, so the argmax (ties by centroid index) is deterministic
-    val centArrs = array(centInts.map(cv => array(cv.map(lit): _*)): _*)
-    def residual(qv: Column, ccid: Column): Column =
-      graft.functions.VecAddSub.sub(qv,
-        element_at(centArrs, ccid.cast("int")))
-
-    // corpus: one pass computes the normalized int8 vector and its top-
-    // `assignTop` lists (round 20: ONE native loop —
-    // graft.functions.TopCentroids — replacing the k-literal score array
-    // + iterative array_position/zip_with argmax-and-mask, whose
-    // CodegenFallback HOFs re-walked the score array per row: the rcorpus
-    // checkpoint alone measured 16.6 s of task time at sf0.1. Ordering
-    // and arithmetic are mirrored bit-exactly — norm-corrected integer
-    // dot, ties to the lowest index; residual/reconstruction keep
-    // zip_with's semantics via graft_vec_sub/add). Never a corpus-sized
-    // ranking window (posexplode + rank would shuffle N×numCentroids
-    // rows).
-    val rcorpus = embs
-      .select(col("vec_id"), asDouble(col("embedding")).as("_emb"))
-      .withColumn("_nrm", norm(col("_emb")))
-      .filter(col("_nrm") > 0.0)
-      .withColumn("_qv",
-        graft.functions.NormQuantVec(col("_emb"), col("_nrm")))
-      .select(col("vec_id"), col("_qv"),
-        explode(graft.functions.TopCentroids(col("_qv"), centArrs,
-          assignTop)).as("ccid"))
-      .select(col("vec_id"), col("ccid"),
-        residual(col("_qv"), col("ccid")).as("qv"))
-      .localCheckpoint()
-
-    // query probes: top-nprobe by the SAME score and tie rule (the
-    // row_number window over posexplode'd scores picked by
-    // (score desc, position asc) — exactly TopCentroids' order)
-    val qprobe = queries
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("_emb"))
-      .withColumn("_nrm", norm(col("_emb")))
-      .filter(col("_nrm") > 0.0)
-      .withColumn("_qv",
-        graft.functions.NormQuantVec(col("_emb"), col("_nrm")))
-      .select(col("query_id"), col("_qv"),
-        explode(graft.functions.TopCentroids(col("_qv"), centArrs,
-          nprobe)).as("ccid"))
-      .select(col("query_id"), col("ccid"),
-        residual(col("_qv"), col("ccid")).as("qv"))
+    def centOf(ccid: Column): Column = element_at(cents, ccid.cast("int"))
+    def residuals(df: DataFrame, id: String,
+                  lists: DataFrame => DataFrame): DataFrame =
+      lists(admitted(df, id, "_emb", "_nrm").withColumn("_qv",
+          graft.functions.NormQuantVec(col("_emb"), col("_nrm"))))
+        .select(col(id), col("cid").as("ccid"),
+          graft.functions.VecAddSub.sub(col("_qv"), centOf(col("cid"))).as("qv"))
+    val rcorpus = residuals(embs, "vec_id", assign).localCheckpoint()
+    val qprobe = residuals(queries, "query_id", probe)
 
     val subs = subspacesOf(rcorpus, Seq(col("vec_id"), col("ccid")), m, subLen)
     val centDf = rcorpus.sparkSession.range(0, 1, 1, 1)
-      .select(posexplode(centArrs).as(Seq("_p", "carr")))
+      .select(posexplode(cents).as(Seq("_p", "carr")))
       .select((col("_p") + 1).cast("long").as("bccid"), col("carr"))
-    // seeds: the k lowest-id vectors' normalized qv. Reconstruction
-    // qv + cent(ccid) = nqv is EXACT and list-independent, so a vector's
-    // spill rows all agree — the min() aggregation is a dedup over
-    // identical values (never a corpus-sized ranking window)
-    val seedBase = rcorpus
+    val seedBase = rcorpus.orderBy("vec_id").limit(k * perVec)
       .select(col("vec_id"),
-        graft.functions.VecAddSub.add(col("qv"),
-          element_at(centArrs, col("ccid").cast("int"))).as("nqv"))
+        graft.functions.VecAddSub.add(col("qv"), centOf(col("ccid"))).as("nqv"))
       .groupBy("vec_id").agg(min(col("nqv")).as("nqv"))
       .orderBy("vec_id").limit(k)
       .select(col("vec_id").as("cid"), col("nqv"))
@@ -1249,16 +1117,9 @@ object Similarity {
       .join(broadcast(books), Seq("ccid", "sub"))
       .select(col("query_id"), col("ccid"), col("sub"), col("cid"),
         graft.functions.L2Squared.l2sq(col("sv"), col("cq")).as("d2"))
-    // spill dedup: a vector reachable through two probed lists is scored
-    // once per list; keep the MIN full-m ADC sum (per-list codebooks make
-    // the per-list sums incomparable to pool any other way)
-    val scored = codes.join(broadcast(lut), Seq("ccid", "sub", "cid"))
+    val terms = codes.join(broadcast(lut), Seq("ccid", "sub", "cid"))
       .filter(col("query_id") =!= col("vec_id"))
-      .groupBy("query_id", "vec_id", "ccid")
-      .agg(sum(col("d2")).as("_adc1"))
-      .groupBy("query_id", "vec_id")
-      .agg(min(col("_adc1")).as("adc_dist2"))
-    finishPq(scored, topK, () => Seq(rcorpus, books).foreach(releaseCheckpoint))
+    (terms, () => Seq(rcorpus, books).foreach(Dedup.releaseCheckpoint))
   }
 
   private def finishPq(scored: DataFrame, topK: Int,
@@ -1317,7 +1178,8 @@ object Similarity {
     * assign each (vector, subspace) to its seed cell, integer-mean the
     * members (floor(mean+0.5)), rebuild the (bookKeys, cid, cq) codebooks.
     * Cells that capture no member drop out (the kmeansIter contract).
-    * Eagerly checkpointed; the caller releases via [[releaseCheckpoint]]. */
+    * Eagerly checkpointed; the caller releases via
+    * [[Dedup.releaseCheckpoint]]. */
   private def pqTrainBooks(subs: DataFrame, seeds: DataFrame,
                            vecKeys: Seq[String] = Seq("vec_id"),
                            bookKeys: Seq[String] = Seq("sub")): DataFrame = {
@@ -1361,7 +1223,7 @@ object Similarity {
       .join(broadcast(books), Seq("sub"))
       .select(col("query_id"), col("sub"), col("cid"),
         graft.functions.L2Squared.l2sq(col("sv"), col("cq")).as("d2"))
-    (codes, lut, () => Seq(q, books).foreach(releaseCheckpoint))
+    (codes, lut, () => Seq(q, books).foreach(Dedup.releaseCheckpoint))
   }
 
   /** Unit-normalize, THEN int8-quantize at the fixed scale 127 (unit
@@ -1385,12 +1247,6 @@ object Similarity {
           .otherwise(graft.functions.NormQuantVec(col("_emb"), col("_nrm"))))
       .select(col("vec_id"), col("qv"))
   }
-
-  /** Unpersist exactly the RDD backing a localCheckpointed frame — one
-    * shared implementation (Dedup's), so an ownership-sensitive fix can
-    * never drift between copies. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    Dedup.releaseCheckpoint(df)
 
   def quantizeInt8(embs: DataFrame): DataFrame = {
     val emb = asDouble(col("embedding"))

@@ -1222,7 +1222,7 @@ object Url {
     * is |domains| rows) instead of a static weight map.
     *
     * Ranking is a BOUNDED per-domain top-k
-    * ([[graft.functions.RankTopKAggregator]], k = budget — every quota
+    * ([[graft.functions.TopKAggregator]] by (rank_key, doc_id), k = budget — every quota
     * is ≤ budget by construction: budget·isqrt div total ≤ budget), NOT
     * a per-domain rank window: the window form put a megadomain's entire
     * 10⁸–10⁹-page row set through ONE task's sort just to keep its
@@ -1243,7 +1243,9 @@ object Url {
     // explode and post-agg arithmetic in codegen; only the k-capped
     // buffer itself is object work.
     val topk = org.apache.spark.sql.functions.udaf(
-      new graft.functions.RankTopKAggregator(k), Encoders.product[DomainDoc])
+      new graft.functions.TopKAggregator(k,
+        Ordering.by((e: DomainDoc) => (e.rank_key, e.doc_id))),
+      Encoders.product[DomainDoc])
     // canonicalize into a COLUMN first, derive the domain from the column
     // reference: registrableDomain substitutes its input into ~10 leaves
     // (4 trailing-label regexes + the PSL CASE arms), and inlining the

@@ -19,6 +19,19 @@ object Routed {
     * whitespace-named topic + partition directory. */
   def notBlank(key: Column): Column =
     key.isNotNull && key.rlike("[^\\p{javaWhitespace}\\p{javaSpaceChar}]")
+
+  /** The one router shape: `messages` gain the route key `keyName`, read
+    * off `value` by `key`; rows whose key passes [[notBlank]] are routed
+    * to `topic(key)`, and the rest are dropped, projected to `value`. */
+  private[route] def by(messages: DataFrame, keyName: String,
+                        key: Column => Column,
+                        topic: Column => Column): Routed = {
+    val keyed = messages.withColumn(keyName, key(col("value")))
+    val ok = notBlank(col(keyName))
+    Routed(
+      routed = keyed.filter(ok).withColumn("topic", topic(col(keyName))),
+      dropped = keyed.filter(!ok).select("value"))
+  }
 }
 
 /** Content-based router from the CMF topic to dynamic per-tenant topics
@@ -58,13 +71,8 @@ object Filterer {
   def topic(tenantId: Column): Column =
     concat(lit("persistent://"), tenantId, lit("/integration/telemetry"))
 
-  def route(messages: DataFrame): Routed = {
-    val withTenant = messages.withColumn("tenantId", tenantId(col("value")))
-    val ok = Routed.notBlank(col("tenantId"))
-    Routed(
-      routed = withTenant.filter(ok).withColumn("topic", topic(col("tenantId"))),
-      dropped = withTenant.filter(!ok).select("value"))
-  }
+  def route(messages: DataFrame): Routed =
+    Routed.by(messages, "tenantId", tenantId, topic)
 
   /** Dynamic per-tenant TOPIC publish — the reference Filterer's actual
     * sink shape (Filterer.kt:36–41: `persistent://{tenantId}/integration/
@@ -110,12 +118,7 @@ object EventTypeSplitter {
       lit("-events"))
 
   def route(messages: DataFrame, tenant: String = "acme",
-            namespace: String = "integration"): Routed = {
-    val withType = messages.withColumn("eventType", eventType(col("value")))
-    val ok = Routed.notBlank(col("eventType"))
-    Routed(
-      routed = withType.filter(ok)
-        .withColumn("topic", topicFor(col("eventType"), tenant, namespace)),
-      dropped = withType.filter(!ok).select("value"))
-  }
+            namespace: String = "integration"): Routed =
+    Routed.by(messages, "eventType", eventType,
+      topicFor(_, tenant, namespace))
 }

@@ -82,7 +82,7 @@ class ExtractSpec extends SparkSpec {
     // the javascript LINE drops, leaving 1 kept line < minLines=2
     assert(got(4L) === ((false, "too_few_sentences", 1)))
     assert(got(5L) === ((false, "blocklist", 2)))
-    val p = graft.ops.Extract.c4PageFilter(raw)
+    val p = graft.ops.Extract.c4PageFilter(raw, minLines = 5)
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"c4PageFilter shuffles:\n$p")
   }

@@ -58,6 +58,50 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastExchange"), s"query side not broadcast:\n$p")
   }
 
+  test("IVF family corpus passes and probes run natively: no lambda " +
+    "function in the residual corpus, the trained lists write or the probe") {
+    // two clusters of 8-dim vectors, computed from a range so that no
+    // projection folds into a local relation and out of the plan
+    def vecs(ids: Seq[Long]) = spark.range(ids.size).select(
+      element_at(typedLit(ids), col("id").cast("int") + 1).as("vec_id"))
+      .select(col("vec_id"), array((0 until 8).map { d =>
+        (when(col("vec_id") <= 6, 10.0).otherwise(-10.0) +
+          when(pmod(col("vec_id"), lit(4)) === d, 0.5).otherwise(0.0))
+          .cast("float")
+      }: _*).as("embedding"))
+    val corpus = vecs(1L to 12L)
+    val queries = vecs(Seq(1L, 7L))
+    // the residual corpus is the first checkpoint of the md5 chain and the
+    // second of the trained one (after the training input's)
+    val md5Residuals = checkpointPlans(1) {
+      Similarity.ivfPqTopK(corpus, queries, m = 2, k = 2, topK = 5, dim = 8,
+        numCentroids = 4)
+    }.head
+    val trainedResiduals = checkpointPlans(2) {
+      Similarity.ivfPqTopKTrained(corpus, queries, m = 2, k = 2, topK = 5,
+        dim = 8, numCentroids = 4, nprobe = 2, assignTop = 2, iters = 3)
+    }(1)
+    val listsWrite = actionPlans(1, (_, p) =>
+        p.contains("planidx_lists") && p.contains("AsSelect")) {
+      Similarity.ivfWriteIndexTrained(corpus, "planidx", numCentroids = 4,
+        dim = 8, buckets = 4, iters = 3, assignTop = 2)
+    }.head
+    val probe = actionPlans(1, (f, p) =>
+        f == "collect" && p.contains("planidx_lists")) {
+      Similarity.ivfSearchIndexedTrained(spark, queries, "planidx", k = 5,
+        nprobe = 2).collect()
+    }.head
+    Seq("md5 residual corpus" -> md5Residuals,
+      "trained residual corpus" -> trainedResiduals,
+      "trained lists write" -> listsWrite,
+      "trained probe" -> probe).foreach { case (what, p) =>
+      assert(!p.contains("lambdafunction"), s"$what runs a lambda:\n$p")
+    }
+    assert(Seq(md5Residuals, trainedResiduals).forall(_.contains("graft_vec_sub")))
+    assert(Seq(trainedResiduals, listsWrite, probe)
+      .forall(_.contains("graft_top_centroids")))
+  }
+
   test("sampling and PII scrub are scan-fused: zero exchanges") {
     import spark.implicits._
     import graft.ops.{Sampling, TextAnalysis}

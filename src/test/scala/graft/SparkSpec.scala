@@ -57,15 +57,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The executed plans of the first `n` `localCheckpoint` actions that
     * `body` runs. An operator that materializes its result returns a frame
-    * over the checkpoint, so the plan it computed is seen only here. The
-    * listener bus delivers asynchronously: waits up to 60 s for `n`. */
-  def checkpointPlans(n: Int)(body: => Unit): Seq[String] = {
+    * over the checkpoint, so the plan it computed is seen only here. */
+  def checkpointPlans(n: Int)(body: => Unit): Seq[String] =
+    actionPlans(n, (funcName, _) => funcName == "localCheckpoint")(body)
+
+  /** The executed plans, in order, of the first `n` actions that `body`
+    * runs and that `keep(funcName, plan)` accepts — a write or a
+    * materialized intermediate is seen only here. The listener bus
+    * delivers asynchronously: waits up to 60 s for `n`. */
+  def actionPlans(n: Int, keep: (String, String) => Boolean)(
+      body: => Unit): Seq[String] = {
     import org.apache.spark.sql.execution.QueryExecution
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+                             durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (keep(funcName, plan)) plans.add(plan)
+      }
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
@@ -75,7 +84,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val deadline = System.nanoTime() + 60L * 1000000000L
       while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
-    assert(plans.size >= n, s"saw ${plans.size} localCheckpoint plans, expected $n")
+    assert(plans.size >= n, s"saw ${plans.size} matching plans, expected $n")
     plans.asScala.take(n).toSeq
   }
 }

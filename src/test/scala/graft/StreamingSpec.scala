@@ -101,7 +101,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.ScoredPair
     val stream = MemoryStream[ScoredPair](spark)
-    val topk = new graft.functions.TopKAggregator(2).toColumn
+    val topk = new graft.functions.TopKAggregator(2, ScoredPair.bestFirst)
+      .toColumn
     val q = stream.toDS().groupByKey(_.query_id).agg(topk)
       .map { case (qid, tops) => (qid, tops.map(_.neighbor_id)) }
       .toDF("query_id", "top_ids")
