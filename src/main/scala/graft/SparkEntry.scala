@@ -1716,12 +1716,11 @@ object SparkEntry {
     graft.ops.Extract.paragraphs(rawHtmlFrame(s, dir))
       .orderBy("doc_id", "para_id")
 
-  /** C4 page-level gate over the synthetic crawl. minLines=2 matches the
-    * corpus's 2-kept-line page shape (the paper's 5 assumes real prose);
-    * the blocklist exercises the containment mechanics on two corpus
-    * vocabulary words. */
+  /** C4 page-level gate over the synthetic crawl; the blocklist
+    * exercises the containment mechanics on two corpus vocabulary
+    * words. */
   private def c4PageFilterQ(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Extract.c4PageFilter(rawHtmlFrame(s, dir), minLines = 2,
+    graft.ops.Extract.c4PageFilter(rawHtmlFrame(s, dir),
         blocklist = Seq("vector", "spark"))
       .orderBy("doc_id")
 
@@ -1810,8 +1809,7 @@ object SparkEntry {
     // together they are the complete pre-fetch admission story
     val robotsOk = graft.ops.Url.robotsGate(urls, robots)
       .select(col("doc_id"), col("robots_ok"))
-    val pages = Extract.c4PageFilter(raw, minLines = 2,
-        blocklist = Seq("vector"))
+    val pages = Extract.c4PageFilter(raw, blocklist = Seq("vector"))
       .select(col("doc_id"), col("keep").as("page_keep"))
     val text = Extract.htmlExtract(raw).select(col("doc_id"), col("text_clean"))
     // empty extractions still flow: words("") = [""], top2 = 0 → rep_ok

@@ -82,11 +82,16 @@ object Extract {
         array_join(kept, "\n").as("text_clean"))
   }
 
+  /** The fewest kept lines a page may have. C4 asks for 5 sentences of
+    * real prose; a kept line here is one extracted block, and the
+    * generated crawl's pages carry 2 of them, so 2 is the bar. */
+  private val MinKeptLines = 2
+
   /** C4's PAGE-level rules (§2.2), applied on top of the line filter:
     * a page is dropped whole when its cleaned text contains "lorem
     * ipsum" (template boilerplate) or a curly brace (code), when fewer
-    * than `minLines` lines survive the line filter (the paper's
-    * "fewer than 5 sentences" rule, parameterized), or when it contains
+    * than [[MinKeptLines]] lines survive the line filter (the paper's
+    * "fewer than 5 sentences" rule), or when it contains
     * a blocklisted term. Lines containing "javascript" are additionally
     * dropped at LINE level before the count (the paper's one
     * line-content rule). `blocklist` defaults empty — C4 used the public
@@ -95,8 +100,7 @@ object Extract {
     * text) are what this operator provides. Output: (idCol, keep,
     * fail_reasons, n_kept_lines) — row-local, zero exchanges. */
   def c4PageFilter(raw: DataFrame, htmlCol: String = "html",
-                   idCol: String = "doc_id", minLines: Int,
-                   minWords: Int = 3,
+                   idCol: String = "doc_id", minWords: Int = 3,
                    blocklist: Seq[String] = Seq.empty): DataFrame = {
     // stage the extracted lines once; the rule expressions below then
     // reference a cheap attribute instead of re-running the regexp chain
@@ -110,7 +114,7 @@ object Extract {
       when(textLc.contains("lorem ipsum"), "lorem_ipsum"),
       when(textLc.contains("{"), "curly_brace"),
       when(blockHit, "blocklist"),
-      when(size(kept) < minLines, "too_few_sentences"))
+      when(size(kept) < MinKeptLines, "too_few_sentences"))
     raw.select(col(idCol), textLines(stripHtml(col(htmlCol))).as("_lines"))
       .select(col(idCol),
         (reasons === "").as("keep"),

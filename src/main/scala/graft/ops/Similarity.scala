@@ -333,8 +333,8 @@ object Similarity {
   def ivfSearchIndexedTrained(spark: org.apache.spark.sql.SparkSession,
                               queries: DataFrame, prefix: String = "ivft",
                               k: Int = 5, nprobe: Int = 16): DataFrame = {
-    val probes = trainedLists(queries, "query_id", "q_emb", "q_norm",
-      centMatrix(persistedCents(spark, prefix)), nprobe)
+    val probes = trainedLists(centMatrix(persistedCents(spark, prefix)),
+      nprobe)(admittedQuant(queries, "query_id", "q_emb", "q_norm"))
     rankTopK(scoredOn(spark.table(s"${prefix}_lists"), probes, "cid")
       .groupBy("query_id", "neighbor_id")
       .agg(max(col("sim")).as("sim")), k)
@@ -351,20 +351,24 @@ object Similarity {
   private def centMatrix(cents: Seq[Seq[Long]]): Column =
     array(cents.map(cv => array(cv.map(lit): _*)): _*)
 
+  /** [[admitted]] plus the vector's normalized int8 form as `_qv`
+    * ([[graft.functions.NormQuantVec]]): the domain the trained quantizer
+    * ranks lists in and both IVF-PQ quantizers take residuals in. */
+  private def admittedQuant(df: DataFrame, id: String, emb: String,
+                            nrm: String): DataFrame =
+    admitted(df, id, emb, nrm)
+      .withColumn("_qv", graft.functions.NormQuantVec(col(emb), col(nrm)))
+
   /** Trained-centroid ranking, the one rule the trained IVF family assigns
-    * and probes by: each admitted vector once per one of its top-`n` lists
-    * as `cid` (1-based), with its `id`, `emb` and `nrm` — [[scoredOn]]'s
-    * frame shape. Lists rank by norm-corrected integer-dot score over the
-    * vector's normalized int8 form, ties to the lowest index, as one
-    * native loop ([[graft.functions.TopCentroids]] over
-    * [[graft.functions.NormQuantVec]]): exact integers summed in doubles
-    * (|qv·c| ≤ 127²·dim ≪ 2⁵³) over a driver-side norm, so every engine
-    * ranks alike. Row-local: never a corpus-sized ranking window. */
-  private def trainedLists(df: DataFrame, id: String, emb: String, nrm: String,
-                           cents: Column, n: Int): DataFrame =
-    admitted(df, id, emb, nrm).select(col(id), col(emb), col(nrm),
-      explode(graft.functions.TopCentroids(
-        graft.functions.NormQuantVec(col(emb), col(nrm)), cents, n)).as("cid"))
+    * and probes by: each row of an [[admittedQuant]] frame once per one of
+    * its top-`n` lists as `cid` (1-based). Lists rank by norm-corrected
+    * integer-dot score over `_qv`, ties to the lowest index, as one native
+    * loop ([[graft.functions.TopCentroids]]): exact integers summed in
+    * doubles (|qv·c| ≤ 127²·dim ≪ 2⁵³) over a driver-side norm, so every
+    * engine ranks alike. Row-local: never a corpus-sized ranking window. */
+  private def trainedLists(cents: Column, n: Int)(df: DataFrame): DataFrame =
+    df.withColumn("cid",
+      explode(graft.functions.TopCentroids(col("_qv"), cents, n)))
 
   /** Corpus assignment of the trained index build: every vector SPILLED to
     * its top-`assignTop` lists — (neighbor_id, c_emb, c_norm, cid). */
@@ -373,8 +377,9 @@ object Similarity {
     require(centInts.nonEmpty, "no usable centroids")
     require(assignTop >= 1 && assignTop <= centInts.size,
       s"assignTop must be in [1, ${centInts.size}], got $assignTop")
-    trainedLists(embs, "neighbor_id", "c_emb", "c_norm", centMatrix(centInts),
-      assignTop)
+    trainedLists(centMatrix(centInts), assignTop)(
+        admittedQuant(embs, "neighbor_id", "c_emb", "c_norm"))
+      .drop("_qv")
   }
 
   private def ivfProbes(queries: DataFrame, numCentroids: Int, dim: Int,
@@ -1042,10 +1047,9 @@ object Similarity {
     require(assignTop >= 1 && assignTop <= centInts.size,
       s"assignTop must be in [1, ${centInts.size}], got $assignTop")
     val cents = centMatrix(centInts)
-    def lists(n: Int)(df: DataFrame): DataFrame = df.withColumn("cid",
-      explode(graft.functions.TopCentroids(col("_qv"), cents, n)))
     val (terms, release) = residualPqTerms(embs, queries, cents, m, k, dim,
-      perVec = assignTop, lists(assignTop), lists(nprobe))
+      perVec = assignTop, trainedLists(cents, assignTop),
+      trainedLists(cents, nprobe))
     // spill dedup: a vector reachable through two probed lists is scored
     // once per list; keep the MIN full-m ADC sum (per-list codebooks make
     // the per-list sums incomparable to pool any other way)
@@ -1057,8 +1061,8 @@ object Similarity {
 
   /** The residual-PQ chain both IVF-PQ quantizers share, from residual
     * frames to ADC terms (Jégou et al. §IV; per-list codebooks, see
-    * [[ivfPqTopK]]). Corpus and query rows are admitted and quantized to
-    * normalized int8 (`_qv`, beside the raw `_emb`); `assign` gives each
+    * [[ivfPqTopK]]). Corpus and query rows are admitted and quantized by
+    * [[admittedQuant]] (`_qv`, beside the raw `_emb`); `assign` gives each
     * corpus row its coarse lists as `cid` — exactly `perVec` per vector —
     * and `probe` each query row its probed lists. Every (vector, list) row
     * becomes its residual against that list's row of `cents`; the corpus
@@ -1087,8 +1091,7 @@ object Similarity {
     def centOf(ccid: Column): Column = element_at(cents, ccid.cast("int"))
     def residuals(df: DataFrame, id: String,
                   lists: DataFrame => DataFrame): DataFrame =
-      lists(admitted(df, id, "_emb", "_nrm").withColumn("_qv",
-          graft.functions.NormQuantVec(col("_emb"), col("_nrm"))))
+      lists(admittedQuant(df, id, "_emb", "_nrm"))
         .select(col(id), col("cid").as("ccid"),
           graft.functions.VecAddSub.sub(col("_qv"), centOf(col("cid"))).as("qv"))
     val rcorpus = residuals(embs, "vec_id", assign).localCheckpoint()

@@ -72,17 +72,17 @@ class ExtractSpec extends SparkSpec {
       (4L, "<p>enable javascript to continue now.</p><p>one surviving line here!</p>"),
       (5L, "<p>totally banned term appears here.</p><p>second fine line too!</p>")
     ).toDF("doc_id", "html")
-    val got = graft.ops.Extract.c4PageFilter(raw, minLines = 2,
+    val got = graft.ops.Extract.c4PageFilter(raw,
         blocklist = Seq("banned")).collect()
       .map(r => r.getLong(0) -> (r.getBoolean(1), r.getString(2), r.getInt(3)))
       .toMap
     assert(got(1L) === ((true, "", 2)))
     assert(got(2L) === ((false, "lorem_ipsum", 2)))
     assert(got(3L) === ((false, "curly_brace", 2)))
-    // the javascript LINE drops, leaving 1 kept line < minLines=2
+    // the javascript LINE drops, leaving 1 kept line, under the 2 required
     assert(got(4L) === ((false, "too_few_sentences", 1)))
     assert(got(5L) === ((false, "blocklist", 2)))
-    val p = graft.ops.Extract.c4PageFilter(raw, minLines = 5)
+    val p = graft.ops.Extract.c4PageFilter(raw)
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"c4PageFilter shuffles:\n$p")
   }

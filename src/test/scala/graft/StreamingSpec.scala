@@ -150,7 +150,7 @@ class StreamingSpec extends SparkSpec {
       (2L, (1 to 60).map(_ => "scan table scan").mkString(" ")))
     val hs = MemoryStream[(Long, String)](spark)
     val ds = MemoryStream[(Long, String)](spark)
-    val q1 = Extract.c4PageFilter(hs.toDF().toDF("doc_id", "html"), minLines = 2)
+    val q1 = Extract.c4PageFilter(hs.toDF().toDF("doc_id", "html"))
       .writeStream.format("memory").queryName("c4_stream")
       .outputMode("append").start()
     val q2 = Gopher.qualityGate(ds.toDF().toDF("doc_id", "text"))
@@ -162,7 +162,7 @@ class StreamingSpec extends SparkSpec {
     def rows(t: String) = spark.table(t).collect()
       .map(_.toSeq).sortBy(_.head.toString)
     assert(rows("c4_stream") === Extract.c4PageFilter(
-      html.toDF("doc_id", "html"), minLines = 2)
+      html.toDF("doc_id", "html"))
       .collect().map(_.toSeq).sortBy(_.head.toString))
     assert(rows("gopher_stream") === Gopher.qualityGate(docs.toDF("doc_id", "text"))
       .collect().map(_.toSeq).sortBy(_.head.toString))
