@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * EXACTNESS: score_i = (Σ_j qv_j·c_ij as doubles, strict left-to-right —
   * [[DotProduct]]'s fold) / sqrt(Σ_j (c_ij·c_ij).toDouble, long squares
-  * widened after the multiply, left-to-right — the driver-side centNorms
-  * arithmetic); selection = repeatedly take the FIRST position of the
+  * widened after the multiply, left-to-right, as the composed form);
+  * selection = repeatedly take the FIRST position of the
   * maximum and mask it, i.e. order by (score desc, position asc) — the
   * composed argmax-and-mask rule. Positions are 1-based longs (what
   * `array_position` returned). Centroids whose length differs from qv
