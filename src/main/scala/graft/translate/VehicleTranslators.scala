@@ -1,5 +1,6 @@
 package graft.translate
 
+import graft.functions.{CmfWire, JsonFields, JsonShape}
 import graft.model.Cmf
 import graft.time.IsoTime
 import org.apache.spark.sql.{Column, DataFrame}
@@ -39,11 +40,11 @@ object Translated {
   }
 }
 
-/** The three per-source → CMF translators, re-expressed as pure Catalyst
-  * expression pipelines (`from_json` + `select`) instead of per-record
-  * functions. No UDFs, no mapPartitions: each translator is one narrow
-  * projection that whole-stage-codegen fuses with the surrounding plan, so at
-  * 100 TB it runs scan-speed with zero shuffles.
+/** The three per-source → CMF translators, re-expressed as Catalyst
+  * expression pipelines (one native field parse, then `select`) instead of
+  * per-record functions. No UDFs, no mapPartitions: each translator is one
+  * Generate node and one narrow projection, so at 100 TB it runs scan-speed
+  * with zero shuffles.
   *
   * Semantics cloned from the reference (file:line cited per rule below):
   *  - GeotabTranslator.kt:91–158  (ISO input, enum decode, custom fields)
@@ -52,74 +53,34 @@ object Translated {
   *
   * Error contract (all three): Jackson with Kotlin data classes fails the
   * whole record on (a) malformed JSON, (b) missing required constructor args,
-  * (c) unknown top-level fields (`FAIL_ON_UNKNOWN_PROPERTIES` default) — the
-  * record is dropped, never the job. We reproduce (a) via PERMISSIVE
-  * `from_json` null-out, (b) via required-field predicates, (c) via a
-  * `json_object_keys` ⊆ allowed-keys check.
+  * (c) unknown fields (`FAIL_ON_UNKNOWN_PROPERTIES` default) or an
+  * object-typed field holding something else — the record is dropped, never
+  * the job. We reproduce (a) via the parse's all-NULL row, (b) via
+  * required-field predicates, (c) via the parse's per-level reject flags
+  * ([[JsonFields]]).
   */
 object VehicleTranslators {
 
-  /** GeotabInputMessage (GeotabTranslator.kt:34–47). */
-  private val geotabInputSchema: StructType = StructType(Seq(
-    StructField("Device_ID", StringType),
-    StructField("Vehicle_ID", StringType),
-    StructField("Record_DateTime", StringType),
-    StructField("Latitude", DoubleType),
-    StructField("Longitude", DoubleType),
-    StructField("Odometer_mi", DoubleType),
-    StructField("EngineSpeed_rpm", DoubleType),
-    StructField("Fuel_Level_pct", DoubleType),
-    StructField("Ignition_Status", StringType),
-    StructField("customGeotabField1", StringType),
-    StructField("customGeotabField2", IntegerType)
-  ))
+  /** The input data classes' keys: GeotabInputMessage
+    * (GeotabTranslator.kt:34–47), CalAmpInputMessage (CalAmpTranslator.kt:31–42)
+    * and FordInputMessage with its nested FordCoordinates; Ford's
+    * `fordExtraData` is a `Map<String, Any>`, so it must be an object. */
+  private val geotabShape = JsonShape(Seq("Device_ID", "Vehicle_ID", "Record_DateTime",
+    "Latitude", "Longitude", "Odometer_mi", "EngineSpeed_rpm", "Fuel_Level_pct",
+    "Ignition_Status", "customGeotabField1", "customGeotabField2"))
+  private val calAmpShape = JsonShape(Seq("unit_id", "vid", "msg_ts", "gps_lat", "gps_lon",
+    "speed_mph", "fuel_percent", "voltage", "calAmpSpecificValue"))
+  private val fordShape = JsonShape(
+    Seq("vin", "esn", "captureTime", "coords", "vehicleSpeed",
+      "fuelRemainingGallons", "rpm", "fordExtraData"),
+    objects = Set("fordExtraData"),
+    nested = Map("coords" -> JsonShape(Seq("latValue", "lonValue", "ts"))))
 
-  /** CalAmpInputMessage (CalAmpTranslator.kt:31–42). */
-  private val calAmpInputSchema: StructType = StructType(Seq(
-    StructField("unit_id", StringType),
-    StructField("vid", StringType),
-    StructField("msg_ts", LongType),
-    StructField("gps_lat", DoubleType),
-    StructField("gps_lon", DoubleType),
-    StructField("speed_mph", DoubleType),
-    StructField("fuel_percent", DoubleType),
-    StructField("voltage", DoubleType),
-    StructField("calAmpSpecificValue", StringType)
-  ))
-
-  private val fordAllKeys = Seq("vin", "esn", "captureTime", "coords",
-    "vehicleSpeed", "fuelRemainingGallons", "rpm", "fordExtraData")
-
-  /** Jackson-parity strictness: a syntactically valid JSON object with a
-    * top-level key outside the input data class is rejected
-    * (FAIL_ON_UNKNOWN_PROPERTIES — load_test.py:32–42 relies on this to
-    * poison the Geotab path). `json_object_keys` is null on non-objects;
-    * those are caught by the malformed check already. */
-  private def hasUnknownKeys(valueCol: Column, allowed: Seq[String]): Column = {
-    val keys = call_function("json_object_keys", valueCol)
-    coalesce(size(array_except(keys, array(allowed.map(lit): _*))) > 0, lit(false))
-  }
-
-  /** Exactly one JSON object with nothing after it. `json_object_keys` reads
-    * the first object and ignores what trails it; `json_array_length` stops
-    * at the first `]` it meets. So the text must be an object that counts as
-    * one element in `[t]` (no trailing member or value) and as two in
-    * `[t,0]` (no trailing `]` closing the array early). */
-  private def isOneJsonObject(t: Column): Column = {
-    def elements(suffix: String): Column =
-      call_function("json_array_length", concat(lit("["), t, lit(suffix)))
-    call_function("json_object_keys", t).isNotNull &&
-      elements("]") === 1 && elements(",0]") === 2
-  }
-
-  /** Parse each message ONCE with the `json_tuple` generator into `_j_*`
-    * string columns. A `from_json` struct alias would be substituted into
-    * every downstream field reference by Catalyst's filter-pushdown, cloning
-    * the (non-codegen) parse per reference; a Generate node is not an alias
-    * and cannot be inlined, so the parse stays single. */
-  private def jsonTupled(raw: DataFrame, fields: Seq[String]): DataFrame =
-    raw.select(col("*"),
-      json_tuple(col("value"), fields: _*).as(fields.map(f => s"_j_$f")))
+  /** Parses each message ONCE into `_j_*` columns: one string per field
+    * (`_j_coords_<f>` for Ford's nested coords) and a `_j_reject` flag per
+    * object level. */
+  private def parse(raw: DataFrame, shape: JsonShape): DataFrame =
+    raw.select(col("*"), JsonFields(col("value"), shape, "_j_"))
 
   private def j(f: String): Column = col(s"_j_$f")
   /** ANSI-safe numeric widening: a non-numeric string in a numeric field
@@ -141,8 +102,7 @@ object VehicleTranslators {
     * (one message per row). `tenant` plays the role of `context.tenant`
     * (GeotabTranslator.kt:141). */
   def geotab(raw: DataFrame, tenant: String): Translated = {
-    val fields = geotabInputSchema.fieldNames.toSeq
-    val parsed = jsonTupled(raw, fields)
+    val parsed = parse(raw, geotabShape)
     val epochSource = IsoTime.epochMillisFromIso(j("Record_DateTime"))
     val ok = j("Device_ID").isNotNull && j("Vehicle_ID").isNotNull &&
       epochSource.isNotNull &&
@@ -150,7 +110,7 @@ object VehicleTranslators {
       optNumOk(jd, Seq("Odometer_mi", "EngineSpeed_rpm", "Fuel_Level_pct")) &&
       (j("customGeotabField2").isNull ||
         expr("try_cast(_j_customGeotabField2 AS INT)").isNotNull) &&
-      !hasUnknownKeys(col("value"), fields)
+      !j("reject")
 
     val dateTime = IsoTime.isoFromEpochMillis(epochSource)
     val telemetry = Cmf.telemetryStruct(Map(
@@ -175,8 +135,7 @@ object VehicleTranslators {
   /** CalAmp raw JSON → CMF. `msg_ts` is epoch SECONDS; epochSource is
     * seconds×1000 (CalAmpTranslator.kt:100). */
   def calAmp(raw: DataFrame, tenant: String): Translated = {
-    val fields = calAmpInputSchema.fieldNames.toSeq
-    val parsed = jsonTupled(raw, fields)
+    val parsed = parse(raw, calAmpShape)
     // try_multiply: ANSI mode would throw on a schema-valid message whose
     // msg_ts overflows ×1000; overflow → NULL → quarantined (the reference's
     // Kotlin wraps silently — quarantine is the documented divergence)
@@ -184,8 +143,7 @@ object VehicleTranslators {
     val ok = j("unit_id").isNotNull && j("vid").isNotNull &&
       epochSource.isNotNull && IsoTime.representableMs(epochSource) &&
       jd("gps_lat").isNotNull && jd("gps_lon").isNotNull &&
-      optNumOk(jd, Seq("speed_mph", "fuel_percent", "voltage")) &&
-      !hasUnknownKeys(col("value"), fields)
+      optNumOk(jd, Seq("speed_mph", "fuel_percent", "voltage")) && !j("reject")
     val dateTime = IsoTime.isoFromEpochMillis(epochSource)
     val telemetry = Cmf.telemetryStruct(Map(
       "location" -> struct(dateTime.as("timestamp"), jd("gps_lon").as("lon"),
@@ -204,43 +162,24 @@ object VehicleTranslators {
   /** Ford raw JSON → CMF. Two independent timestamps: envelope from
     * `captureTime`, location from `coords.ts` (FordTranslator.kt:116–117);
     * `rpm` Int widened to Double (:127); `fordExtraData` forwarded verbatim,
-    * `{}` when absent (:131). The nested `coords` object costs one extra
-    * (tiny) json_tuple over its extracted text. */
+    * `{}` when absent (:131). */
   def ford(raw: DataFrame, tenant: String): Translated = {
-    val top = fordAllKeys
-    val sub = Seq("latValue", "lonValue", "ts")
-    val parsed = jsonTupled(raw, top)
-      .select(col("*"),
-        json_tuple(col("_j_coords"), sub: _*).as(sub.map(f => s"_j_c_$f")))
-    def jcd(f: String): Column = expr(s"try_cast(_j_c_$f AS DOUBLE)")
+    val parsed = parse(raw, fordShape)
+    def jcd(f: String): Column = jd(s"coords_$f")
+    val locEpoch = jl("coords_ts")
     val ok = j("vin").isNotNull && j("esn").isNotNull &&
-      jl("captureTime").isNotNull &&
-      IsoTime.representableMs(jl("captureTime")) && j("coords").isNotNull &&
+      jl("captureTime").isNotNull && IsoTime.representableMs(jl("captureTime")) &&
       jcd("latValue").isNotNull && jcd("lonValue").isNotNull &&
-      expr("try_cast(_j_c_ts AS BIGINT)").isNotNull &&
-      IsoTime.representableMs(expr("try_cast(_j_c_ts AS BIGINT)")) &&
+      locEpoch.isNotNull && IsoTime.representableMs(locEpoch) &&
       optNumOk(jd, Seq("vehicleSpeed", "fuelRemainingGallons")) &&
       (j("rpm").isNull || expr("try_cast(_j_rpm AS INT)").isNotNull) &&
-      // fordExtraData: Map<String,Any> binding requires ONE JSON object,
-      // and its text is spliced into the wire verbatim, so nothing may trail
-      // it: a trailing `, "meta": {...}` would give the wire a second `meta`
-      // member that a wire-reading router sees first.
-      // KNOWN LIMITATION (json_tuple type erasure): a STRING value whose
-      // text is exactly one object ("{\"a\":1}") extracts to the same
-      // unescaped text as a real object and passes, where Jackson would
-      // reject the record — telling them apart needs a raw JSON tokenizer,
-      // which no built-in exposes. Same erasure accepts non-string scalars
-      // in string-typed fields.
-      (j("fordExtraData").isNull || isOneJsonObject(j("fordExtraData"))) &&
-      !hasUnknownKeys(col("value"), fordAllKeys) &&
       // FAIL_ON_UNKNOWN_PROPERTIES applies to the NESTED FordCoordinates
-      // binding too — an unknown key inside coords must quarantine exactly
-      // like one at the top level (json_tuple surfaces the coords object's
-      // raw text, so the same key check applies)
-      !hasUnknownKeys(j("coords"), sub)
+      // binding too; `fordExtraData` is one object, spliced into the wire
+      // as its parsed text, so nothing can trail it there
+      !j("reject") && !j("coords_reject")
 
     val dateTime = IsoTime.isoFromEpochMillis(jl("captureTime"))
-    val locTime = IsoTime.isoFromEpochMillis(expr("try_cast(_j_c_ts AS BIGINT)"))
+    val locTime = IsoTime.isoFromEpochMillis(locEpoch)
     val telemetry = Cmf.telemetryStruct(Map(
       "location" -> struct(locTime.as("timestamp"), jcd("lonValue").as("lon"),
         jcd("latValue").as("lat")),
@@ -260,29 +199,13 @@ object VehicleTranslators {
 /** CMF wire-format serialization. Jackson serializes the Kotlin data classes
   * with nulls included and fields in declaration order; `sourceSpecificData`
   * is a raw JSON object, which `to_json` would re-escape as a string — so the
-  * envelope is serialized in two parts and the payload spliced in verbatim. */
+  * envelope is serialized in two parts and the payload spliced in verbatim
+  * ([[CmfWire]]). */
 object CmfJson {
-  def wire(cmf: Column): Column = {
-    val head = to_json(struct(
-      cmf("dateTime").as("dateTime"),
-      cmf("epochSource").as("epochSource"),
-      cmf("vehicleId").as("vehicleId"),
-      cmf("deviceId").as("deviceId"),
-      cmf("tenantId").as("tenantId"),
-      cmf("sourceType").as("sourceType"),
-      cmf("partitionKey").as("partitionKey"),
-      cmf("telemetry").as("telemetry"),
-      cmf("events").as("events")
-    ), Map("ignoreNullFields" -> "false"))
-    val meta = to_json(cmf("meta"), Map("ignoreNullFields" -> "false"))
-    concat(
-      substring_trailer_drop(head),
-      lit(",\"sourceSpecificData\":"), cmf("sourceSpecificData"),
-      lit(",\"meta\":"), coalesce(meta, lit("null")),
-      lit("}"))
-  }
-
-  /** `head` minus its trailing `}` so more members can be appended. */
-  private def substring_trailer_drop(c: Column): Column =
-    c.substr(lit(1), length(c) - 1)
+  def wire(cmf: Column): Column = CmfWire(
+    to_json(struct(Seq("dateTime", "epochSource", "vehicleId", "deviceId", "tenantId",
+      "sourceType", "partitionKey", "telemetry", "events").map(f => cmf(f).as(f)): _*),
+      Map("ignoreNullFields" -> "false")),
+    cmf("sourceSpecificData"),
+    coalesce(to_json(cmf("meta"), Map("ignoreNullFields" -> "false")), lit("null")))
 }

@@ -249,4 +249,41 @@ class PlanSpec extends SparkSpec {
       assert(routed.dropped.collect().isEmpty)
     }
   }
+
+  test("E1/E2 dead-letter plan parses each record once and serializes the CMF head once") {
+    import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Expression, Literal}
+    import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val (_, deadLetter) = graft.pipeline.Pipeline.publishAndDeadLetter(
+      graft.pipeline.Pipeline.vehicleCmfBatch(spark, PipelineSpec.spoolDir()).tagged)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.initialPlan)
+      case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
+    }
+    val plan = nodes(deadLetter.queryExecution.executedPlan)
+    val exprs: Seq[Expression] = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    val parses = plan.collect { case g: GenerateExec => g.generator.prettyName }
+    assert(parses === Seq.fill(3)("graft_json_fields"), s"parse nodes: $parses")
+    // Spark 4 runs to_json, json_object_keys and json_array_length as
+    // invocations of an evaluator object or a static helper
+    def name(e: Expression): String = e match {
+      case Invoke(Literal(evaluator, _), _, _, _, _, _, _, _) => evaluator.getClass.getSimpleName
+      case s: StaticInvoke => s.functionName
+      case _ => e.prettyName
+    }
+    val names = exprs.map(name)
+    val tokenizers = names.filter(Set("json_tuple", "jsonObjectKeys", "lengthOfJsonArray",
+      "substr", "substring"))
+    assert(tokenizers.isEmpty, s"second parses or substrings: $tokenizers")
+    // the head is the one serialized struct that carries `events`
+    val heads = exprs.count {
+      case i: Invoke if name(i) == "StructsToJsonEvaluator" => i.arguments.exists {
+        case c: CreateNamedStruct => c.names.map(String.valueOf).contains("events")
+        case _ => false
+      }
+      case _ => false
+    }
+    assert(heads === 3, s"$heads head serializations for 3 translators")
+  }
 }

@@ -622,4 +622,69 @@ class PropSpec extends SparkSpec {
       }
     }
   }
+
+  test("graft_json_fields equals readTree with json_tuple's rendering on random objects") {
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    import com.fasterxml.jackson.databind.node.JsonNodeFactory
+    import graft.functions.{JsonFields, JsonShape}
+    import scala.jdk.CollectionConverters._
+    val shape = JsonShape(Seq("a", "b", "o", "n"), objects = Set("o"),
+      nested = Map("n" -> JsonShape(Seq("x", "y"))))
+    val nf = JsonNodeFactory.instance
+    val rnd = new scala.util.Random(15)
+    val units = Seq("a", "b", " ", "\"", "\\", "/", "\n", "\t", "\u0001", "é", "€", "😀", "{", ":")
+    def str(): String = Seq.fill(rnd.nextInt(6))(units(rnd.nextInt(units.size))).mkString
+    def value(depth: Int): JsonNode = rnd.nextInt(if (depth > 2) 7 else 9) match {
+      case 0 => nf.textNode(str())
+      case 1 => nf.numberNode(rnd.nextInt(2001) - 1000)
+      case 2 => nf.numberNode(rnd.nextLong())
+      case 3 => nf.numberNode(rnd.nextGaussian() * math.pow(10, rnd.nextInt(30) - 15))
+      case 4 => nf.booleanNode(rnd.nextBoolean())
+      case 5 => nf.nullNode()
+      case 6 => nf.textNode(str())
+      case 7 => obj(Seq("p", "q", "a"), depth + 1)
+      case _ => nf.arrayNode().addAll(Seq.fill(rnd.nextInt(3))(value(depth + 1)).asJava)
+    }
+    def obj(keys: Seq[String], depth: Int): JsonNode = {
+      val o = nf.objectNode()
+      rnd.shuffle(keys).take(rnd.nextInt(keys.size + 1)).foreach(k => o.set[JsonNode](k, value(depth)))
+      o
+    }
+    def record(): JsonNode = {
+      val o = nf.objectNode()
+      rnd.shuffle(Seq("a", "b", "o", "n", "u")).take(rnd.nextInt(5) + 1).foreach {
+        case "o" if rnd.nextBoolean() => o.set[JsonNode]("o", obj(Seq("p", "q"), 1))
+        case "n" if rnd.nextInt(3) > 0 => o.set[JsonNode]("n", obj(Seq("x", "y", "z"), 1))
+        case k => o.set[JsonNode](k, value(1))
+      }
+      o
+    }
+    val mapper = new ObjectMapper()
+    val texts = Seq.fill(300)(mapper.writeValueAsString(record()))
+
+    // json_tuple's rendering of a tree node: a string unquoted, else JSON
+    // from a UTF-8 generator (which escapes surrogate pairs)
+    def rendered(v: JsonNode): String =
+      if (v == null || v.isNull) null else if (v.isTextual) v.textValue
+      else new String(mapper.writeValueAsBytes(v), "UTF-8")
+    def expected(o: JsonNode, s: JsonShape): Seq[Any] = {
+      val isObj = (k: String) => o.get(k) == null || o.get(k).isNull || o.get(k).isObject
+      s.keys.flatMap { k =>
+        s.nested.get(k) match {
+          case Some(sub) if o.get(k) != null && o.get(k).isObject => expected(o.get(k), sub)
+          case Some(sub) => Seq.fill(sub.keys.size)(null) :+ false
+          case None => Seq(rendered(o.get(k)))
+        }
+      } :+ (!o.fieldNames.asScala.forall(s.keys.contains) ||
+        !(s.objects ++ s.nested.keySet).forall(isObj))
+    }
+
+    val got = strings(texts: _*).select(JsonFields(col("value"), shape, "")).collect()
+    texts.zip(got).foreach { case (t, row) =>
+      assert(row.toSeq === expected(mapper.readTree(t), shape), t)
+    }
+    // and Spark's own json_tuple agrees on every top-level text
+    val tupled = strings(texts: _*).select(json_tuple(col("value"), "a", "b", "o")).collect()
+    got.zip(tupled).foreach { case (g, j) => assert(Seq(g(0), g(1), g(2)) === j.toSeq) }
+  }
 }

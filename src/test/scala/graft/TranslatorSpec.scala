@@ -307,4 +307,115 @@ class TranslatorSpec extends SparkSpec {
     assert(ok.valid.select("cmf.sourceSpecificData").collect().map(_.getString(0)).sorted ===
       Array("""{"a":{"b":[1,{"c":2}]}}""", "{}"))
   }
+
+  // --- Parse edge cases: the behaviour each translator's record parse keeps ---
+
+  private def fordWith(coords: String, extra: String = ""): String =
+    """{"vin":"v","esn":"e","captureTime":1698314400000,""" +
+    s""""coords":$coords$extra}"""
+  private val coordsOk = """{"latValue":1.0,"lonValue":2.0,"ts":1698314395000}"""
+
+  /** One `value` row per byte string, read as UTF-8 without validation, as
+    * the spool reader hands records over. */
+  private def rawBytes(rows: Array[Byte]*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.toDF("b").select(col("b").cast("string").as("value"))
+  }
+
+  test("parse: duplicate keys keep the last non-null value; a later object replaces coords whole") {
+    val dup = geotabValid.replace("\"Device_ID\":\"geo-device-123\",",
+      "\"Device_ID\":\"first\",\"Device_ID\":\"second\",\"Device_ID\":null,")
+    val g = VehicleTranslators.geotab(strings(dup), "t")
+    assert(g.valid.select("cmf.deviceId").collect().map(_.getString(0)) === Array("second"))
+    val twice = fordWith(coordsOk,
+      ""","coords":{"latValue":3.0,"lonValue":4.0,"ts":1698314396000}""")
+    val unknownFirst = fordWith("""{"latValue":1.0,"lonValue":2.0,"ts":1698314395000,"alt":5}""",
+      s""","coords":$coordsOk""")
+    val partialLast = fordWith(coordsOk, ""","coords":{"latValue":3.0}""")
+    val f = VehicleTranslators.ford(strings(twice, unknownFirst, partialLast), "t")
+    assert(f.valid.select("cmf.telemetry.location.lat").collect().map(_.getDouble(0)).sorted ===
+      Array(1.0, 3.0))
+    assert(f.quarantine.select("value").collect().map(_.getString(0)) === Array(partialLast))
+  }
+
+  test("parse: deep nesting passes to depth 50 and quarantines past the parser's depth limit") {
+    def nest(d: Int): String = "{\"a\":" * d + "1" + "}" * d
+    val f = VehicleTranslators.ford(strings(
+      fordWith(coordsOk, s""","fordExtraData":${nest(50)}"""),
+      fordWith(coordsOk, s""","fordExtraData":${nest(1200)}"""),
+      fordWith(coordsOk, s""","deep":${nest(50)}""")), "t")
+    assert(f.valid.select("cmf.sourceSpecificData").collect().map(_.getString(0)) ===
+      Array(nest(50)))
+    assert(f.quarantine.count() === 2)
+    // an object in a string-typed field passes as its text
+    val g = VehicleTranslators.geotab(strings(geotabValid.replace(
+      "\"geo-device-123\"", """{"x":{"y":[1,2]}}""")), "t")
+    assert(g.valid.select("cmf.deviceId").collect().map(_.getString(0)) ===
+      Array("""{"x":{"y":[1,2]}}"""))
+  }
+
+  test("parse: numeric edge cases (1e400, -0, leading +, a float in an Int field)") {
+    def lat(v: String) = geotabValid.replace("34.0522", v)
+    val g = VehicleTranslators.geotab(strings(lat("1e400"), lat("-0"), lat("-0.0"),
+      lat("+1.0"), geotabValid.replace("\"customGeotabField2\":100", "\"customGeotabField2\":100.5")),
+      "t")
+    // 1e400 renders as the quoted text "Infinity", which no cast reads
+    assert(g.valid.select(col("cmf.telemetry.location.lat").cast("string")).collect()
+      .map(_.getString(0)).sorted === Array("-0.0", "0.0"))
+    assert(g.quarantine.count() === 3)
+    val f = VehicleTranslators.ford(strings(
+      fordWith(coordsOk, ""","rpm":3000.5"""),
+      fordWith(coordsOk, ""","rpm":-0""")), "t")
+    assert(f.valid.select("cmf.telemetry.engineRpm").collect().map(_.getDouble(0)) === Array(0.0))
+    assert(f.quarantine.count() === 1)
+    // nested fields render like top-level ones: 1e400 in coords quarantines
+    // too (it passed as Infinity while coords was re-parsed from its text)
+    val nested = VehicleTranslators.ford(strings(fordWith(coordsOk.replace("1.0", "1e400"))), "t")
+    assert(nested.quarantine.count() === 1)
+  }
+
+  test("parse: invalid UTF-8 bytes read as U+FFFD and the record passes") {
+    val valid = geotabValid.getBytes("UTF-8")
+    def spliced(bad: Array[Byte]): Array[Byte] = {
+      val at = geotabValid.indexOf("geo-device-123") + 3
+      valid.take(at) ++ bad ++ valid.drop(at)
+    }
+    val g = VehicleTranslators.geotab(rawBytes(
+      spliced(Array(0xff.toByte)), spliced(Array(0xc3.toByte))), "t")
+    assert(g.quarantine.count() === 0)
+    assert(g.valid.select("cmf.deviceId").collect().map(_.getString(0)).toSet ===
+      Set("geo�-device-123"))
+  }
+
+  test("parse: fordExtraData with whitespace and escapes forwards its parser-rendered text") {
+    val extra = """{ "a" : "xA\/y\n\"q\"" ,	"b" : [ 1 , 2.50 , -0 , true , null ] , "c":{ } }"""
+    val f = VehicleTranslators.ford(strings(fordWith(coordsOk, s""","fordExtraData":$extra""")), "t")
+    val wire = f.valid.select("cmf.sourceSpecificData", "cmf_json").head()
+    assert(wire.getString(0) === """{"a":"xA/y\n\"q\"","b":[1,2.5,0,true,null],"c":{}}""")
+    assert(wire.getString(1).contains(
+      """"sourceSpecificData":{"a":"xA/y\n\"q\"","b":[1,2.5,0,true,null],"c":{}},"meta":"""))
+  }
+
+  test("parse: text after the top-level object is ignored; single quotes and scalar strings pass") {
+    val g = VehicleTranslators.geotab(strings(
+      geotabValid + " trailing",
+      geotabValid.replace("\"geo-device-123\"", "'single'"),
+      geotabValid.replace("\"geo-device-123\"", "123")), "t")
+    assert(g.valid.select("cmf.deviceId").collect().map(_.getString(0)).sorted ===
+      Array("123", "geo-device-123", "single"))
+  }
+
+  test("parse: an object-typed field holding a string quarantines (fordExtraData, coords)") {
+    def quoted(o: String) = "\"" + o.replace("\"", "\\\"") + "\""
+    def extra(values: String*) = fordWith(coordsOk, values.map(v => s""","fordExtraData":$v""").mkString)
+    val aText = quoted("""{"a":1}""")
+    val f = VehicleTranslators.ford(strings(
+      fordWith(quoted(coordsOk)), extra(aText), extra("{}", quoted("{}"))), "t")
+    assert(f.valid.count() === 0)
+    assert(f.quarantine.count() === 3)
+    // the last non-null value decides, as it does for every field
+    val last = VehicleTranslators.ford(strings(extra(aText, """{"b":2}""", "null")), "t")
+    assert(last.valid.select("cmf.sourceSpecificData").collect().map(_.getString(0)) ===
+      Array("""{"b":2}"""))
+  }
 }

@@ -1,15 +1,18 @@
 """One pipebench run with extra JVM flags, shared by the tools that watch a
-workload from outside the benchmark (codegen_compiles.py, proc_launches.py).
+workload from outside the benchmark (codegen_compiles.py, proc_launches.py,
+expr_profile.py).
 
 `build()` loads pipebench/run.py as a module and builds the benchmark with
 it, so the sbt JVM runs without the caller's flags. `run()` then runs
 pipebench/run.py once with one more flag in JAVA_TOOL_OPTIONS and returns
-the JSON line it prints last. No benchmark file is edited.
+the JSON line it prints last. No benchmark file is edited. `jdk_tool()`
+finds a JDK tool such as `jfr` for reading a recording.
 """
 import importlib.util
 import json
 import os
 import re
+import shutil
 import subprocess
 import sys
 
@@ -41,6 +44,17 @@ def run(tool, flag, workload, seed, seconds, trace="0"):
     if proc.returncode != 0:
         sys.exit(f"{tool}: pipebench/run.py exited {proc.returncode}")
     return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def jdk_tool(name):
+    """The JDK tool `name` (e.g. `jfr`) next to the `java` on PATH."""
+    java = shutil.which("java")
+    if java is None:
+        sys.exit("no java on PATH")
+    tool = os.path.join(os.path.dirname(os.path.realpath(java)), name)
+    if not os.path.isfile(tool):
+        sys.exit(f"no `{name}` next to {os.path.realpath(java)}")
+    return tool
 
 
 def run_dir(text):

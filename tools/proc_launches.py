@@ -23,7 +23,6 @@ import argparse
 import collections
 import json
 import os
-import shutil
 import subprocess
 import sys
 import tempfile
@@ -42,16 +41,6 @@ JFC = """<?xml version="1.0" encoding="UTF-8"?>
   </event>
 </configuration>
 """
-
-
-def jdk_tool(name):
-    java = shutil.which("java")
-    if java is None:
-        sys.exit("proc_launches: no java on PATH")
-    tool = os.path.join(os.path.dirname(os.path.realpath(java)), name)
-    if not os.path.isfile(tool):
-        sys.exit(f"proc_launches: no `{name}` next to {os.path.realpath(java)}")
-    return tool
 
 
 def path_class(command):
@@ -96,7 +85,7 @@ def main():
         # JAVA_TOOL_OPTIONS it would start a recording over the same file
         jfr_env = {k: v for k, v in os.environ.items() if k != "JAVA_TOOL_OPTIONS"}
         printed = subprocess.run(
-            [jdk_tool("jfr"), "print", "--json", "--events", "jdk.ProcessStart", rec],
+            [pipebench_runner.jdk_tool("jfr"), "print", "--json", "--events", "jdk.ProcessStart", rec],
             env=jfr_env, stdout=subprocess.PIPE, check=True, text=True)
     events = json.loads(printed.stdout)["recording"]["events"]
     commands = [e["values"]["command"] for e in events]
